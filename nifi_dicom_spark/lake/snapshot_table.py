@@ -522,9 +522,12 @@ class SnapshotTable:
         max_records_per_file: int | None = None,
         expected_buckets: "set[int] | None" = None,
         expect_exact: bool = True,
-    ) -> dict[str, list[str]]:
+    ) -> tuple[dict[str, list[str]], dict]:
         """Write df as exactly one sorted parquet file per non-empty bucket
-        under a fresh commit directory; return bucket -> [relpath].
+        under a fresh commit directory; return (bucket -> [relpath],
+        relpath -> parquet ``FileMetaData``). The footers are read once
+        here and handed to :meth:`_footer_stats`, so a commit opens each
+        new file's footer once.
 
         ``expected_buckets`` (with ``expect_exact``) is the post-write
         misplacement tripwire — see the inline comment at the end.
@@ -622,6 +625,7 @@ class SnapshotTable:
         import pyarrow.parquet as _pq
 
         files: dict[str, list[str]] = {}
+        footers: dict = {}
         for fn in os.listdir(out_abs):
             if not fn.endswith(".parquet") or not fn.startswith("part-"):
                 continue
@@ -630,11 +634,14 @@ class SnapshotTable:
             # empty writes) — registering it would pin a phantom file under
             # bucket 0 in every manifest and trip the misplacement check
             # below. One local footer read per written file (≤ n_buckets
-            # per commit; the stats path already reads these footers).
-            if _pq.read_metadata(os.path.join(out_abs, fn)).num_rows == 0:
+            # per commit), kept for the stats path.
+            md = _pq.read_metadata(os.path.join(out_abs, fn))
+            if md.num_rows == 0:
                 continue
+            rel = os.path.join(out_rel, fn)
             b = str(int(fn.split("-")[1]))
-            files.setdefault(b, []).append(os.path.join(out_rel, fn))
+            files.setdefault(b, []).append(rel)
+            footers[rel] = md
         files = {b: sorted(v) for b, v in files.items()}
         # Loud tripwire against ANY residual misplacement vector: callers on
         # paths where every expected bucket provably receives ≥1 row (MoR
@@ -660,7 +667,7 @@ class SnapshotTable:
                     "broke (AQE re-shaped the final exchange?); refusing "
                     "to commit misattributed files"
                 )
-        return files
+        return files, footers
 
     # ------------------------------------------------------------ file stats
 
@@ -1037,24 +1044,20 @@ class SnapshotTable:
         return self._enc_stat(v)
 
     def _footer_stats(
-        self, files: dict[str, list[str]], cols: list[str]
+        self, files: dict[str, list[str]], cols: list[str], footers: dict
     ) -> dict[str, dict[str, list]]:
-        """relpath → {col: [min, max]} from parquet FOOTERS (driver-side
-        metadata read, no data pages). This is the Iceberg-manifest-stats
-        analog: at 10^5+ files, pruning consults the manifest instead of
-        opening every footer at query time; cost is one footer read per
-        newly-written file per commit (O(touched buckets))."""
+        """relpath → {col: [min, max]} from parquet FOOTERS (metadata only,
+        no data pages). This is the Iceberg-manifest-stats analog: at 10^5+
+        files, pruning consults the manifest instead of opening every footer
+        at query time. ``footers`` (relpath → ``FileMetaData``) are the ones
+        :meth:`_write_bucket_files` read when it wrote ``files``, so a
+        commit opens each new file's footer once (O(touched buckets))."""
         if not cols:
             return {}
-        import pyarrow.parquet as pq
-
         out: dict[str, dict[str, list]] = {}
         for rels in files.values():
             for rel in rels:
-                try:
-                    md = pq.ParquetFile(os.path.join(self.data_dir, rel)).metadata
-                except Exception:
-                    continue  # stats are an optimization, never a failure
+                md = footers[rel]
                 idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
                 st: dict[str, list] = {}
                 for c in cols:
@@ -1391,28 +1394,39 @@ class SnapshotTable:
         self, m: dict, values: list
     ) -> tuple[list[int], list[str], list[str]]:
         """(buckets, kept_rels, bloom_pruned_rels) for a point lookup of
-        ``values`` on the bucket key. Two stages: the murmur3 bucket of
-        each value (a key lives in exactly ONE bucket), then sidecar
-        exclusion within those buckets. Skipping a bloom-excluded file is
-        LWW-safe: exclusion proves the file holds NO version of any
-        requested key, so no winner or superseding tombstone can hide in
-        it."""
+        ``values`` on the bucket key. Two stages: the bucket of each value
+        (a key lives in exactly ONE bucket), then sidecar exclusion within
+        those buckets. Skipping a bloom-excluded file is LWW-safe:
+        exclusion proves the file holds NO version of any requested key, so
+        no winner or superseding tombstone can hide in it.
+
+        Bucket ids come from the table's own :func:`_bucket_expr`, so they
+        match the write side for every key type and both hash functions,
+        but planning launches no Spark job: the de-duplicated values travel
+        as an Arrow table, which Spark turns into a LocalRelation, and the
+        optimizer folds the projection over it on the driver (a
+        LocalTableScan of the bucket ids)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
         from nifi_dicom_spark.lake import bloom as _bloom
 
         key0 = m["key_cols"][0]
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         ktype = next(f.dataType for f in schema.fields if f.name == key0)
+        uniq = list(dict.fromkeys(values))
         vdf = self.spark.createDataFrame(
-            [(v,) for v in values], T.StructType([T.StructField(key0, ktype)])
+            pa.table({key0: pa.array(uniq, type=to_arrow_type(ktype))}),
+            T.StructType([T.StructField(key0, ktype)]),
         )
         fn = m.get("bucket_fn", "xxhash64")
         bks = sorted(
-            r["b"]
-            for r in vdf.select(
-                _bucket_expr(key0, m["n_buckets"], fn).alias("b")
-            )
-            .distinct()
-            .collect()  # bounded by len(values)
+            {
+                r["b"]
+                for r in vdf.select(
+                    _bucket_expr(key0, m["n_buckets"], fn).alias("b")
+                ).collect()  # driver-local: one row per distinct value
+            }
         )
         probes = [str(v) for v in values]
         kept: list[str] = []
@@ -1440,6 +1454,15 @@ class SnapshotTable:
         them. IO is O(files of len(values) buckets), not O(table); with
         sidecars built it is typically one base file + the deltas that
         actually touched the key since last compaction.
+
+        A small read pays no fixed planning cost: bucket planning
+        (:meth:`_lookup_plan`) launches no Spark job, and the LWW reduce
+        over base ∪ deltas runs without a shuffle. The key-filtered rows
+        are only the stored versions of the requested keys, so they are
+        coalesced into one partition; ``SinglePartition`` satisfies the
+        aggregate's clustered distribution, and the plan has no
+        ``Exchange`` — one job whose reduce holds O(versions of the
+        requested keys) rows.
 
         Reference analog: the single-identifier fetch under a C-FIND/
         C-MOVE unique key (``QueryRetrieveController``; P6 gating),
@@ -1481,7 +1504,9 @@ class SnapshotTable:
                     "delta files present but table lacks op_seq/offset version "
                     "columns — cannot LWW-merge on read"
                 )
-            df = lww_dedup(df, m["key_cols"]).select(*schema.fieldNames())
+            df = lww_dedup(df.coalesce(1), m["key_cols"]).select(
+                *schema.fieldNames()
+            )
         return df
 
     def lookup_file_stats(self, values: list, version: int | None = None) -> dict:
@@ -1540,7 +1565,7 @@ class SnapshotTable:
             .collect()
         }
         tag = uuid.uuid4().hex[:12]
-        new_files = self._write_bucket_files(
+        new_files, footers = self._write_bucket_files(
             df,
             tag,
             new_n_buckets,
@@ -1562,7 +1587,7 @@ class SnapshotTable:
             "applied_hw": self._hw(m),
             "props": m["props"],
             "file_stats": self._footer_stats(
-                new_files, (m.get("props") or {}).get("stats_cols", [])
+                new_files, (m.get("props") or {}).get("stats_cols", []), footers
             ),
             "summary": {
                 "operation": "rebucket",
@@ -1625,7 +1650,7 @@ class SnapshotTable:
             df = df.withColumn(
                 "_bucket", _bucket_expr(self.key_cols()[0], n_buckets, fn)
             )
-        files = self._write_bucket_files(
+        files, footers = self._write_bucket_files(
             df,
             tag,
             n_buckets,
@@ -1646,7 +1671,7 @@ class SnapshotTable:
             "applied_hw": self._hw(m),
             "props": m["props"],
             "file_stats": self._footer_stats(
-                files, (m.get("props") or {}).get("stats_cols", [])
+                files, (m.get("props") or {}).get("stats_cols", []), footers
             ),
             "summary": {"operation": "overwrite"},
         }
@@ -1841,7 +1866,7 @@ class SnapshotTable:
                 # partition index == bucket — no second payload shuffle
                 clustered = combined.repartition(n_buckets, key_cols[0])
                 merged = lww_dedup(clustered, key_cols).select(*schema.fieldNames())
-                new_files = self._write_bucket_files(
+                new_files, footers = self._write_bucket_files(
                     merged,
                     tag,
                     n_buckets,
@@ -1860,14 +1885,14 @@ class SnapshotTable:
             else:
                 merged = lww_dedup(combined, key_cols).withColumn("_bucket", bucket)
                 merged = merged.select(*schema.fieldNames(), "_bucket")
-                new_files = self._write_bucket_files(
+                new_files, footers = self._write_bucket_files(
                     merged, tag, n_buckets, fn, key_cols=key_cols,
                     expected_buckets=set(touched),
                     expect_exact=(mode == "mor"),
                 )
             stats = self._commit_merge(
                 m, schema, touched, new_files, commit_keys, policy, skipped,
-                delta=(mode == "mor"),
+                delta=(mode == "mor"), footers=footers,
             )
             if mode == "mor":
                 thresh = int((m.get("props") or {}).get("compact_threshold", 8))
@@ -1941,7 +1966,7 @@ class SnapshotTable:
             tag = uuid.uuid4().hex[:12]
             # cow upsert can legitimately empty a touched bucket (delete-only
             # batch against an absent key), so only stray buckets are fatal
-            new_files = self._write_bucket_files(
+            new_files, footers = self._write_bucket_files(
                 merged, tag, n_buckets, fn, key_cols=key_cols,
                 expected_buckets=set(touched), expect_exact=False,
             )
@@ -1949,7 +1974,8 @@ class SnapshotTable:
             src.unpersist()
 
         return self._commit_merge(
-            m, schema, touched, new_files, commit_keys, policy, skipped
+            m, schema, touched, new_files, commit_keys, policy, skipped,
+            footers=footers,
         )
 
     def merge_into(
@@ -2227,7 +2253,7 @@ class SnapshotTable:
                 )
 
             tag = uuid.uuid4().hex[:12]
-            new_files = self._write_bucket_files(
+            new_files, footers = self._write_bucket_files(
                 merged,
                 tag,
                 n_buckets,
@@ -2240,7 +2266,8 @@ class SnapshotTable:
             if has_constraints:
                 kept.unpersist()
         return self._commit_merge(
-            m, schema, touched, new_files, commit_keys, "merge_into", skipped
+            m, schema, touched, new_files, commit_keys, "merge_into", skipped,
+            footers=footers,
         )
 
     def _where_source(self, predicate, ranges: dict | None) -> DataFrame:
@@ -2426,6 +2453,8 @@ class SnapshotTable:
         skipped: int,
         delta: bool = False,
         max_commit_retries: int = 3,
+        *,
+        footers: dict,
     ) -> MergeStats:
         """Build and publish the post-merge manifest, with **optimistic
         validate-and-rebase** on commit races (the Iceberg retry semantics):
@@ -2468,7 +2497,7 @@ class SnapshotTable:
                         hw[k] = int(e)
 
             # file stats: keep entries for still-referenced files, add
-            # footers of the newly-kept files (O(touched) metadata reads)
+            # footers of the newly-kept files (read by the write)
             referenced = {
                 rel for d in (files, deltas) for rels in d.values() for rel in rels
             }
@@ -2479,7 +2508,7 @@ class SnapshotTable:
             }
             file_stats.update(
                 self._footer_stats(
-                    kept, (base.get("props") or {}).get("stats_cols", [])
+                    kept, (base.get("props") or {}).get("stats_cols", []), footers
                 )
             )
             return {
@@ -2735,7 +2764,7 @@ class SnapshotTable:
         # cannot LWW-reduce to empty: the rewrite must repopulate exactly
         # the compacted buckets (misplacement here is what turns a
         # coalesced write into silent row loss)
-        new_files = self._write_bucket_files(
+        new_files, footers = self._write_bucket_files(
             merged,
             tag,
             m["n_buckets"],
@@ -2746,7 +2775,8 @@ class SnapshotTable:
             expected_buckets=set(todo),
         )
         stats = self._commit_merge(
-            m, self.schema(), todo, new_files, None, "compact", 0, delta=False
+            m, self.schema(), todo, new_files, None, "compact", 0, delta=False,
+            footers=footers,
         )
         return stats.version
 
@@ -2816,7 +2846,7 @@ class SnapshotTable:
                 "_bucket", _bucket_expr(m["key_cols"][0], m["n_buckets"], fn)
             )
         tag = uuid.uuid4().hex[:12]
-        new_files = self._write_bucket_files(
+        new_files, footers = self._write_bucket_files(
             merged,
             tag,
             m["n_buckets"],
@@ -2827,7 +2857,8 @@ class SnapshotTable:
             max_records_per_file=max_records_per_file,
         )
         stats = self._commit_merge(
-            m, schema, todo, new_files, None, "optimize", 0, delta=False
+            m, schema, todo, new_files, None, "optimize", 0, delta=False,
+            footers=footers,
         )
         return stats.version
 

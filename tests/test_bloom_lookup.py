@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pandas as pd
 import pytest
@@ -129,6 +130,94 @@ def test_lookup_equals_filtered_read_mor(spark, tmp_path):
 
     with pytest.raises(ValueError):
         table.lookup([])
+
+    # the LWW reduce over base ∪ deltas runs on one partition: the
+    # executed plan aggregates, but has no Exchange
+    m = table.manifest()
+    deltas = {rel for rl in m["delta_files"].values() for rel in rl}
+    assert deltas & set(table._lookup_plan(m, keys)[1])
+    got2.collect()
+    plan = got2._jdf.queryExecution().executedPlan().toString()
+    assert "Aggregate" in plan and "Exchange" not in plan
+
+    # multi-key lookup across buckets: a live key, an updated key, a
+    # tombstoned key and an absent key
+    ev = _epoch_events(0).iloc[:1].copy()
+    dead, dead_turn = ev["conv_id"].iloc[0], int(ev["turn_idx"].iloc[0])
+    ev["op"] = "delete"
+    ev["op_seq"] = 10_000
+    ev["offset"] = 10_000_000
+    apply_changes(
+        table, spark.createDataFrame(ev, schema=CHANGE_EVENTS_SCHEMA), epoch=3
+    )
+    multi = ["conv-e0-015", "conv-e1-004", "conv-e2-010", dead, "conv-absent"]
+    assert len(table.lookup_file_stats(multi)["buckets"]) >= 2
+    exp_m = table.read().filter(F.col("conv_id").isin(multi))
+    got_m = table.lookup(multi)
+    assert _sorted_rows(got_m) == _sorted_rows(exp_m)
+    tomb = got_m.filter((F.col("conv_id") == dead) & (F.col("turn_idx") == dead_turn))
+    assert [r["op"] for r in tomb.collect()] == ["delete"]
+    assert not got_m.filter(F.col("conv_id") == "conv-absent").count()
+
+
+@pytest.mark.parametrize("bucket_fn", ["murmur3", "xxhash64"])
+def test_lookup_plan_launches_no_job_and_matches_bucket_expr(
+    spark, tmp_path, bucket_fn
+):
+    """Bucket planning for a lookup runs on the driver (no Spark job) and
+    yields exactly the buckets the write side's ``_bucket_expr`` assigns,
+    for string and integral keys, on murmur3 and legacy xxhash64 layouts,
+    with duplicate values in the request."""
+    from pyspark.sql import types as T
+
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable, _bucket_expr
+
+    sc = spark.sparkContext
+    cases = [
+        (T.StringType(), ["conv-1", "conv-2", "conv-1", "", "zz", "conv-2"]),
+        (T.LongType(), [0, 7, -3, 7, 2**40, 123456789, 0]),
+        (T.IntegerType(), [1, 1, -5, 2**31 - 1, 42, -5]),
+    ]
+    for i, (ktype, values) in enumerate(cases):
+        schema = T.StructType(
+            [T.StructField("k", ktype, False), T.StructField("v", T.StringType())]
+        )
+        t = SnapshotTable.create(
+            spark, str(tmp_path / f"t{i}"), schema, key_cols=["k"], n_buckets=16
+        )
+        m = dict(t.manifest(), bucket_fn=bucket_fn)
+        plan_group = f"lookup-plan-{bucket_fn}-{i}"
+        sc.setJobGroup(plan_group, "lookup planning")
+        try:
+            bks, kept, pruned = t._lookup_plan(m, values)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert kept == [] and pruned == []  # empty table: no files
+
+        # reference: the same expression evaluated by a Spark job. Its
+        # jobs show up in the status tracker, which also proves the
+        # tracker has caught up past the planning call above
+        ref_group = f"lookup-ref-{bucket_fn}-{i}"
+        sc.setJobGroup(ref_group, "reference buckets")
+        try:
+            exp = sorted(
+                {
+                    r["b"]
+                    for r in sc.parallelize([(v,) for v in values], 2)
+                    .toDF(T.StructType([T.StructField("k", ktype)]))
+                    .select(_bucket_expr("k", 16, bucket_fn).alias("b"))
+                    .collect()
+                }
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(ref_group):
+            assert time.monotonic() < deadline, "status tracker never saw a job"
+            time.sleep(0.05)
+        assert list(tracker.getJobIdsForGroup(plan_group)) == []
+        assert bks == exp and len(bks) > 1
 
 
 def test_lookup_sees_delete_tombstones_like_read(spark, tmp_path):

@@ -7,6 +7,8 @@ restarted query resumes exactly after the last committed batch."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import time
 
 import pandas as pd
@@ -59,6 +61,33 @@ def _drain(spark, q, view, want, timeout=60):
             break
         time.sleep(0.5)
     return rows
+
+
+def test_feed_runner_imports_stay_light():
+    """The ``snapshot_cdf`` source's Python runner imports ``lake.commit``
+    and ``table_stream`` in a fresh interpreter; neither may pull in
+    ``snapshot_table`` (and pandas behind it) through the ``lake`` package
+    ``__init__``. The package-level re-exports must still resolve."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        "import nifi_dicom_spark.lake.commit\n"
+        "import nifi_dicom_spark.sources.table_stream\n"
+        "assert 'nifi_dicom_spark.lake.snapshot_table' not in sys.modules\n"
+        "from nifi_dicom_spark.lake import (SnapshotTable, PosixCommitBackend,\n"
+        "    VersionVacuumedError, CheckConstraintViolation)\n"
+        "import nifi_dicom_spark.lake.snapshot_table as st\n"
+        "assert SnapshotTable is st.SnapshotTable\n"
+        "assert VersionVacuumedError is st.VersionVacuumedError\n"
+        "assert CheckConstraintViolation is st.CheckConstraintViolation\n"
+        "assert PosixCommitBackend.__module__ == 'nifi_dicom_spark.lake.commit'\n"
+    )
+    env = dict(os.environ, PYTHONPATH=root)
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr
 
 
 def test_snapshot_cdf_stream_tail_and_restart(spark, tmp_path):
