@@ -1232,13 +1232,12 @@ def _layer1_signal(doc_id: int) -> "np.ndarray":
     )
 
 
-def _aac_signal(doc_id: int) -> "np.ndarray":
+def _stereo_signal(doc_id: int) -> "np.ndarray":
     """Per-doc mono-or-stereo test signal: even doc_ids the mono two-tone,
     odd doc_ids a stereo pair whose right channel mixes the doc's tone
     with a neighbour's — partially correlated, so the per-frame M/S
-    decisions see realistic inputs. Shared by the aac_decode (SCE/CPE) and
-    layer3_decode (mono/joint-stereo) queries and their oracles, and the
-    media_probe AAC slot."""
+    decisions see realistic inputs. Shared by the layer3_decode
+    (mono/joint-stereo) query and its oracle."""
     import numpy as np
 
     i = int(doc_id)
@@ -1408,7 +1407,7 @@ def q_layer3_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return pd.Series(
             [
-                encode_layer3(_aac_signal(int(i)), 32000, quality=1500)
+                encode_layer3(_stereo_signal(int(i)), 32000, quality=1500)
                 for i in ids
             ]
         )
@@ -1450,7 +1449,7 @@ def _layer3_decode_oracle() -> str:
     )
     rows = []
     for i in ids:
-        payload = encode_layer3(_aac_signal(int(i)), 32000, quality=1500)
+        payload = encode_layer3(_stereo_signal(int(i)), 32000, quality=1500)
         pcm, _sr = decode_layer3(payload)
         feat = audio_energy_features(pcm, 4)
         rows.append(f"({int(i)}, {float(feat[0])!r}, {float(feat[3])!r}, {len(payload)})")
@@ -1459,239 +1458,6 @@ def _layer3_decode_oracle() -> str:
         SELECT media_id, round(band0, 6) AS band0, round(band3, 6) AS band3,
                CAST(n_bytes AS BIGINT) AS n_bytes
         FROM (VALUES {values}) AS t(media_id, band0, band3, n_bytes)
-    """
-
-
-def q_aac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL AAC-LC decode through the multimodal path: the deterministic
-    two-tone signal per doc is encoded as ADTS AAC (``functions/aac.py``
-    — spec-exact ADTS framing + SCE/ICS syntax, 1024-line MDCT/TDAC,
-    per-scalefactor-band 4/3-power requantization, engine-canonical
-    Huffman pairs with the spec's escape sequences), then
-    ``extract_features`` entropy-decodes the payload, runs the IMDCT
-    overlap-add, and the RMS-energy features OF THE LOSSY DECODE plus the
-    container size are value-checked against a Python-replayed oracle.
-    Odd doc_ids encode STEREO (CPE, common_window, per-frame M/S over two
-    phase-distinct tones) so the pair-element decode path gets a driver
-    row alongside mono SCE. Closes the last declared audio stub;
-    reference analog: decompress-on-read
-    (``apps/DeidentifyAndRedact.java:271``)."""
-    from nifi_dicom_spark.functions.multimodal import extract_features
-
-    @F.pandas_udf("binary")
-    def make_aac(ids: pd.Series) -> pd.Series:
-        from nifi_dicom_spark.functions.aac import encode_aac
-
-        return pd.Series([encode_aac(_aac_signal(int(i)), 32000, quality=12) for i in ids])
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        make_aac("doc_id").alias("payload"),
-        F.lit(None)
-        .cast(
-            "struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>"
-        )
-        .alias("meta"),
-    )
-    feats = extract_features(media, dim=4)
-    return feats.select(
-        "media_id",
-        F.round(F.element_at("feature", 1).cast("double"), 6).alias("band0"),
-        F.round(F.element_at("feature", 4).cast("double"), 6).alias("band3"),
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-    )
-
-
-def _aac_decode_oracle() -> str:
-    """Replay the synthesize→encode→decode→feature pipeline in Python with
-    the same AAC codec over the same doc_ids and inline the rows."""
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions.aac import decode_aac, encode_aac
-    from nifi_dicom_spark.functions.codecs import audio_energy_features
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    rows = []
-    for i in ids:
-        payload = encode_aac(_aac_signal(int(i)), 32000, quality=12)
-        samples, _sr = decode_aac(payload)
-        feat = audio_energy_features(samples, 4)
-        # full-precision floats here, rounding ONCE in SQL — pre-rounding
-        # with Python round() (half-even) can disagree with the Spark
-        # side's single HALF_UP round at 1e-6 ties (matches the
-        # layer1/layer3 oracle convention)
-        rows.append(f"({int(i)}, {float(feat[0])!r}, {float(feat[3])!r}, {len(payload)})")
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, round(band0, 6) AS band0, round(band3, 6) AS band3,
-               CAST(n_bytes AS BIGINT) AS n_bytes
-        FROM (VALUES {values}) AS t(media_id, band0, band3, n_bytes)
-    """
-
-
-def _synth_media_payload(doc_id: int) -> tuple[str, bytes]:
-    """Deterministic (kind, payload) per doc cycling all 11 container
-    formats — the single source of truth for both the Spark pandas_udf and
-    the oracle replay, so probe results are byte-identical by construction."""
-    import numpy as np
-
-    from nifi_dicom_spark.functions import aac, codecs, h264, jpeg, mp3, mp4, mpeg_audio
-
-    i = int(doc_id)
-    w, h = _png_dims(i)
-    slot = i % 11
-    if slot == 10:
-        # compressed audio that decodes for REAL (AAC-LC in ADTS frames;
-        # the header walk yields true frame count + duration); odd doc_ids
-        # are stereo CPE streams, so the probe reports channels=2 for them
-        sig = _aac_signal(i)[: 1024 * (i % 2 + 1)]
-        return "audio", aac.encode_aac(sig, 32000, quality=12)
-    if slot == 9:
-        # compressed video that decodes for REAL (H.264 baseline-intra
-        # elementary stream; SPS carries the true pre-crop dims)
-        vw, vh = 2 * (i % 9 + 2), 2 * (i % 6 + 2)
-        return "video", h264.encode_h264(
-            [_synth_rgb(i * 29 + f, vw, vh) for f in range(i % 3 + 1)]
-        )
-    if slot == 7:
-        # compressed audio that decodes for REAL (MPEG-1 Layer I)
-        sig = _layer1_signal(i)[: 384 * (i % 3 + 1)]
-        return "audio", mpeg_audio.encode_layer1(sig, 32000, bits=6, coded_bands=16)
-    if slot == 8:
-        # compressed audio that decodes for REAL (MPEG-1 Layer II:
-        # grouped+ungrouped quantizers, scfsi-folded scalefactors);
-        # 960/1920 of the 1920-sample signal -> 2- vs 3-frame streams
-        sig = _layer1_signal(i)[: 960 * (i % 2 + 1)]
-        return "audio", mpeg_audio.encode_layer2(sig, 32000, levels=15)
-    if slot == 0:
-        n = i % 64 + 8
-        t = np.arange(n) / 8000.0
-        sig = (0.25 * np.sin(2 * np.pi * (200 + i % 100) * t)).astype(np.float32)
-        return "audio", codecs.encode_wav(sig, 8000)
-    if slot == 1:
-        return "image", codecs.encode_bmp(_synth_rgb(i, w, h))
-    if slot == 2:
-        return "image", codecs.encode_png(_synth_rgb(i, w, h))
-    if slot == 3:
-        return "image", jpeg.encode_jpeg(_synth_rgb(i, w, h), quality=90)
-    if slot == 4:
-        import hashlib as _hl
-
-        samples = [
-            _hl.md5(f"{i}:{s}".encode()).digest() * (s % 3 + 1)
-            for s in range(i % 5 + 1)
-        ]
-        return "video", mp4.mux_mp4(
-            samples, width=w * 16, height=h * 16, timescale=1000, sample_duration=40
-        )
-    if slot == 5:
-        return "audio", mp3.write_mp3(
-            i % 6 + 2,
-            bitrate_kbps=128,
-            sample_rate=44100,
-            channels=1 if i % 2 else 2,
-            seed=str(i).encode(),
-            xing=i % 3 == 0,
-            id3=b"\x00" * (i % 11) if i % 4 == 0 else None,
-        )
-    import hashlib as _hl
-
-    return "image", _hl.md5(str(i).encode()).digest() * (i % 4 + 1)
-
-
-def q_media_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Container identification + header metadata over a mixed-format
-    binary column: WAV/BMP/PNG/JPEG/MP4/MP3/MPEG-Layer-I/II/H.264
-    payloads (synthesized deterministically per doc by the from-scratch
-    encoders/muxers) plus an unknown-format slot, probed by the
-    header-only parsers — format, codec,
-    dimensions, sample rate, channels, frame count, duration. The oracle
-    replays the identical synthesize→probe pipeline in Python."""
-    from nifi_dicom_spark.functions.multimodal import probe_media
-
-    @F.pandas_udf("kind string, payload binary")
-    def make_media(ids: pd.Series) -> pd.DataFrame:
-        rows = [_synth_media_payload(int(i)) for i in ids]
-        return pd.DataFrame({"kind": [k for k, _ in rows], "payload": [p for _, p in rows]})
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"), make_media("doc_id").alias("m")
-    ).select("media_id", F.col("m.kind").alias("kind"), F.col("m.payload").alias("payload"))
-    return probe_media(media).select(
-        "media_id",
-        "format",
-        "codec",
-        "width",
-        "height",
-        "sample_rate",
-        "channels",
-        "n_frames",
-        "duration_ms",
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-    )
-
-
-def _media_probe_oracle() -> str:
-    """Replay synthesize→probe in Python over the same doc_ids and inline
-    the expected rows (cf. png_decode)."""
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions.multimodal import probe_one
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    def lit(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        return str(v)
-
-    rows = []
-    for i in ids:
-        _kind, payload = _synth_media_payload(int(i))
-        p = probe_one(payload)
-        rows.append(
-            "(%d, %s, %s, %s, %s, %s, %s, %s, %s, %d)"
-            % (
-                int(i),
-                lit(p["format"]),
-                lit(p["codec"]),
-                lit(p["width"]),
-                lit(p["height"]),
-                lit(p["sample_rate"]),
-                lit(p["channels"]),
-                lit(p["n_frames"]),
-                lit(p["duration_ms"]),
-                p["n_bytes"],
-            )
-        )
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, format, codec,
-               CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-               CAST(sample_rate AS INT) AS sample_rate,
-               CAST(channels AS INT) AS channels,
-               CAST(n_frames AS INT) AS n_frames,
-               CAST(duration_ms AS BIGINT) AS duration_ms,
-               CAST(n_bytes AS BIGINT) AS n_bytes
-        FROM (VALUES {values})
-        AS t(media_id, format, codec, width, height, sample_rate, channels,
-             n_frames, duration_ms, n_bytes)
     """
 
 
@@ -1774,405 +1540,6 @@ def _mp4_frames_oracle() -> str:
                CAST(pts_ms AS BIGINT) AS pts_ms
         FROM (VALUES {values})
         AS t(media_id, frame_idx, frame_sha, frame_bytes, pts_ms)
-    """
-
-
-def _synth_mp4_audio_payload(doc_id: int) -> bytes:
-    """Deterministic MP4 audio-track container per doc: an AAC segment
-    (mono even / stereo CPE odd via ``_aac_signal``), an MPEG-1 Layer III
-    segment, and an out-of-scope junk access unit (exercises the
-    null-audio-fields stub contract). Shared by mp4_audio's query and
-    oracle."""
-    import hashlib as _hl
-
-    from nifi_dicom_spark.functions import mp4
-    from nifi_dicom_spark.functions.aac import encode_aac
-    from nifi_dicom_spark.functions.mpeg_audio import encode_layer3
-
-    i = int(doc_id)
-    segs = [
-        encode_aac(_aac_signal(i), 32000, quality=12),
-        encode_layer3(_layer1_signal(i)[: 1152 * (i % 2 + 1)], 32000, quality=1500),
-        # leading 0x00 defeats every codec magic (RIFF/0xFF sync/ftyp),
-        # so this AU is deterministically out of scope on both sides
-        b"\x00" + _hl.md5(f"au:{i}".encode()).digest() * (i % 3 + 1),
-    ]
-    return mp4.mux_mp4(
-        segs,
-        kind="audio",
-        codec="mp4a",
-        sample_rate=32000,
-        channels=2,
-        timescale=1000,
-        sample_duration=100,
-        samples_per_chunk=2,
-    )
-
-
-def q_mp4_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode out of MP4 containers — the audio analog of
-    mjpeg_frames: the box walker demuxes the first ``soun`` track, each
-    access unit is extracted byte-exactly, and in-scope segments (ADTS
-    AAC-LC mono/stereo, MPEG-1 Layer III) decode to true sample rate /
-    channel count / PCM length / RMS level from the actual samples, while
-    the out-of-scope junk unit keeps null audio fields + its true byte
-    size (the declared stub contract). The oracle replays
-    mux→demux→decode in Python with the same codecs. Reference analog:
-    decompress-on-read of encapsulated compressed bulk data
-    (``apps/DeidentifyAndRedact.java:271``)."""
-    from nifi_dicom_spark.functions.multimodal import decode_audio_samples
-
-    @F.pandas_udf("binary")
-    def make_mp4a(ids: pd.Series) -> pd.Series:
-        return pd.Series([_synth_mp4_audio_payload(int(i)) for i in ids])
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        make_mp4a("doc_id").alias("payload"),
-        F.lit(None)
-        .cast(
-            "struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>"
-        )
-        .alias("meta"),
-    )
-    return decode_audio_samples(media).select(
-        "media_id",
-        "sample_idx",
-        F.col("pts_ms").cast("long").alias("pts_ms"),
-        "sample_rate",
-        "channels",
-        "n_pcm",
-        F.round(F.col("rms"), 6).alias("rms"),
-        "sample_bytes",
-    )
-
-
-def _mp4_audio_oracle() -> str:
-    """Replay mux→demux→decode in Python over the same doc_ids."""
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions import mp4
-    from nifi_dicom_spark.functions.aac import decode_aac, is_aac
-    from nifi_dicom_spark.functions.mpeg_audio import decode_layer3, is_layer3
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    rows = []
-    for i in ids:
-        payload = _synth_mp4_audio_payload(int(i))
-        for s in mp4.sample_table(payload, track_id=1):
-            au = mp4.extract_sample(payload, s)
-            pts_ms = s.pts * 1000 // 1000
-            if is_aac(au):
-                pcm, sr = decode_aac(au)
-            elif is_layer3(au):
-                pcm, sr = decode_layer3(au)
-            else:
-                rows.append(
-                    f"({int(i)}, {s.index}, {pts_ms}, NULL, NULL, NULL, NULL, {s.size})"
-                )
-                continue
-            nch = 1 if pcm.ndim == 1 else int(pcm.shape[1])
-            rms = float(((pcm.astype("float64") ** 2).mean()) ** 0.5)
-            rows.append(
-                f"({int(i)}, {s.index}, {pts_ms}, {sr}, {nch}, "
-                f"{int(pcm.shape[0])}, {round(rms, 6)!r}, {s.size})"
-            )
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, CAST(sample_idx AS INT) AS sample_idx,
-               CAST(pts_ms AS BIGINT) AS pts_ms,
-               CAST(sample_rate AS INT) AS sample_rate,
-               CAST(channels AS INT) AS channels,
-               CAST(n_pcm AS INT) AS n_pcm,
-               round(CAST(rms AS DOUBLE), 6) AS rms,
-               CAST(sample_bytes AS INT) AS sample_bytes
-        FROM (VALUES {values})
-        AS t(media_id, sample_idx, pts_ms, sample_rate, channels, n_pcm, rms,
-             sample_bytes)
-    """
-
-
-def _synth_mjpeg_payload(doc_id: int) -> bytes:
-    """Deterministic MJPEG-in-MP4 per doc: 2..4 baseline-JPEG frames from
-    the shared test pattern, muxed with the from-scratch muxer — shared by
-    the mjpeg_frames query and its oracle."""
-    from nifi_dicom_spark.functions import jpeg, mp4
-
-    i = int(doc_id)
-    w, h = 8 * (i % 3 + 2), 8 * (i % 2 + 1)
-    frames = [
-        jpeg.encode_jpeg(_synth_rgb(i * 31 + f, w, h), quality=85)
-        for f in range(i % 3 + 2)
-    ]
-    return mp4.mux_mp4(
-        frames,
-        width=w,
-        height=h,
-        timescale=600,
-        sample_duration=25,
-        codec="mjpa",
-        samples_per_chunk=2,
-    )
-
-
-def q_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame decode: MJPEG-in-MP4 containers are demuxed by the
-    from-scratch box walker, every access unit is extracted byte-exactly
-    and decoded by the from-scratch baseline-JPEG codec — per-frame width,
-    height and BT.601 mean luma come from the ACTUAL DECODED PIXELS (not
-    the container header). The oracle replays mux→demux→decode in Python.
-    This closes the video analog of decompress-on-read: H.264 access units
-    would take the same path but emit null dims (declared stub)."""
-    from nifi_dicom_spark.functions.multimodal import decode_frames
-
-    @F.pandas_udf("binary")
-    def make_mjpeg(ids: pd.Series) -> pd.Series:
-        return pd.Series([_synth_mjpeg_payload(int(i)) for i in ids])
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("video").alias("kind"),
-        make_mjpeg("doc_id").alias("payload"),
-    )
-    return decode_frames(media, every_n=1).select(
-        "media_id",
-        "frame_idx",
-        "width",
-        "height",
-        F.round("mean_luma", 4).alias("mean_luma"),
-        "frame_bytes",
-    )
-
-
-def _mjpeg_frames_oracle() -> str:
-    """Replay mux→demux→JPEG-decode in Python over the same doc_ids."""
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions import jpeg, mp4
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    rows = []
-    for i in ids:
-        payload = _synth_mjpeg_payload(int(i))
-        for s in mp4.sample_table(payload):
-            au = mp4.extract_sample(payload, s)
-            img = jpeg.decode_jpeg(au).astype("float64")
-            luma = float(
-                (0.299 * img[..., 0] + 0.587 * img[..., 1] + 0.114 * img[..., 2]).mean()
-            )
-            rows.append(
-                f"({int(i)}, {s.index}, {img.shape[1]}, {img.shape[0]},"
-                f" {round(luma, 4)!r}, {s.size})"
-            )
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
-               CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-               round(mean_luma, 4) AS mean_luma,
-               CAST(frame_bytes AS INT) AS frame_bytes
-        FROM (VALUES {values})
-        AS t(media_id, frame_idx, width, height, mean_luma, frame_bytes)
-    """
-
-
-def _synth_h264_payload(doc_id: int) -> bytes:
-    """Deterministic H.264-in-MP4 per doc: 2..4 baseline-intra access
-    units (each a self-contained SPS+PPS+IDR of I_PCM macroblocks from
-    the shared test pattern), muxed with the from-scratch muxer — shared
-    by the h264_frames query and its oracle. Heights of 6..18 luma rows
-    force macroblock padding + SPS frame-cropping on most docs."""
-    from nifi_dicom_spark.functions import h264, mp4
-
-    i = int(doc_id)
-    w, h = 16 * (i % 2 + 1), 2 * (i % 7 + 3)
-    frames = [_synth_rgb(i * 23 + f, w, h) for f in range(i % 3 + 2)]
-    return mp4.mux_mp4(
-        h264.encode_h264_aus(frames),
-        width=w,
-        height=h,
-        timescale=600,
-        sample_duration=25,
-        codec="avc1",
-        samples_per_chunk=2,
-    )
-
-
-def q_h264_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL H.264 video decode: MP4 containers are demuxed by the
-    from-scratch box walker, every access unit is extracted byte-exactly
-    and decoded by the from-scratch H.264 baseline-intra codec (Annex-B
-    NAL parse, emulation-prevention strip, Exp-Golomb SPS/PPS/slice
-    headers, I_PCM macroblock reconstruction, crop + BT.601 color) —
-    per-frame width, height and mean luma come from the ACTUAL DECODED
-    PIXELS, with SPS cropping verified against the pre-pad test pattern.
-    The oracle replays mux→demux→decode in Python. Closes the H.264
-    branch of decompress-on-read (`apps/DeidentifyAndRedact.java:271`);
-    entropy-coded residual macroblocks stay the declared stub."""
-    from nifi_dicom_spark.functions.multimodal import decode_frames
-
-    @F.pandas_udf("binary")
-    def make_h264(ids: pd.Series) -> pd.Series:
-        return pd.Series([_synth_h264_payload(int(i)) for i in ids])
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("video").alias("kind"),
-        make_h264("doc_id").alias("payload"),
-    )
-    return decode_frames(media, every_n=1).select(
-        "media_id",
-        "frame_idx",
-        "width",
-        "height",
-        F.round("mean_luma", 4).alias("mean_luma"),
-        "frame_bytes",
-    )
-
-
-def _h264_frames_oracle() -> str:
-    """Replay mux→demux→H.264-decode in Python over the same doc_ids."""
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions import h264, mp4
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    rows = []
-    for i in ids:
-        payload = _synth_h264_payload(int(i))
-        for s in mp4.sample_table(payload):
-            au = mp4.extract_sample(payload, s)
-            img = h264.decode_h264(au)[0].astype("float64")
-            luma = float(
-                (0.299 * img[..., 0] + 0.587 * img[..., 1] + 0.114 * img[..., 2]).mean()
-            )
-            rows.append(
-                f"({int(i)}, {s.index}, {img.shape[1]}, {img.shape[0]},"
-                f" {round(luma, 4)!r}, {s.size})"
-            )
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
-               CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-               round(mean_luma, 4) AS mean_luma,
-               CAST(frame_bytes AS INT) AS frame_bytes
-        FROM (VALUES {values})
-        AS t(media_id, frame_idx, width, height, mean_luma, frame_bytes)
-    """
-
-
-def _synth_h264_cavlc_payload(doc_id: int) -> bytes:
-    """Deterministic CAVLC H.264-in-MP4 per doc: 2..4 I_16x16 access units
-    (SPS+PPS+SEI marker+IDR each) at a per-doc QP sweep 18..42, from the
-    shared test pattern — real lossy compression, shared by the
-    h264_cavlc query and its oracle. Same odd-height geometry as
-    h264_frames so macroblock padding + SPS cropping stay exercised."""
-    from nifi_dicom_spark.functions import h264, mp4
-
-    i = int(doc_id)
-    w, h = 16 * (i % 2 + 1), 2 * (i % 7 + 3)
-    frames = [_synth_rgb(i * 31 + f, w, h) for f in range(i % 3 + 2)]
-    return mp4.mux_mp4(
-        h264.encode_h264_aus(frames, qp=18 + (i % 5) * 6, mb_types="auto"),
-        width=w,
-        height=h,
-        timescale=600,
-        sample_duration=25,
-        codec="avc1",
-        samples_per_chunk=2,
-    )
-
-
-def q_h264_cavlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed H.264 video decode (round 5 — closes the entropy-
-    coding stub): each MP4 access unit carries CAVLC-coded I_16x16
-    macroblocks (mb_types="auto": per-MB SAD decision between I_16x16 and
-    nine-mode I_4x4), and the from-scratch decoder runs the full normative
-    pipeline — intra prediction from reconstructed neighbors, CAVLC
-    residual decode with 9.2.1 nC contexts, AC scaling +
-    inverse core transform, DC Hadamard, chroma QP mapping — so per-frame
-    width/height/mean-luma come from genuinely entropy-decoded pixels
-    (engine-canonical VLC tables per the embed-or-derive policy; the
-    stream's SEI marker gates decode, see functions/h264_residual.py).
-    The oracle replays mux→demux→decode in Python. Reference analog:
-    decompress-on-read (`apps/DeidentifyAndRedact.java:271`)."""
-    from nifi_dicom_spark.functions.multimodal import decode_frames
-
-    @F.pandas_udf("binary")
-    def make_cavlc(ids: pd.Series) -> pd.Series:
-        return pd.Series([_synth_h264_cavlc_payload(int(i)) for i in ids])
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("video").alias("kind"),
-        make_cavlc("doc_id").alias("payload"),
-    )
-    return decode_frames(media, every_n=1).select(
-        "media_id",
-        "frame_idx",
-        "width",
-        "height",
-        F.round("mean_luma", 4).alias("mean_luma"),
-        "frame_bytes",
-    )
-
-
-def _h264_cavlc_oracle() -> str:
-    """Replay mux→demux→CAVLC-decode in Python over the same doc_ids."""
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions import h264, mp4
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    rows = []
-    for i in ids:
-        payload = _synth_h264_cavlc_payload(int(i))
-        for s in mp4.sample_table(payload):
-            au = mp4.extract_sample(payload, s)
-            img = h264.decode_h264(au)[0].astype("float64")
-            luma = float(
-                (0.299 * img[..., 0] + 0.587 * img[..., 1] + 0.114 * img[..., 2]).mean()
-            )
-            rows.append(
-                f"({int(i)}, {s.index}, {img.shape[1]}, {img.shape[0]},"
-                f" {round(luma, 4)!r}, {s.size})"
-            )
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
-               CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-               round(mean_luma, 4) AS mean_luma,
-               CAST(frame_bytes AS INT) AS frame_bytes
-        FROM (VALUES {values})
-        AS t(media_id, frame_idx, width, height, mean_luma, frame_bytes)
     """
 
 
@@ -3748,19 +3115,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Rotation (r5): the driver checks the first 50 dict entries. Round 4
-    # verified entries 1-50 of the r4 ordering (debezium_parse ...
-    # encrypt_roundtrip, all green); the 22 entries past the cap last had a
-    # row in r3. Those 22 lead now, followed by the 16 queries NEW this
-    # round (rollup_state, rollup_distinct, rollup_pct, replication_state,
-    # layer3_decode, h264_frames, aac_decode, h264_cavlc, mp4_audio,
-    # point_lookup, dup_spans, strip_spans, bigram_logprob, bpe_tokens —
-    # that one ROWS-ONLY: iterative merge learning has no SQL oracle,
-    # it is pinned by tests/test_bpe.py instead — clone_read and
-    # join_mv_state), then enough r4-green entries
-    # to fill the window; the r4-green remainder rotates to the tail so
-    # every registered query has a green row dated within the last two
-    # rounds. Rotate again next round.
+    # Order matters: only the first 50 entries are oracle-checked, so the
+    # least recently verified entries lead. bpe_tokens is ROWS-ONLY
+    # (iterative merge learning has no SQL oracle; tests/test_bpe.py pins
+    # it).
     return {
         # --- last verified r3 (rotated past r4's 50-cap) — first now -----
         "cfind_query": q_cfind_query,
@@ -3791,10 +3149,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_pct": q_rollup_pct,
         "replication_state": q_replication_state,
         "layer3_decode": q_layer3_decode,
-        "h264_frames": q_h264_frames,
-        "aac_decode": q_aac_decode,
-        "h264_cavlc": q_h264_cavlc,
-        "mp4_audio": q_mp4_audio,
         "point_lookup": q_point_lookup,
         "dup_spans": q_dup_spans,
         "strip_spans": q_strip_spans,
@@ -3819,26 +3173,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "watermarks": q_watermarks,
         "route_split": q_route_split,
         "hierarchy_query": q_hierarchy_query,
-        # (the 8 final-session additions — delete_where, update_where,
-        # forget_purge, drop_column_read, rename_column_read,
-        # maxwell_parse, canal_parse, semantic_dedup — displaced
-        # route_split, hierarchy_query, debezium_parse, layer1_decode,
-        # layer2_decode, mjpeg_frames, interval_join and rebucket_read,
-        # all r4-green, past the 50-cap to the tail; watermarks above is
-        # entry #50)
         "debezium_parse": q_debezium_parse,
         "layer1_decode": q_layer1_decode,
         "layer2_decode": q_layer2_decode,
-        "mjpeg_frames": q_mjpeg_frames,
         "interval_join": q_interval_join,
         "rebucket_read": q_rebucket_read,
         "change_feed": q_change_feed,
-        # --- green r4 rows: rotated past the 50-cap this round ------------
-        # (rebucket_read above is entry #50, the last the driver verifies;
-        # the six late-r5 additions — dup_spans, strip_spans,
-        # bigram_logprob, bpe_tokens, clone_read, join_mv_state —
-        # displaced change_feed, stats_json, merge_into, asof_join,
-        # snapshot_diff and anti_join_sync, all r4-green, to the tail)
+        # --- the tail ----------------------------------------------------
         "stats_json": q_stats_json,
         "merge_into": q_merge_into,
         "asof_join": q_asof_join,
@@ -3871,7 +3212,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_features": q_multimodal_features,
         "png_decode": q_png_decode,
         "jpeg_decode": q_jpeg_decode,
-        "media_probe": q_media_probe,
         "mp4_frames": q_mp4_frames,
         "shard_pack": q_shard_pack,
         "containment": q_containment,
@@ -4711,15 +4051,9 @@ def _build_oracle_sql() -> dict[str, str]:
         "layer1_decode": _layer1_decode_oracle(),
         "layer2_decode": _layer2_decode_oracle(),
         "layer3_decode": _layer3_decode_oracle(),
-        "mjpeg_frames": _mjpeg_frames_oracle(),
-        "h264_frames": _h264_frames_oracle(),
-        "h264_cavlc": _h264_cavlc_oracle(),
-        "aac_decode": _aac_decode_oracle(),
         "jpeg_decode": _jpeg_decode_oracle(),
         "redact_regions": _redact_regions_oracle(),
-        "media_probe": _media_probe_oracle(),
         "mp4_frames": _mp4_frames_oracle(),
-        "mp4_audio": _mp4_audio_oracle(),
         "shard_pack": """
             WITH t AS (
               SELECT doc_id,

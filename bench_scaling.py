@@ -58,7 +58,6 @@ def run_at(
     input_dir: str,
     work_root: str,
     extra_args: tuple[str, ...] = (),
-    env_overrides: dict[str, str] | None = None,
 ) -> dict:
     spark_submit = shutil.which("spark-submit") or os.path.join(
         os.path.dirname(sys.executable), "spark-submit"
@@ -86,11 +85,8 @@ def run_at(
         "--stage-metrics",
         *extra_args,
     ]
-    env = dict(os.environ, **(env_overrides or {}))
     try:
-        out = subprocess.run(
-            cmd, capture_output=True, text=True, timeout=3600, env=env
-        )
+        out = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
         for line in out.stdout.splitlines():
             line = line.strip()
             if line.startswith("{") and "events_per_sec" in line:

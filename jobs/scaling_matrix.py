@@ -1,16 +1,15 @@
 #!/usr/bin/env python
-"""Codec × cache_batch scaling matrix (VERDICT r2 item 8).
+"""Parquet-codec scaling matrix (VERDICT r2 item 8).
 
-String-column decode bandwidth is the measured scaling ceiling on this
-single-socket host (BENCH/BASELINE.md); the two knobs that directly move
-decoded-bytes-per-core are the parquet codec (input files AND the engine's
-own delta/base writes) and the ``cache_batch`` persist of the conformed
-batch. This harness runs the same replay at N and 4N (local-cluster
-executor JVMs, same controls as bench_scaling.py) for each config and
-writes ``BENCH/MATRIX.md``.
+String-column decode bandwidth is the measured scaling ceiling on a
+single-socket host (BENCH/BASELINE.md); the parquet codec (input files AND
+the engine's own delta/base writes) directly moves decoded-bytes-per-core.
+This harness runs the same replay at N and 4N (local-cluster executor JVMs,
+same controls as bench_scaling.py) for each codec and writes
+``BENCH/MATRIX_RAW.md``.
 
-Configs: snappy+cache (production default), snappy+nocache, zstd+cache,
-uncompressed+cache. Run: python jobs/scaling_matrix.py
+Configs: snappy (production default), zstd, uncompressed.
+Run: python jobs/scaling_matrix.py
 (env: MATRIX_EVENTS, MATRIX_EPOCHS, MATRIX_REPEATS).
 """
 
@@ -29,11 +28,10 @@ from bench_scaling import run_at, zip_package  # noqa: E402
 from nifi_dicom_spark.bench_core import generate_epoch_dirs  # noqa: E402
 
 CONFIGS = [
-    # (label, input/write codec, cache_batch)
-    ("snappy+cache", "snappy", "1"),
-    ("snappy+nocache", "snappy", "0"),
-    ("zstd+cache", "zstd", "1"),
-    ("uncompressed+cache", "none", "1"),
+    # (label, input/write codec)
+    ("snappy", "snappy"),
+    ("zstd", "zstd"),
+    ("uncompressed", "none"),
 ]
 
 
@@ -54,7 +52,7 @@ def main() -> None:
     input_bytes: dict[str, int] = {}
     try:
         inputs: dict[str, str] = {}
-        for codec in {c for _l, c, _cb in CONFIGS}:
+        for codec in {c for _l, c in CONFIGS}:
             d = os.path.join(work_root, f"input-{codec}")
             os.makedirs(d, exist_ok=True)
             generate_epoch_dirs(d, events, epochs, codec=codec)
@@ -64,7 +62,7 @@ def main() -> None:
                 for r, _ds, fs in os.walk(d)
                 for f in fs
             )
-        for label, codec, cache in CONFIGS:
+        for label, codec in CONFIGS:
             # spark codec name for uncompressed differs from pyarrow's
             write_codec = "uncompressed" if codec == "none" else codec
             per_level: dict[str, list[dict]] = {"N": [], "4N": []}
@@ -79,7 +77,6 @@ def main() -> None:
                             inputs[codec],
                             work_root,
                             extra_args=("--write-codec", write_codec),
-                            env_overrides={"NIFI_SPARK_CACHE_BATCH": cache},
                         )
                     )
             results[label] = per_level
@@ -94,19 +91,18 @@ def main() -> None:
         return min(steady)
 
     lines = [
-        "# BENCH/MATRIX — codec × cache_batch on the scaling harness",
+        "# BENCH/MATRIX — parquet codec on the scaling harness",
         "",
         f"Same replay job and controls as BENCH/BASELINE.md ({events:,} events, "
         f"{epochs} timed epochs, {repeats} runs/level, best steady epoch), with "
         "the parquet codec applied to BOTH the input files and the engine's "
-        "delta/base writes, and the conformed-batch persist toggled via "
-        "NIFI_SPARK_CACHE_BATCH.",
+        "delta/base writes.",
         "",
         "| config | input MiB | N ev/s | 4N ev/s | efficiency |",
         "|---|---|---|---|---|",
     ]
     summary = {}
-    for label, codec, _cache in CONFIGS:
+    for label, codec in CONFIGS:
         rn = per_epoch / best(results[label]["N"])
         r4 = per_epoch / best(results[label]["4N"])
         eff = (r4 / rn) / 4

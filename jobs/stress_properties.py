@@ -63,32 +63,6 @@ DOMAINS = {
         "sr": [32000, 44100, 48000],
         "correlation": ["independent", "identical", "antiphase", "mixed"],
     },
-    "test_h264_ipcm_roundtrip_property": {
-        "seed": ("int", 0, 10_000),
-        "w": ("int", 1, 20),
-        "h": ("int", 1, 12),
-        "n": ("int", 1, 3),
-    },
-    "test_h264_cavlc_roundtrip_property": {
-        "seed": ("int", 0, 10_000),
-        "w": ("int", 1, 3),
-        "h": ("int", 1, 2),
-        "qp": ("int", 0, 51),
-        "mb_types": ["i16", "i4", "auto"],
-    },
-    "test_aac_roundtrip_snr_property": {
-        "seed": ("int", 0, 10_000),
-        "n": ("int", 64, 4000),
-        "sr_idx": ("int", 0, 11),
-        "quality": [30, 60, 150, 400],
-    },
-    "test_aac_stereo_roundtrip_snr_property": {
-        "seed": ("int", 0, 10_000),
-        "n": ("int", 64, 4000),
-        "sr_idx": ("int", 0, 11),
-        "quality": [30, 150],
-        "correlation": ["independent", "identical", "antiphase", "mixed"],
-    },
     "test_wav_roundtrip_property": {
         "seed": ("int", 0, 10_000),
         "n": ("int", 1, 5000),

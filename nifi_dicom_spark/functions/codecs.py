@@ -14,12 +14,13 @@ container formats are fully decodable with stdlib + numpy alone:
   the sequential recurrences of the spec). Returns (H, W, 3) uint8 RGB
   (gray replicated, alpha dropped).
 
-Encoders exist for round-trip tests and for re-emitting resized images
+Encoders exist for round-trip tests and for re-emitting redacted images
 (PNG encoder: filter 0 + zlib, color type 2). Baseline JPEG lives in its
 own module (:mod:`nifi_dicom_spark.functions.jpeg` — Huffman entropy
-coding, DCT, subsampling). Only MP3/MP4 still fall back to the declared
-deterministic stub in :mod:`nifi_dicom_spark.functions.multimodal` — the
-Spark-side plumbing is identical either way.
+coding, DCT, subsampling), MPEG-1 audio in
+:mod:`nifi_dicom_spark.functions.mpeg_audio`. Every other format takes the
+declared deterministic stub in :mod:`nifi_dicom_spark.functions.multimodal`
+— the Spark-side plumbing is identical either way.
 
 Reference analog: pixelmed ships its own from-scratch pixel/waveform codecs
 for the same reason (no external decoder dependency for core formats).
@@ -278,14 +279,6 @@ def encode_png(img: np.ndarray) -> bytes:
         + _png_chunk(b"IDAT", idat)
         + _png_chunk(b"IEND", b"")
     )
-
-
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize via integer index sampling (pure numpy)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(height) * h // height).clip(0, h - 1)
-    xs = (np.arange(width) * w // width).clip(0, w - 1)
-    return img[ys][:, xs]
 
 
 def image_block_features(img: np.ndarray, dim: int) -> np.ndarray:

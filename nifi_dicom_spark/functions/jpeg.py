@@ -10,7 +10,7 @@ Scope — baseline sequential DCT, the format ~all camera/web JPEGs use:
   upsampling for any (h,v) sampling factors, JFIF full-range YCbCr→RGB;
   grayscale replicates. Progressive (SOF2), arithmetic coding, 12-bit and
   hierarchical modes raise ``ValueError`` (→ the multimodal stub fallback).
-* encoder (for round-trips and re-emitting resizes): 4:4:4, Annex-K
+* encoder (for round-trips and redaction re-encodes): 4:4:4, Annex-K
   standard quantization tables scaled by quality, Annex-K standard Huffman
   tables — deterministic output bytes for replay.
 

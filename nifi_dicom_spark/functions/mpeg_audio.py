@@ -913,8 +913,8 @@ def is_layer2(payload: bytes | None) -> bool:
 # built from a fixed Zipf frequency model over pair/quad symbols — because
 # ISO Annex B's 34 printed code tables are non-derivable table data;
 # encoder and decoder build the identical tables, so streams are exactly
-# self-consistent (third-party streams parse at the header/side-info level
-# via probe_media but not at the spectral level); (b) the alias-reduction
+# self-consistent (third-party streams parse at the frame-header level
+# via mp3.parse_mp3 but not at the spectral level); (b) the alias-reduction
 # butterflies and frequency inversion are omitted on BOTH sides — they
 # compensate conventions of the standard's reference filterbank, and this
 # engine's analyze/synthesize pair is already its own exact inverse.

@@ -1,26 +1,18 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns.
+"""Multimodal column plumbing: media as opaque binary columns.
 
-Decode is REAL for every image format, PCM audio AND compressed
-Layer-I audio: WAV, BMP and PNG are parsed by the pure-stdlib+numpy
-codecs in :mod:`nifi_dicom_spark.functions.codecs`, baseline JPEG by the
+Decode is REAL for the image formats, PCM audio and MPEG-1 audio: WAV,
+BMP and PNG are parsed by the pure-stdlib+numpy codecs in
+:mod:`nifi_dicom_spark.functions.codecs`, baseline JPEG by the
 from-scratch entropy/DCT codec in :mod:`nifi_dicom_spark.functions.jpeg`,
-MPEG-1 Layer I audio by the from-scratch subband codec in
-:mod:`nifi_dicom_spark.functions.mpeg_audio` (32-band pseudo-QMF +
-ISO bit layout, SNR-verified round trip); they yield genuine features
-(RMS energy windows, grayscale band means), genuine decoded dimensions
-and genuine resizes. MP4 and MP3 are REAL at the container/frame level
-(:mod:`..functions.mp4` box/sample-table demux, :mod:`..functions.mp3`
-frame-header/Xing parse — see ``probe_media`` and ``sample_frames``);
-Layer II/III audio, AAC-LC audio (:mod:`..functions.aac`) and H.264
-baseline-intra video (I_PCM toolset, :mod:`..functions.h264`) decode for
-real too. The deterministic, clearly-marked stub in the feature path now
-covers only out-of-scope *variants* of those formats (third-party H.264
-entropy-coded residuals, third-party-spectral/multichannel AAC — the
-spec's printed entropy code tables are non-derivable without external
-libs) and genuinely unknown formats. The
-Spark-side plumbing is identical and fully tested either way: schema
-(binary payload + typed metadata struct), Arrow-batched ``mapInPandas``
-transforms, partition-size control for fat binary rows.
+MPEG-1 Layer I/II/III audio by the from-scratch subband codec in
+:mod:`nifi_dicom_spark.functions.mpeg_audio`; they yield genuine features
+(RMS energy windows, grayscale band means) and genuine decoded
+dimensions. MP4 is REAL at the container level (:mod:`..functions.mp4`
+box/sample-table demux — see ``sample_frames``). Every other payload
+takes a deterministic, clearly-marked stub. The Spark-side plumbing is
+identical either way: schema (binary payload + typed metadata struct),
+Arrow-batched ``mapInPandas`` transforms, partition-size control for fat
+binary rows.
 
 Reference analog: the payload of a flow-file is exactly such an opaque
 binary (the serialized DICOM object with PixelData), and the reference's
@@ -32,7 +24,6 @@ separate columns so Parquet column pruning skips the binary entirely.
 from __future__ import annotations
 
 import hashlib
-import struct
 from collections.abc import Iterator
 
 import numpy as np
@@ -41,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nifi_dicom_spark.functions import aac, codecs, h264, jpeg, mp3, mp4, mpeg_audio
+from nifi_dicom_spark.functions import codecs, jpeg, mp4, mpeg_audio
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -71,8 +62,8 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType()), True),
         T.StructField("sha256", T.StringType(), True),
         T.StructField("n_bytes", T.IntegerType(), True),
-        # decoded container metadata — populated only when a REAL decode ran
-        # (BMP/PNG images), null for audio/stub paths
+        # decoded image dimensions — populated only when a REAL decode ran
+        # (BMP/PNG/JPEG images), null on the stub path
         T.StructField("width", T.IntegerType(), True),
         T.StructField("height", T.IntegerType(), True),
     ]
@@ -80,17 +71,8 @@ FEATURE_SCHEMA = T.StructType(
 
 
 def _fake_decode_feature(payload: bytes, dim: int = 16) -> np.ndarray:
-    """STUB for the remaining undecodable *variants* (third-party H.264
-    entropy-coded residuals — CABAC, inter prediction, or CAVLC without
-    the engine SEI marker — and third-party-spectral/multichannel AAC;
-    foreign entropy tables are genuinely out of scope without external
-    libs) and
-    unknown formats. Every format family has a REAL decode path:
-    WAV/BMP/PNG/baseline-JPEG/MPEG-Layer-I/II/III, AAC-LC
-    (:mod:`..functions.aac`), H.264 baseline-intra — both lossless I_PCM
-    and the engine's CAVLC I_16x16 lossy toolset
-    (:mod:`..functions.h264`) — and MP3/MP4 containers demux for real via
-    probe_media / sample_frames.
+    """STUB for every payload without a real decoder (video, compressed
+    audio other than MPEG-1, unknown formats, undecodable variants).
 
     Deterministic fake: sha256-seeded pseudo-feature so tests are stable.
     Replace the body with the real decode + model features in production;
@@ -109,8 +91,9 @@ def _decode_feature(
     (feature, width, height) — dims non-null only when a real image
     decode ran. Magic bytes only gate the ATTEMPT — unsupported variants
     (float WAV, third-party Layer III spectral data, compressed/odd-bpp
-    BMP, 16-bit/interlaced PNG, truncated files) fall back to the stub
-    rather than crashing the whole Spark job on one bad row."""
+    BMP, 16-bit/interlaced PNG, progressive JPEG, truncated files) fall
+    back to the stub rather than crashing the whole Spark job on one bad
+    row."""
 
     try:
         if codecs.is_wav(payload):
@@ -125,34 +108,18 @@ def _decode_feature(
         if mpeg_audio.is_layer3(payload):
             samples, _sr = mpeg_audio.decode_layer3(payload)
             return codecs.audio_energy_features(samples, dim), None, None
-        if aac.is_aac(payload):
-            # REAL AAC-LC decode (ADTS mono/stereo, engine-canonical
-            # Huffman — see functions/aac.py); out-of-scope toolsets raise
-            # and fall through to the declared stub below
-            samples, _sr = aac.decode_aac(payload)
-            return codecs.audio_energy_features(samples, dim), None, None
         if codecs.is_bmp(payload):
             img = codecs.decode_bmp(payload)
-            return codecs.image_block_features(img, dim), img.shape[1], img.shape[0]
-        if codecs.is_png(payload):
+        elif codecs.is_png(payload):
             img = codecs.decode_png(payload)
-            return codecs.image_block_features(img, dim), img.shape[1], img.shape[0]
-
-        if jpeg.is_jpeg(payload):
+        elif jpeg.is_jpeg(payload):
             img = jpeg.decode_jpeg(payload)
-            return codecs.image_block_features(img, dim), img.shape[1], img.shape[0]
-        if h264.is_annexb(payload):
-            # REAL H.264 decode (baseline-intra I_PCM toolset); features
-            # from the first coded picture's actual pixels. Streams using
-            # CAVLC/CABAC residual macroblocks raise UnsupportedH264 and
-            # fall through to the declared stub below.
-            # max_frames=1: decode ONLY the first coded picture — paying
-            # full macroblock reconstruction for the rest of the stream
-            # just to discard it breaks the per-row cost model
-            img = h264.decode_h264(payload, max_frames=1)[0]
+        else:
+            img = None
+        if img is not None:
             return codecs.image_block_features(img, dim), img.shape[1], img.shape[0]
     except Exception:
-        pass  # unsupported variant / corrupt container → stub path
+        pass  # unsupported variant / corrupt file → stub path
     return _fake_decode_feature(payload, dim), None, None
 
 
@@ -185,60 +152,6 @@ def extract_features(media: DataFrame, dim: int = 16, batch_rows: int = 64) -> D
             )
 
     return media.mapInPandas(kernel, schema=FEATURE_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize. BMP and PNG payloads are REALLY decoded,
-    nearest-neighbor resized and re-encoded in their own format
-    (pure-stdlib+numpy codecs); other formats pass through with re-stamped
-    metadata (stub path — real impl would decode via PIL/libjpeg)."""
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads, metas = [], []
-            for p in pdf["payload"]:
-                raw = bytes(p) if p is not None else None
-                decoded, encode, mime = None, None, "image/fake"
-                try:
-                    if codecs.is_bmp(raw):
-                        decoded, encode, mime = (
-                            codecs.decode_bmp(raw), codecs.encode_bmp, "image/bmp"
-                        )
-                    elif codecs.is_png(raw):
-                        decoded, encode, mime = (
-                            codecs.decode_png(raw), codecs.encode_png, "image/png"
-                        )
-                    elif jpeg.is_jpeg(raw):
-                        decoded, encode, mime = (
-                            jpeg.decode_jpeg(raw),
-                            jpeg.encode_jpeg,
-                            "image/jpeg",
-                        )
-                except Exception:
-                    decoded = None  # unsupported variant → passthrough
-                if decoded is not None:
-                    img = codecs.resize_nearest(decoded, width, height)
-                    payloads.append(encode(img))
-                else:
-                    payloads.append(raw)
-                    mime = "image/fake"
-                metas.append(
-                    {
-                        "width": width,
-                        "height": height,
-                        "sample_rate": None,
-                        "n_frames": None,
-                        "mime": mime,
-                    }
-                )
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["meta"] = metas
-            yield out
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        kernel, schema=MEDIA_SCHEMA
-    )
 
 
 def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
@@ -319,395 +232,3 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
         schema="media_id long, frame_idx int, frame_sha string,"
         " frame_bytes int, pts_ms long",
     )
-
-
-def decode_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """REAL video frame decode for MJPEG-in-MP4 payloads: the box walker
-    demuxes the sample table, every ``every_n``-th access unit is
-    extracted byte-exactly, and units that are baseline JPEG images (the
-    from-scratch DCT/Huffman codec) or self-contained H.264 baseline-intra
-    access units (the from-scratch Annex-B/I_PCM codec in
-    :mod:`..functions.h264`) are decoded — true per-frame width, height
-    and mean luma come from the actual pixels. Access units of codecs this
-    repo cannot decode (H.264 entropy-coded residuals, AAC — the declared
-    stub boundary) emit null dims/luma but keep their true byte size, so
-    the real-vs-stub split is visible downstream. Reference analog:
-    frame-level decompress-on-read of encapsulated multi-frame pixel data
-    (``AttributeList.java:45,231``); at 100 TB this is the
-    "decode only the sampled frames, never the whole video" shape — the
-    Arrow batch carries containers, the kernel touches ``1/every_n`` of
-    the payload bytes."""
-    from nifi_dicom_spark.functions import h264 as h264_mod
-    from nifi_dicom_spark.functions import jpeg as jpeg_mod
-
-    if every_n < 1:
-        # fail at the API boundary, not as an opaque executor task error
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                payload = bytes(r["payload"]) if r["payload"] is not None else b""
-                if not mp4.is_mp4(payload):
-                    continue
-                try:
-                    table = mp4.sample_table(payload)
-                except Exception:
-                    continue  # malformed container: no decodable frames
-                for s in table[::every_n]:
-                    au = mp4.extract_sample(payload, s)
-                    w = h = None
-                    luma = None
-                    img = None
-                    try:
-                        if jpeg_mod.is_jpeg(au):
-                            img = jpeg_mod.decode_jpeg(au)
-                        elif h264_mod.is_annexb(au):
-                            # self-contained H.264 access unit (SPS+PPS+IDR)
-                            # — real baseline-intra decode; unsupported
-                            # toolsets (CAVLC residual, inter) keep the
-                            # null-dims stub contract below
-                            img = h264_mod.decode_h264(au)[0]
-                    except Exception:
-                        img = None
-                    if img is not None:
-                        h, w = img.shape[0], img.shape[1]
-                        # ITU-R BT.601 luma over the real pixels
-                        rgb = img.astype(np.float64)
-                        luma = float(
-                            (
-                                0.299 * rgb[..., 0]
-                                + 0.587 * rgb[..., 1]
-                                + 0.114 * rgb[..., 2]
-                            ).mean()
-                        )
-                    rows.append(
-                        {
-                            "media_id": r["media_id"],
-                            "frame_idx": s.index,
-                            "width": w,
-                            "height": h,
-                            "mean_luma": round(luma, 4) if luma is not None else None,
-                            "frame_bytes": s.size,
-                        }
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "frame_idx",
-                    "width",
-                    "height",
-                    "mean_luma",
-                    "frame_bytes",
-                ],
-            )
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            out["frame_bytes"] = out["frame_bytes"].astype("Int32")
-            yield out
-
-    return media.filter(F.col("kind") == "video").mapInPandas(
-        kernel,
-        schema="media_id long, frame_idx int, width int, height int,"
-        " mean_luma double, frame_bytes int",
-    )
-
-
-def decode_audio_samples(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """REAL audio decode for MP4 audio-track payloads — the audio analog
-    of :func:`decode_frames`: the box walker demuxes the container's
-    FIRST audio track (``hdlr`` = ``soun``), every ``every_n``-th access
-    unit is extracted byte-exactly, and units that are self-contained
-    compressed-audio segments this engine decodes for real (ADTS AAC-LC
-    mono/stereo, MPEG-1 Layer I/II/III, PCM WAV) come back with their true
-    sample rate, channel count, decoded PCM length and RMS level from the
-    actual samples. Access units of codecs outside the declared scope
-    (third-party spectral data, Opus/FLAC/...) emit null audio fields but
-    keep their true byte size, so the real-vs-stub split stays visible
-    downstream — the same contract as ``decode_frames``'s null dims.
-    Containers without an audio track produce no rows. Reference analog:
-    decompress-on-read of encapsulated compressed bulk data
-    (``apps/DeidentifyAndRedact.java:271``); at 100 TB this is the
-    "decode only the sampled segments, never the whole asset" shape.
-
-    Note: an AAC segment must hold >= 2 ADTS frames to be decodable (the
-    TDAC flush frame); muxers using this engine's ``encode_aac`` output
-    as MP4 samples satisfy that by construction."""
-    from nifi_dicom_spark.functions import aac as aac_mod
-
-    if every_n < 1:
-        # fail at the API boundary, not as an opaque executor task error
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-
-    def _decode_au(au: bytes):
-        """(samples, sr) for in-scope codecs, None otherwise."""
-        if aac_mod.is_aac(au):
-            return aac_mod.decode_aac(au)
-        if mpeg_audio.is_layer1(au):
-            return mpeg_audio.decode_layer1(au)
-        if mpeg_audio.is_layer2(au):
-            return mpeg_audio.decode_layer2(au)
-        if mpeg_audio.is_layer3(au):
-            return mpeg_audio.decode_layer3(au)
-        if codecs.is_wav(au):
-            return codecs.decode_wav(au)
-        return None
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                payload = bytes(r["payload"]) if r["payload"] is not None else b""
-                if not mp4.is_mp4(payload):
-                    continue
-                try:
-                    meta = mp4.parse_mp4(payload)
-                    track = next(
-                        (t for t in meta["tracks"] if t["kind"] == "audio"), None
-                    )
-                    if track is None:
-                        continue
-                    table = mp4.sample_table(payload, track_id=track["track_id"])
-                except Exception:
-                    continue  # malformed container: no decodable samples
-                ts = track.get("timescale")
-                for s in table[::every_n]:
-                    au = mp4.extract_sample(payload, s)
-                    sr = nch = n_pcm = None
-                    rms = None
-                    try:
-                        dec = _decode_au(au)
-                    except Exception:
-                        dec = None  # out-of-scope variant: stub fields
-                    if dec is not None:
-                        samples, sr = dec
-                        nch = 1 if samples.ndim == 1 else int(samples.shape[1])
-                        n_pcm = int(samples.shape[0])
-                        rms = (
-                            float(np.sqrt((samples.astype(np.float64) ** 2).mean()))
-                            if n_pcm
-                            else 0.0
-                        )
-                    rows.append(
-                        {
-                            "media_id": r["media_id"],
-                            "sample_idx": s.index,
-                            "pts_ms": (s.pts * 1000 // ts if ts else None),
-                            "sample_rate": sr,
-                            "channels": nch,
-                            "n_pcm": n_pcm,
-                            "rms": round(rms, 6) if rms is not None else None,
-                            "sample_bytes": s.size,
-                        }
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "sample_idx",
-                    "pts_ms",
-                    "sample_rate",
-                    "channels",
-                    "n_pcm",
-                    "rms",
-                    "sample_bytes",
-                ],
-            )
-            out["pts_ms"] = out["pts_ms"].astype("Int64")
-            out["sample_rate"] = out["sample_rate"].astype("Int32")
-            out["channels"] = out["channels"].astype("Int32")
-            out["n_pcm"] = out["n_pcm"].astype("Int32")
-            out["sample_bytes"] = out["sample_bytes"].astype("Int32")
-            yield out
-
-    return media.filter(F.col("kind").isin("audio", "video")).mapInPandas(
-        kernel,
-        schema="media_id long, sample_idx int, pts_ms long, sample_rate int,"
-        " channels int, n_pcm int, rms double, sample_bytes int",
-    )
-
-
-PROBE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("format", T.StringType(), False),
-        T.StructField("codec", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("channels", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("n_bytes", T.IntegerType(), False),
-    ]
-)
-
-
-def _jpeg_dims(payload: bytes) -> tuple[int, int]:
-    """(width, height) from the first SOF marker — a header scan, no
-    entropy decode (the probe must stay cheap on fat payloads). Handles the
-    spec's 0xFF fill bytes between segments and the length-less markers
-    (TEM, SOI/EOI, RSTn) so conformant streams from any encoder scan."""
-    pos = 2
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        marker = payload[pos + 1]
-        if marker == 0xFF:  # fill byte — next byte is the real marker
-            pos += 1
-            continue
-        if marker in (0x01, 0xD8, 0xD9) or 0xD0 <= marker <= 0xD7:
-            pos += 2  # standalone marker, no length field
-            continue
-        if pos + 4 > len(payload):
-            break
-        seg_len = int.from_bytes(payload[pos + 2 : pos + 4], "big")
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            h = int.from_bytes(payload[pos + 5 : pos + 7], "big")
-            w = int.from_bytes(payload[pos + 7 : pos + 9], "big")
-            return w, h
-        pos += 2 + seg_len
-    raise ValueError("no SOF marker")
-
-
-def probe_one(payload: bytes | None) -> dict:
-    """Sniff + header-parse one binary payload into PROBE_SCHEMA fields
-    (sans media_id). Pure function — shared verbatim by the Spark kernel
-    and the oracle replay. Unknown/corrupt payloads probe as
-    format='unknown' rather than raising (one bad row must not kill the
-    job)."""
-    out: dict = {
-        "format": "unknown",
-        "codec": None,
-        "width": None,
-        "height": None,
-        "sample_rate": None,
-        "channels": None,
-        "n_frames": None,
-        "duration_ms": None,
-        "n_bytes": len(payload or b""),
-    }
-    if not payload:
-        return out
-    try:
-        if codecs.is_wav(payload):
-            # header fields only — the shared RIFF walk, no PCM conversion
-            fmt, _off, data_len = codecs.parse_wav_header(payload)
-            _afmt, ch, sr, _br, align, _bits = fmt
-            frames = data_len // align if align else 0
-            out.update(
-                format="wav",
-                codec="pcm",
-                sample_rate=sr,
-                channels=ch,
-                n_frames=frames,
-                duration_ms=frames * 1000 // sr if sr else None,
-            )
-        elif codecs.is_bmp(payload):
-            w, h = struct.unpack_from("<ii", payload, 18)
-            out.update(format="bmp", codec="rgb24", width=w, height=abs(h))
-        elif codecs.is_png(payload):
-            if len(payload) < 24 or payload[12:16] != b"IHDR":
-                raise ValueError("truncated PNG header")
-            out.update(
-                format="png",
-                codec="deflate",
-                width=int.from_bytes(payload[16:20], "big"),
-                height=int.from_bytes(payload[20:24], "big"),
-            )
-        elif jpeg.is_jpeg(payload):
-            w, h = _jpeg_dims(payload)
-            out.update(format="jpeg", codec="baseline", width=w, height=h)
-        elif mp4.is_mp4(payload):
-            meta = mp4.parse_mp4(payload)
-            track = next(
-                (t for t in meta["tracks"] if t["kind"] == "video"),
-                meta["tracks"][0] if meta["tracks"] else None,
-            )
-            out.update(
-                format="mp4",
-                codec=(track or {}).get("codec"),
-                width=(track or {}).get("width"),
-                height=(track or {}).get("height"),
-                sample_rate=(track or {}).get("sample_rate"),
-                channels=(track or {}).get("channels"),
-                n_frames=(track or {}).get("n_samples"),
-                duration_ms=int(meta["duration_s"] * 1000),
-            )
-        elif h264.is_annexb(payload):
-            # header-only: SPS dims + coded-picture count, no pixel decode
-            info = h264.parse_h264(payload)
-            out.update(
-                format="h264",
-                codec=f"avc-baseline-p{info['profile']}",
-                width=info["width"],
-                height=info["height"],
-                n_frames=info["n_frames"],
-            )
-        elif aac.is_aac(payload):
-            # header-only: walk the ADTS frame chain, no spectral decode
-            meta = aac.parse_adts(payload)
-            out.update(
-                format="aac",
-                codec=f"aac-lc-p{meta['profile']}",
-                sample_rate=meta["sample_rate"],
-                channels=meta["channels"],
-                n_frames=meta["n_frames"],
-                duration_ms=int(meta["duration_s"] * 1000),
-            )
-        elif mp3.is_mp3(payload):
-            meta = mp3.parse_mp3(payload)
-            out.update(
-                format="mp3",
-                codec=f"mpeg{meta['version']}-layer{meta['layer']}",
-                sample_rate=meta["sample_rate"],
-                channels=meta["channels"],
-                n_frames=meta["n_frames"],
-                duration_ms=int(meta["duration_s"] * 1000),
-            )
-    except Exception:
-        return {
-            "format": "unknown",
-            "codec": None,
-            "width": None,
-            "height": None,
-            "sample_rate": None,
-            "channels": None,
-            "n_frames": None,
-            "duration_ms": None,
-            "n_bytes": len(payload),
-        }
-    return out
-
-
-def probe_media(media: DataFrame) -> DataFrame:
-    """Container identification + header metadata for every payload —
-    WAV/BMP/PNG/JPEG/MP4/H.264-Annex-B/AAC-ADTS/MP3 via the from-scratch
-    parsers, 'unknown' otherwise. Header-only (no pixel/PCM/entropy decode), so the kernel is
-    O(header bytes) per row regardless of payload size; Arrow batches move
-    the binaries once. Reference analog: NiFi's IdentifyMimeType +
-    ExtractDICOMTags metadata-only read path."""
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            probes = [
-                probe_one(bytes(p) if p is not None else None)
-                for p in pdf["payload"]
-            ]
-            out = pd.DataFrame(probes)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            for col, dtype in (
-                ("width", "Int32"),
-                ("height", "Int32"),
-                ("sample_rate", "Int32"),
-                ("channels", "Int32"),
-                ("n_frames", "Int32"),
-                ("duration_ms", "Int64"),
-                ("n_bytes", "Int32"),
-            ):
-                out[col] = out[col].astype(dtype)
-            yield out
-
-    return media.mapInPandas(kernel, schema=PROBE_SCHEMA)

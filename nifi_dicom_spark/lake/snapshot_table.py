@@ -2071,6 +2071,9 @@ class SnapshotTable:
 
         m = self.manifest()
         key_cols = m["key_cols"]
+        for name in when_matched_update or {}:
+            if name in key_cols:
+                raise ValueError(f"cannot assign key column {name!r}")
         n_buckets = m["n_buckets"]
         fn = m.get("bucket_fn", "xxhash64")
         schema = self.schema()

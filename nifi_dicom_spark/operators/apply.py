@@ -84,33 +84,15 @@ def apply_changes(
     events: DataFrame,
     epoch: int | None = None,
     quarantine_dir: str | None = None,
-    cache_batch: bool | None = None,
     dead_letter: SnapshotTable | None = None,
 ) -> ApplyResult:
     """Apply one batch of change events to the transcripts table with
     idempotent commit keys (epoch, partition_id).
 
-    ``cache_batch`` (default OFF; env override ``NIFI_SPARK_CACHE_BATCH=1``)
-    persists the conformed batch so the fused lineage-metrics +
-    bucket-discovery pass and the merge source share one decode. Measured
-    both ways on the scaling harness (BENCH/MATRIX.md): re-decoding the
-    columnar source twice beats the cache round-trip by ~35% at N and ~34%
-    at 4N on the reference host — decode is compute, cache fill+read is
-    pure memory traffic on the already-saturated socket — so OFF is the
-    default; the knob remains for IO-bound deployments (e.g. object-store
-    scans where a second read is a second network fetch).
+    The fused lineage-metrics + bucket-discovery pass and the merge each
+    decode the batch: measured on the scaling harness (BENCH/MATRIX.md),
+    decoding the columnar source twice beat persisting it by ~35%.
     """
-    if cache_batch is None:
-        raw = os.environ.get("NIFI_SPARK_CACHE_BATCH", "0").strip().lower()
-        if raw in ("1", "true", "yes", "on"):
-            cache_batch = True
-        elif raw in ("0", "false", "no", "off", ""):
-            cache_batch = False
-        else:
-            raise ValueError(
-                f"NIFI_SPARK_CACHE_BATCH={raw!r} is not a boolean "
-                "(use 1/true/yes/on or 0/false/no/off)"
-            )
     if "tool" not in events.columns and "schema_ver" in events.columns:
         # a batch WITHOUT the tool column but WITH rows claiming
         # schema_ver >= 2 is almost certainly a mis-read, not a v1 feed:
@@ -130,80 +112,74 @@ def apply_changes(
                 stacklevel=2,
             )
     events = conform_to_schema(events, CHANGE_EVENTS_SCHEMA)
-    if cache_batch:
-        events.persist()
-    try:
-        bucket = table.bucket_expr(KEY_COLUMNS[0])
-        metrics_rows = [
-            r.asDict() for r in partition_metrics(events, bucket_expr=bucket).collect()
-        ]
-        touched = sorted({int(b) for r in metrics_rows for b in r.pop("_buckets")})
+    bucket = table.bucket_expr(KEY_COLUMNS[0])
+    metrics_rows = [
+        r.asDict() for r in partition_metrics(events, bucket_expr=bucket).collect()
+    ]
+    touched = sorted({int(b) for r in metrics_rows for b in r.pop("_buckets")})
 
-        commit_keys = None
+    commit_keys = None
+    if epoch is not None:
+        commit_keys = [(epoch, int(r["partition_id"])) for r in metrics_rows]
+        for r in metrics_rows:
+            r["checkpoint_epoch"] = epoch
+
+    valid, bad = route_events(events)
+    if dead_letter is not None:
+        if epoch is None:
+            # the retry ledger is keyed by epoch — a batch caller asking
+            # for DLQ bookkeeping without one would silently get nothing
+            raise ValueError(
+                "dead_letter requires an epoch (the retry ledger's "
+                "idempotency key); pass epoch=<n> or drop dead_letter"
+            )
+        # T7: penalize-then-retry bookkeeping (idempotent per epoch)
+        from nifi_dicom_spark.operators.deadletter import record_quarantine
+
+        record_quarantine(dead_letter, bad, epoch)
+
+    if quarantine_dir is not None:
         if epoch is not None:
-            commit_keys = [(epoch, int(r["partition_id"])) for r in metrics_rows]
-            for r in metrics_rows:
-                r["checkpoint_epoch"] = epoch
+            # epoch-keyed dir + overwrite ⇒ replaying the epoch rewrites
+            # the same quarantine rows (exactly-once for the reject
+            # channel, same idempotency key as the merge ledger)
+            bad.write.mode("overwrite").parquet(
+                os.path.join(quarantine_dir, f"epoch={int(epoch)}")
+            )
+        else:
+            bad.write.mode("append").parquet(quarantine_dir)
 
-        valid, bad = route_events(events)
-        if dead_letter is not None:
-            if epoch is None:
-                # the retry ledger is keyed by epoch — a batch caller asking
-                # for DLQ bookkeeping without one would silently get nothing
-                raise ValueError(
-                    "dead_letter requires an epoch (the retry ledger's "
-                    "idempotency key); pass epoch=<n> or drop dead_letter"
-                )
-            # T7: penalize-then-retry bookkeeping (idempotent per epoch)
-            from nifi_dicom_spark.operators.deadletter import record_quarantine
-
-            record_quarantine(dead_letter, bad, epoch)
-
-        if quarantine_dir is not None:
-            if epoch is not None:
-                # epoch-keyed dir + overwrite ⇒ replaying the epoch rewrites
-                # the same quarantine rows (exactly-once for the reject
-                # channel, same idempotency key as the merge ledger)
-                bad.write.mode("overwrite").parquet(
-                    os.path.join(quarantine_dir, f"epoch={int(epoch)}")
-                )
-            else:
-                bad.write.mode("append").parquet(quarantine_dir)
-
-        # no pre-dedup: versioned_upsert's own LWW reduce dedups in-batch and
-        # cross-batch in ONE shuffle (pre-deduping here would add a second
-        # full shuffle for no correctness gain)
-        #
-        # schema-evolution bridge between the FIXED wire frame and the
-        # table's evolved schema: a DROPPED table column is projected away
-        # (merging it would trip the resurrection guard) and a RENAMED one
-        # is aliased to its current name (the wire name is historical) —
-        # the wire schema stays the superset, the TABLE decides what it
-        # stores and what it calls it
-        props = table.manifest().get("props") or {}
-        dropped = props.get("dropped_columns") or {}
-        to_current = {
-            old: new
-            for new, olds in (props.get("renamed_columns") or {}).items()
-            for old in olds
-        }
-        source = valid.select(
-            *[
-                F.col(c).alias(to_current[c]) if c in to_current else F.col(c)
-                for c in STORED_COLUMNS
-                if c not in dropped
-            ]
-        )
-        stats = table.merge(
-            source,
-            op_col="op",
-            policy="versioned_upsert",
-            commit_keys=commit_keys,
-            touched_buckets=touched,
-        )
-    finally:
-        if cache_batch:
-            events.unpersist()
+    # no pre-dedup: versioned_upsert's own LWW reduce dedups in-batch and
+    # cross-batch in ONE shuffle (pre-deduping here would add a second
+    # full shuffle for no correctness gain)
+    #
+    # schema-evolution bridge between the FIXED wire frame and the
+    # table's evolved schema: a DROPPED table column is projected away
+    # (merging it would trip the resurrection guard) and a RENAMED one
+    # is aliased to its current name (the wire name is historical) —
+    # the wire schema stays the superset, the TABLE decides what it
+    # stores and what it calls it
+    props = table.manifest().get("props") or {}
+    dropped = props.get("dropped_columns") or {}
+    to_current = {
+        old: new
+        for new, olds in (props.get("renamed_columns") or {}).items()
+        for old in olds
+    }
+    source = valid.select(
+        *[
+            F.col(c).alias(to_current[c]) if c in to_current else F.col(c)
+            for c in STORED_COLUMNS
+            if c not in dropped
+        ]
+    )
+    stats = table.merge(
+        source,
+        op_col="op",
+        policy="versioned_upsert",
+        commit_keys=commit_keys,
+        touched_buckets=touched,
+    )
     return ApplyResult(merge=stats, metrics=metrics_rows)
 
 

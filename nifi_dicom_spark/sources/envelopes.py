@@ -149,10 +149,13 @@ def parse_maxwell(
     to 0. Pure expressions — batch and streaming alike."""
     e = F.from_json(F.col(value_col), MAXWELL_ENVELOPE_SCHEMA)
     img = e["data"]
-    # "master.000006:800911" → 6 * 2^32 + 800911 (monotone across rolls)
-    file_seq = F.regexp_extract(e["position"], r"\.(\d+):(\d+)$", 1).cast("long")
-    pos = F.regexp_extract(e["position"], r"\.(\d+):(\d+)$", 2).cast("long")
-    lsn = file_seq * F.lit(4294967296).cast("long") + pos
+    # "master.000006:800911" → 6 * 2^32 + 800911 (monotone across rolls);
+    # a missing or malformed position yields NULL (try_*: under ANSI a bad
+    # cast or an overflow would abort the whole batch), and routing
+    # quarantines that row
+    file_seq = F.regexp_extract(e["position"], r"\.(\d+):(\d+)$", 1).try_cast("long")
+    pos = F.regexp_extract(e["position"], r"\.(\d+):(\d+)$", 2).try_cast("long")
+    lsn = F.try_add(F.try_multiply(file_seq, F.lit(4294967296).cast("long")), pos)
     return df.select(
         lsn.alias("offset"),
         _part(partition_col).cast("int").alias("partition_id"),

@@ -74,6 +74,37 @@ def test_maxwell_parse_semantics(spark):
     assert str(out[0].ts) == "2024-01-01 00:00:00"
 
 
+def test_maxwell_malformed_position_quarantines_not_aborts(spark):
+    """A missing or malformed ``position`` must not abort the batch under
+    ANSI mode (Spark's default): the row gets a NULL offset/op_seq and
+    routing quarantines it, while the valid envelope beside it passes."""
+    from nifi_dicom_spark.operators.routing import route_events
+
+    df = spark.createDataFrame(
+        [
+            (_maxwell("insert", IMG, pos)["value"],)
+            for pos in (
+                "master.000006:800911",
+                None,
+                "garbage",
+                "master.000006:",
+                "master.9999999999:1",  # file_seq * 2^32 overflows a long
+            )
+        ],
+        "value string",
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        valid, bad = route_events(parse_maxwell(df))
+        assert [r.offset for r in valid.collect()] == [6 * 2**32 + 800911]
+        bad_rows = bad.collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert len(bad_rows) == 4
+    assert all(r.offset is None and r.op_seq is None for r in bad_rows)
+
+
 def _canal(op, images, batch_id, ddl=False):
     return json.dumps(
         {

@@ -1,6 +1,8 @@
-"""MP4 (ISO BMFF) demux, MP3 frame parse, and the probe_media /
-sample_frames operators built on them — mux→demux round-trips, malformed
-input tolerance, and Spark-side integration."""
+"""Media: MP4 (ISO BMFF) demux, MP3 frame parse and the sample_frames
+operator built on them — mux→demux round-trips, malformed input
+tolerance, Spark-side integration — plus F14 burned-in-region redaction
+over the BMP/PNG/JPEG codecs and the decoders' clean-rejection contract
+on malformed input."""
 
 from __future__ import annotations
 
@@ -173,63 +175,7 @@ def test_mp3_is_mp3_negative():
     assert not mp3.is_mp3(b"\x00" * 512)
 
 
-# --- probe + sample_frames operators ---------------------------------------
-
-
-def test_probe_one_all_formats():
-    import numpy as np
-
-    from nifi_dicom_spark.functions import codecs, jpeg
-    from nifi_dicom_spark.functions.multimodal import probe_one
-
-    img = np.arange(6 * 8 * 3, dtype=np.uint8).reshape(6, 8, 3)
-    sig = (0.3 * np.sin(np.arange(100) / 5)).astype(np.float32)
-
-    p = probe_one(codecs.encode_wav(sig, 8000))
-    assert (p["format"], p["sample_rate"], p["channels"], p["n_frames"]) == (
-        "wav", 8000, 1, 100,
-    )
-    assert p["duration_ms"] == 100 * 1000 // 8000
-
-    p = probe_one(codecs.encode_bmp(img))
-    assert (p["format"], p["width"], p["height"]) == ("bmp", 8, 6)
-    p = probe_one(codecs.encode_png(img))
-    assert (p["format"], p["width"], p["height"]) == ("png", 8, 6)
-    p = probe_one(jpeg.encode_jpeg(img, quality=90))
-    assert (p["format"], p["width"], p["height"]) == ("jpeg", 8, 6)
-
-    p = probe_one(mp4.mux_mp4(_samples(5), width=64, height=48))
-    assert (p["format"], p["codec"], p["width"], p["n_frames"]) == (
-        "mp4", "mp4v", 64, 5,
-    )
-    p = probe_one(mp3.write_mp3(9, sample_rate=32000, channels=1, seed=b"q"))
-    assert (p["format"], p["codec"], p["sample_rate"], p["n_frames"]) == (
-        "mp3", "mpeg1-layer3", 32000, 9,
-    )
-    assert probe_one(b"\x99" * 40)["format"] == "unknown"
-    assert probe_one(None)["n_bytes"] == 0
-    # corrupt-but-sniffable: BMP magic with garbage header probes unknown
-    assert probe_one(b"BM" + b"\x00" * 60)["format"] in ("bmp", "unknown")
-
-
-def test_probe_media_spark(spark):
-    from nifi_dicom_spark.functions.multimodal import MEDIA_SCHEMA, probe_media
-
-    v = mp4.mux_mp4(_samples(6), width=32, height=16)
-    a = mp3.write_mp3(4, seed=b"sp")
-    rows = [
-        (1, "video", v, None),
-        (2, "audio", a, None),
-        (3, "image", b"junk", None),
-        (4, "image", None, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in probe_media(media).collect()}
-    assert out[1]["format"] == "mp4" and out[1]["n_frames"] == 6
-    assert out[1]["width"] == 32 and out[1]["duration_ms"] == 240
-    assert out[2]["format"] == "mp3" and out[2]["n_frames"] == 4
-    assert out[3]["format"] == "unknown" and out[3]["n_bytes"] == 4
-    assert out[4]["format"] == "unknown" and out[4]["n_bytes"] == 0
+# --- sample_frames operator ------------------------------------------------
 
 
 def test_sample_frames_real_mp4(spark):
@@ -258,76 +204,6 @@ def test_sample_frames_real_mp4(spark):
     assert {r["frame_idx"] for r in stub} == {0, 2, 4}
     assert all(r["frame_bytes"] is None and r["pts_ms"] is None for r in stub)
     assert not any(r["media_id"] == 3 for r in out)
-
-
-def test_decode_audio_samples_real_mp4(spark):
-    """MP4 audio-track decode: in-scope access units (AAC mono/stereo,
-    Layer II/III, WAV) yield true sr/channels/PCM length/RMS from the
-    actual decoded samples; out-of-scope units keep null audio fields +
-    true byte size; video containers without an audio track yield no
-    rows."""
-    import numpy as np
-
-    from nifi_dicom_spark.functions import aac, codecs
-    from nifi_dicom_spark.functions import mpeg_audio as ma
-    from nifi_dicom_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        decode_audio_samples,
-    )
-
-    t = np.arange(3000) / 32000.0
-    mono = 0.4 * np.sin(2 * np.pi * 440 * t)
-    stereo = np.stack([mono, 0.3 * np.sin(2 * np.pi * 620 * t + 0.5)], axis=1)
-    segs = [
-        aac.encode_aac(stereo, 32000),  # CPE stereo
-        ma.encode_layer3(mono, 32000),  # L3 mono
-        ma.encode_layer2(mono[:2304], 32000, levels=15),
-        codecs.encode_wav(mono[:500].astype(np.float32), 8000),
-        b"\x00junk-out-of-scope",  # 0x00 defeats every codec magic
-    ]
-    payload = mp4.mux_mp4(
-        segs, kind="audio", codec="mp4a", sample_rate=32000, channels=2,
-        timescale=1000, sample_duration=100,
-    )
-    video_only = mp4.mux_mp4(_samples(4, tag=b"v"), timescale=1000)
-    media = spark.createDataFrame(
-        [
-            (1, "audio", payload, None),
-            (2, "audio", b"not-a-container", None),
-            (3, "video", video_only, None),  # no soun track → no rows
-        ],
-        MEDIA_SCHEMA,
-    )
-    out = sorted(
-        decode_audio_samples(media).collect(), key=lambda r: r["sample_idx"]
-    )
-    assert [r["media_id"] for r in out] == [1] * 5
-    decoded = [
-        aac.decode_aac(segs[0]),
-        ma.decode_layer3(segs[1]),
-        ma.decode_layer2(segs[2]),
-        codecs.decode_wav(segs[3]),
-    ]
-    for idx, (pcm, sr) in enumerate(decoded):
-        r = out[idx]
-        nch = 1 if pcm.ndim == 1 else pcm.shape[1]
-        assert (r["sample_rate"], r["channels"], r["n_pcm"]) == (
-            sr, nch, pcm.shape[0],
-        )
-        assert r["rms"] == round(float(np.sqrt((pcm**2).mean())), 6)
-        assert r["sample_bytes"] == len(segs[idx])
-        assert r["pts_ms"] == idx * 100
-    junk = out[4]
-    assert junk["sample_rate"] is None and junk["rms"] is None
-    assert junk["sample_bytes"] == len(segs[4])
-    # sampling: every 2nd access unit only
-    sampled = decode_audio_samples(media, every_n=2).collect()
-    assert {r["sample_idx"] for r in sampled if r["media_id"] == 1} == {0, 2, 4}
-    with pytest.raises(ValueError, match="every_n"):
-        decode_audio_samples(media, every_n=0)
-
-
-# --- review-fix regressions --------------------------------------------------
 
 
 def test_mp4_corrupt_counts_raise_not_allocate():
@@ -381,28 +257,16 @@ def test_sample_frames_survives_malformed_container(spark):
     assert all(r["frame_bytes"] is None for r in out)  # stub path
 
 
-def test_jpeg_dims_fill_bytes_and_standalone_markers():
-    """Spec-conformant streams with 0xFF fill bytes or RST/TEM markers
-    before SOF must still probe."""
-    import numpy as np
+def test_frame_samplers_validate_every_n(spark):
+    from nifi_dicom_spark.functions.multimodal import sample_frames
 
-    from nifi_dicom_spark.functions import jpeg as J
-    from nifi_dicom_spark.functions.multimodal import _jpeg_dims, probe_one
-
-    img = np.arange(6 * 8 * 3, dtype=np.uint8).reshape(6, 8, 3)
-    payload = J.encode_jpeg(img, quality=90)
-    # insert a fill byte after SOI (0xFF pad then the next marker's 0xFF)
-    padded = payload[:2] + b"\xff" + payload[2:]
-    assert _jpeg_dims(padded) == (8, 6)
-    assert probe_one(padded)["format"] == "jpeg"
-
-
-def test_probe_truncated_png_is_unknown():
-    from nifi_dicom_spark.functions.multimodal import probe_one
-
-    sig_only = b"\x89PNG\r\n\x1a\n"
-    assert probe_one(sig_only)["format"] == "unknown"
-    assert probe_one(sig_only + b"\x00\x00\x00\x0d")["format"] == "unknown"
+    meta_df = spark.createDataFrame(
+        [(1, "video", bytearray(b"x"), None)],
+        "media_id long, kind string, payload binary, "
+        "meta struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>",
+    )
+    with pytest.raises(ValueError, match="every_n"):
+        sample_frames(meta_df, every_n=0)
 
 
 def test_mp3_crc_protected_xing():
@@ -572,290 +436,21 @@ def test_redact_regions_spark(spark):
     assert bytes(out[3]["payload"]) == b"garbage-payload"
 
 
-def test_decode_frames_mjpeg_real_pixels(spark):
-    import numpy as np
-
-    from nifi_dicom_spark.functions import jpeg
-    from nifi_dicom_spark.functions.multimodal import decode_frames
-
-    w, h = 24, 16
-    imgs = [
-        ((np.indices((h, w, 3)).sum(axis=0) * (f + 3)) % 256).astype(np.uint8)
-        for f in range(3)
-    ]
-    frames = [jpeg.encode_jpeg(im, quality=85) for im in imgs]
-    payload = mp4.mux_mp4(
-        frames, width=w, height=h, timescale=600, sample_duration=25, codec="mjpa"
-    )
-    df = spark.createDataFrame(
-        [(1, "video", bytearray(payload))],
-        "media_id long, kind string, payload binary",
-    )
-    rows = sorted(
-        decode_frames(df, every_n=1).collect(), key=lambda r: r["frame_idx"]
-    )
-    assert len(rows) == 3
-    for f, r in enumerate(rows):
-        assert (r["width"], r["height"]) == (w, h)
-        dec = jpeg.decode_jpeg(frames[f]).astype(np.float64)
-        luma = (
-            0.299 * dec[..., 0] + 0.587 * dec[..., 1] + 0.114 * dec[..., 2]
-        ).mean()
-        assert abs(r["mean_luma"] - round(float(luma), 4)) < 1e-9
-        assert r["frame_bytes"] == len(frames[f])
-
-
-def test_decode_frames_non_jpeg_units_emit_null_dims(spark):
-    from nifi_dicom_spark.functions.multimodal import decode_frames
-
-    # access units that are NOT JPEG (stand-in for H.264): true sizes kept,
-    # dims/luma null — the declared stub boundary stays visible
-    payload = mp4.mux_mp4(
-        _samples(4), width=64, height=48, codec="avc1", sample_duration=40
-    )
-    df = spark.createDataFrame(
-        [(7, "video", bytearray(payload)), (8, "video", bytearray(b"notmp4"))],
-        "media_id long, kind string, payload binary",
-    )
-    rows = decode_frames(df, every_n=2).collect()
-    assert {r["media_id"] for r in rows} == {7}  # malformed row contributes none
-    assert len(rows) == 2  # every 2nd of 4
-    for r in rows:
-        assert r["width"] is None and r["height"] is None
-        assert r["mean_luma"] is None
-        assert r["frame_bytes"] > 0
-
-
-def test_frame_samplers_validate_every_n(spark):
-    from nifi_dicom_spark.functions.multimodal import decode_frames, sample_frames
-
-    df = spark.createDataFrame(
-        [(1, "video", bytearray(b"x"))], "media_id long, kind string, payload binary"
-    )
-    with pytest.raises(ValueError, match="every_n"):
-        decode_frames(df, every_n=0)
-    with pytest.raises(ValueError, match="every_n"):
-        decode_frames(df, every_n=-1)
-    meta_df = spark.createDataFrame(
-        [(1, "video", bytearray(b"x"), None)],
-        "media_id long, kind string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>",
-    )
-    with pytest.raises(ValueError, match="every_n"):
-        sample_frames(meta_df, every_n=0)
-
-
-# --- H.264 baseline-intra codec ----------------------------------------------
-
-
-def _h264_frames_rgb(n=3, w=20, h=12, seed=5):
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    return [rng.integers(0, 256, (h, w, 3), dtype=np.uint8) for _ in range(n)]
-
-
-def test_h264_yuv_roundtrip_bit_exact():
-    """I_PCM is the spec's lossless macroblock mode: the decoded 4:2:0
-    planes must be bit-identical, including an all-zero frame that forces
-    emulation-prevention escapes on every macroblock."""
-    import numpy as np
-
-    from nifi_dicom_spark.functions import h264
-
-    rng = np.random.default_rng(11)
-    yuvs = [
-        (
-            rng.integers(0, 256, (12, 20), dtype=np.uint8),
-            rng.integers(0, 256, (6, 10), dtype=np.uint8),
-            rng.integers(0, 256, (6, 10), dtype=np.uint8),
-        )
-        for _ in range(2)
-    ]
-    yuvs.append(
-        (
-            np.zeros((12, 20), np.uint8),
-            np.zeros((6, 10), np.uint8),
-            np.zeros((6, 10), np.uint8),
-        )
-    )
-    bs = h264.encode_h264_yuv(yuvs)
-    assert h264.is_annexb(bs)
-    out = h264.decode_h264_yuv(bs)
-    assert len(out) == len(yuvs)
-    for (y0, cb0, cr0), (y1, cb1, cr1) in zip(yuvs, out):
-        assert np.array_equal(y0, y1)
-        assert np.array_equal(cb0, cb1)
-        assert np.array_equal(cr0, cr1)
-
-
-def test_h264_rgb_luma_exact_chroma_bounded():
-    import numpy as np
-
-    from nifi_dicom_spark.functions import h264
-
-    frames = _h264_frames_rgb()
-    bs = h264.encode_h264(frames)
-    dec = h264.decode_h264(bs)
-    yuv = h264.decode_h264_yuv(bs)
-    for src, out, (y_dec, _cb, _cr) in zip(frames, dec, yuv):
-        assert out.shape == src.shape
-        # Y is carried losslessly: the decoded Y plane IS the encoder's
-        # quantized BT.601 luma, bit for bit (RGB recomputation can drift
-        # where out-of-gamut chroma clips R/G/B — the plane cannot)
-        f = src.astype(np.float64)
-        y_src = np.clip(
-            np.rint(0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]), 0, 255
-        ).astype(np.uint8)
-        assert np.array_equal(y_dec, y_src)
-    # flat color survives the 4:2:0 trip almost exactly
-    flat = np.full((16, 16, 3), (200, 30, 90), dtype=np.uint8)
-    r = h264.decode_h264(h264.encode_h264([flat]))[0]
-    assert np.abs(r.astype(int) - flat.astype(int)).max() <= 1
-
-
-def test_h264_cropping_and_probe():
-    from nifi_dicom_spark.functions import h264
-    from nifi_dicom_spark.functions.multimodal import probe_one
-
-    frames = _h264_frames_rgb(n=2, w=34, h=18)  # pads to 48x32 mb grid
-    bs = h264.encode_h264(frames)
-    info = h264.parse_h264(bs)
-    assert (info["width"], info["height"], info["n_frames"]) == (34, 18, 2)
-    assert info["profile"] == 66
-    dec = h264.decode_h264(bs)
-    assert all(d.shape == (18, 34, 3) for d in dec)
-    p = probe_one(bs)
-    assert p["format"] == "h264"
-    assert p["codec"] == "avc-baseline-p66"
-    assert (p["width"], p["height"], p["n_frames"]) == (34, 18, 2)
-
-
-def test_h264_rejects_undeclared_toolsets_and_garbage():
-    import numpy as np
-
-    from nifi_dicom_spark.functions import h264
-
-    # CABAC PPS: entropy_coding_mode_flag=1 — spec-valid, declared out of scope
-    w = h264._BitWriter()
-    w.ue(0); w.ue(0); w.u(1, 1); w.u(0, 1); w.ue(0); w.ue(0); w.ue(0)
-    w.u(0, 1); w.u(0, 2); w.se(0); w.se(0); w.se(0); w.u(0, 3)
-    w.rbsp_trailing()
-    sps = h264._nal(h264.NAL_SPS, 3, h264._sps_rbsp(1, 1, 16, 16))
-    cabac_pps = h264._nal(h264.NAL_PPS, 3, w.getvalue())
-    with pytest.raises(h264.UnsupportedH264, match="CABAC"):
-        h264.decode_h264_yuv(sps + cabac_pps)
-
-    # non-I_PCM macroblock type inside an otherwise valid IDR slice
-    frame = np.zeros((16, 16), np.uint8)
-    good = h264.encode_h264([frame])
-    sw = h264._BitWriter()
-    sw.ue(0); sw.ue(7); sw.ue(0); sw.u(0, 4); sw.ue(0)
-    sw.u(0, 1); sw.u(0, 1); sw.se(0)
-    sw.ue(0)  # mb_type 0 = I_NxN -> needs CAVLC residual decode
-    sw.rbsp_trailing()
-    headers = good[: good.rfind(b"\x00\x00\x00\x01")]
-    bad = headers + h264._nal(h264.NAL_IDR, 3, sw.getvalue())
-    with pytest.raises(h264.UnsupportedH264, match="mb_type 0"):
-        h264.decode_h264_yuv(bad)
-
-    # truncation mid-PCM and non-H.264 bytes fail loudly but cleanly
-    with pytest.raises(ValueError):
-        h264.decode_h264_yuv(good[: len(good) - 40])
-    assert not h264.is_annexb(b"not a stream")
-    with pytest.raises(ValueError):
-        h264.decode_h264_yuv(b"\x00\x00\x00\x01\x67")  # SPS header, no body
-
-
-def test_h264_sps_poc_type0_and_high_profile_parse():
-    """The SPS parser handles layouts our encoder never emits: poc_type 0
-    and the high-profile chroma branch (4:2:0 accepted, 4:2:2 refused)."""
-    from nifi_dicom_spark.functions import h264
-
-    def sps_bits(profile, poc_type, chroma=1):
-        w = h264._BitWriter()
-        w.u(profile, 8); w.u(0, 8); w.u(30, 8)
-        w.ue(0)
-        if profile in h264._HIGH_PROFILES:
-            w.ue(chroma); w.ue(0); w.ue(0); w.u(0, 1); w.u(0, 1)
-        w.ue(0)
-        w.ue(poc_type)
-        if poc_type == 0:
-            w.ue(2)  # log2_max_pic_order_cnt_lsb_minus4
-        w.ue(1); w.u(0, 1)
-        w.ue(1); w.ue(0)  # 2x1 macroblocks
-        w.u(1, 1); w.u(1, 1); w.u(0, 1); w.u(0, 1)
-        w.rbsp_trailing()
-        return w.getvalue()
-
-    s = h264._parse_sps(sps_bits(66, 0))
-    assert (s["mb_w"], s["mb_h"], s["poc_type"], s["log2_max_poc_lsb"]) == (2, 1, 0, 6)
-    s = h264._parse_sps(sps_bits(100, 2, chroma=1))
-    assert s["profile"] == 100 and s["width"] == 32
-    # header parse SUCCEEDS on 4:2:2 (probe_media needs the dims); only the
-    # pixel-decode boundary refuses it
-    s422 = h264._parse_sps(sps_bits(100, 2, chroma=2))
-    assert s422["chroma_format_idc"] == 2 and s422["width"] == 32
-    with pytest.raises(h264.UnsupportedH264, match="chroma_format_idc 2"):
-        h264._require_decodable(s422)
-
-
-def test_decode_frames_h264_real_pixels(spark):
-    import numpy as np
-
-    from nifi_dicom_spark.functions import h264
-    from nifi_dicom_spark.functions.multimodal import decode_frames, extract_features
-
-    w, h = 32, 14  # crop row exercised through the full Spark path
-    imgs = _h264_frames_rgb(n=4, w=w, h=h, seed=9)
-    aus = h264.encode_h264_aus(imgs)
-    payload = mp4.mux_mp4(
-        aus, width=w, height=h, timescale=600, sample_duration=25, codec="avc1"
-    )
-    df = spark.createDataFrame(
-        [(1, "video", bytearray(payload))],
-        "media_id long, kind string, payload binary",
-    )
-    rows = sorted(
-        decode_frames(df, every_n=2).collect(), key=lambda r: r["frame_idx"]
-    )
-    assert [r["frame_idx"] for r in rows] == [0, 2]
-    for r, au_idx in zip(rows, (0, 2)):
-        assert (r["width"], r["height"]) == (w, h)
-        dec = h264.decode_h264(aus[au_idx])[0].astype(np.float64)
-        luma = (
-            0.299 * dec[..., 0] + 0.587 * dec[..., 1] + 0.114 * dec[..., 2]
-        ).mean()
-        assert abs(r["mean_luma"] - round(float(luma), 4)) < 1e-9
-        assert r["frame_bytes"] == len(aus[au_idx])
-
-    # elementary stream through extract_features: real dims, real pixels
-    es = h264.encode_h264(imgs)
-    feats = extract_features(
-        spark.createDataFrame(
-            [(2, "video", bytearray(es), None)],
-            "media_id long, kind string, payload binary, "
-            "meta struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>",
-        )
-    ).collect()
-    assert (feats[0]["width"], feats[0]["height"]) == (w, h)
-
-
 # --- codec decoder robustness: malformed input is a clean ValueError ---------
 #
-# The public decode_* contract across every from-scratch codec: corrupted,
+# The public decode_* contract across the from-scratch codecs: corrupted,
 # truncated, or garbage payloads raise ValueError — never a raw IndexError /
 # KeyError / StopIteration / struct.error / zlib.error from the bit-level
 # parsers. (Engine UDF call sites tolerate any exception, but the library
-# surface promises one clean error class; a fuzz pass in round 5 found
-# decode_layer3 overflowing its 576-line granule on a corrupt 9-bit
-# big_values field, and decode_jpeg/decode_png leaking parser internals.)
+# surface promises one clean error class; a fuzz pass found decode_layer3
+# overflowing its 576-line granule on a corrupt 9-bit big_values field,
+# and decode_jpeg/decode_png leaking parser internals.)
 
 
 def _codec_fixtures():
     import numpy as np
 
-    from nifi_dicom_spark.functions import aac, codecs, h264, jpeg
+    from nifi_dicom_spark.functions import codecs, jpeg
     from nifi_dicom_spark.functions import mpeg_audio as ma
 
     x = (0.4 * np.sin(2 * np.pi * 440 * np.arange(4608) / 32000)).astype(
@@ -868,21 +463,19 @@ def _codec_fixtures():
         "layer1": (ma.encode_layer1(x, sample_rate=32000), ma.decode_layer1),
         "layer2": (ma.encode_layer2(x, sample_rate=32000), ma.decode_layer2),
         "layer3": (ma.encode_layer3(x, sample_rate=32000), ma.decode_layer3),
-        "aac": (aac.encode_aac(x, sample_rate=32000), aac.decode_aac),
-        "h264": (h264.encode_h264([img, img[::-1].copy()]), h264.decode_h264),
         "jpeg": (jpeg.encode_jpeg(img), jpeg.decode_jpeg),
         "png": (codecs.encode_png(img), codecs.decode_png),
     }
 
 
-@pytest.mark.parametrize("codec", ["layer1", "layer2", "layer3", "aac", "h264", "jpeg", "png"])
+@pytest.mark.parametrize("codec", ["layer1", "layer2", "layer3", "jpeg", "png"])
 def test_decoder_rejects_malformed_input_cleanly(codec):
     import numpy as np
 
     enc, dec = _codec_fixtures()[codec]
     dec(enc)  # the pristine stream must still decode
 
-    # deterministic 3-byte corruptions (includes the round-5 layer3
+    # deterministic 3-byte corruptions (includes the layer3
     # big_values-overflow reproducer class)
     for seed in range(150):
         r = np.random.default_rng(seed)
@@ -912,112 +505,21 @@ def test_decoder_rejects_malformed_input_cleanly(codec):
             pass
 
 
-# --- H.264 header probe vs decode boundary -----------------------------------
-#
-# probe_media's job is reading dims from ANY spec-valid stream; the pixel
-# decoder's job is declining toolsets outside the baseline-intra boundary.
-# Round 5 review: _parse_sps used to conflate the two — scaling matrices,
-# interlaced, and non-4:2:0 SPS raised during HEADER parse, so probe_one
-# reported format='unknown' for real third-party H.264.
-
-
-def _third_party_sps(profile, mb_w, map_h, fmof, chroma=1, scaling=False,
-                     crop=(0, 0, 0, 0)):
-    from nifi_dicom_spark.functions import h264
-    from nifi_dicom_spark.functions.h264 import NAL_SPS, _BitWriter, _nal
-
-    w = _BitWriter()
-    w.u(profile, 8)
-    w.u(0, 8)
-    w.u(30, 8)
-    w.ue(0)
-    if profile in h264._HIGH_PROFILES:
-        w.ue(chroma)
-        if chroma == 3:
-            w.u(0, 1)
-        w.ue(0)
-        w.ue(0)
-        w.u(0, 1)
-        w.u(1 if scaling else 0, 1)
-        if scaling:
-            for _ in range(8 if chroma != 3 else 12):
-                w.u(0, 1)  # no per-list overrides (all defaults)
-    w.ue(0)  # log2_max_frame_num_minus4
-    w.ue(2)  # poc_type 2
-    w.ue(1)  # max_num_ref_frames
-    w.u(0, 1)
-    w.ue(mb_w - 1)
-    w.ue(map_h - 1)
-    w.u(1 if fmof else 0, 1)
-    if not fmof:
-        w.u(0, 1)  # mb_adaptive_frame_field_flag
-    w.u(0, 1)  # direct_8x8_inference_flag
-    has_crop = any(crop)
-    w.u(1 if has_crop else 0, 1)
-    if has_crop:
-        for c in crop:
-            w.ue(c)
-    w.rbsp_trailing()
-    return _nal(NAL_SPS, 3, w.getvalue())
-
-
-@pytest.mark.parametrize(
-    "name,kwargs,exp",
-    [
-        # interlaced: FrameHeightInMbs = 2 * map units
-        ("interlaced", dict(profile=66, mb_w=45, map_h=15, fmof=False), (720, 480)),
-        # High profile with a seq_scaling_matrix present (lists defaulted)
-        ("scaling", dict(profile=100, mb_w=20, map_h=15, fmof=True, scaling=True), (320, 240)),
-        # 4:2:2 crop unit: CropUnitY = SubHeightC(=1) * 1 → 4 luma rows
-        ("chroma422", dict(profile=100, mb_w=20, map_h=15, fmof=True, chroma=2, crop=(0, 0, 0, 4)), (320, 236)),
-    ],
-)
-def test_parse_h264_third_party_sps_variants(name, kwargs, exp):
-    from nifi_dicom_spark.functions import h264
-
-    meta = h264.parse_h264(_third_party_sps(**kwargs))
-    assert (meta["width"], meta["height"]) == exp
-    # the decode boundary still declines these toolsets (except bare crop)
-    sps = h264._parse_sps(
-        next(rbsp for t, _r, rbsp in h264._iter_nals(_third_party_sps(**kwargs)))
-    )
-    if name in ("interlaced", "scaling", "chroma422"):
-        with pytest.raises(h264.UnsupportedH264):
-            h264._require_decodable(sps)
-
-
-def test_decode_h264_max_frames_stops_early():
-    import numpy as np
-
-    from nifi_dicom_spark.functions import h264
-
-    fr = (np.arange(32 * 32 * 3, dtype=np.uint8).reshape(32, 32, 3) * 7 % 256).astype(
-        np.uint8
-    )
-    enc = h264.encode_h264([fr, fr[::-1].copy(), fr])
-    assert len(h264.decode_h264(enc)) == 3
-    one = h264.decode_h264(enc, max_frames=1)
-    assert len(one) == 1
-    assert (one[0] == h264.decode_h264(enc)[0]).all()
-
-
 def test_encoder_input_validation():
     """Encoder entrypoints reject hostile shapes/values with clean
     ValueErrors: NaN/inf PCM (Layer I/II previously quantized NaN into
-    garbage bits; Layer III/AAC raised numpy's cryptic cast error),
-    3-channel layouts into the mono/stereo codecs (AAC previously
-    ravel()ed a multichannel array into one interleaved mono stream),
-    and empty / 2-D / odd-dim images."""
+    garbage bits; Layer III raised numpy's cryptic cast error),
+    3-channel layouts into the mono/stereo Layer III codec, and
+    empty / 2-D images."""
     import numpy as np
 
-    from nifi_dicom_spark.functions import aac, codecs, h264, jpeg
+    from nifi_dicom_spark.functions import codecs, jpeg
     from nifi_dicom_spark.functions import mpeg_audio as ma
 
     encoders = [
         lambda p: ma.encode_layer1(p, 32000),
         lambda p: ma.encode_layer2(p, 32000),
         lambda p: ma.encode_layer3(p, 32000),
-        lambda p: aac.encode_aac(p, 32000),
     ]
     for enc in encoders:
         with pytest.raises(ValueError, match="finite"):
@@ -1036,293 +538,3 @@ def test_encoder_input_validation():
             jpeg.encode_jpeg(bad)
         with pytest.raises(ValueError, match=r"\(H, W, 3\)"):
             codecs.encode_png(bad)
-    with pytest.raises(ValueError, match="empty frame"):
-        h264.encode_h264([np.zeros((0, 0, 3), np.uint8)])
-    with pytest.raises(ValueError, match="even dimensions"):
-        h264.encode_h264([np.zeros((7, 9, 3), np.uint8)])
-    # grayscale stays a supported h264 input
-    assert len(h264.encode_h264([np.zeros((16, 16), np.uint8)])) > 0
-
-
-# --------------------------------------------------------------------------
-# H.264 CAVLC I_16x16 (round 5: real lossy compressed video)
-# --------------------------------------------------------------------------
-
-
-def _smooth_rgb(w, h, seed=0, phase=0.0):
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    xs = np.arange(w)[None, :]
-    ys = np.arange(h)[:, None]
-    base = 128 + 64 * np.sin(xs / 5.0 + phase) + 48 * np.cos(ys / 7.0)
-    return np.stack(
-        [
-            np.clip(base, 0, 255),
-            np.clip(base[::-1] * 0.8 + 30, 0, 255),
-            np.clip(255 - base + rng.normal(0, 6, (h, w)), 0, 255),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-
-
-def _psnr(a, b):
-    import numpy as np
-
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    return 99.0 if mse == 0 else 10 * np.log10(255.0**2 / mse)
-
-
-def test_h264_cavlc_rate_distortion_knee():
-    """CAVLC I_16x16 is REAL lossy compression: bytes fall and error grows
-    monotonically with QP, qp=0 is near-lossless in YUV (max err <= 2 —
-    DC Hadamard rounding), and every stream still sniffs/probes as H.264."""
-    import numpy as np
-
-    from nifi_dicom_spark.functions import h264
-
-    frames = [_smooth_rgb(48, 32, seed=f, phase=0.6 * f) for f in range(3)]
-    yuvs = [h264._rgb_to_yuv420(f) for f in frames]
-    sizes, errs = [], []
-    for qp in (0, 12, 24, 36, 48):
-        bs = h264.encode_h264_yuv(yuvs, qp=qp)
-        assert h264.is_annexb(bs)
-        assert h264.parse_h264(bs)["n_frames"] == 3
-        dec = h264.decode_h264_yuv(bs)
-        err = max(
-            int(np.abs(p.astype(int) - q.astype(int)).max())
-            for a, b in zip(yuvs, dec)
-            for p, q in zip(a, b)
-        )
-        sizes.append(len(bs))
-        errs.append(err)
-    assert errs[0] <= 2, f"qp=0 must be near-lossless, max err {errs[0]}"
-    assert sizes == sorted(sizes, reverse=True), f"bytes must fall with QP: {sizes}"
-    assert errs == sorted(errs), f"error must grow with QP: {errs}"
-    # the pixel-domain decode at a middle QP is still faithful
-    mid = h264.decode_h264(h264.encode_h264(frames, qp=24))
-    assert min(_psnr(a, b) for a, b in zip(frames, mid)) > 28.0
-
-
-def test_h264_cavlc_pred_modes_normative_recon():
-    """Directional content routes through all intra predictors and the
-    decode matches the encoder's lock-step reconstruction exactly (the
-    stream is its own fixture: any drift in prediction/transform/CAVLC
-    breaks the roundtrip). Also checks the prediction kernels directly."""
-    import numpy as np
-
-    from nifi_dicom_spark.functions import h264
-    from nifi_dicom_spark.functions import h264_residual as hr
-
-    # direct kernel checks (8.3.3 / 8.3.4)
-    top = np.arange(16, dtype=np.int64) * 3 + 10
-    left = np.arange(16, dtype=np.int64) * 5 + 7
-    v = hr.pred_luma16(0, top, None, None)
-    assert (v == np.tile(top, (16, 1))).all()
-    hpred = hr.pred_luma16(1, None, left, None)
-    assert (hpred == np.tile(left[:, None], (1, 16))).all()
-    dc_both = hr.pred_luma16(2, top, left, None)
-    assert (dc_both == (int(top.sum()) + int(left.sum()) + 16) >> 5).all()
-    assert (hr.pred_luma16(2, None, None, None) == 128).all()
-    plane = hr.pred_luma16(3, top, left, int(top[0]))
-    assert plane.min() >= 0 and plane.max() <= 255
-    # chroma DC per-sub-block neighbor rules: (4,0) prefers top, (0,4) left
-    ct = np.full(8, 100, np.int64)
-    cl = np.full(8, 20, np.int64)
-    cdc = hr.pred_chroma8(0, ct, cl, 50)
-    assert cdc[0, 0] == (100 * 4 + 20 * 4 + 4) >> 3
-    assert (cdc[0:4, 4:8] == 100).all() and (cdc[4:8, 0:4] == 20).all()
-    assert cdc[4, 4] == (100 * 4 + 20 * 4 + 4) >> 3
-    # multi-MB frames with strong vertical / horizontal / planar structure
-    xs = np.arange(64)[None, :]
-    ys = np.arange(48)[:, None]
-    vert = np.broadcast_to((xs * 4 % 256), (48, 64)).astype(np.uint8)
-    horiz = np.broadcast_to((ys * 4 % 256), (48, 64)).astype(np.uint8)
-    planar = ((xs * 2 + ys * 3) % 256).astype(np.uint8)
-    for plane_img in (vert, horiz, planar):
-        rgb = np.stack([plane_img] * 3, axis=-1)
-        dec = h264.decode_h264(h264.encode_h264([rgb], qp=16))[0]
-        assert _psnr(rgb, dec) > 34.0
-
-
-def test_h264_cavlc_marker_gate_and_mixed_pcm():
-    """Streams without the engine SEI marker must NOT be entropy-decoded
-    (third-party CAVLC would mis-decode under engine-canonical tables) —
-    they fall to the declared UnsupportedH264 boundary while headers stay
-    probe-able. I_PCM and CAVLC macroblocks coexist in one stream."""
-    import numpy as np
-    import pytest
-
-    from nifi_dicom_spark.functions import h264
-
-    frame = _smooth_rgb(32, 16, seed=2)
-    bs = h264.encode_h264([frame], qp=28)
-    # strip the SEI NAL -> same slice bytes, no marker
-    parts = bs.split(b"\x00\x00\x00\x01")
-    stripped = b"".join(
-        b"\x00\x00\x00\x01" + p
-        for p in parts[1:]
-        if not (p and (p[0] & 0x1F) == h264.NAL_SEI)
-    )
-    with pytest.raises(h264.UnsupportedH264, match="SEI marker"):
-        h264.decode_h264(stripped)
-    assert h264.parse_h264(stripped)["width"] == 32  # probe unaffected
-    # a wrong-uuid SEI is also not a marker
-    fake_sei = h264._nal(h264.NAL_SEI, 0, b"\x05\x10" + b"\x00" * 16 + b"\x80")
-    with pytest.raises(h264.UnsupportedH264, match="SEI marker"):
-        h264.decode_h264(fake_sei + stripped)
-    # mixed stream: CAVLC IDR then an I_PCM IDR under the same SPS/PPS
-    yuv = h264._rgb_to_yuv420(frame)
-    pcm_slice = h264._nal(
-        h264.NAL_IDR, 3, h264._idr_slice_rbsp(yuv[0], yuv[1], yuv[2], 2, 1, 1)
-    )
-    mixed = bs + pcm_slice
-    f_cavlc, f_pcm = h264.decode_h264_yuv(mixed)
-    assert all(np.array_equal(p, q) for p, q in zip(f_pcm, yuv))  # PCM bit-exact
-    assert _psnr(yuv[0], f_cavlc[0]) > 28.0
-
-
-def test_h264_cavlc_malformed_bitstream_contract():
-    """Corrupting or truncating a CAVLC stream must raise ValueError /
-    UnsupportedH264 or decode to frames — never crash with an internal
-    error (IndexError, struct.error, numpy broadcast...)."""
-    import pytest
-
-    from nifi_dicom_spark.functions import h264
-
-    bs = h264.encode_h264([_smooth_rgb(32, 32, seed=4)], qp=20)
-    with pytest.raises(ValueError):
-        h264.decode_h264(bs[: len(bs) - 7])  # truncated mid-slice
-    n_checked = 0
-    for pos in range(len(bs) - 60, len(bs), 3):  # corrupt slice payload bytes
-        corrupted = bytearray(bs)
-        corrupted[pos] ^= 0x5A
-        try:
-            h264.decode_h264(bytes(corrupted))
-        except ValueError:
-            pass  # UnsupportedH264 is a ValueError subclass
-        n_checked += 1
-    assert n_checked > 15
-
-
-def test_h264_cavlc_block_codec_exact():
-    """CAVLC block coding is exact: scan vectors of every density round-trip
-    bit-for-bit through encode/decode in all nC contexts, and every VLC
-    table is a complete prefix code (Kraft sum == 1)."""
-    import numpy as np
-
-    from nifi_dicom_spark.functions import h264_residual as hr
-    from nifi_dicom_spark.functions.h264 import _BitReader, _BitWriter
-
-    rng = np.random.default_rng(77)
-    for trial in range(800):
-        mc = int(rng.choice([16, 15, 4]))
-        nc = -1 if mc == 4 else int(rng.choice([0, 1, 2, 3, 4, 7, 8, 16]))
-        coeffs = np.where(
-            rng.random(mc) < rng.uniform(0, 1),
-            rng.integers(-3000, 3001, mc),
-            0,
-        ).astype(np.int64)
-        w = _BitWriter()
-        tc = hr.cavlc_encode_block(w, coeffs, nc)
-        w.rbsp_trailing()
-        out, tc2 = hr.cavlc_decode_block(_BitReader(w.getvalue()), nc, mc)
-        assert tc == tc2 and np.array_equal(out, coeffs)
-    t = hr._tables()
-    encs = [e for e, _d, _m in t["ct"]] + [t["cdc"][0]]
-    encs += [e for e, _d, _m in t["tz_luma"].values()]
-    encs += [e for e, _d, _m in t["tz_cdc"].values()]
-    encs += [e for e, _d, _m in t["runs"].values()]
-    for enc in encs:
-        assert abs(sum(2.0**-ln for _c, ln in enc.values()) - 1.0) < 1e-12
-
-
-def test_h264_cavlc_level_codec_spec_escapes():
-    """The spec 9.2.2 level coder round-trips every magnitude through all
-    suffixLength regimes, including the prefix-14 four-bit escape, the
-    prefix-15 twelve-bit escape (base 30 when suffixLength is 0 — the
-    spec adds 15 twice there) and the prefix>=16 growing escapes."""
-    from nifi_dicom_spark.functions import h264_residual as hr
-    from nifi_dicom_spark.functions.h264 import _BitReader, _BitWriter
-
-    for sl0 in range(7):
-        for first, t1 in ((True, 0), (True, 3), (False, 0), (False, 3)):
-            lo = 2 if (first and t1 < 3) else 1
-            mags = list(range(lo, 70)) + [255, 2048, 4111, 4112, 9000, 30000]
-            for mag in mags:
-                for lv in (mag, -mag):
-                    w = _BitWriter()
-                    sl1 = hr._encode_level(w, lv, first, t1, sl0)
-                    w.rbsp_trailing()
-                    out, sl2 = hr._decode_level(_BitReader(w.getvalue()), first, t1, sl0)
-                    assert out == lv and sl1 == sl2, (sl0, first, t1, lv, out)
-
-
-def test_h264_i4x4_modes_and_compression():
-    """I_4x4 macroblocks: nine-mode per-block prediction round-trips
-    exactly through encode->decode on structured content, beats I_16x16
-    on hard edges (that's what the finer prediction is FOR), and the
-    'auto' encoder mixes both MB types under one stream."""
-    import numpy as np
-
-    from nifi_dicom_spark.functions import h264
-
-    xs = np.arange(64)[None, :]
-    ys = np.arange(48)[:, None]
-    edge = (np.where((xs % 13) < 6, 40, 210) * np.ones((48, 1))).astype(np.uint8)
-    diag = ((xs * 3 + ys * 5) % 256).astype(np.uint8)
-    rng = np.random.default_rng(8)
-    textured = np.clip(
-        diag.astype(float) + rng.normal(0, 10, (48, 64)), 0, 255
-    ).astype(np.uint8)
-    for img in (edge, diag, textured):
-        rgb = np.stack([img] * 3, axis=-1)
-        for mt in ("i16", "i4", "auto"):
-            dec = h264.decode_h264(h264.encode_h264([rgb], qp=16, mb_types=mt))[0]
-            assert _psnr(rgb, dec) > 34.0, mt
-    # edges: I_4x4 directional prediction pays for its mode signaling
-    edge_rgb = np.stack([edge] * 3, axis=-1)
-    sz16 = len(h264.encode_h264([edge_rgb], qp=20, mb_types="i16"))
-    sz4 = len(h264.encode_h264([edge_rgb], qp=20, mb_types="i4"))
-    assert sz4 < sz16 * 0.7, (sz4, sz16)
-    # auto emits BOTH mb types somewhere across mixed content
-    mixed = np.stack([np.where(xs + 0 * ys < 32, edge, textured)] * 3, axis=-1)
-    bs = h264.encode_h264([mixed], qp=20, mb_types="auto")
-    body = bs.split(b"\x00\x00\x00\x01")[-1]
-    # decode must succeed and match the auto encoder's own reconstruction
-    dec = h264.decode_h264(bs)[0]
-    assert _psnr(mixed, dec) > 30.0
-    assert len(body) > 0
-    # invalid mb_types rejected up front
-    import pytest
-
-    with pytest.raises(ValueError, match="mb_types"):
-        h264.encode_h264([edge_rgb], qp=20, mb_types="i8")
-
-
-def test_h264_i4x4_malformed_and_marker_contract():
-    """The I_4x4 path honors the same contracts as I_16x16: truncation
-    raises ValueError, byte corruption never escapes the ValueError
-    family, and stripping the SEI marker declares the stream unsupported."""
-    import pytest
-
-    from nifi_dicom_spark.functions import h264
-
-    bs = h264.encode_h264([_smooth_rgb(32, 32, seed=6)], qp=18, mb_types="i4")
-    with pytest.raises(ValueError):
-        h264.decode_h264(bs[: len(bs) - 5])
-    for pos in range(len(bs) - 45, len(bs), 4):
-        corrupted = bytearray(bs)
-        corrupted[pos] ^= 0x33
-        try:
-            h264.decode_h264(bytes(corrupted))
-        except ValueError:
-            pass
-    parts = bs.split(b"\x00\x00\x00\x01")
-    stripped = b"".join(
-        b"\x00\x00\x00\x01" + p
-        for p in parts[1:]
-        if not (p and (p[0] & 0x1F) == h264.NAL_SEI)
-    )
-    with pytest.raises(h264.UnsupportedH264, match="SEI marker"):
-        h264.decode_h264(stripped)

@@ -441,7 +441,7 @@ def test_multimodal_feature_extraction(spark):
 
 def test_codecs_wav_bmp_roundtrip():
     """Pure-numpy WAV/BMP codecs: encode∘decode is identity (up to PCM
-    quantization), resize samples the right pixels."""
+    quantization)."""
     import numpy as np
 
     from nifi_dicom_spark.functions import codecs
@@ -463,9 +463,6 @@ def test_codecs_wav_bmp_roundtrip():
     back_img = codecs.decode_bmp(bmp)
     assert back_img.shape == (20, 30, 3)
     assert (back_img == img).all()
-    small = codecs.resize_nearest(back_img, 6, 4)
-    assert small.shape == (4, 6, 3)
-    assert (small[0] == [255, 0, 0]).all() and (small[-1] == [0, 0, 0]).all()
 
 
 def test_multimodal_real_decode_features(spark):
@@ -474,11 +471,7 @@ def test_multimodal_real_decode_features(spark):
     import numpy as np
 
     from nifi_dicom_spark.functions import codecs
-    from nifi_dicom_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_images,
-    )
+    from nifi_dicom_spark.functions.multimodal import MEDIA_SCHEMA, extract_features
 
     t = np.arange(4000) / 8000.0
     wav = codecs.encode_wav((0.8 * np.sin(2 * np.pi * 220 * t)).astype(np.float32), 8000)
@@ -495,14 +488,6 @@ def test_multimodal_real_decode_features(spark):
     assert abs(feats[1][0] - 0.8 / 2**0.5) < 0.01  # real RMS of the sine
     assert feats[2][0] < 0.01 and feats[2][-1] > 0.7  # real band means
     assert len(feats[3]) == 4  # stub path still produces the schema
-
-    resized = {
-        r["media_id"]: r for r in resize_images(media, 8, 8).collect()
-    }
-    out_img = codecs.decode_bmp(bytes(resized[2]["payload"]))
-    assert out_img.shape == (8, 8, 3)
-    assert resized[2]["meta"]["mime"] == "image/bmp"
-    assert resized[3]["meta"]["mime"] == "image/fake"  # stub passthrough
 
 
 def test_unsupported_codec_variants_fall_back_to_stub(spark):

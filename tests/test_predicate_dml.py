@@ -77,6 +77,23 @@ def test_update_where_requires_assignments(spark, tmp_path):
         tab.update_where({}, "v = 1")
 
 
+def test_update_where_rejects_key_assignment(spark, tmp_path):
+    # rewriting the key would move the row out from under its bucket and
+    # its LWW identity — refuse it, like dropping or renaming a key column
+    tab = _table(spark, tmp_path)
+    before = sorted(tab.read().collect())
+    v0 = tab.current_version()
+    with pytest.raises(ValueError, match="key column 'k'"):
+        tab.update_where({"k": "'x'"}, "v = 1")
+    with pytest.raises(ValueError, match="key column 'k'"):
+        tab.merge_into(
+            tab.read().filter("v = 2"),
+            when_matched_update={"k": "s.k || '_moved'", "v": "s.v"},
+        )
+    assert sorted(tab.read().collect()) == before
+    assert tab.current_version() == v0
+
+
 def test_delete_where_versioned_writes_tombstones(spark, tmp_path):
     """On LWW tables a predicate delete must tombstone (op_seq+1), so a
     late replay of the superseded event stays dead."""

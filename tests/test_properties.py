@@ -621,178 +621,3 @@ def test_layer2_matches_scalar_reference(seed: int, levels: int, sr: int):
     ref = ma2.synthesize(deq.reshape(-1, ma2.N_BANDS))[ma2._DELAY : ma2._DELAY + n]
     m = min(len(dec), len(ref))
     assert np.abs(dec[:m] - ref[:m]).max() < 1e-12
-
-
-# --- H.264 baseline-intra (I_PCM) lossless property --------------------------
-
-
-@given(
-    seed=st.integers(0, 10_000),
-    w=st.integers(1, 20),
-    h=st.integers(1, 12),
-    n=st.integers(1, 3),
-)
-@settings(max_examples=30, deadline=None)
-def test_h264_ipcm_roundtrip_property(seed: int, w: int, h: int, n: int):
-    """I_PCM macroblocks are the spec's raw-sample mode: for ANY frame
-    content (including pathological zero runs that force emulation-
-    prevention escapes) and ANY even geometry, encode→decode returns
-    bit-identical 4:2:0 planes, and the header-only probe agrees with the
-    deep decode on dims and frame count."""
-    from nifi_dicom_spark.functions import h264
-
-    rng = np.random.default_rng(seed)
-    lw, lh = 2 * w, 2 * h  # any even luma geometry, 2x2 .. 40x24
-    yuvs = []
-    for i in range(n):
-        if i == 0 and seed % 3 == 0:
-            y = np.zeros((lh, lw), np.uint8)  # worst case for escaping
-        else:
-            y = rng.integers(0, 256, (lh, lw), dtype=np.uint8)
-        cb = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        cr = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        yuvs.append((y, cb, cr))
-    bs = h264.encode_h264_yuv(yuvs)
-    assert h264.is_annexb(bs)
-    info = h264.parse_h264(bs)
-    assert (info["width"], info["height"], info["n_frames"]) == (lw, lh, n)
-    out = h264.decode_h264_yuv(bs)
-    assert len(out) == n
-    for (y0, cb0, cr0), (y1, cb1, cr1) in zip(yuvs, out):
-        assert np.array_equal(y0, y1)
-        assert np.array_equal(cb0, cb1)
-        assert np.array_equal(cr0, cr1)
-
-
-# --- H.264 CAVLC I_16x16 lossy-fidelity property ------------------------------
-
-
-@given(
-    seed=st.integers(0, 10_000),
-    w=st.integers(1, 3),
-    h=st.integers(1, 2),
-    qp=st.integers(0, 51),
-    mb_types=st.sampled_from(("i16", "i4", "auto")),
-)
-@settings(max_examples=25, deadline=None)
-def test_h264_cavlc_roundtrip_property(
-    seed: int, w: int, h: int, qp: int, mb_types: str
-):
-    """For ANY frame content and QP, the CAVLC I_16x16 codec reconstructs
-    within a quantizer-proportional fidelity bound. PSNR (not inf-norm —
-    the Layer II lesson: per-band half-step errors can pile up at one
-    sample) against the quantizer floor: uniform-noise content bottoms
-    out near 10*log10(255^2/(step^2/12)), and the bound keeps ~8 dB of
-    slack below that. A catastrophic decode (wrong reconstruction level,
-    broken prediction neighbor, table drift) lands tens of dB under it."""
-    from nifi_dicom_spark.functions import h264
-
-    rng = np.random.default_rng(seed)
-    lw, lh = 16 * w, 16 * h
-    y = rng.integers(0, 256, (lh, lw), dtype=np.uint8)
-    if seed % 4 == 0:  # smooth content exercises DC/plane paths + cbp=0
-        ys, xs = np.mgrid[0:lh, 0:lw]
-        y = np.clip(120 + 3 * xs + 2 * ys, 0, 255).astype(np.uint8)
-    cb = rng.integers(0, 256, (lh // 2, lw // 2), dtype=np.uint8)
-    cr = rng.integers(0, 256, (lh // 2, lw // 2), dtype=np.uint8)
-    bs = h264.encode_h264_yuv([(y, cb, cr)], qp=qp, mb_types=mb_types)
-    y1, cb1, cr1 = h264.decode_h264_yuv(bs)[0]
-    if qp == 0:
-        assert int(np.abs(y.astype(int) - y1.astype(int)).max()) <= 2
-    mse = float(np.mean((y.astype(np.float64) - y1.astype(np.float64)) ** 2))
-    psnr = 99.0 if mse == 0 else 10 * np.log10(255.0**2 / mse)
-    assert psnr >= 44.0 - 0.8 * qp, f"qp={qp}: Y PSNR {psnr:.1f}"
-    cmse = float(np.mean((cb.astype(np.float64) - cb1.astype(np.float64)) ** 2))
-    cpsnr = 99.0 if cmse == 0 else 10 * np.log10(255.0**2 / cmse)
-    # chroma QP saturates at 39 (table 8-15), so its floor is flat past qp~45
-    assert cpsnr >= 44.0 - 0.8 * min(qp, 45), f"qp={qp}: Cb PSNR {cpsnr:.1f}"
-
-
-# --- AAC-LC round-trip quality property ---------------------------------------
-
-
-@given(
-    seed=st.integers(0, 10_000),
-    n=st.integers(64, 4000),
-    sr_idx=st.integers(0, 11),
-    quality=st.sampled_from([30, 60, 150, 400]),
-)
-@settings(max_examples=20, deadline=None)
-def test_aac_roundtrip_snr_property(seed: int, n: int, sr_idx: int, quality: int):
-    """For ANY band-limited signal, length, table sample rate and quality
-    tier, the AAC encode→decode trip must (a) parse back frame-exactly,
-    (b) reconstruct with SNR above a generous envelope (the per-band
-    scalefactors keep quantization error proportional to band energy —
-    an SNR bound, deliberately not an inf-norm one), and (c) be
-    bit-deterministic."""
-    from nifi_dicom_spark.functions import aac
-    from nifi_dicom_spark.functions.mpeg_audio import roundtrip_snr_db
-
-    rng = np.random.default_rng(seed)
-    sr = aac.SAMPLE_RATES[sr_idx]
-    t = np.arange(n) / sr
-    x = np.zeros(n)
-    for _ in range(rng.integers(1, 4)):
-        f = rng.uniform(50.0, 0.35 * sr)
-        x += rng.uniform(0.05, 0.3) * np.sin(2 * np.pi * f * t + rng.uniform(0, 6.28))
-    bs = aac.encode_aac(x, sr, quality=quality)
-    assert bs == aac.encode_aac(x, sr, quality=quality)
-    meta = aac.parse_adts(bs)
-    n_blocks = -(-n // aac.FRAME_LEN)
-    assert meta["n_frames"] == n_blocks + 1
-    assert meta["sample_rate"] == sr
-    y, sr2 = aac.decode_aac(bs)
-    assert sr2 == sr and len(y) == n_blocks * aac.FRAME_LEN
-    assert roundtrip_snr_db(x, y[:n]) > 22.0
-
-
-@given(
-    seed=st.integers(0, 10_000),
-    n=st.integers(64, 4000),
-    sr_idx=st.integers(0, 11),
-    quality=st.sampled_from([30, 150]),
-    correlation=st.sampled_from(["independent", "identical", "antiphase", "mixed"]),
-)
-@settings(max_examples=20, deadline=None)
-def test_aac_stereo_roundtrip_snr_property(
-    seed: int, n: int, sr_idx: int, quality: int, correlation: str
-):
-    """Stereo CPE round-trip: for ANY channel correlation structure the
-    per-frame M/S decision must stay transparent — both channels come back
-    above the same SNR envelope as mono, whichever mask the encoder picked
-    (identical → silent side, antiphase → silent mid, independent → L/R)."""
-    from nifi_dicom_spark.functions import aac
-    from nifi_dicom_spark.functions.mpeg_audio import roundtrip_snr_db
-
-    rng = np.random.default_rng(seed)
-    sr = aac.SAMPLE_RATES[sr_idx]
-    t = np.arange(n) / sr
-
-    def tone():
-        x = np.zeros(n)
-        for _ in range(rng.integers(1, 4)):
-            f = rng.uniform(50.0, 0.35 * sr)
-            x += rng.uniform(0.05, 0.3) * np.sin(
-                2 * np.pi * f * t + rng.uniform(0, 6.28)
-            )
-        return x
-
-    left = tone()
-    if correlation == "identical":
-        right = left.copy()
-    elif correlation == "antiphase":
-        right = -left
-    elif correlation == "mixed":
-        right = 0.7 * left + 0.3 * tone()
-    else:
-        right = tone()
-    x = np.stack([left, right], axis=1)
-    bs = aac.encode_aac(x, sr, quality=quality)
-    assert bs == aac.encode_aac(x, sr, quality=quality)
-    meta = aac.parse_adts(bs)
-    n_blocks = -(-n // aac.FRAME_LEN)
-    assert meta["channels"] == 2 and meta["n_frames"] == n_blocks + 1
-    y, sr2 = aac.decode_aac(bs)
-    assert sr2 == sr and y.shape == (n_blocks * aac.FRAME_LEN, 2)
-    assert roundtrip_snr_db(left, y[:n, 0]) > 22.0
-    assert roundtrip_snr_db(right, y[:n, 1]) > 22.0
