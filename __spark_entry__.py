@@ -4839,12 +4839,12 @@ def _build_oracle_sql() -> dict[str, str]:
                      ) - 1 AS p
               FROM events
             )
-            SELECT bid * 65536 + p AS "offset",
+            SELECT bid * 4294967296 + p AS "offset",
                    0 AS partition_id,
                    CASE WHEN bid % 3 = 0 THEN 'insert'
                         WHEN bid % 3 = 1 THEN 'update'
                         ELSE 'delete' END AS op,
-                   bid * 65536 + p AS op_seq,
+                   bid * 4294967296 + p AS op_seq,
                    CAST(user_id AS VARCHAR) AS conv_id,
                    CAST(event_id % 1000 AS INTEGER) AS turn_idx,
                    event_type AS role,

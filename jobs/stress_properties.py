@@ -10,6 +10,9 @@ is watching. This job re-invokes each property's inner test body (via the
 uniformly-drawn parameter combinations over the SAME strategy domains the
 test declares, in parallel worker processes.
 
+Properties that need a SparkSession (``SPARK_DOMAINS``) run after the
+pool, in this process, against one local session.
+
 Any failure prints the exact kwargs, ready to pin as an ``@example`` in
 tests/test_properties.py next to a fix.
 
@@ -80,6 +83,15 @@ DOMAINS = {
     },
 }
 
+#: properties that take the ``spark`` fixture; same domain format
+SPARK_DOMAINS = {
+    "test_arrow_lww_kernel_matches_lww_dedup": {
+        "seed": ("int", 0, 10_000),
+        "n": ("int", 1, 60),
+        "n_files": ("int", 1, 4),
+    },
+}
+
 
 def _draw(rng: np.random.Generator, domain):
     if isinstance(domain, tuple) and domain[0] == "int":
@@ -87,15 +99,15 @@ def _draw(rng: np.random.Generator, domain):
     return domain[int(rng.integers(0, len(domain)))]
 
 
-def _run_case(task):
-    """Worker: run one (test_name, kwargs) case; return (name, kwargs, err)."""
+def _run_case(task, **fixtures):
+    """Run one (test_name, kwargs) case; return (name, kwargs, err)."""
     name, kwargs = task
     try:
         import tests.test_properties as tp
 
         fn = getattr(tp, name)
         inner = getattr(getattr(fn, "hypothesis", None), "inner_test", fn)
-        inner(**kwargs)
+        inner(**fixtures, **kwargs)
         return (name, kwargs, None)
     except Exception:
         return (name, kwargs, traceback.format_exc(limit=4))
@@ -116,32 +128,50 @@ def main() -> int:
     print(f"master_seed={master} per_test={args.per_test}", flush=True)
     rng = np.random.default_rng(master)
 
-    tasks = []
+    def draw_tasks(domains: dict) -> list:
+        out = []
+        for name, dom in domains.items():
+            if args.only and args.only not in name:
+                continue
+            for _ in range(args.per_test):
+                out.append((name, {k: _draw(rng, d) for k, d in dom.items()}))
+        return out
+
     # Interleave tests so slow families don't serialize at the pool tail;
     # w/h ranges checked against the test file at import time below.
-    for name, dom in DOMAINS.items():
-        if args.only and args.only not in name:
-            continue
-        for _ in range(args.per_test):
-            tasks.append((name, {k: _draw(rng, d) for k, d in dom.items()}))
+    tasks = draw_tasks(DOMAINS)
     order = rng.permutation(len(tasks))
     tasks = [tasks[i] for i in order]
+    spark_tasks = draw_tasks(SPARK_DOMAINS)
 
     # Fail fast if a domain drifted from the test file (e.g. a strategy was
     # widened but this table wasn't): verify each name still exists.
     import tests.test_properties as tp
 
-    for name in DOMAINS:
+    for name in [*DOMAINS, *SPARK_DOMAINS]:
         assert hasattr(tp, name), f"{name} missing from tests/test_properties.py"
 
     fails = {}
     counts = {}
+
+    def record(name, kwargs, err) -> None:
+        counts[name] = counts.get(name, 0) + 1
+        if err is not None:
+            fails.setdefault(name, []).append((kwargs, err))
+            print(f"FAIL {name} {kwargs}\n{err}", flush=True)
+
     with Pool(args.workers) as pool:
-        for name, kwargs, err in pool.imap_unordered(_run_case, tasks, chunksize=4):
-            counts[name] = counts.get(name, 0) + 1
-            if err is not None:
-                fails.setdefault(name, []).append((kwargs, err))
-                print(f"FAIL {name} {kwargs}\n{err}", flush=True)
+        for result in pool.imap_unordered(_run_case, tasks, chunksize=4):
+            record(*result)
+    if spark_tasks:
+        from nifi_dicom_spark.session import get_spark
+
+        spark = get_spark(app_name="stress_properties", cpus=min(4, args.workers))
+        try:
+            for task in spark_tasks:
+                record(*_run_case(task, spark=spark))
+        finally:
+            spark.stop()
 
     print("\n=== summary ===")
     for name in sorted(counts):

@@ -166,6 +166,29 @@ _PK_CACHE: dict[int, list[int]] = {}
 #: serializes the session-conf toggle around bucket-file writes
 _WRITE_CONF_LOCK = threading.Lock()
 
+#: a lookup or scan whose kept data files total at most this many bytes
+#: runs on the driver: pyarrow reads the files, the Arrow LWW kernel
+#: (:func:`~nifi_dicom_spark.operators.dedup.arrow_lww`) reduces them and
+#: the result is a LocalRelation, so Spark's fixed cost per job is never
+#: paid. Larger reads keep the Spark path: the driver cannot hold them.
+DRIVER_READ_MAX_BYTES = 16 << 20
+
+
+def _nullable(schema: T.StructType) -> T.StructType:
+    """``schema`` with every field nullable: parquet reads surface every
+    column nullable, so every read path returns this schema."""
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in schema.fields]
+    )
+
+
+def _live_renames(m: dict, schema: T.StructType) -> dict[str, list[str]]:
+    """The manifest's rename ledger (current name -> historical names,
+    newest first), limited to columns ``schema`` still has."""
+    renames = (m.get("props") or {}).get("renamed_columns") or {}
+    cur = set(schema.fieldNames())
+    return {new: olds for new, olds in renames.items() if new in cur}
+
 
 def _partition_preimages(spark: SparkSession, n: int) -> list[int]:
     """``pk[b]`` = a long ``x`` with ``pmod(murmur3_hash(x), n) == b``.
@@ -483,11 +506,8 @@ class SnapshotTable:
         ``coalesce(current, newest_old, …)`` — a file holds exactly one
         era's name, so exactly one leg is non-null per row. Tables with no
         renames take the plain single-schema read (zero overhead)."""
-        renames = (m.get("props") or {}).get("renamed_columns") or {}
         cur = {f.name: f for f in schema.fields}
-        live_renames = {
-            new: olds for new, olds in renames.items() if new in cur
-        }
+        live_renames = _live_renames(m, schema)
         if not live_renames:
             return self.spark.read.schema(schema).parquet(*abs_paths)
         hist_fields = [
@@ -506,6 +526,51 @@ class SnapshotTable:
                 else F.col(f.name)
                 for f in schema.fields
             ]
+        )
+
+    def _fits_driver(self, rels: list[str]) -> bool:
+        """Whether the data files ``rels`` total at most
+        :data:`DRIVER_READ_MAX_BYTES` (one ``stat`` per file). No files
+        always fit, so an empty result comes from an empty Arrow table: a
+        LocalRelation, whose collect runs no Spark job
+        (``createDataFrame([], schema)`` runs one)."""
+        total = 0
+        for rel in rels:
+            total += os.path.getsize(os.path.join(self.data_dir, rel))
+            if total > DRIVER_READ_MAX_BYTES:
+                return False
+        return True
+
+    def _arrow_files(
+        self,
+        m: dict,
+        schema: T.StructType,
+        rels: list[str],
+        columns: list[str] | None = None,
+        filters=None,
+    ):
+        """The data files ``rels`` read on the driver with pyarrow and
+        conformed to the nullable ``schema`` — the Arrow twin of
+        :meth:`_load_files` (renamed columns coalesce, later-added ones
+        fill with nulls, widened ones cast). ``columns`` and ``filters``
+        push a projection and a row filter into the parquet read; columns
+        left out come back null."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from nifi_dicom_spark.operators.dedup import arrow_conform
+
+        tables = [
+            pq.read_table(
+                os.path.join(self.data_dir, rel),
+                columns=columns,
+                filters=filters,
+                partitioning=None,
+            )
+            for rel in rels
+        ]
+        return arrow_conform(
+            tables, to_arrow_schema(_nullable(schema)), _live_renames(m, schema)
         )
 
     # ---------------------------------------------------------------- writes
@@ -1170,7 +1235,11 @@ class SnapshotTable:
         ``zorder_by`` layout pays off: after a Z-order rewrite each file
         covers a small hyper-rectangle of the listed dimensions, so a
         rectangle query prunes on all of them at once instead of only the
-        single sort dimension."""
+        single sort dimension.
+
+        When the full and version-columns-only files together total at
+        most :data:`DRIVER_READ_MAX_BYTES`, they are read and reduced on
+        the driver (:meth:`_driver_scan`) and no Spark job runs."""
         if not predicates:
             raise ValueError("scan_ranges needs at least one column range")
         if version is not None and version < self.min_retained_version():
@@ -1194,8 +1263,10 @@ class SnapshotTable:
                     df = df.filter(c <= F.lit(hi))
             return df
 
-        if not full_rels:
-            return self.spark.createDataFrame([], schema)
+        if self._fits_driver([*full_rels, *slim_rels]):
+            return rng(
+                self._driver_scan(m, schema, full_rels, slim_rels, versioned)
+            ).select(*schema.fieldNames())
         full_paths = [os.path.join(self.data_dir, r) for r in full_rels]
         full = self._load_files(m, schema, full_paths)
         if not versioned:
@@ -1233,6 +1304,40 @@ class SnapshotTable:
             rng(winners.filter(F.col("_kept")))
             .select(*schema.fieldNames())
         )
+
+    def _driver_scan(
+        self,
+        m: dict,
+        schema: T.StructType,
+        full_rels: list[str],
+        slim_rels: list[str],
+        versioned: bool,
+    ) -> DataFrame:
+        """:meth:`scan_ranges` before its range filter, on the driver: the
+        same full and version-columns-only reads and the same LWW reduce
+        over both, in Arrow. The caller's range filter then runs over the
+        LocalRelation, which the optimizer folds into a
+        ``LocalTableScan`` with Spark's own literal semantics (string
+        bounds, the session time zone)."""
+        import pyarrow as pa
+
+        from nifi_dicom_spark.operators.dedup import arrow_lww
+
+        full = self._arrow_files(m, schema, full_rels)
+        if versioned:
+            key_cols = m["key_cols"]
+            slim = self._arrow_files(
+                m, schema, slim_rels, columns=[*key_cols, "op_seq", "offset"]
+            )
+            both = pa.concat_tables(
+                [
+                    full.append_column("_kept", pa.repeat(True, full.num_rows)),
+                    slim.append_column("_kept", pa.repeat(False, slim.num_rows)),
+                ]
+            )
+            winners = arrow_lww(both, key_cols)
+            full = winners.filter(winners["_kept"]).drop_columns(["_kept"])
+        return self.spark.createDataFrame(full, _nullable(schema))
 
     def scan_file_stats(
         self, predicate_col: str, lo=None, hi=None, version: int | None = None
@@ -1455,14 +1560,15 @@ class SnapshotTable:
         sidecars built it is typically one base file + the deltas that
         actually touched the key since last compaction.
 
-        A small read pays no fixed planning cost: bucket planning
-        (:meth:`_lookup_plan`) launches no Spark job, and the LWW reduce
-        over base ∪ deltas runs without a shuffle. The key-filtered rows
-        are only the stored versions of the requested keys, so they are
-        coalesced into one partition; ``SinglePartition`` satisfies the
-        aggregate's clustered distribution, and the plan has no
-        ``Exchange`` — one job whose reduce holds O(versions of the
-        requested keys) rows.
+        A small read runs no Spark job. Bucket planning
+        (:meth:`_lookup_plan`) runs on the driver. When the kept files
+        total at most :data:`DRIVER_READ_MAX_BYTES`, pyarrow reads them
+        with ``key in values`` pushed into the read, the Arrow LWW kernel
+        reduces base ∪ deltas, and the result is a LocalRelation. Above
+        the cap the rows are read by Spark and coalesced into one
+        partition: they are only the stored versions of the requested
+        keys, ``SinglePartition`` satisfies the aggregate's clustered
+        distribution, and the plan has no ``Exchange``.
 
         Reference analog: the single-identifier fetch under a C-FIND/
         C-MOVE unique key (``QueryRetrieveController``; P6 gating),
@@ -1483,27 +1589,36 @@ class SnapshotTable:
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         key0 = m["key_cols"][0]
         _bks, kept, _pruned = self._lookup_plan(m, values)
-        if not kept:
-            # parquet reads surface every column nullable; the empty result
-            # must carry the same schema as the read-some-files path
-            nullable = T.StructType(
-                [T.StructField(f.name, f.dataType, True) for f in schema.fields]
-            )
-            return self.spark.createDataFrame([], nullable)
         delta_rels = {
             rel for rl in m.get("delta_files", {}).values() for rel in rl
         }
+        reduce = any(rel in delta_rels for rel in kept)
+        if reduce and not {"op_seq", "offset"} <= set(schema.fieldNames()):
+            raise RuntimeError(
+                "delta files present but table lacks op_seq/offset version "
+                "columns — cannot LWW-merge on read"
+            )
+        if self._fits_driver(kept):
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            from pyspark.sql.pandas.types import to_arrow_type
+
+            from nifi_dicom_spark.operators.dedup import arrow_lww
+
+            ktype = next(f.dataType for f in schema.fields if f.name == key0)
+            wanted = pa.array(list(dict.fromkeys(values)), to_arrow_type(ktype))
+            tbl = self._arrow_files(
+                m, schema, kept, filters=pc.field(key0).isin(wanted)
+            )
+            if reduce:
+                tbl = arrow_lww(tbl, m["key_cols"])
+            return self.spark.createDataFrame(tbl, _nullable(schema))
         df = self._load_files(
             m, schema, [os.path.join(self.data_dir, rel) for rel in kept]
         ).filter(F.col(key0).isin(values))
-        if any(rel in delta_rels for rel in kept):
+        if reduce:
             from nifi_dicom_spark.operators.dedup import lww_dedup
 
-            if not {"op_seq", "offset"} <= set(schema.fieldNames()):
-                raise RuntimeError(
-                    "delta files present but table lacks op_seq/offset version "
-                    "columns — cannot LWW-merge on read"
-                )
             df = lww_dedup(df.coalesce(1), m["key_cols"]).select(
                 *schema.fieldNames()
             )

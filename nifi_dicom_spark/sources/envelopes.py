@@ -39,8 +39,11 @@ Canal flat message (Alibaba Canal ``FlatMessage``)::
      "type": "INSERT"}
 
 * ``data`` batches N rows → ``posexplode`` fans them out; ``offset`` =
-  ``id * 2^16 + row_index`` keeps the within-batch order total (Canal's
-  ``id`` is the ack/batch id, monotone per destination).
+  ``id * 2^32 + row_index`` keeps the within-batch order total (Canal's
+  ``id`` is the ack/batch id, monotone per destination). The 2^32 radix
+  holds any row count one binlog entry can carry; an ``id`` of 2^31 or
+  more overflows a long, so its rows get a NULL offset and are
+  quarantined.
 * Canal's flat message STRINGIFIES every value (``mysqlType``/``sqlType``
   carry the real types separately) — ``turn_idx`` casts from string,
   ``ts`` parses from the DATETIME string. Nulls survive (JSON null).
@@ -185,14 +188,37 @@ def parse_canal(
     image value casts FROM STRING (the flat-message contract). DDL records
     (``isDdl`` or an empty ``data``) produce no rows."""
     e = F.from_json(F.col(value_col), CANAL_ENVELOPE_SCHEMA)
-    rows = df.select(
-        e["id"].alias("_batch_id"),
-        e["type"].alias("_type"),
-        e["isDdl"].alias("_ddl"),
-        F.posexplode_outer(e["data"]).alias("_pos", "_img"),
-    ).filter(~F.coalesce(F.col("_ddl"), F.lit(False)) & F.col("_img").isNotNull())
+    # parse once per envelope, THEN explode: envelope fields selected
+    # beside the generator would be evaluated after it, re-parsing the
+    # whole message for every row it fans out to (quadratic in its size)
+    rows = (
+        df.select(
+            e["id"].alias("_batch_id"),
+            e["type"].alias("_type"),
+            e["isDdl"].alias("_ddl"),
+            e["data"].alias("_data"),
+        )
+        .select(
+            "_batch_id",
+            "_type",
+            "_ddl",
+            F.posexplode_outer("_data").alias("_pos", "_img"),
+        )
+        .filter(
+            ~F.coalesce(F.col("_ddl"), F.lit(False)) & F.col("_img").isNotNull()
+        )
+    )
     img = F.col("_img")
-    lsn = F.col("_batch_id") * F.lit(65536).cast("long") + F.col("_pos")
+    # id * 2^32 + element position: the radix must exceed any message's
+    # row count (one binlog entry may hold 65,536 rows or more), or a
+    # message's tail would take the offsets of the next batch id's head.
+    # An id too large for the radix overflows to NULL (try_*: under ANSI
+    # the overflow would abort the whole batch), and routing quarantines
+    # that row
+    lsn = F.try_add(
+        F.try_multiply(F.col("_batch_id"), F.lit(4294967296).cast("long")),
+        F.col("_pos").cast("long"),
+    )
     return rows.select(
         lsn.alias("offset"),
         _part(partition_col).cast("int").alias("partition_id"),

@@ -19,17 +19,19 @@ Execution model (dictated by the Python Data Source API): offset
 management (``initialOffset``/``latestOffset``/``partitions``) runs on the
 driver and talks only to the commit backend — O(1) metadata reads per
 micro-batch. ``read(partition)`` runs in plain Python workers with NO
-SparkSession, so each partition computes its slice with pyarrow + pandas:
+SparkSession, so each partition computes its slice with pyarrow:
 one partition per CHANGED bucket (manifest file-set signature diff, the
 same pruning :func:`~nifi_dicom_spark.operators.diff.changed_buckets`
 does), loading only that bucket's files at the two boundary versions. The
 per-batch volume is the changed portion of the table, parallelized across
 buckets — table size never enters the cost.
 
-The pandas LWW reduce replicates ``lww_dedup`` exactly: winner = max
-(op_seq, offset) per key; tombstone winners are excluded from the visible
-state on both sides, so a delete surfaces as op ``delete``, never as an
-update to a tombstone.
+The LWW reduce is the Arrow kernel that small driver-side reads use
+(:func:`~nifi_dicom_spark.operators.dedup.arrow_lww`, the pyarrow form of
+``lww_dedup``): winner = max (op_seq, offset) per key; tombstone winners
+are excluded from the visible state on both sides, so a delete surfaces as
+op ``delete``, never as an update to a tombstone. The pre/post-image join
+of the two states runs in pandas.
 
 Exactly-once read side: offsets are durable versions in the stream
 checkpoint; manifests are immutable, so re-planning a batch after a crash
@@ -534,66 +536,62 @@ class _CDFStreamReader(DataSourceStreamReader):
         return _emit_rows(out, p)
 
 
-def _coalesce_renames(df, renames: dict):
-    """Resolve RENAMED columns in a mixed-era pandas frame: files written
-    before a rename carry a historical name — fold it into the current
-    column (newest-first precedence) and drop the historical column, so
-    downstream code sees only current names. No-op without renames."""
-    if not renames:
-        return df
-    import pandas as pd
+def _read_files(p: _BucketDiffPartition, files: list[str], names: list[str]):
+    """The key-split share of ``files`` as one Arrow table of ``names``:
+    backlog-era files (restart below a schema boundary) coalesce
+    historical (pre-rename) names into their current column, columns
+    added after their era fill with nulls, and since-dropped extras are
+    never selected. The split filter runs per file, before the concat:
+    that bounds one worker's memory to about one file plus its own key
+    share (all rows of a key hash alike, so it commutes with the per-key
+    LWW reduce)."""
+    import pyarrow as pa
 
-    for new_name, olds in renames.items():
-        present = [o for o in olds if o in df.columns]
-        if not present:
-            continue
-        if new_name in df.columns:
-            series = df[new_name]
-        else:
-            series = pd.Series([None] * len(df), index=df.index, dtype=object)
-        for o in present:
-            series = series.where(series.notna(), df[o])
-        df = df.drop(columns=present)
-        df[new_name] = series
-    return df
+    from nifi_dicom_spark.operators.dedup import arrow_conform
+
+    tbl = arrow_conform(
+        [_apply_split(_read_parquet(p.data_dir, rel), p) for rel in files],
+        renames=p.renames,
+    )
+    for c in names:
+        if c not in tbl.column_names:
+            tbl = tbl.append_column(c, pa.nulls(tbl.num_rows))
+    return tbl.select(names)
 
 
 def _read_upserts(p: _BucketDiffPartition):
     """Raw rows of one commit's appended delta files: ``_change_type`` is
     the stored op (insert/update/delete — updates are post-rows only,
-    deletes are tombstones with null payload)."""
+    deletes are tombstones with null payload). Arrow end to end."""
     import pyarrow as pa
 
-    tables = [_read_parquet(p.data_dir, rel) for rel in p.new_files]
-    df = pa.concat_tables(tables, promote_options="permissive").to_pandas()
-    df = _coalesce_renames(df, p.renames)
-    for c in p.columns:
-        if c not in df.columns:
-            df[c] = None
-    out = df[p.columns].copy()
-    out["_change_type"] = df["op"].astype(str)
-    out["_commit_version"] = p.commit_version
-    return _emit_rows(out, p)
+    target = _target_schema(p)
+    tbl = _read_files(p, p.new_files, [*p.columns, "op"])
+    cols = [tbl[c] for c in p.columns] + [
+        tbl["op"].cast(pa.string()),
+        pa.repeat(p.commit_version, tbl.num_rows),
+    ]
+    out = pa.Table.from_arrays(
+        [c.cast(f.type) for c, f in zip(cols, target)], schema=target
+    )
+    return iter(out.to_batches(max_chunksize=1 << 16))
+
+
+def _target_schema(p: _BucketDiffPartition):
+    """The stream's declared output schema, in Arrow."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(T.StructType.fromJson(json.loads(p.schema_json)))
 
 
 def _emit_rows(out, p: _BucketDiffPartition):
-    """Hand a result frame back to Spark: pyarrow RecordBatches against
-    the declared schema (vectorized Arrow transfer — the Python Data
-    Source API accepts them in place of tuples, avoiding per-row
-    pickling), falling back to tuples when no schema was shipped."""
-    import json as _json
-
-    import pandas as pd
+    """Hand a cdf result frame back to Spark: pyarrow RecordBatches
+    against the declared schema (vectorized Arrow transfer — the Python
+    Data Source API accepts them in place of tuples, avoiding per-row
+    pickling)."""
     import pyarrow as pa
 
-    if not p.schema_json:
-        return iter(
-            tuple(_py(v) for v in r) for r in out.itertuples(index=False)
-        )
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(T.StructType.fromJson(_json.loads(p.schema_json)))
+    target = _target_schema(p)
     out = out[list(target.names)]
     for name, typ in zip(target.names, target.types):
         col = out[name]
@@ -613,90 +611,77 @@ def _emit_rows(out, p: _BucketDiffPartition):
 
 
 def _bucket_state(p: _BucketDiffPartition, files: list[str]):
-    """Visible LWW state of one bucket at one version, as pandas: concat
-    the bucket's files (schema-evolution-tolerant), winner = max (op_seq,
-    offset) per key, tombstones dropped. Mirrors lww_dedup + the
-    table_changes state filter exactly."""
+    """Visible LWW state of one bucket at one version, as pandas for the
+    pre/post-image join: the Arrow kernel's winner per key
+    (:func:`~nifi_dicom_spark.operators.dedup.arrow_lww`, the last ROW
+    after a stable (op_seq, offset) sort), tombstones dropped. Mirrors
+    lww_dedup + the table_changes state filter exactly."""
     import pandas as pd
+
+    from nifi_dicom_spark.operators.dedup import arrow_lww
 
     if not files:
         return pd.DataFrame(columns=p.columns)
-    # split filter PER FILE, before any concat — this is what bounds one
-    # worker's pandas memory to ~one file plus its own key-share (all rows
-    # of a key hash identically, so per-file filtering commutes with the
-    # per-key LWW dedup below)
-    frames = [
-        _apply_split(_read_parquet(p.data_dir, rel).to_pandas(), p)
-        for rel in files
-    ]
-    df = pd.concat(frames, ignore_index=True, sort=False)
-    # backlog-era files (restart below a schema boundary): historical
-    # (pre-rename) names fold into their current column; columns added
-    # after this era null-fill; since-dropped extras are simply never
-    # selected into p.columns
-    df = _coalesce_renames(df, p.renames)
-    for c in p.columns:
-        if c not in df.columns:
-            df[c] = None
+    vcols = [c for c in _VERSION_COLS if p.versioned and c not in p.columns]
+    tbl = _read_files(p, files, [*p.columns, *vcols])
     if p.versioned:
-        # last ROW per key after the stable (op_seq, offset) sort — NOT
-        # groupby().last(), which takes the last non-null value PER COLUMN
-        # and would stitch superseded values into the winner.
-        #
-        # Tie guard: on (key, op_seq, offset) ties this keep='last' would
-        # break by file/concat order while the Spark-side lww_dedup max_by
-        # breaks by payload struct comparison — the two sides could
-        # disagree. Duplicate EVENT DELIVERY legitimately lands the same
-        # byte-identical row in two epochs' delta files (any winner is the
-        # same row), but a tie with DIFFERING payloads means the table is
-        # malformed: fail loudly rather than stream a state that read()
-        # might not reproduce.
-        vkey = [*p.key_cols, "op_seq", "offset"]
-        dupe = df.duplicated(subset=vkey, keep=False)
-        if dupe.any():  # rare path: disambiguate only the tied rows
-            # normalize missing values BEFORE stringifying: a duplicate
-            # delivery straddling ADD COLUMN stores null in the new file
-            # ('None') while the old file's absent column concat-fills as
-            # NaN ('nan') — the same logical row, which must not read as a
-            # payload conflict
-            sub = df.loc[dupe].astype(object)
-            distinct = sub.where(pd.notna(sub), None).astype(str).drop_duplicates()
-            clash = distinct.duplicated(subset=vkey, keep=False)
-            if clash.any():
-                sample = distinct.loc[clash, vkey].head(4)
-                raise ValueError(
-                    "malformed table: rows sharing (key, op_seq, offset) "
-                    "with DIFFERENT payloads make the LWW winner "
-                    "ambiguous (pandas and Spark tie-breaks differ); "
-                    f"sample:\n{sample.to_string(index=False)}"
-                )
-        df = df.sort_values(["op_seq", "offset"], kind="stable").drop_duplicates(
-            subset=p.key_cols, keep="last"
+        _guard_ties(tbl, [*p.key_cols, "op_seq", "offset"])
+        tbl = arrow_lww(tbl, p.key_cols, drop_tombstones=True)
+    return tbl.select(p.columns).to_pandas()
+
+
+def _guard_ties(tbl, vkey: list[str]) -> None:
+    """Fail on rows that share ``(key, op_seq, offset)`` with DIFFERENT
+    payloads. The Arrow kernel breaks such a tie by file order, while the
+    Spark-side lww_dedup max_by breaks it by payload struct comparison —
+    the two could disagree. Duplicate EVENT DELIVERY legitimately lands
+    the same row in two epochs' delta files (any winner is the same row;
+    a column one file predates reads as null in both), but a tie with
+    differing payloads means the table is malformed: fail loudly rather
+    than stream a state that read() might not reproduce."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    vk = pc.binary_join_element_wise(
+        *[tbl[c].cast(pa.string()) for c in vkey], "\x1f"
+    )
+    counts = pc.value_counts(vk)
+    tied = counts.field("values").filter(pc.greater(counts.field("counts"), 1))
+    if not len(tied):
+        return
+    seen: dict = {}
+    clash = []
+    for row in tbl.filter(pc.is_in(vk, tied)).to_pylist():  # rare path
+        k = tuple(row[c] for c in vkey)
+        if seen.setdefault(k, row) != row and k not in clash:
+            clash.append(k)
+    if clash:
+        raise ValueError(
+            "malformed table: rows sharing (key, op_seq, offset) "
+            "with DIFFERENT payloads make the LWW winner ambiguous "
+            "(Arrow and Spark tie-breaks differ); sample "
+            f"{vkey}: {clash[:4]}"
         )
-        df = df[df["op"] != "delete"]
-    # conform to the visible column set (old files may predate ADD COLUMN;
-    # pd.concat already null-fills mixed-vintage frames)
-    for c in p.columns:
-        if c not in df.columns:
-            df[c] = None
-    return df[p.columns].reset_index(drop=True)
 
 
-def _apply_split(df, p: _BucketDiffPartition):
+def _apply_split(tbl, p: _BucketDiffPartition):
     """Key-hash split filter: keep keys with hash ≡ i (mod n); pandas'
     content-deterministic hash over the STRING form of the key columns —
     string-normalized because per-file filtering must hash a key
     identically across file vintages whose physical dtypes differ
     (schema widening stores int32 in old files, int64 in new ones)."""
     import pandas as pd
+    import pyarrow as pa
 
     i, n = p.split
-    if n <= 1 or df.empty:
-        return df
+    if n <= 1 or not tbl.num_rows:
+        return tbl
     h = pd.util.hash_pandas_object(
-        df[p.key_cols].astype(str), index=False, categorize=False
+        tbl.select(p.key_cols).to_pandas().astype(str),
+        index=False,
+        categorize=False,
     )
-    return df[(h % n) == i]
+    return tbl.filter(pa.array((h % n == i).to_numpy()))
 
 
 def _read_parquet(data_dir: str, rel: str):
@@ -710,21 +695,6 @@ def _read_parquet(data_dir: str, rel: str):
             "gone — the table was likely vacuum()ed past the stream's "
             "position; restart the query from a retained startingVersion"
         ) from e
-
-
-def _py(v):
-    """pandas cell → plain Python value for Row conversion."""
-    import pandas as pd
-
-    if v is pd.NaT or v is None:
-        return None
-    if isinstance(v, float) and pd.isna(v):
-        return None
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime()
-    if hasattr(v, "item"):  # numpy scalar
-        return v.item()
-    return v
 
 
 class SnapshotCDFDataSource(DataSource):

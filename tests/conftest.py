@@ -29,3 +29,16 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(params=["driver", "spark"])
+def read_path(request, monkeypatch):
+    """Run a lookup or scan test on both read paths. ``driver``: the test
+    tables' files fit under ``DRIVER_READ_MAX_BYTES``, so pyarrow reads
+    them with no Spark job. ``spark``: the byte cap is forced to 0, so
+    every read takes the Spark path that larger reads use."""
+    if request.param == "spark":
+        from nifi_dicom_spark.lake import snapshot_table
+
+        monkeypatch.setattr(snapshot_table, "DRIVER_READ_MAX_BYTES", 0)
+    return request.param

@@ -22,7 +22,7 @@ from nifi_dicom_spark.operators.apply import (
     create_transcripts_table,
 )
 
-from test_lake_features import _epoch_events, _sorted_rows
+from test_lake_features import _epoch_events, _no_spark_jobs, _sorted_rows
 
 
 # ---------------------------------------------------------------- unit level
@@ -96,7 +96,7 @@ def _mor_table(spark, path, epochs=3, n_buckets=4):
     return table
 
 
-def test_lookup_equals_filtered_read_mor(spark, tmp_path):
+def test_lookup_equals_filtered_read_mor(spark, tmp_path, read_path):
     table = _mor_table(spark, str(tmp_path / "t"))
     keys = ["conv-e0-015", "conv-e2-003"]  # one stable, one current epoch
 
@@ -131,14 +131,26 @@ def test_lookup_equals_filtered_read_mor(spark, tmp_path):
     with pytest.raises(ValueError):
         table.lookup([])
 
-    # the LWW reduce over base ∪ deltas runs on one partition: the
-    # executed plan aggregates, but has no Exchange
     m = table.manifest()
     deltas = {rel for rl in m["delta_files"].values() for rel in rl}
     assert deltas & set(table._lookup_plan(m, keys)[1])
-    got2.collect()
-    plan = got2._jdf.queryExecution().executedPlan().toString()
-    assert "Aggregate" in plan and "Exchange" not in plan
+    if read_path == "spark":
+        # the LWW reduce over base ∪ deltas runs on one partition: the
+        # executed plan aggregates, but has no Exchange
+        got2.collect()
+        plan = got2._jdf.queryExecution().executedPlan().toString()
+        assert "Aggregate" in plan and "Exchange" not in plan
+    else:
+        # pyarrow reads and reduces the files; the result is a
+        # LocalRelation, and neither the lookup nor its collect (nor an
+        # empty result's) launches a Spark job
+        want = _sorted_rows(exp)
+        with _no_spark_jobs(spark, f"lookup-driver-{tmp_path.name}"):
+            got3 = table.lookup(keys)
+            assert _sorted_rows(got3) == want
+            assert table.lookup(["conv-never-existed"]).collect() == []
+        plan = got3._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan"), plan
 
     # multi-key lookup across buckets: a live key, an updated key, a
     # tombstoned key and an absent key

@@ -147,12 +147,72 @@ def test_canal_parse_semantics(spark):
     ]
     assert len(out) == 3  # 2 inserts + 1 delete; DDL and empty drop out
     assert [r.op for r in out] == ["insert", "insert", "delete"]
-    # id * 2^16 + element position: within-batch order is total
-    assert [r.offset for r in out] == [3 * 65536, 3 * 65536 + 1, 4 * 65536]
+    # id * 2^32 + element position: within-batch order is total
+    assert [r.offset for r in out] == [3 * 2**32, 3 * 2**32 + 1, 4 * 2**32]
     # string-typed images cast to the canonical types
     assert [r.turn_idx for r in out] == [5, 6, 5]
     assert out[0].turn_idx == 5 and isinstance(out[0].turn_idx, int)
     assert str(out[0].ts) == "2024-06-01 12:30:00"
+
+
+def test_canal_offsets_stay_unique_past_65536_rows(spark):
+    """One flat message may batch more than 65,536 rows (a single large
+    binlog entry). Element positions 65,536 and 65,537 must not take the
+    offsets of positions 0 and 1 of the next batch id, which would corrupt
+    the LWW total order. A batch id too large for the radix overflows to a
+    NULL offset, and routing quarantines the row instead of aborting the
+    batch under ANSI."""
+    from pyspark.sql import functions as F
+
+    from nifi_dicom_spark.operators.routing import route_events
+
+    def img(conv, i):
+        return {"conv_id": conv, "turn_idx": str(i % 7)}
+
+    n = 65_538
+    df = spark.createDataFrame(
+        [
+            (_canal("INSERT", [img("big", i) for i in range(n)], 3),),
+            (_canal("INSERT", [img("next", 0), img("next", 1)], 4),),
+        ],
+        "value string",
+    )
+    out = parse_canal(df)
+    assert out.count() == n + 2
+    assert out.select("offset").distinct().count() == n + 2
+    tail = sorted(
+        r.offset
+        for r in out.filter(F.col("conv_id") == "big")
+        .orderBy(F.col("offset").desc())
+        .limit(2)
+        .collect()
+    )
+    head = sorted(
+        r.offset for r in out.filter(F.col("conv_id") == "next").collect()
+    )
+    assert tail == [3 * 2**32 + 65_536, 3 * 2**32 + 65_537]
+    assert head == [4 * 2**32, 4 * 2**32 + 1]
+    assert tail[-1] < head[0]
+
+    overflow = spark.createDataFrame(
+        [
+            (_canal("INSERT", [img("ok", 1)], 5),),
+            (_canal("INSERT", [img("huge", 1)], 2**62),),
+        ],
+        "value string",
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        valid, bad = route_events(parse_canal(overflow))
+        assert [(r.conv_id, r.offset) for r in valid.collect()] == [
+            ("ok", 5 * 2**32)
+        ]
+        bad_rows = bad.collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [r.conv_id for r in bad_rows] == ["huge"]
+    assert bad_rows[0].offset is None and bad_rows[0].op_seq is None
 
 
 def test_envelopes_are_streaming_safe(spark, tmp_path):

@@ -7,6 +7,8 @@ partition-spec evolution — the two table-maintenance capabilities a
 
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pytest
 
@@ -57,6 +59,19 @@ def _epoch_events(epoch: int, n_convs: int = 20) -> pd.DataFrame:
             for turn in range(3):
                 add(f"conv-e{epoch - 1}-{c:03d}", turn, "update")
     return pd.DataFrame(rows)
+
+
+@contextlib.contextmanager
+def _no_spark_jobs(spark, group: str):
+    """Fail unless the block runs no Spark job (counted by job group).
+    Compute expected results before entering: a read inside counts."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "expected to run no Spark job")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def _sorted_rows(df):
@@ -249,7 +264,7 @@ def test_rebucket_keeps_declared_clustering_and_validates(spark, tmp_path):
     assert _sorted_rows(got) == _sorted_rows(exp)
 
 
-def test_scan_pruning_correct_under_non_utc_session(spark, tmp_path):
+def test_scan_pruning_correct_under_non_utc_session(spark, tmp_path, read_path):
     """Footer stats are UTC instants but the Spark filter interprets naive
     bounds in the SESSION time zone — the pruning must localize bounds the
     same way or in-range files get silently dropped in non-UTC sessions."""
@@ -269,6 +284,15 @@ def test_scan_pruning_correct_under_non_utc_session(spark, tmp_path):
         exp = table.read().filter(f"ts >= '{lo}' AND ts <= '{hi}'")
         assert got.count() == exp.count() > 0
         assert _sorted_rows(got.drop("ts")) == _sorted_rows(exp.drop("ts"))
+        if read_path == "driver":
+            # the range filter over the driver's LocalRelation folds into
+            # a LocalTableScan: the scan and its collect run no Spark job
+            want = exp.count()
+            with _no_spark_jobs(spark, f"scan-driver-{tmp_path.name}"):
+                rows = table.scan("ts", lo=lo, hi=hi)
+                assert len(rows.collect()) == want
+            plan = rows._jdf.queryExecution().executedPlan().toString()
+            assert plan.startswith("LocalTableScan"), plan
     finally:
         spark.conf.set(tz_key, prev)
 
@@ -1376,7 +1400,7 @@ def test_rename_column_zero_rewrite(spark, tmp_path):
     assert "note" in old.columns and "memo" not in old.columns
 
 
-def test_rename_column_mixed_vintage_write_and_read(spark, tmp_path):
+def test_rename_column_mixed_vintage_write_and_read(spark, tmp_path, read_path):
     tab = _dc_table(spark, tmp_path, name="rc2")
     tab.rename_column("note", "memo")
     # post-rename write uses the new name; bucket now holds both vintages
@@ -1452,7 +1476,7 @@ def test_rename_column_chain_and_drop(spark, tmp_path):
             )
 
 
-def test_rename_column_lookup_and_point_reads(spark, tmp_path):
+def test_rename_column_lookup_and_point_reads(spark, tmp_path, read_path):
     """lookup() must equal read().filter(isin) across a rename (old files'
     payload answers to the new name)."""
     tab = _dc_table(spark, tmp_path, name="rc5")

@@ -14,9 +14,11 @@ spot-checked on a bounded number of generated cases.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
-from hypothesis import HealthCheck, example, given, settings
+from hypothesis import HealthCheck, example, given, seed, settings
 from hypothesis import strategies as st
 
 from nifi_dicom_spark.fixtures.generator import GeneratorConfig, generate_change_events
@@ -244,6 +246,122 @@ def test_spark_replay_split_invariance_spot_checks(spark, tmp_path):
         assert_final_state_equal(
             read_final_state(table).toPandas(), replay_oracle(log)
         )
+
+
+def _lww_files(seed: int, n: int, n_files: int) -> tuple[list, int]:
+    """A random change log over a (string, int) key, split into parquet
+    tables of two schema eras, and the index of the first new-era file.
+    Old-era files call the payload column ``note`` (renamed to ``text``
+    later), store ``n`` as int32 and lack ``tool``; new-era files say
+    ``text``, store ``n`` as int64 and carry ``tool``. ``op_seq`` ties are
+    common; ``offset`` is unique per event, so equal (key, op_seq, offset)
+    only comes from duplicate delivery, which repeats the event verbatim
+    in another file (an event with a copy in an old-era file has a null
+    ``tool``, which that file reads as null too). Tombstones and null
+    payload cells are common."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    new_era = int(rng.integers(0, n_files + 1))
+    per_file = [[] for _ in range(n_files)]
+    for off in range(n):
+        homes = [int(rng.integers(0, n_files))]
+        if rng.random() < 0.2:  # duplicate delivery, verbatim
+            homes.append(int(rng.integers(0, n_files)))
+        op = ["insert", "update", "delete"][int(rng.integers(0, 3))]
+        dead = op == "delete" and rng.random() < 0.5  # payload-free tombstone
+        no_tool = dead or min(homes) < new_era or rng.random() < 0.5
+        ev = {
+            "conv_id": f"c{int(rng.integers(0, 3))}",
+            "turn_idx": int(rng.integers(0, 3)),
+            "op": op,
+            "op_seq": int(rng.integers(0, 4)),
+            "offset": off,
+            "text": None if dead or rng.random() < 0.2 else f"t{off}",
+            "n": None if dead or rng.random() < 0.2 else int(rng.integers(-9, 9)),
+            "tool": None if no_tool else f"x{off}",
+        }
+        for i in homes:
+            per_file[i].append(ev)
+    tables = []
+    for i, rows in enumerate(per_file):
+        old = i < new_era
+        cols = {
+            "conv_id": pa.array([r["conv_id"] for r in rows], pa.string()),
+            "turn_idx": pa.array([r["turn_idx"] for r in rows], pa.int32()),
+            "op": pa.array([r["op"] for r in rows], pa.string()),
+            "op_seq": pa.array([r["op_seq"] for r in rows], pa.int64()),
+            "offset": pa.array([r["offset"] for r in rows], pa.int64()),
+            "note" if old else "text": pa.array(
+                [r["text"] for r in rows], pa.string()
+            ),
+            "n": pa.array(
+                [r["n"] for r in rows], pa.int32() if old else pa.int64()
+            ),
+        }
+        if not old:
+            cols["tool"] = pa.array([r["tool"] for r in rows], pa.string())
+        tables.append(pa.table(cols))
+    return tables, new_era
+
+
+@seed(20241017)
+@settings(max_examples=12, deadline=None)
+@given(
+    seed=st.integers(0, 10_000),
+    n=st.integers(1, 60),
+    n_files=st.integers(1, 4),
+)
+def test_arrow_lww_kernel_matches_lww_dedup(spark, seed: int, n: int, n_files: int):
+    """The Arrow LWW kernel that serves small lookups and scans and the
+    change-feed worker (``arrow_conform`` + ``arrow_lww``) returns exactly
+    the rows of the Spark path (``_load_files`` + ``lww_dedup``) on random
+    mixed-era logs: ``op_seq`` ties, duplicate deliveries, tombstones,
+    null payload cells, a renamed column, an int32/int64 widening and a
+    later-added column. Both sides read the same parquet files through the
+    table's own readers. Budget: about 15 s for the 12 examples (one
+    Spark job each) on a 4-core host; ``jobs/stress_properties.py`` runs
+    thousands."""
+    import tempfile
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+    from nifi_dicom_spark.operators.dedup import arrow_lww, lww_dedup
+
+    tables, _ = _lww_files(seed, n, n_files)
+    schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("turn_idx", T.IntegerType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("op_seq", T.LongType()),
+            T.StructField("offset", T.LongType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("n", T.LongType()),
+            T.StructField("tool", T.StringType()),
+        ]
+    )
+    m = {"props": {"renamed_columns": {"text": ["note"]}}}
+    keys = ["conv_id", "turn_idx"]
+    with tempfile.TemporaryDirectory() as root:
+        table = SnapshotTable(spark, root)
+        os.makedirs(table.data_dir)
+        rels = [f"f{i}.parquet" for i in range(len(tables))]
+        for rel, t in zip(rels, tables):
+            pq.write_table(t, os.path.join(table.data_dir, rel))
+        paths = [os.path.join(table.data_dir, rel) for rel in rels]
+        want = lww_dedup(table._load_files(m, schema, paths), keys).collect()
+        got = arrow_lww(table._arrow_files(m, schema, rels), keys).to_pylist()
+
+    def rows(records):
+        return sorted(
+            (tuple(r[c] for c in schema.fieldNames()) for r in records),
+            key=lambda t: tuple(str(x) for x in t),
+        )
+
+    assert rows(got) == rows(r.asDict() for r in want)
 
 
 @settings(max_examples=50, deadline=None)
