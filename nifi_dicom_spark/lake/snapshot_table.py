@@ -19,7 +19,9 @@ insert-if-absent at ``DatabaseInformationModel.java:805-892``):
    overlapping writers get :class:`ConcurrentWriteConflict` and re-merge.
 2. **MERGE semantics.** ``merge()`` implements
    ``WHEN MATCHED [AND op='delete'] THEN DELETE / UPDATE, WHEN NOT MATCHED
-   THEN INSERT`` via copy-on-write of only the *touched* key-buckets.
+   THEN INSERT`` over only the *touched* key-buckets: the versioned (LWW)
+   policy appends per-bucket delta files (merge-on-read), the others
+   rewrite those buckets (copy-on-write).
 3. **Idempotent commits.** Application-level commit keys
    ``(checkpoint_epoch, partition_id)`` are compacted into per-partition
    high-watermark epochs recorded in the manifest atomically with the data —
@@ -39,16 +41,14 @@ places bucket *b*'s rows in output partition *b* with no auxiliary mapping:
 bucket placement, the LWW reduce and the per-bucket write all share ONE
 exchange (the reduce's ``groupBy(conv_id, turn_idx)`` is satisfied by the
 conv_id clustering, so no second shuffle of payload bytes ever happens).
-Merges touch only buckets the source contains, and the **merge-on-read**
-mode (``mode="mor"``, the default for ``versioned_upsert``) appends
-per-bucket DELTA files instead of rewriting touched buckets — epoch cost is
-∝ the change set, not the table size; reads LWW-merge base∪deltas (exact —
-the reduce is associative) and ``compact()`` folds deltas back into base
-when a bucket accumulates too many. (Legacy tables created before the
-murmur3 layout carry ``bucket_fn=xxhash64`` in their manifest and keep the
-preimage-mapped write path.) If an Iceberg runtime jar is present,
-:func:`iceberg_available` lets callers swap in real ``MERGE INTO`` — the
-operator API is identical.
+Merges touch only buckets the source contains, and a ``versioned_upsert``
+merge appends per-bucket DELTA files instead of rewriting touched buckets
+(merge-on-read) — epoch cost is ∝ the change set, not the table size; reads
+LWW-merge base∪deltas (exact — the reduce is associative) and ``compact()``
+folds deltas back into base when a bucket accumulates too many. murmur3 is
+the only bucket layout bucket-aware operations accept; a manifest with any
+other ``bucket_fn`` stays readable and migrates with :meth:`SnapshotTable.
+rebucket`.
 """
 
 from __future__ import annotations
@@ -96,14 +96,6 @@ class LedgerRegression(RuntimeError):
     ledger is in strict mode (``on_replayed='error'``)."""
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: B018
-        return True
-    except Exception:
-        return False
-
-
 @dataclass
 class MergeStats:
     version: int
@@ -113,15 +105,27 @@ class MergeStats:
     mode: str = "cow"  # "cow" | "mor" (delta append)
 
 
-def _bucket_expr(key_col: str, n_buckets: int, bucket_fn: str = "murmur3"):
-    """Bucket id of a key. ``murmur3`` (default) is bit-identical to Spark's
-    ``HashPartitioning`` (``F.hash`` = Murmur3, seed 42), so
+def _bucket_expr(key_col: str, n_buckets: int):
+    """Bucket id of a key: ``pmod(murmur3(key), n_buckets)``, bit-identical
+    to Spark's ``HashPartitioning`` (``F.hash`` = Murmur3, seed 42), so
     ``repartition(n_buckets, key_col)`` physically places bucket b in output
-    partition b — placement and shuffle are the same operation. ``xxhash64``
-    is the legacy layout (pre-murmur3 tables), which needs the preimage
-    mapping below for exact placement."""
-    h = F.hash(F.col(key_col)) if bucket_fn == "murmur3" else F.xxhash64(F.col(key_col))
-    return F.pmod(h, F.lit(n_buckets)).cast("int")
+    partition b — placement and shuffle are the same operation."""
+    return F.pmod(F.hash(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+def _murmur3_buckets(m: dict) -> int:
+    """``n_buckets`` of manifest ``m``, which must use the murmur3 layout
+    that :func:`_bucket_expr` computes. Every bucket-aware operation calls
+    this first, so none places murmur3 buckets under another label."""
+    fn = m.get("bucket_fn", "xxhash64")
+    if fn != "murmur3":
+        raise ValueError(
+            f"table bucket layout {fn!r} is not supported by bucket-aware "
+            "operations (merge, lookup, compact, ...); read(), time travel "
+            "and history() still work — run rebucket() once to migrate the "
+            "table to the murmur3 layout"
+        )
+    return int(m["n_buckets"])
 
 
 def version_at_backend(backend: CommitBackend, timestamp) -> int:
@@ -160,9 +164,6 @@ def version_at_backend(backend: CommitBackend, timestamp) -> int:
     return best
 
 
-#: n_buckets -> [preimage long per bucket]; process-wide (pure function of n)
-_PK_CACHE: dict[int, list[int]] = {}
-
 #: serializes the session-conf toggle around bucket-file writes
 _WRITE_CONF_LOCK = threading.Lock()
 
@@ -188,36 +189,6 @@ def _live_renames(m: dict, schema: T.StructType) -> dict[str, list[str]]:
     renames = (m.get("props") or {}).get("renamed_columns") or {}
     cur = set(schema.fieldNames())
     return {new: olds for new, olds in renames.items() if new in cur}
-
-
-def _partition_preimages(spark: SparkSession, n: int) -> list[int]:
-    """``pk[b]`` = a long ``x`` with ``pmod(murmur3_hash(x), n) == b``.
-
-    ``repartition(n, pk_col)`` places rows in shuffle partition
-    ``pmod(murmur3(pk), n)``, so tagging bucket ``b``'s rows with ``pk[b]``
-    sends each bucket to exactly one output partition — partition index ==
-    bucket id. This replaces the dynamic-partition writer
-    (``write.partitionBy``), which adds its own sort + per-directory commit
-    and measurably anti-scales with executor count, with a plain columnar
-    write of one file per bucket. One tiny Spark job per distinct ``n`` per
-    process (cached); runs during table setup/warm-up, not per epoch.
-    """
-    pks = _PK_CACHE.get(n)
-    if pks is None:
-        rows = (
-            spark.range(0, max(4096, 64 * n))
-            .select(F.col("id"), F.pmod(F.hash(F.col("id")), F.lit(n)).alias("b"))
-            .groupBy("b")
-            .agg(F.min("id").alias("pk"))
-            .collect()
-        )
-        got = {r["b"]: r["pk"] for r in rows}
-        missing = [b for b in range(n) if b not in got]
-        if missing:  # astronomically unlikely for the search range above
-            raise RuntimeError(f"no murmur3 preimage found for buckets {missing}")
-        pks = [got[b] for b in range(n)]
-        _PK_CACHE[n] = pks
-    return pks
 
 
 class SnapshotTable:
@@ -344,7 +315,7 @@ class SnapshotTable:
             "schema": m["schema"],
             "key_cols": list(m["key_cols"]),
             "n_buckets": m["n_buckets"],
-            "bucket_fn": m.get("bucket_fn", "murmur3"),
+            "bucket_fn": m.get("bucket_fn", "xxhash64"),
             "files": _absolutize(m.get("files", {})),
             "delta_files": _absolutize(m.get("delta_files", {})),
             "applied_hw": dict(m.get("applied_hw", {})),
@@ -396,13 +367,9 @@ class SnapshotTable:
         return self.manifest().get("bucket_fn", "xxhash64")
 
     def bucket_expr(self, key_col: str | None = None):
-        """The table's bucket-id expression (respects the manifest's hash)."""
+        """The table's bucket-id expression."""
         m = self.manifest()
-        return _bucket_expr(
-            key_col or m["key_cols"][0],
-            int(m["n_buckets"]),
-            m.get("bucket_fn", "xxhash64"),
-        )
+        return _bucket_expr(key_col or m["key_cols"][0], _murmur3_buckets(m))
 
     @staticmethod
     def _hw(manifest: dict) -> dict[str, int]:
@@ -580,7 +547,6 @@ class SnapshotTable:
         df: DataFrame,
         commit_tag: str,
         n_buckets: int,
-        bucket_fn: str = "murmur3",
         already_clustered: bool = False,
         key_cols: list[str] | None = None,
         sort_cols: list[str] | None = None,
@@ -597,39 +563,23 @@ class SnapshotTable:
         ``expected_buckets`` (with ``expect_exact``) is the post-write
         misplacement tripwire — see the inline comment at the end.
 
-        ``murmur3`` layout: ``repartition(n_buckets, key_col)`` IS the bucket
-        function (HashPartitioning uses the same murmur3), so output
-        partition index == bucket id with no auxiliary column. With
+        ``repartition(n_buckets, key_col)`` IS the bucket function
+        (HashPartitioning uses the same murmur3 as :func:`_bucket_expr`), so
+        output partition index == bucket id with no auxiliary column. With
         ``already_clustered`` the caller has already produced that exact
         partitioning upstream (e.g. the versioned merge clusters ONCE and
         runs its reduce on the clustered data) — no further shuffle happens
-        here at all. Legacy ``xxhash64`` tables (``_bucket`` column required)
-        route through murmur3 preimages (:func:`_partition_preimages`). The
-        explicit ``repartition(n, col)`` is a REPARTITION_BY_NUM shuffle,
-        which AQE never coalesces, so the write keeps full ``n_buckets``
-        parallelism at any cluster size."""
+        here at all. The explicit ``repartition(n, col)`` is a
+        REPARTITION_BY_NUM shuffle, which AQE never coalesces, so the write
+        keeps full ``n_buckets`` parallelism at any cluster size."""
         out_rel = f"c-{commit_tag}"
         out_abs = os.path.join(self.data_dir, out_rel)
-        data_cols = [
-            c for c in df.columns if c not in ("_bucket", "_pk", ZORDER_COL)
-        ]
+        data_cols = [c for c in df.columns if c != ZORDER_COL]
         # callers on the hot per-epoch path pass key_cols from the manifest
         # they already hold — re-deriving it here is a version LIST + GET
         # per use on an object-store backend
         kc = list(key_cols) if key_cols is not None else self.key_cols()
-        if bucket_fn == "murmur3":
-            clustered = (
-                df if already_clustered
-                else df.repartition(n_buckets, kc[0])
-            )
-        else:
-            pks = _partition_preimages(self.spark, n_buckets)
-            mapping = F.create_map(
-                *[F.lit(v) for b in range(n_buckets) for v in (b, pks[b])]
-            )
-            clustered = df.withColumn(
-                "_pk", mapping[F.col("_bucket")].cast("long")
-            ).repartition(n_buckets, "_pk")
+        clustered = df if already_clustered else df.repartition(n_buckets, kc[0])
         # ``sort_cols`` overrides the default key clustering (optimize():
         # e.g. time-cluster a bucket so per-file min/max stats turn a
         # time-range scan into a few-file read); content/placement are
@@ -1506,16 +1456,17 @@ class SnapshotTable:
         no winner or superseding tombstone can hide in it.
 
         Bucket ids come from the table's own :func:`_bucket_expr`, so they
-        match the write side for every key type and both hash functions,
-        but planning launches no Spark job: the de-duplicated values travel
-        as an Arrow table, which Spark turns into a LocalRelation, and the
-        optimizer folds the projection over it on the driver (a
-        LocalTableScan of the bucket ids)."""
+        match the write side for every key type, but planning launches no
+        Spark job: the de-duplicated values travel as an Arrow table, which
+        Spark turns into a LocalRelation, and the optimizer folds the
+        projection over it on the driver (a LocalTableScan of the bucket
+        ids)."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
         from nifi_dicom_spark.lake import bloom as _bloom
 
+        n_buckets = _murmur3_buckets(m)
         key0 = m["key_cols"][0]
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         ktype = next(f.dataType for f in schema.fields if f.name == key0)
@@ -1524,12 +1475,11 @@ class SnapshotTable:
             pa.table({key0: pa.array(uniq, type=to_arrow_type(ktype))}),
             T.StructType([T.StructField(key0, ktype)]),
         )
-        fn = m.get("bucket_fn", "xxhash64")
         bks = sorted(
             {
                 r["b"]
                 for r in vdf.select(
-                    _bucket_expr(key0, m["n_buckets"], fn).alias("b")
+                    _bucket_expr(key0, n_buckets).alias("b")
                 ).collect()  # driver-local: one row per distinct value
             }
         )
@@ -1650,8 +1600,10 @@ class SnapshotTable:
         a full compaction — run it when key cardinality outgrows the layout
         (e.g. 64 buckets chosen at create vs 10^9 conversations later).
         Old versions keep their old layout and remain readable via time
-        travel; the commit ledger and schema carry over unchanged. Legacy
-        xxhash64 tables migrate to the murmur3 layout as a side effect.
+        travel; the commit ledger and schema carry over unchanged. This is
+        also the migration for a table whose manifest carries another
+        ``bucket_fn``: it needs no bucket ids to read the old layout, and
+        every other bucket-aware operation refuses such a table.
         A declared :meth:`set_clustering` layout is applied to the rewrite
         (the invariant that clustering survives ALL base rewrites), and the
         write carries the exact-bucket misplacement tripwire — the expected
@@ -1674,7 +1626,7 @@ class SnapshotTable:
             r[0]
             for r in self.read(dedup=False)
             .select(
-                _bucket_expr(m["key_cols"][0], new_n_buckets, "murmur3").alias("b")
+                _bucket_expr(m["key_cols"][0], new_n_buckets).alias("b")
             )
             .distinct()
             .collect()
@@ -1684,7 +1636,6 @@ class SnapshotTable:
             df,
             tag,
             new_n_buckets,
-            "murmur3",
             key_cols=m["key_cols"],
             sort_cols=sort_cols,
             max_records_per_file=max_rpf,
@@ -1751,25 +1702,19 @@ class SnapshotTable:
     def overwrite(self, df: DataFrame) -> int:
         """Replace the full table contents (initial snapshot load)."""
         m = self.manifest()
+        n_buckets = _murmur3_buckets(m)
         schema = evolve_schema(self.schema(), df.schema)
         self._guard_dropped_columns(self.schema(), schema, m)
         df = conform_to_schema(df, schema)
         self._enforce_constraints(
             df, m.get("props"), op_col="op", key_cols=m["key_cols"]
         )
-        n_buckets = m["n_buckets"]
-        fn = m.get("bucket_fn", "xxhash64")
         tag = uuid.uuid4().hex[:12]
         df, sort_cols, max_rpf = self._clustering_write_args(m, df)
-        if fn != "murmur3":
-            df = df.withColumn(
-                "_bucket", _bucket_expr(self.key_cols()[0], n_buckets, fn)
-            )
         files, footers = self._write_bucket_files(
             df,
             tag,
             n_buckets,
-            fn,
             key_cols=m["key_cols"],
             sort_cols=sort_cols,
             max_records_per_file=max_rpf,
@@ -1780,7 +1725,7 @@ class SnapshotTable:
             "schema": schema.json(),
             "key_cols": m["key_cols"],
             "n_buckets": n_buckets,
-            "bucket_fn": fn,
+            "bucket_fn": m["bucket_fn"],
             "files": files,
             "delta_files": {},
             "applied_hw": self._hw(m),
@@ -1844,7 +1789,6 @@ class SnapshotTable:
         commit_keys: list[tuple[int, int]] | None = None,
         assert_unique_source: bool = False,
         touched_buckets: list[int] | None = None,
-        mode: str | None = None,
         on_replayed: str | None = None,
     ) -> MergeStats:
         """MERGE INTO this table USING ``source`` ON the key columns.
@@ -1861,7 +1805,13 @@ class SnapshotTable:
           pre-delete update cannot resurrect the row; filter
           ``op != 'delete'`` for final state. This is the CDC engine's apply
           arm (equivalent of Iceberg
-          ``WHEN MATCHED AND s.v > t.v THEN UPDATE/DELETE``).
+          ``WHEN MATCHED AND s.v > t.v THEN UPDATE/DELETE``). It is
+          merge-on-read: the batch alone is reduced and appended as
+          per-bucket delta files, so epoch cost ∝ change set; reads
+          LWW-merge base∪deltas, and :meth:`compact` (auto-triggered past
+          ``props["compact_threshold"]`` deltas/bucket, default 8) folds
+          them back. The other policies rewrite the touched buckets
+          (copy-on-write).
         * ``insert_if_absent`` (first-writer-wins): WHEN NOT MATCHED THEN
           INSERT only — existing rows never updated; the reference's
           ``insertObject`` contract (``DatabaseInformationModel.java:787-794``)
@@ -1888,26 +1838,17 @@ class SnapshotTable:
         a silent skip is silent data loss. ``"warn"`` logs each regression;
         ``"error"`` raises :class:`LedgerRegression` (strict mode for
         backfill jobs that must never race a live stream).
-
-        ``mode`` (``versioned_upsert`` only): ``"mor"`` (default) appends
-        per-bucket delta files — epoch cost ∝ change set, reads LWW-merge
-        base∪deltas, :meth:`compact` (auto-triggered past
-        ``props["compact_threshold"]`` deltas/bucket, default 8) folds them
-        back; ``"cow"`` rewrites the touched buckets eagerly.
         """
         m = self.manifest()
         key_cols = m["key_cols"]
-        n_buckets = m["n_buckets"]
-        fn = m.get("bucket_fn", "xxhash64")
+        n_buckets = _murmur3_buckets(m)
+        mor = policy == "versioned_upsert"
 
         # ---- idempotency gate (exactly-once replay) -----------------------
-        effective_mode = (
-            (mode or "mor") if policy == "versioned_upsert" else "cow"
-        )
         commit_keys, skipped = self._gate_commit_keys(m, commit_keys, on_replayed)
         if commit_keys is not None and not commit_keys:
             return MergeStats(
-                m["version"], 0, skipped, applied=False, mode=effective_mode
+                m["version"], 0, skipped, applied=False, mode="mor" if mor else "cow"
             )
 
         if assert_unique_source:
@@ -1918,7 +1859,7 @@ class SnapshotTable:
                 raise ValueError(f"merge source has {dupes} duplicate keys")
 
         # ---- schema evolution --------------------------------------------
-        if policy == "versioned_upsert":
+        if mor:
             # op/op_seq/offset become stored columns of the table
             src_payload_schema = source.schema
         else:
@@ -1942,11 +1883,10 @@ class SnapshotTable:
                 conform_to_schema(chk, schema), m.get("props"),
                 key_cols=key_cols,
             )
-        bucket = _bucket_expr(key_cols[0], n_buckets, fn)
+        bucket = _bucket_expr(key_cols[0], n_buckets)
         src = source.withColumn("_bucket", bucket)
 
-        if policy == "versioned_upsert":
-            mode = effective_mode
+        if mor:
             # bucket discovery: callers that already aggregate over the batch
             # (lineage metrics) pass the touched set in — zero extra jobs;
             # otherwise one column-pruned scan of the raw source (conv_id
@@ -1961,82 +1901,59 @@ class SnapshotTable:
             )
             from nifi_dicom_spark.operators.dedup import lww_dedup
 
-            tag = uuid.uuid4().hex[:12]
-            if mode == "mor":
-                # merge-on-read: dedup ONLY the batch and append per-bucket
-                # delta files — the table's base is never read or rewritten,
-                # so epoch cost ∝ change set. Cross-batch LWW happens at read
-                # (associative reduce over base∪deltas) and at compaction.
-                combined = conform_to_schema(src, schema)
-            else:
-                # copy-on-write: union touched base+deltas with the batch and
-                # reduce — read() dedups any existing deltas for us
-                target = conform_to_schema(self.read(buckets=touched), schema)
-                combined = target.unionByName(conform_to_schema(src, schema))
-
-            if fn == "murmur3":
-                # ONE exchange total: cluster by the bucket/key column, let
-                # the groupBy reuse the clustering (HashPartitioning(conv_id)
-                # satisfies ClusteredDistribution(conv_id, turn_idx)), write
-                # partition index == bucket — no second payload shuffle
-                clustered = combined.repartition(n_buckets, key_cols[0])
-                merged = lww_dedup(clustered, key_cols).select(*schema.fieldNames())
-                new_files, footers = self._write_bucket_files(
-                    merged,
-                    tag,
-                    n_buckets,
-                    fn,
-                    already_clustered=True,
-                    key_cols=key_cols,
-                    # MoR rows = the conformed batch: every touched bucket
-                    # keeps ≥1 row through the dedup, so the written bucket
-                    # set must equal the touched set exactly; a cow rewrite
-                    # could legitimately empty a bucket some day, so it only
-                    # forbids STRAY buckets (same policy on both bucket-fn
-                    # branches)
-                    expected_buckets=set(touched),
-                    expect_exact=(mode == "mor"),
-                )
-            else:
-                merged = lww_dedup(combined, key_cols).withColumn("_bucket", bucket)
-                merged = merged.select(*schema.fieldNames(), "_bucket")
-                new_files, footers = self._write_bucket_files(
-                    merged, tag, n_buckets, fn, key_cols=key_cols,
-                    expected_buckets=set(touched),
-                    expect_exact=(mode == "mor"),
-                )
+            # merge-on-read: dedup ONLY the batch and append per-bucket
+            # delta files — the table's base is never read or rewritten, so
+            # epoch cost ∝ change set. Cross-batch LWW happens at read
+            # (associative reduce over base∪deltas) and at compaction.
+            # ONE exchange total: cluster by the bucket/key column, let the
+            # groupBy reuse the clustering (HashPartitioning(conv_id)
+            # satisfies ClusteredDistribution(conv_id, turn_idx)), write
+            # partition index == bucket — no second payload shuffle
+            clustered = conform_to_schema(src, schema).repartition(
+                n_buckets, key_cols[0]
+            )
+            merged = lww_dedup(clustered, key_cols).select(*schema.fieldNames())
+            new_files, footers = self._write_bucket_files(
+                merged,
+                uuid.uuid4().hex[:12],
+                n_buckets,
+                already_clustered=True,
+                key_cols=key_cols,
+                # rows = the conformed batch: every touched bucket keeps ≥1
+                # row through the dedup, so the written bucket set must
+                # equal the touched set exactly
+                expected_buckets=set(touched),
+            )
             stats = self._commit_merge(
                 m, schema, touched, new_files, commit_keys, policy, skipped,
-                delta=(mode == "mor"), footers=footers,
+                delta=True, footers=footers,
             )
-            if mode == "mor":
-                thresh = int((m.get("props") or {}).get("compact_threshold", 8))
-                if thresh > 0:
-                    over = [
-                        int(b)
-                        for b, rels in self.manifest().get("delta_files", {}).items()
-                        if len(rels) >= thresh
-                    ]
-                    if over:
-                        # best-effort maintenance: the MERGE above already
-                        # committed — a concurrent writer racing the
-                        # compaction must not surface as a merge failure
-                        # (the caller would re-merge a committed epoch /
-                        # crash a streaming query over data that is safely
-                        # in the table). The next over-threshold merge or an
-                        # explicit compact() retries.
-                        try:
-                            self.compact(buckets=over)
-                        except Exception as ex:  # noqa: BLE001
-                            # same contract for ANY compaction failure — a
-                            # broken clustering declaration or a failed
-                            # normalization job must not surface as a
-                            # merge failure either
-                            warnings.warn(
-                                f"auto-compaction skipped (deltas remain "
-                                f"readable): {type(ex).__name__}: {ex}",
-                                stacklevel=2,
-                            )
+            thresh = int((m.get("props") or {}).get("compact_threshold", 8))
+            if thresh > 0:
+                over = [
+                    int(b)
+                    for b, rels in self.manifest().get("delta_files", {}).items()
+                    if len(rels) >= thresh
+                ]
+                if over:
+                    # best-effort maintenance: the MERGE above already
+                    # committed — a concurrent writer racing the compaction
+                    # must not surface as a merge failure (the caller would
+                    # re-merge a committed epoch / crash a streaming query
+                    # over data that is safely in the table). The next
+                    # over-threshold merge or an explicit compact() retries.
+                    try:
+                        self.compact(buckets=over)
+                    except Exception as ex:  # noqa: BLE001
+                        # same contract for ANY compaction failure — a
+                        # broken clustering declaration or a failed
+                        # normalization job must not surface as a merge
+                        # failure either
+                        warnings.warn(
+                            f"auto-compaction skipped (deltas remain "
+                            f"readable): {type(ex).__name__}: {ex}",
+                            stacklevel=2,
+                        )
             return stats
 
         # cache: we reuse source for bucket discovery + anti-join + projection
@@ -2068,13 +1985,9 @@ class SnapshotTable:
                 if op_col is not None and op_col in incoming.columns:
                     incoming = incoming.filter(F.col(op_col) != F.lit("delete"))
                 incoming = conform_to_schema(incoming, schema)
-                merged = survivors.unionByName(incoming)
-                if fn != "murmur3":
-                    merged = merged.withColumn("_bucket", bucket).select(
-                        *schema.fieldNames(), "_bucket"
-                    )
-                else:
-                    merged = merged.select(*schema.fieldNames())
+                merged = survivors.unionByName(incoming).select(
+                    *schema.fieldNames()
+                )
             else:
                 raise ValueError(f"unknown merge policy {policy!r}")
 
@@ -2082,7 +1995,7 @@ class SnapshotTable:
             # cow upsert can legitimately empty a touched bucket (delete-only
             # batch against an absent key), so only stray buckets are fatal
             new_files, footers = self._write_bucket_files(
-                merged, tag, n_buckets, fn, key_cols=key_cols,
+                merged, tag, n_buckets, key_cols=key_cols,
                 expected_buckets=set(touched), expect_exact=False,
             )
         finally:
@@ -2189,8 +2102,7 @@ class SnapshotTable:
         for name in when_matched_update or {}:
             if name in key_cols:
                 raise ValueError(f"cannot assign key column {name!r}")
-        n_buckets = m["n_buckets"]
-        fn = m.get("bucket_fn", "xxhash64")
+        n_buckets = _murmur3_buckets(m)
         schema = self.schema()
 
         commit_keys, skipped = self._gate_commit_keys(m, commit_keys, on_replayed)
@@ -2204,7 +2116,7 @@ class SnapshotTable:
             if dupes:
                 raise ValueError(f"merge source has {dupes} duplicate keys")
 
-        bucket = _bucket_expr(key_cols[0], n_buckets, fn)
+        bucket = _bucket_expr(key_cols[0], n_buckets)
         touched = sorted(
             r["_b"]
             for r in source.select(bucket.alias("_b")).distinct().collect()
@@ -2363,19 +2275,11 @@ class SnapshotTable:
             )
             # a CoW bucket rewrite must not decay the declared layout
             merged, sort_cols, max_rpf = self._clustering_write_args(m, merged)
-            if fn != "murmur3":
-                merged = merged.withColumn("_bucket", bucket).select(
-                    *schema.fieldNames(),
-                    *([ZORDER_COL] if sort_cols == [ZORDER_COL] else []),
-                    "_bucket",
-                )
-
             tag = uuid.uuid4().hex[:12]
             new_files, footers = self._write_bucket_files(
                 merged,
                 tag,
                 n_buckets,
-                fn,
                 key_cols=key_cols,
                 sort_cols=sort_cols,
                 max_records_per_file=max_rpf,
@@ -2388,17 +2292,20 @@ class SnapshotTable:
             footers=footers,
         )
 
-    def _where_source(self, predicate, ranges: dict | None) -> DataFrame:
+    def _where_source(
+        self, predicate, ranges: dict | None, live_only: bool = True
+    ) -> DataFrame:
         """Matching-key discovery pass shared by :meth:`delete_where` /
-        :meth:`update_where` — the "find touched files" scan of Delta's
-        DELETE/UPDATE implementation. ``ranges`` routes the scan through
-        :meth:`scan_ranges` so the manifest's per-file [min, max] stats
-        prune IO before Catalyst's row-group pushdown even starts; the
-        residual ``predicate`` is applied on top (so ranges are a pure
-        IO hint — they never change which rows match)."""
+        :meth:`update_where` / :meth:`forget` — the "find touched files"
+        scan of Delta's DELETE/UPDATE implementation. ``ranges`` routes the
+        scan through :meth:`scan_ranges` so the manifest's per-file
+        [min, max] stats prune IO before Catalyst's row-group pushdown even
+        starts; the residual ``predicate`` is applied on top (so ranges are
+        a pure IO hint — they never change which rows match). ``live_only``
+        (versioned tables) leaves tombstones out."""
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         base = self.scan_ranges(ranges) if ranges else self.read()
-        if {"op", "op_seq", "offset"} <= set(base.columns):
+        if live_only and {"op", "op_seq", "offset"} <= set(base.columns):
             # versioned tables: DML predicates address the LIVE state —
             # tombstoned keys are already dead, selecting them would only
             # fan dead keys into the merge join
@@ -2483,19 +2390,20 @@ class SnapshotTable:
         (``DeidentifyAndRedact.java``): where deidentify scrubs at INGEST,
         ``forget`` scrubs retroactively from the stored table.
 
-        Two steps, each an existing primitive:
+        Two steps:
 
         1. **Scrubbed delete.** On versioned (LWW) tables a plain
-           :meth:`delete_where` tombstone would CARRY the old payload
-           columns into the new file (the merge keeps unassigned target
-           values), so forget instead merges an update that explicitly
-           sets ``op='delete'`` / ``op_seq = t.op_seq + 1`` AND nulls
-           every non-key payload column — the tombstone keeps only the
-           key identity it needs to hold late CDC replays dead.
-           Un-versioned tables physically drop the rows in the rewrite.
-           The copy-on-write commit also CLEARS the touched buckets'
-           merge-on-read delta entries (no separate compact needed) —
-           every file still carrying the payload is now unreferenced.
+           :meth:`delete_where` tombstone CARRIES the old payload columns
+           (the merge keeps unassigned target values), so forget rewrites
+           the touched buckets itself: every matching row — live, or a
+           tombstone an earlier delete left with its payload — becomes a
+           tombstone that keeps only the key, ``op='delete'``, ``op_seq``
+           (bumped by 1 for a live row, so late CDC replays stay dead) and
+           ``offset``; every other column is nulled. Un-versioned tables
+           physically drop the rows in the rewrite. The copy-on-write
+           commit also CLEARS the touched buckets' merge-on-read delta
+           entries (no separate compact needed) — every file still
+           carrying the payload is now unreferenced.
         2. **Destroy history.** :meth:`vacuum(keep_versions=1)` removes
            every data file (and bloom sidecar) not referenced by the NEW
            current version — this intentionally burns time travel below
@@ -2511,17 +2419,19 @@ class SnapshotTable:
         crypto-erasure) — retroactive key scrubbing would break the LWW
         contract for late events.
 
-        Returns a report dict: rows forgotten, touched buckets, commit
-        version, files vacuumed. Scale shape: identical to
-        :meth:`delete_where` (stats-pruned key scan + bucket-pruned
-        merge); vacuum is an O(files) metadata walk with no data read.
+        Returns a report dict: rows forgotten (tombstones scrubbed
+        included), touched buckets, commit version, files vacuumed. Scale
+        shape: identical to :meth:`delete_where` (stats-pruned key scan +
+        bucket-pruned rewrite); vacuum is an O(files) metadata walk with no
+        data read.
         """
         m = self.manifest()
         key_cols = m["key_cols"]
+        n_buckets = _murmur3_buckets(m)
         schema = self.schema()
-        names = set(schema.fieldNames())
-        versioned = {"op", "op_seq", "offset"} <= names
-        src = self._where_source(predicate, ranges)
+        versioned = {"op", "op_seq", "offset"} <= set(schema.fieldNames())
+        # tombstones too: one a delete_where left still holds its payload
+        src = self._where_source(predicate, ranges, live_only=False)
         n_match = src.count()  # the report needs the count; scan is pruned
         if n_match == 0:
             return {
@@ -2530,23 +2440,52 @@ class SnapshotTable:
                 "delete_version": None,
                 "files_vacuumed": 0,
             }
-        bucket = _bucket_expr(key_cols[0], m["n_buckets"], m.get("bucket_fn", "xxhash64"))
+        bucket = _bucket_expr(key_cols[0], n_buckets)
         touched = sorted(
             r["_b"] for r in src.select(bucket.alias("_b")).distinct().collect()
         )
         if versioned:
-            payload = [
-                c
-                for c in schema.fieldNames()
-                if c not in key_cols and c not in ("op", "op_seq", "offset")
-            ]
-            scrub: dict[str, Column] = {
-                c: F.lit(None).cast(schema[c].dataType) for c in payload
+            rows = self.read(buckets=touched).alias("r")
+            hits = src.withColumn("_hit", F.lit(True)).alias("h")
+            joined = rows.join(
+                hits,
+                [F.col(f"r.{k}").eqNullSafe(F.col(f"h.{k}")) for k in key_cols],
+                "left",
+            )
+            hit = F.col("h._hit").isNotNull()
+            seq = F.col("r.op_seq")
+            scrub = {
+                "op": F.when(hit, F.lit("delete")).otherwise(F.col("r.op")),
+                "op_seq": F.when(hit & (F.col("r.op") == "delete"), seq)
+                .when(hit, seq + 1)
+                .otherwise(seq),
+                "offset": F.col("r.offset"),
+                **{k: F.col(f"r.{k}") for k in key_cols},
             }
-            scrub["op"] = F.lit("delete")
-            scrub["op_seq"] = F.expr("t.op_seq + 1")
-            stats = self.merge_into(
-                src, when_matched_update=scrub, when_not_matched_insert=False
+            scrubbed = joined.select(
+                *[
+                    scrub.get(
+                        f.name,
+                        F.when(hit, F.lit(None).cast(f.dataType)).otherwise(
+                            F.col(f"r.{f.name}")
+                        ),
+                    ).alias(f.name)
+                    for f in schema.fields
+                ]
+            )
+            scrubbed, sort_cols, max_rpf = self._clustering_write_args(m, scrubbed)
+            new_files, footers = self._write_bucket_files(
+                scrubbed,
+                uuid.uuid4().hex[:12],
+                n_buckets,
+                key_cols=key_cols,
+                sort_cols=sort_cols,
+                max_records_per_file=max_rpf,
+                # every touched bucket keeps its matching rows as tombstones
+                expected_buckets=set(touched),
+            )
+            stats = self._commit_merge(
+                m, schema, touched, new_files, None, "forget", 0, footers=footers
             )
         else:
             stats = self.merge_into(
@@ -2635,7 +2574,7 @@ class SnapshotTable:
                 "schema": schema.json(),
                 "key_cols": base["key_cols"],
                 "n_buckets": base["n_buckets"],
-                "bucket_fn": base.get("bucket_fn", "xxhash64"),
+                "bucket_fn": base["bucket_fn"],
                 "files": files,
                 "delta_files": deltas,
                 "applied_hw": hw,
@@ -2861,6 +2800,7 @@ class SnapshotTable:
         the rewrite (the sort happens inside the write either way — only a
         zorder declaration adds its one min/max normalization agg)."""
         m = self.manifest()
+        n_buckets = _murmur3_buckets(m)
         deltas = m.get("delta_files", {})
         todo = sorted(
             int(b)
@@ -2870,13 +2810,8 @@ class SnapshotTable:
         )
         if not todo:
             return None
-        fn = m.get("bucket_fn", "xxhash64")
         merged = self.read(buckets=todo)  # deduped base∪deltas
         merged, sort_cols, max_rpf = self._clustering_write_args(m, merged)
-        if fn != "murmur3":
-            merged = merged.withColumn(
-                "_bucket", _bucket_expr(m["key_cols"][0], m["n_buckets"], fn)
-            )
         tag = uuid.uuid4().hex[:12]
         # tombstones are stored rows, so a bucket holding ≥1 delta file
         # cannot LWW-reduce to empty: the rewrite must repopulate exactly
@@ -2885,8 +2820,7 @@ class SnapshotTable:
         new_files, footers = self._write_bucket_files(
             merged,
             tag,
-            m["n_buckets"],
-            fn,
+            n_buckets,
             key_cols=m["key_cols"],
             sort_cols=sort_cols,
             max_records_per_file=max_rpf,
@@ -2946,29 +2880,24 @@ class SnapshotTable:
         if missing:
             raise ValueError(f"optimize clustering columns not in schema: {missing}")
         m = self.manifest()
+        n_buckets = _murmur3_buckets(m)
         nonempty = {int(b) for b in m.get("files", {})} | {
             int(b) for b in m.get("delta_files", {})
         }
         todo = sorted(nonempty if buckets is None else nonempty & set(buckets))
         if not todo:
             return None
-        fn = m.get("bucket_fn", "xxhash64")
         merged = self.read(buckets=todo)  # deduped base∪deltas, tombstones kept
         if zorder_by is not None:
             merged = zvalue_column(merged, list(zorder_by), zorder_bits)
             sort_cols = [ZORDER_COL]
         else:
             sort_cols = list(sort_by)
-        if fn != "murmur3":
-            merged = merged.withColumn(
-                "_bucket", _bucket_expr(m["key_cols"][0], m["n_buckets"], fn)
-            )
         tag = uuid.uuid4().hex[:12]
         new_files, footers = self._write_bucket_files(
             merged,
             tag,
-            m["n_buckets"],
-            fn,
+            n_buckets,
             key_cols=m["key_cols"],
             sort_cols=sort_cols,
             expected_buckets=set(todo),

@@ -12,9 +12,8 @@ an aggregation gets map-side partial combine (two-phase local→global reduce
 for free), so a hot conversation key collapses to ONE row per map task before
 the shuffle — the generic fix for celebrity-key skew at 10^10 events. A
 window function would shuffle+sort ALL duplicate rows of the hot key into one
-task first. ``lww_dedup_window`` is kept for comparison/testing, and
-``lww_dedup_salted`` demonstrates explicit two-phase salting for engines
-without partial aggregation.
+task first. ``lww_dedup_window`` is kept as the semantic cross-check in
+tests.
 
 Small inputs skip Spark altogether: :func:`arrow_conform` and
 :func:`arrow_lww` are the pure-pyarrow form of the same rule, used where a
@@ -153,37 +152,3 @@ def lww_dedup_window(events: DataFrame, key_cols: list[str] | None = None) -> Da
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def lww_dedup_salted(
-    events: DataFrame, key_cols: list[str] | None = None, n_salt: int = 16
-) -> DataFrame:
-    """Explicit two-phase salted reduce (SURVEY §7.2 M4): phase 1 reduces
-    within (key, salt) buckets — splitting a hot key across `n_salt` reducers —
-    phase 2 reduces the ≤n_salt survivors per key. Deterministic salt from
-    op_seq/offset so replay is stable."""
-    key_cols = key_cols or ["conv_id", "turn_idx"]
-    payload = [c for c in events.columns if c not in key_cols]
-    salted = events.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("op_seq"), F.col("offset")), F.lit(n_salt))
-    )
-    phase1 = (
-        salted.groupBy(*key_cols, "_salt")
-        .agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in payload]),
-                F.struct(F.col("op_seq"), F.col("offset")),
-            ).alias("_w")
-        )
-        .select(*key_cols, "_w")
-    )
-    phase2 = (
-        phase1.groupBy(*key_cols)
-        .agg(
-            F.max_by(
-                F.col("_w"), F.struct(F.col("_w.op_seq"), F.col("_w.offset"))
-            ).alias("_w")
-        )
-        .select(*key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload])
-    )
-    return phase2

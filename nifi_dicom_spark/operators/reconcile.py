@@ -6,21 +6,16 @@ issues ``ALTER TABLE … ADD COLUMN`` when unseen attributes arrive at ingest
 ``schema_ver`` (e.g. v1 files physically lack the late-added ``tool`` column)
 are reconciled to the superset schema before the merge apply:
 
-* Spark-side: ``conform_to_schema`` adds missing columns as typed nulls and
-  casts safe widenings — plain ``select`` expressions, fully codegen'd;
-  stacking mixed batches uses ``unionByName(allowMissingColumns=True)``.
-* Arrow-side: ``reconcile_arrow_batches`` performs the same normalization on
-  ``pyarrow.RecordBatch``es inside ``mapInPandas`` pipelines, so vectorized
-  UDF stages never see ragged schemas (BASELINE.json: "Arrow-schema
-  reconciliation in vectorized pandas UDFs before merge apply").
+``conform_to_schema`` adds missing columns as typed nulls and casts safe
+widenings — plain ``select`` expressions, fully codegen'd; stacking mixed
+batches uses ``unionByName(allowMissingColumns=True)``. ``evolve_schema``
+computes the superset. The Arrow form of the same normalization, for reads
+that never reach Spark, is :func:`~nifi_dicom_spark.operators.dedup.
+arrow_conform`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -93,39 +88,3 @@ def evolve_schema(current: T.StructType, incoming: T.StructType) -> T.StructType
         if f.name not in cur:
             out.append(T.StructField(f.name, f.dataType, True))
     return T.StructType(out)
-
-
-# --- Arrow side --------------------------------------------------------------
-
-
-def reconcile_arrow_table(tbl: pa.Table, target: pa.Schema) -> pa.Table:
-    """Normalize an Arrow table to ``target``: add null columns, reorder,
-    cast safe widenings."""
-    arrays = []
-    names = set(tbl.schema.names)
-    for f in target:
-        if f.name in names:
-            col = tbl.column(f.name)
-            if col.type != f.type:
-                col = col.cast(f.type)
-            arrays.append(col)
-        else:
-            arrays.append(pa.nulls(len(tbl), type=f.type))
-    return pa.Table.from_arrays(arrays, schema=target)
-
-
-def reconcile_pandas_iter(
-    it: Iterator[pd.DataFrame], target: pa.Schema
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas-compatible wrapper: every incoming pandas batch is round-
-    tripped through Arrow against the superset schema so downstream vectorized
-    logic sees one stable layout."""
-    for pdf in it:
-        tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-        yield reconcile_arrow_table(tbl, target).to_pandas()
-
-
-def spark_schema_to_arrow(schema: T.StructType) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(schema)

@@ -2,11 +2,9 @@
 
 Reference: parse-failure routing to ``failure``/``reject`` relationships
 (``DeidentifyDICOM.java:183-191,220-234``; asserted 2-success/1-reject in
-``DeidentifyDICOMTest.java:179-195``). Spark-first shape: ONE pass computes a
-``route`` column with ``F.when`` chains (stays inside whole-stage codegen);
-callers either filter per route or write partitioned-by-route in one job.
-Two ``filter`` calls on the same cached/scan source are also fine — Catalyst
-pushes each predicate to the scan.
+``DeidentifyDICOMTest.java:179-195``). Spark-first shape: one two-valued
+validity predicate and two ``filter`` calls on the same source — Catalyst
+pushes each predicate to the scan, inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -15,11 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nifi_dicom_spark.model import OPS
-
-ROUTE_COL = "_route"
-ROUTE_VALID = "valid"
-ROUTE_QUARANTINE = "quarantine"
-
 
 def validity_predicate() -> Column:
     """Is this change event well-formed? (the engine's 'is DICOM' predicate)
@@ -36,15 +29,6 @@ def validity_predicate() -> Column:
         & F.col("op_seq").isNotNull()
     )
     return F.coalesce(raw, F.lit(False))
-
-
-def with_route(events: DataFrame) -> DataFrame:
-    return events.withColumn(
-        ROUTE_COL,
-        F.when(validity_predicate(), F.lit(ROUTE_VALID)).otherwise(
-            F.lit(ROUTE_QUARANTINE)
-        ),
-    )
 
 
 def route_events(events: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -172,14 +172,10 @@ def test_lookup_equals_filtered_read_mor(spark, tmp_path, read_path):
     assert not got_m.filter(F.col("conv_id") == "conv-absent").count()
 
 
-@pytest.mark.parametrize("bucket_fn", ["murmur3", "xxhash64"])
-def test_lookup_plan_launches_no_job_and_matches_bucket_expr(
-    spark, tmp_path, bucket_fn
-):
+def test_lookup_plan_launches_no_job_and_matches_bucket_expr(spark, tmp_path):
     """Bucket planning for a lookup runs on the driver (no Spark job) and
     yields exactly the buckets the write side's ``_bucket_expr`` assigns,
-    for string and integral keys, on murmur3 and legacy xxhash64 layouts,
-    with duplicate values in the request."""
+    for string and integral keys, with duplicate values in the request."""
     from pyspark.sql import types as T
 
     from nifi_dicom_spark.lake.snapshot_table import SnapshotTable, _bucket_expr
@@ -197,8 +193,8 @@ def test_lookup_plan_launches_no_job_and_matches_bucket_expr(
         t = SnapshotTable.create(
             spark, str(tmp_path / f"t{i}"), schema, key_cols=["k"], n_buckets=16
         )
-        m = dict(t.manifest(), bucket_fn=bucket_fn)
-        plan_group = f"lookup-plan-{bucket_fn}-{i}"
+        m = t.manifest()
+        plan_group = f"lookup-plan-{i}"
         sc.setJobGroup(plan_group, "lookup planning")
         try:
             bks, kept, pruned = t._lookup_plan(m, values)
@@ -209,7 +205,7 @@ def test_lookup_plan_launches_no_job_and_matches_bucket_expr(
         # reference: the same expression evaluated by a Spark job. Its
         # jobs show up in the status tracker, which also proves the
         # tracker has caught up past the planning call above
-        ref_group = f"lookup-ref-{bucket_fn}-{i}"
+        ref_group = f"lookup-ref-{i}"
         sc.setJobGroup(ref_group, "reference buckets")
         try:
             exp = sorted(
@@ -217,7 +213,7 @@ def test_lookup_plan_launches_no_job_and_matches_bucket_expr(
                     r["b"]
                     for r in sc.parallelize([(v,) for v in values], 2)
                     .toDF(T.StructType([T.StructField("k", ktype)]))
-                    .select(_bucket_expr("k", 16, bucket_fn).alias("b"))
+                    .select(_bucket_expr("k", 16).alias("b"))
                     .collect()
                 }
             )

@@ -1,0 +1,72 @@
+"""Dead-code tripwire for the engine layers.
+
+Every public top-level function and class in ``nifi_dicom_spark/{lake,
+operators,sources,streaming}`` must be referenced as an identifier — a
+``Name``, an ``Attribute`` or an import alias — somewhere other than its
+own ``def``, in any tracked ``.py`` file (the package, the entrypoints,
+``perfbench/``, ``jobs/`` and the tests). Strings and docstrings do not
+count, so a helper that only a docstring mentions is flagged. Pure
+``ast`` over the sources: no Spark session, well under a second.
+"""
+
+from __future__ import annotations
+
+import ast
+import subprocess
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+ENGINE_DIRS = tuple(
+    f"nifi_dicom_spark/{d}/" for d in ("lake", "operators", "sources", "streaming")
+)
+DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _tracked_py_files() -> list[str]:
+    try:
+        out = subprocess.run(
+            ["git", "ls-files", "*.py"],
+            cwd=REPO,
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.split()
+    except (OSError, subprocess.CalledProcessError):  # not a git checkout
+        out = [
+            p.relative_to(REPO).as_posix()
+            for p in REPO.rglob("*.py")
+            if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+        ]
+    return sorted(out)
+
+
+def _identifiers(node: ast.AST):
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.rsplit(".", 1)[-1]
+
+
+def _unreferenced() -> list[str]:
+    defs: list[tuple[str, str]] = []  # (file, name)
+    refs: dict[str, set[tuple[str, str | None]]] = {}  # name -> {(file, owner)}
+    for rel in _tracked_py_files():
+        tree = ast.parse((REPO / rel).read_text(), filename=rel)
+        for top in tree.body:
+            owner = top.name if isinstance(top, DEFS) else None
+            if owner and rel.startswith(ENGINE_DIRS) and not owner.startswith("_"):
+                defs.append((rel, owner))
+            for ident in _identifiers(top):
+                refs.setdefault(ident, set()).add((rel, owner))
+    return sorted(
+        f"{rel}::{name}"
+        for rel, name in defs
+        if not any((f, o) != (rel, name) for f, o in refs.get(name, ()))
+    )
+
+
+def test_every_public_engine_definition_is_referenced():
+    assert _unreferenced() == []

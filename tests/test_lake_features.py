@@ -235,6 +235,51 @@ def test_rebucket_layout_evolution(spark, tmp_path):
     assert read_final_state(table).filter("text like 'e2-%'").count() > 0
 
 
+def test_legacy_bucket_layout_is_refused_until_rebucket(spark, tmp_path):
+    """A manifest that is not murmur3-bucketed is refused by every
+    bucket-aware operation, with an error naming rebucket() as the
+    migration. read() still works, and after rebucket() the table merges
+    and serves lookups that agree with read()."""
+    from pyspark.sql import functions as F
+
+    table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
+    for e in range(2):
+        ev = spark.createDataFrame(_epoch_events(e), schema=CHANGE_EVENTS_SCHEMA)
+        apply_changes(table, ev, epoch=e)
+    m = table.manifest()
+    assert m["delta_files"]  # compact would have work to do
+    before = _sorted_rows(table.read())
+    legacy = {
+        **m,
+        "version": m["version"] + 1,
+        "parent": m["version"],
+        "bucket_fn": "xxhash64",
+        "summary": {"operation": "legacy-layout"},
+    }
+    legacy.pop("committed_at")
+    table._try_commit(legacy)
+    v_legacy = table.current_version()
+
+    ev2 = spark.createDataFrame(_epoch_events(2), schema=CHANGE_EVENTS_SCHEMA)
+    with pytest.raises(ValueError, match=r"rebucket\(\)"):
+        table.merge(ev2, policy="versioned_upsert")
+    with pytest.raises(ValueError, match=r"rebucket\(\)"):
+        table.lookup(["conv-e0-000"])
+    with pytest.raises(ValueError, match=r"rebucket\(\)"):
+        table.compact()
+    assert table.current_version() == v_legacy
+    assert _sorted_rows(table.read()) == before
+
+    table.rebucket(8)
+    assert table.bucket_fn() == "murmur3" and table.n_buckets() == 8
+    assert _sorted_rows(table.read()) == before
+    assert apply_changes(table, ev2, epoch=2).merge.applied
+    keys = ["conv-e0-000", "conv-e1-005", "conv-e2-019", "conv-absent"]
+    exp = table.read().filter(F.col("conv_id").isin(keys))
+    assert exp.count() > 0
+    assert _sorted_rows(table.lookup(keys)) == _sorted_rows(exp)
+
+
 def test_rebucket_keeps_declared_clustering_and_validates(spark, tmp_path):
     """A rebucket is a base rewrite like compact/optimize/merge_into CoW —
     the declared layout must survive it (files stay time-clustered and

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from nifi_dicom_spark.fixtures.generator import GeneratorConfig, generate_change_events
 from nifi_dicom_spark.model import CHANGE_EVENTS_SCHEMA
-from nifi_dicom_spark.operators.dedup import lww_dedup, lww_dedup_salted, lww_dedup_window
+from nifi_dicom_spark.operators.dedup import lww_dedup, lww_dedup_window
 from nifi_dicom_spark.operators.match import parse_datetime_range, wildcard_to_like
 
 
@@ -22,9 +22,7 @@ def test_dedup_variants_agree_under_skew(spark):
     keys = ["conv_id", "turn_idx"]
     a = lww_dedup(df, keys).orderBy(*keys).toPandas()
     b = lww_dedup_window(df, keys).orderBy(*keys).select(list(a.columns)).toPandas()
-    c = lww_dedup_salted(df, keys, n_salt=8).orderBy(*keys).select(list(a.columns)).toPandas()
     pd.testing.assert_frame_equal(a, b)
-    pd.testing.assert_frame_equal(a, c)
 
 
 # --- keymap: cardinality never grows on replay (the "6 not 12" contract) ----

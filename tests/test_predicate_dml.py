@@ -281,6 +281,44 @@ def test_forget_versioned_scrubs_tombstone_and_holds_replay(spark, tmp_path):
     assert [r.k for r in live2] == ["b"]
 
 
+def test_forget_after_delete_where_scrubs_existing_tombstones(spark, tmp_path):
+    """A delete_where tombstone keeps the full payload; a later forget on
+    the same rows must scrub it (key, op, op_seq and offset survive) and
+    vacuum every file that still holds it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "vt")
+    tab = SnapshotTable.create(
+        spark, path, VERSIONED_SCHEMA, key_cols=["k"], n_buckets=4
+    )
+    rows = [("a", "insert", 5, 50, 111), ("b", "insert", 7, 70, 222)]
+    tab.merge(
+        spark.createDataFrame(rows, VERSIONED_SCHEMA), policy="versioned_upsert"
+    )
+    tab.delete_where("v = 111")
+    tomb = tab.read().filter("op = 'delete'").collect()
+    assert [(r.k, r.op_seq, r.v) for r in tomb] == [("a", 6, 111)]
+
+    report = tab.forget("v = 111")
+    assert report["rows_forgotten"] == 1
+    assert report["files_vacuumed"] >= 1
+    got = sorted(tuple(r) for r in tab.read().collect())
+    assert got == [("a", "delete", 6, 50, None), ("b", "insert", 7, 70, 222)]
+    files = glob.glob(f"{path}/data/**/*.parquet", recursive=True)
+    assert files
+    leaked = [f for f in files if 111 in pq.read_table(f).column("v").to_pylist()]
+    assert leaked == [], f"payload survived the purge in {leaked}"
+    # the scrubbed tombstone still holds a late replay of the row dead
+    tab.merge(
+        spark.createDataFrame([("a", "insert", 5, 50, 111)], VERSIONED_SCHEMA),
+        policy="versioned_upsert",
+    )
+    live = tab.read().filter(F.col("op") != "delete").collect()
+    assert [r.k for r in live] == ["b"]
+
+
 def test_forget_no_match_reports_zero(spark, tmp_path):
     tab = _table(spark, tmp_path)
     v0 = tab.current_version()
