@@ -488,10 +488,9 @@ def q_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate DML: DELETE FROM table WHERE pred (no source relation) —
-    two-pass stats-pruned copy-on-write built on merge_into. The ranges=
-    hint routes the matching-key scan through manifest min/max pruning;
-    it is implied by the predicate, so it is pure IO (never changes which
-    rows match). Oracle: plain anti-filter of the base table."""
+    two-pass copy-on-write built on merge_into; parquet row-group
+    pushdown of the predicate prunes the matching-key scan. Oracle: plain
+    anti-filter of the base table."""
     import tempfile
 
     from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
@@ -507,10 +506,7 @@ def q_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=8,
     )
     tab.overwrite(cust)
-    tab.delete_where(
-        "c_mktsegment = 'AUTOMOBILE' AND c_acctbal < 5000.0",
-        ranges={"c_acctbal": (None, 5000.0)},
-    )
+    tab.delete_where("c_mktsegment = 'AUTOMOBILE' AND c_acctbal < 5000.0")
     return tab.read().select(
         "c_custkey",
         "c_name",
@@ -522,7 +518,7 @@ def q_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate DML: UPDATE table SET assignments WHERE pred — expression
     assignments over the t alias, unlisted columns untouched; same
-    stats-pruned copy-on-write shape as delete_where. Oracle: CASE WHEN
+    two-pass copy-on-write shape as delete_where. Oracle: CASE WHEN
     projection of the base table."""
     import tempfile
 

@@ -36,11 +36,14 @@ insert-if-absent at ``DatabaseInformationModel.java:805-892``):
 
 Scale design: data is hash-bucketed by the merge key's first column with
 **Spark's own shuffle hash** (``pmod(hash(conv_id), n_buckets)`` — murmur3,
-identical to ``HashPartitioning``), so ``repartition(n_buckets, conv_id)``
-places bucket *b*'s rows in output partition *b* with no auxiliary mapping:
-bucket placement, the LWW reduce and the per-bucket write all share ONE
-exchange (the reduce's ``groupBy(conv_id, turn_idx)`` is satisfied by the
-conv_id clustering, so no second shuffle of payload bytes ever happens).
+identical to ``HashPartitioning``). A row's bucket is a pure function of the
+row (Iceberg's bucket transform): each write computes it as a column and
+writes one ``b=N/`` directory per bucket, so no file's bucket depends on
+which task wrote it. Clustering by ``conv_id`` into k tasks, k a divisor of
+``n_buckets``, keeps each bucket in one task and one file, and the LWW
+reduce, bucket placement and the write share ONE exchange (the reduce's
+``groupBy(conv_id, turn_idx)`` is satisfied by the conv_id clustering, so no
+second shuffle of payload bytes ever happens).
 Merges touch only buckets the source contains, and a ``versioned_upsert``
 merge appends per-bucket DELTA files instead of rewriting touched buckets
 (merge-on-read) — epoch cost is ∝ the change set, not the table size; reads
@@ -56,7 +59,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import threading
 import time
 import uuid
 import warnings
@@ -106,11 +108,21 @@ class MergeStats:
 
 
 def _bucket_expr(key_col: str, n_buckets: int):
-    """Bucket id of a key: ``pmod(murmur3(key), n_buckets)``, bit-identical
-    to Spark's ``HashPartitioning`` (``F.hash`` = Murmur3, seed 42), so
-    ``repartition(n_buckets, key_col)`` physically places bucket b in output
-    partition b — placement and shuffle are the same operation."""
+    """Bucket id of a key: ``pmod(murmur3(key), n_buckets)``, the hash of
+    Spark's ``HashPartitioning`` (``F.hash`` = Murmur3, seed 42), so a
+    ``repartition(k, key_col)`` with k dividing ``n_buckets`` keeps every
+    bucket inside one shuffle partition (see :func:`_write_tasks`)."""
     return F.pmod(F.hash(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+def _write_tasks(spark: SparkSession, n_buckets: int) -> int:
+    """Tasks a bucket write clusters its rows into: the largest divisor of
+    ``n_buckets`` that is at most ``spark.sql.shuffle.partitions`` of
+    ``spark``, the session the write executes under. Because
+    ``pmod(h, n) mod k == pmod(h, k)`` when k divides n,
+    ``repartition(k, key)`` puts all of one bucket's rows in one task."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(d for d in range(1, min(n_buckets, cap) + 1) if n_buckets % d == 0)
 
 
 def _murmur3_buckets(m: dict) -> int:
@@ -163,9 +175,6 @@ def version_at_backend(backend: CommitBackend, timestamp) -> int:
         )
     return best
 
-
-#: serializes the session-conf toggle around bucket-file writes
-_WRITE_CONF_LOCK = threading.Lock()
 
 #: a lookup or scan whose kept data files total at most this many bytes
 #: runs on the driver: pyarrow reads the files, the Arrow LWW kernel
@@ -547,31 +556,45 @@ class SnapshotTable:
         df: DataFrame,
         commit_tag: str,
         n_buckets: int,
-        already_clustered: bool = False,
         key_cols: list[str] | None = None,
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
         expected_buckets: "set[int] | None" = None,
         expect_exact: bool = True,
     ) -> tuple[dict[str, list[str]], dict]:
-        """Write df as exactly one sorted parquet file per non-empty bucket
-        under a fresh commit directory; return (bucket -> [relpath],
-        relpath -> parquet ``FileMetaData``). The footers are read once
-        here and handed to :meth:`_footer_stats`, so a commit opens each
-        new file's footer once.
+        """Write df as one sorted parquet file per non-empty bucket under a
+        fresh commit directory, ``c-<tag>/b=N/part-*.parquet``; return
+        (bucket -> [relpath], relpath -> parquet ``FileMetaData``). The
+        footers are read once here and handed to :meth:`_footer_stats`, so
+        a commit opens each new file's footer once.
+
+        Each row's bucket is computed by :func:`_bucket_expr` and written
+        with ``partitionBy``, and each file's bucket id is read back from its
+        ``b=N`` directory name, so placement never depends on which task
+        wrote a row. The rows are clustered by the key into
+        :func:`_write_tasks` tasks, which keeps a bucket in one task and so
+        in one file. Catalyst drops that repartition when the input is
+        already clustered the same way (the versioned merge clusters once,
+        before its reduce). If AQE coalesces, skips or locally reads a
+        shuffle, a bucket can only span more files; no row is misplaced.
+
+        ``sort_cols`` overrides the default key order inside each file
+        (optimize(): e.g. time-cluster a bucket so per-file min/max stats
+        turn a time-range scan into a few-file read); content and placement
+        are unaffected — reads dedup via groupBy, which is
+        order-insensitive. ``max_records_per_file`` splits a bucket's
+        sorted stream into several files (parquet writer option), giving
+        the manifest stats file-level granularity inside a bucket. The sort
+        runs BEFORE the projection so auxiliary sort keys (the z-order
+        interleave) can order the file without being written to it.
 
         ``expected_buckets`` (with ``expect_exact``) is the post-write
-        misplacement tripwire — see the inline comment at the end.
+        bucket-set tripwire: callers that know which buckets the rows must
+        fill pass that set, and a written set that differs (stray buckets,
+        or, when exact, missing ones) fails the write before anything is
+        committed; the orphaned write directory is vacuum's problem."""
+        import pyarrow.parquet as pq
 
-        ``repartition(n_buckets, key_col)`` IS the bucket function
-        (HashPartitioning uses the same murmur3 as :func:`_bucket_expr`), so
-        output partition index == bucket id with no auxiliary column. With
-        ``already_clustered`` the caller has already produced that exact
-        partitioning upstream (e.g. the versioned merge clusters ONCE and
-        runs its reduce on the clustered data) — no further shuffle happens
-        here at all. The explicit ``repartition(n, col)`` is a
-        REPARTITION_BY_NUM shuffle, which AQE never coalesces, so the write
-        keeps full ``n_buckets`` parallelism at any cluster size."""
         out_rel = f"c-{commit_tag}"
         out_abs = os.path.join(self.data_dir, out_rel)
         data_cols = [c for c in df.columns if c != ZORDER_COL]
@@ -579,94 +602,35 @@ class SnapshotTable:
         # they already hold — re-deriving it here is a version LIST + GET
         # per use on an object-store backend
         kc = list(key_cols) if key_cols is not None else self.key_cols()
-        clustered = df if already_clustered else df.repartition(n_buckets, kc[0])
-        # ``sort_cols`` overrides the default key clustering (optimize():
-        # e.g. time-cluster a bucket so per-file min/max stats turn a
-        # time-range scan into a few-file read); content/placement are
-        # unaffected — reads dedup via groupBy, which is order-insensitive.
-        # ``max_records_per_file`` splits a bucket's sorted stream into
-        # several files (parquet writer option), giving the manifest stats
-        # file-level granularity inside a bucket. Sort BEFORE the projection
-        # so auxiliary sort keys (the z-order interleave) can order the file
-        # without being written to it.
-        wdf = clustered.sortWithinPartitions(*(sort_cols or kc)).select(*data_cols)
-        # AQE MUST NOT re-shape the final exchange of this write: if the
-        # source plan already carries an ENSURE_REQUIREMENTS exchange hash-
-        # partitioned on the key with numPartitions == n_buckets (e.g. an
-        # upstream join on the key while shuffle.partitions == n_buckets),
-        # Catalyst elides the explicit REPARTITION_BY_NUM as redundant —
-        # correct mapping, but the surviving exchange is no longer
-        # AQE-protected, and a coalesced (or locally-read) write breaks the
-        # partition-index == bucket-id invariant (rows of several buckets
-        # in one file → silent misplacement; regression-tested via the
-        # dead-letter read-modify-write path AND the foreachBatch clone
-        # test below).
-        #
-        # Scoping: AQE never re-shapes a REPARTITION_BY_NUM shuffle, so when
-        # the physical plan still contains ours (the overwhelmingly common
-        # case) the write needs NO conf change at all. Only when the explicit
-        # repartition was elided (or the plan can't be inspected) do we
-        # disable AQE outright for this one write — under a process-wide lock
-        # so concurrent writers can't interleave their set/restore.
-        #
-        # CRITICAL: both the plan inspection and the conf toggle must act on
-        # the session the plan EXECUTES under — ``wdf.sparkSession`` — not
-        # ``self.spark``. Inside ``foreachBatch`` the batch DataFrame (and
-        # everything derived from it, joins against this table's own reads
-        # included) is bound to a per-micro-batch CLONED SparkSession with
-        # its own SQLConf; toggling the outer session is a silent no-op
-        # there, which is exactly how the dead-letter table lost 7/8 of its
-        # rows to a coalesced single-file write once shuffle.partitions
-        # happened to equal n_buckets (the join-on-key elision scenario).
-        def _writer():
-            w = wdf.write.mode("overwrite")
-            if max_records_per_file:
-                w = w.option("maxRecordsPerFile", int(max_records_per_file))
-            return w
-
-        exec_sess = getattr(wdf, "sparkSession", None) or self.spark
-        if self._plan_coalesce_safe(wdf):
-            _writer().parquet(out_abs)
-        else:
-            conf = exec_sess.conf
-            aqe_key = "spark.sql.adaptive.enabled"
-            with _WRITE_CONF_LOCK:
-                prev = conf.get(aqe_key, "true")
-                conf.set(aqe_key, "false")
-                try:
-                    _writer().parquet(out_abs)
-                finally:
-                    conf.set(aqe_key, prev)
-        import pyarrow.parquet as _pq
+        # the partition column names the bucket directory and must not
+        # shadow a data column (Spark resolves names case-insensitively)
+        bcol = "b"
+        while bcol in {c.lower() for c in df.columns}:
+            bcol += "_"
+        wdf = (
+            df.repartition(_write_tasks(df.sparkSession, n_buckets), kc[0])
+            .withColumn(bcol, _bucket_expr(kc[0], n_buckets))
+            .sortWithinPartitions(bcol, *(sort_cols or kc))
+            .select(bcol, *data_cols)
+        )
+        w = wdf.write.mode("overwrite").partitionBy(bcol)
+        if max_records_per_file:
+            w = w.option("maxRecordsPerFile", int(max_records_per_file))
+        w.parquet(out_abs)
 
         files: dict[str, list[str]] = {}
         footers: dict = {}
-        for fn in os.listdir(out_abs):
-            if not fn.endswith(".parquet") or not fn.startswith("part-"):
+        for d in sorted(os.listdir(out_abs)):
+            if not d.startswith(f"{bcol}="):
                 continue
-            # Spark always emits a (0-row) file for write-partition 0 even
-            # when that partition is empty (schema preservation for fully-
-            # empty writes) — registering it would pin a phantom file under
-            # bucket 0 in every manifest and trip the misplacement check
-            # below. One local footer read per written file (≤ n_buckets
-            # per commit), kept for the stats path.
-            md = _pq.read_metadata(os.path.join(out_abs, fn))
-            if md.num_rows == 0:
-                continue
-            rel = os.path.join(out_rel, fn)
-            b = str(int(fn.split("-")[1]))
-            files.setdefault(b, []).append(rel)
-            footers[rel] = md
-        files = {b: sorted(v) for b, v in files.items()}
-        # Loud tripwire against ANY residual misplacement vector: callers on
-        # paths where every expected bucket provably receives ≥1 row (MoR
-        # merge: rows = the conformed batch; compact/optimize: tombstones
-        # are stored rows, so a bucket with files cannot reduce to empty)
-        # pass the expected bucket set — a mismatch means the write's
-        # partition-index ↔ bucket mapping broke, and committing it would
-        # corrupt the table silently (the next compaction folds rows of N
-        # buckets under one bucket id and drops the rest). Fail the commit
-        # instead; the orphaned write directory is vacuum's problem.
+            b = d.split("=", 1)[1]
+            for fn in sorted(os.listdir(os.path.join(out_abs, d))):
+                if fn.startswith("part-") and fn.endswith(".parquet"):
+                    rel = os.path.join(out_rel, d, fn)
+                    files.setdefault(b, []).append(rel)
+                    footers[rel] = pq.read_metadata(
+                        os.path.join(self.data_dir, rel)
+                    )
         if expected_buckets is not None:
             got = {int(b) for b in files}
             exp = {int(b) for b in expected_buckets}
@@ -674,13 +638,12 @@ class SnapshotTable:
             missing = (exp - got) if expect_exact else set()
             if stray or missing:
                 raise RuntimeError(
-                    "bucket write misplacement detected "
+                    "bucket write does not match its expected buckets "
                     f"(wrote buckets {sorted(got)}, expected "
                     f"{sorted(exp)}{'' if expect_exact else ' (superset)'}; "
                     f"stray={sorted(stray)} missing={sorted(missing)}): "
-                    "the write's partition-index == bucket-id invariant "
-                    "broke (AQE re-shaped the final exchange?); refusing "
-                    "to commit misattributed files"
+                    "the rows written are not the rows the caller meant "
+                    "to write; refusing to commit them"
                 )
         return files, footers
 
@@ -1664,41 +1627,6 @@ class SnapshotTable:
         self._try_commit(new)
         return new["version"]
 
-    def _plan_coalesce_safe(self, df: DataFrame) -> bool:
-        """True when the write needs no AQE toggle: AQE/coalescing is off in
-        the session the plan EXECUTES under (``df.sparkSession`` — inside
-        ``foreachBatch`` that is the micro-batch CLONE, not ``self.spark``),
-        or the plan's top exchange is still our explicit
-        ``REPARTITION_BY_NUM`` (a shuffle origin AQE never re-shapes).
-        Conservative on any inspection failure (False → use the toggle)."""
-        try:
-            conf = (getattr(df, "sparkSession", None) or self.spark).conf
-            if conf.get("spark.sql.adaptive.enabled", "true") != "true":
-                return True
-            if (
-                conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-                != "true"
-            ):
-                return True
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            # The decision must be made on the exchange that produces the
-            # write's partitioning — the topmost shuffle exchange (broadcast
-            # exchanges belong to join subtrees and carry no partitioning).
-            # A bare substring search over the whole plan is wrong: a merge
-            # SOURCE that itself contains a repartition-by-num (e.g. an
-            # upstream .repartition(n) for kernel parallelism) would satisfy
-            # it even when OUR final repartition was elided by an
-            # ENSURE_REQUIREMENTS exchange — the exact hazard this guard
-            # exists for.
-            for line in plan.splitlines():
-                if "BroadcastExchange" in line:
-                    continue
-                if "Exchange" in line:
-                    return "REPARTITION_BY_NUM" in line
-            return False
-        except Exception:
-            return False
-
     def overwrite(self, df: DataFrame) -> int:
         """Replace the full table contents (initial snapshot load)."""
         m = self.manifest()
@@ -1905,19 +1833,19 @@ class SnapshotTable:
             # delta files — the table's base is never read or rewritten, so
             # epoch cost ∝ change set. Cross-batch LWW happens at read
             # (associative reduce over base∪deltas) and at compaction.
-            # ONE exchange total: cluster by the bucket/key column, let the
-            # groupBy reuse the clustering (HashPartitioning(conv_id)
-            # satisfies ClusteredDistribution(conv_id, turn_idx)), write
-            # partition index == bucket — no second payload shuffle
+            # ONE exchange total: cluster by the key column exactly as the
+            # write does, let the groupBy reuse the clustering
+            # (HashPartitioning(conv_id) satisfies
+            # ClusteredDistribution(conv_id, turn_idx)), and the write's own
+            # repartition is then redundant — no second payload shuffle
             clustered = conform_to_schema(src, schema).repartition(
-                n_buckets, key_cols[0]
+                _write_tasks(src.sparkSession, n_buckets), key_cols[0]
             )
             merged = lww_dedup(clustered, key_cols).select(*schema.fieldNames())
             new_files, footers = self._write_bucket_files(
                 merged,
                 uuid.uuid4().hex[:12],
                 n_buckets,
-                already_clustered=True,
                 key_cols=key_cols,
                 # rows = the conformed batch: every touched bucket keeps ≥1
                 # row through the dedup, so the written bucket set must
@@ -2292,19 +2220,14 @@ class SnapshotTable:
             footers=footers,
         )
 
-    def _where_source(
-        self, predicate, ranges: dict | None, live_only: bool = True
-    ) -> DataFrame:
+    def _where_source(self, predicate, live_only: bool = True) -> DataFrame:
         """Matching-key discovery pass shared by :meth:`delete_where` /
         :meth:`update_where` / :meth:`forget` — the "find touched files"
-        scan of Delta's DELETE/UPDATE implementation. ``ranges`` routes the
-        scan through :meth:`scan_ranges` so the manifest's per-file
-        [min, max] stats prune IO before Catalyst's row-group pushdown even
-        starts; the residual ``predicate`` is applied on top (so ranges are
-        a pure IO hint — they never change which rows match). ``live_only``
+        scan of Delta's DELETE/UPDATE implementation; the predicate reaches
+        the parquet scan, so row-group statistics prune it. ``live_only``
         (versioned tables) leaves tombstones out."""
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        base = self.scan_ranges(ranges) if ranges else self.read()
+        base = self.read()
         if live_only and {"op", "op_seq", "offset"} <= set(base.columns):
             # versioned tables: DML predicates address the LIVE state —
             # tombstoned keys are already dead, selecting them would only
@@ -2318,7 +2241,6 @@ class SnapshotTable:
         self,
         predicate: "Column | str",
         *,
-        ranges: dict[str, tuple] | None = None,
         commit_keys: list[tuple[int, int]] | None = None,
     ) -> MergeStats:
         """``DELETE FROM this WHERE predicate`` — predicate-driven row
@@ -2328,13 +2250,13 @@ class SnapshotTable:
         rather than explicit UIDs).
 
         Two-pass copy-on-write, exactly Delta's DELETE shape: pass 1 finds
-        matching keys (``ranges`` adds manifest-stats file pruning above
-        the parquet row-group pushdown), pass 2 is a key-bucket-pruned
-        :meth:`merge_into` that rewrites only touched buckets. On
-        versioned (LWW) tables the deletes become TOMBSTONES with a bumped
-        ``op_seq`` — a late CDC replay below that seq stays dead — and the
-        change feed reports them as ordinary delete rows. ``commit_keys``
-        give the same exactly-once replay gate as any merge.
+        matching keys (parquet row-group pushdown prunes the scan), pass 2
+        is a key-bucket-pruned :meth:`merge_into` that rewrites only
+        touched buckets. On versioned (LWW) tables the deletes become
+        TOMBSTONES with a bumped ``op_seq`` — a late CDC replay below that
+        seq stays dead — and the change feed reports them as ordinary
+        delete rows. ``commit_keys`` give the same exactly-once replay gate
+        as any merge.
 
         Rows where the predicate is NULL are kept (SQL WHERE semantics:
         only TRUE deletes). Deleting a large fraction of the table is
@@ -2342,7 +2264,7 @@ class SnapshotTable:
         no join; this method is the sparse-delete path (cost ∝ matching
         buckets, not table size).
         """
-        src = self._where_source(predicate, ranges)
+        src = self._where_source(predicate)
         return self.merge_into(
             src,
             when_matched_delete=True,
@@ -2355,21 +2277,20 @@ class SnapshotTable:
         assignments: dict[str, "Column | str"],
         predicate: "Column | str",
         *,
-        ranges: dict[str, tuple] | None = None,
         commit_keys: list[tuple[int, int]] | None = None,
     ) -> MergeStats:
         """``UPDATE this SET assignments WHERE predicate`` — predicate
         UPDATE without a source relation. ``assignments`` are expressions
         over the ``t`` alias (the current row), e.g.
         ``{"text": "upper(t.text)", "tool": "null"}``; unlisted columns
-        keep their values. Same two-pass stats-pruned copy-on-write as
+        keep their values. Same two-pass copy-on-write as
         :meth:`delete_where`; on versioned tables the rewritten rows get
         ``op_seq + 1`` so the manual edit wins over replays of the event
         it superseded (the :meth:`merge_into` synthesis).
         """
         if not assignments:
             raise ValueError("update_where needs at least one assignment")
-        src = self._where_source(predicate, ranges)
+        src = self._where_source(predicate)
         return self.merge_into(
             src,
             when_matched_update=assignments,
@@ -2381,7 +2302,6 @@ class SnapshotTable:
         self,
         predicate: "Column | str",
         *,
-        ranges: dict[str, tuple] | None = None,
         min_file_age_s: float = 0.0,
     ) -> dict:
         """Right-to-be-forgotten purge: PHYSICALLY erase the payload of
@@ -2421,7 +2341,7 @@ class SnapshotTable:
 
         Returns a report dict: rows forgotten (tombstones scrubbed
         included), touched buckets, commit version, files vacuumed. Scale
-        shape: identical to :meth:`delete_where` (stats-pruned key scan +
+        shape: identical to :meth:`delete_where` (pushed-down key scan +
         bucket-pruned rewrite); vacuum is an O(files) metadata walk with no
         data read.
         """
@@ -2431,7 +2351,7 @@ class SnapshotTable:
         schema = self.schema()
         versioned = {"op", "op_seq", "offset"} <= set(schema.fieldNames())
         # tombstones too: one a delete_where left still holds its payload
-        src = self._where_source(predicate, ranges, live_only=False)
+        src = self._where_source(predicate, live_only=False)
         n_match = src.count()  # the report needs the count; scan is pruned
         if n_match == 0:
             return {

@@ -5,8 +5,13 @@ operators,sources,streaming}`` must be referenced as an identifier — a
 ``Name``, an ``Attribute`` or an import alias — somewhere other than its
 own ``def``, in any tracked ``.py`` file (the package, the entrypoints,
 ``perfbench/``, ``jobs/`` and the tests). Strings and docstrings do not
-count, so a helper that only a docstring mentions is flagged. Pure
-``ast`` over the sources: no Spark session, well under a second.
+count, so a helper that only a docstring mentions is flagged.
+
+The same modules never set or unset a session conf (``spark.conf.set``, or
+``conf.set`` on a bound ``conf``): a write that needs a conf toggled to be
+correct depends on which session it runs under, and a process-wide toggle
+races every other writer. Pure ``ast`` over the sources: no Spark session,
+well under a second.
 """
 
 from __future__ import annotations
@@ -70,3 +75,28 @@ def _unreferenced() -> list[str]:
 
 def test_every_public_engine_definition_is_referenced():
     assert _unreferenced() == []
+
+
+def _conf_mutations() -> list[str]:
+    out = []
+    for rel in _tracked_py_files():
+        if not rel.startswith(ENGINE_DIRS):
+            continue
+        tree = ast.parse((REPO / rel).read_text(), filename=rel)
+        for n in ast.walk(tree):
+            if not (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("set", "unset")
+            ):
+                continue
+            owner = n.func.value
+            if (isinstance(owner, ast.Name) and owner.id == "conf") or (
+                isinstance(owner, ast.Attribute) and owner.attr == "conf"
+            ):
+                out.append(f"{rel}:{n.lineno}")
+    return sorted(out)
+
+
+def test_engine_never_mutates_session_conf():
+    assert _conf_mutations() == []

@@ -1622,3 +1622,54 @@ def test_clone_of_renamed_table_resolves_history(spark, tmp_path):
     assert "remark" in clone.read().columns
     assert "memo" in src.read().columns
     assert sorted(r.remark for r in clone.read().collect()) == ["xa", "xb"]
+
+
+@pytest.mark.parametrize("payload_col", ["v", "b"])
+def test_bucket_directories_add_no_read_column(spark, tmp_path, payload_col):
+    """Data files sit in ``c-<tag>/b=N/`` directories, and no reader of
+    explicit file paths infers a ``b`` partition column from that: Spark's
+    ``read.parquet`` (``_load_files``), the driver's ``_arrow_files`` and
+    the change-feed worker's ``_read_parquet``. A table with its own ``b``
+    column keeps it: the bucket directory takes another name."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+    from nifi_dicom_spark.sources.table_stream import _read_parquet
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField(payload_col, T.LongType(), True),
+        ]
+    )
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "t"), schema, key_cols=["k"], n_buckets=4
+    )
+    table.overwrite(
+        spark.range(40).select(
+            F.col("id").cast("string").alias("k"),
+            (F.col("id") * 10).alias(payload_col),
+        )
+    )
+    m = table.manifest()
+    rels = [rel for rels in m["files"].values() for rel in rels]
+    assert len(rels) == 4
+    bucket_dir = "b" if payload_col == "v" else "b_"
+    for b, files in m["files"].items():
+        assert [os.path.basename(os.path.dirname(r)) for r in files] == [
+            f"{bucket_dir}={b}"
+        ]
+    abs_paths = [os.path.join(table.data_dir, r) for r in rels]
+    names = ["k", payload_col]
+    assert spark.read.parquet(*abs_paths).columns == names
+    assert table._load_files(m, schema, abs_paths).columns == names
+    assert table._arrow_files(m, schema, rels).column_names == names
+    for rel in rels:
+        assert _read_parquet(table.data_dir, rel).column_names == names
+        assert pq.read_table(os.path.join(table.data_dir, rel)).column_names == names
+    got = {(r["k"], r[payload_col]) for r in table.read().collect()}
+    assert got == {(str(i), 10 * i) for i in range(40)}

@@ -319,7 +319,7 @@ def test_history_lists_versions(spark, small_log, tmp_path):
 
 def test_concurrent_merges_on_two_tables(spark, tmp_path):
     """Two threads merging DIFFERENT tables concurrently: placement stays
-    exact for both (the session-global AQE toggle is serialized)."""
+    exact for both (no write touches the shared session's conf)."""
     from concurrent.futures import ThreadPoolExecutor
 
     def build(tag):

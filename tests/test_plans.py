@@ -8,12 +8,17 @@ visible in `.explain` output, not assumed.
 * Dimension probes broadcast (no sort-merge shuffle of the fact side).
 * Filters and projections reach the parquet scan (PushedFilters/ReadSchema).
 * The pre-merge pipeline stays inside whole-stage codegen.
+* A bucket write places each row by its own bucket value, so no AQE
+  re-shaping of the write's exchange can misplace rows, and a versioned
+  merge's reduce and write share one exchange.
 """
 
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -115,14 +120,53 @@ def test_premerge_pipeline_is_codegenned(spark):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
 
 
-def test_plan_coalesce_safe_detection(spark, tmp_path):
-    """The bucket-file write only mutates the session AQE conf when the
-    explicit REPARTITION_BY_NUM was elided from the plan: a normal clustered
-    write is detected as safe (no global toggle), an un-repartitioned plan
-    is not, and disabling AQE coalescing globally makes everything safe."""
+@contextmanager
+def _conf(spark, settings: dict[str, str]):
+    """Session conf ``settings`` for the block, then the previous values."""
+    prev = {key: spark.conf.get(key) for key in settings}
+    for key, value in settings.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in prev.items():
+            spark.conf.set(key, value)
+
+
+def _capture_parquet_writes(monkeypatch) -> list:
+    """Record every DataFrame handed to ``DataFrameWriter.parquet``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    seen = []
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        seen.append(self._df)
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return seen
+
+
+@pytest.mark.parametrize(
+    "n_buckets,shuffle_partitions", [(8, 8), (12, 8)], ids=["elided", "12of8"]
+)
+def test_bucket_write_places_rows_by_value_under_aqe(
+    spark, tmp_path, monkeypatch, n_buckets, shuffle_partitions
+):
+    """A bucket write under AQE coalescing puts every row in the ``b=N``
+    directory of its own ``_bucket_expr`` value. ``elided``: a sort-merge
+    join on the key upstream hash-partitions the rows by the key into
+    ``shuffle.partitions == n_buckets`` partitions, so Catalyst drops the
+    write's own repartition and AQE may coalesce the join's exchange.
+    ``12of8``: 8 does not divide 12, so the write clusters into 6 tasks.
+    Either way each bucket is one file."""
+    import os
+
+    import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
-    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable, _bucket_expr
 
     schema = T.StructType(
         [
@@ -131,33 +175,77 @@ def test_plan_coalesce_safe_detection(spark, tmp_path):
         ]
     )
     table = SnapshotTable.create(
-        spark, str(tmp_path / "t"), schema, key_cols=["k"], n_buckets=4
+        spark, str(tmp_path / "t"), schema, key_cols=["k"], n_buckets=n_buckets
     )
-    base = spark.range(100).select(
+    n = 600
+    keys = spark.range(n).select(F.col("id").cast("string").alias("k"))
+    vals = spark.range(n).select(
         F.col("id").cast("string").alias("k"), F.col("id").alias("v")
     )
-    clustered = base.repartition(4, "k").sortWithinPartitions("k")
-    assert table._plan_coalesce_safe(clustered)  # REPARTITION_BY_NUM survives
-    assert not table._plan_coalesce_safe(base)  # no explicit repartition
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        assert table._plan_coalesce_safe(base)  # nothing to protect against
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    seen = _capture_parquet_writes(monkeypatch)
+    with _conf(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(shuffle_partitions),
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        },
+    ):
+        table.overwrite(keys.join(vals, on="k"))
+        plan = seen[-1]._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan, plan
+    if n_buckets == shuffle_partitions:
+        assert "REPARTITION_BY_NUM" not in plan, plan  # the elision shape
 
-    # The hazard case: OUR final repartition(4, k) is elided by an upstream
-    # ENSURE_REQUIREMENTS exchange (agg on the key at shuffle.partitions ==
-    # n_buckets), while an UNRELATED repartition-by-num survives deeper in
-    # the plan (kernel-parallelism .repartition(8)). The decision must come
-    # from the topmost shuffle exchange — a whole-plan substring search
-    # would wrongly report safe here.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        agg = base.repartition(8).groupBy("k").agg(F.max("v").alias("v"))
-        elided = agg.repartition(4, "k").sortWithinPartitions("k")
-        plan = elided._jdf.queryExecution().executedPlan().toString()
-        assert "REPARTITION_BY_NUM" in plan  # the decoy is present
-        assert not table._plan_coalesce_safe(elided)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    want = {
+        r["k"]: r["b"]
+        for r in keys.select("k", _bucket_expr("k", n_buckets).alias("b")).collect()
+    }
+    files: dict[int, list[str]] = {}
+    for rels in table.manifest()["files"].values():
+        for rel in rels:
+            d = os.path.basename(os.path.dirname(rel))
+            assert d.startswith("b="), rel
+            files.setdefault(int(d[2:]), []).append(rel)
+    assert sorted(files) == sorted(set(want.values()))
+    for b, rels in files.items():
+        assert len(rels) == 1, (b, rels)
+        got = pq.read_table(os.path.join(table.data_dir, rels[0]), columns=["k"])
+        assert {want[k] for k in got.column("k").to_pylist()} == {b}, b
+    assert table.read().count() == n
+
+
+def test_versioned_merge_write_is_single_exchange(spark, tmp_path, monkeypatch):
+    """The DataFrame a versioned merge hands to the parquet writer has one
+    exchange: the clustering by the key before the LWW reduce is also the
+    write's clustering, so payload rows cross the wire once per epoch."""
+    from pyspark.sql import types as T
+
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("op", T.StringType(), True),
+            T.StructField("op_seq", T.LongType(), True),
+            T.StructField("offset", T.LongType(), True),
+            T.StructField("v", T.LongType(), True),
+        ]
+    )
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "t"), schema, key_cols=["k"], n_buckets=32
+    )
+    batch = spark.range(500).select(
+        (F.col("id") % 97).cast("string").alias("k"),
+        F.lit("insert").alias("op"),
+        F.col("id").alias("op_seq"),
+        F.col("id").alias("offset"),
+        F.col("id").alias("v"),
+    )
+    seen = _capture_parquet_writes(monkeypatch)
+    table.merge(batch, op_col="op", policy="versioned_upsert")
+    assert len(seen) == 1
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert table.read().count() == 97

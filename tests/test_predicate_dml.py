@@ -2,7 +2,7 @@
 
 The Delta/Iceberg row-level DML surface without a source relation
 (reference analog: predicate-keyed study purge,
-``DatabaseInformationModel.java:805-892``): two-pass stats-pruned
+``DatabaseInformationModel.java:805-892``): two-pass
 copy-on-write built on merge_into, so tombstone/exactly-once semantics
 are inherited, not re-implemented.
 """
@@ -162,22 +162,6 @@ def test_update_where_versioned_bumps_seq(spark, tmp_path):
     )
     live = tab.read().filter(F.col("op") != "delete").collect()
     assert [r.v for r in live] == [101]
-
-
-def test_ranges_hint_is_pure_io(spark, tmp_path):
-    """ranges= prunes IO through scan_ranges but never changes which rows
-    match — result equals the unhinted call."""
-    tab = _table(
-        spark,
-        tmp_path,
-        rows=[(f"k{i}", i, None) for i in range(50)],
-    )
-    tab.delete_where("v % 7 = 0", ranges={"v": (0, 20)})
-    got = sorted(r.v for r in tab.read().collect())
-    # only v in [0,20] was scanned: multiples of 7 above 20 survive
-    assert got == sorted(
-        i for i in range(50) if not (i % 7 == 0 and i <= 20)
-    )
 
 
 def test_delete_where_commit_keys_replay_gate(spark, tmp_path):

@@ -256,11 +256,12 @@ def test_foreachbatch_clone_write_attribution(spark, tmp_path):
     per-micro-batch CLONED SparkSession. A read-modify-write merge whose
     join on the key produces an ENSURE_REQUIREMENTS exchange with
     numPartitions == n_buckets (shuffle.partitions == n_buckets here) gets
-    its explicit REPARTITION_BY_NUM elided; the AQE guard must then act on
-    the CLONE's conf, not the outer session's, or AQE coalesces the bucket
-    partitions and files get attributed to the wrong buckets — silent row
-    loss at the next compaction (how the dead-letter table once lost 7/8 of
-    its rows). Asserts per-bucket attribution directly: every bucket-pruned
+    the write's own repartition elided, and AQE may coalesce the surviving
+    exchange. When files were placed by partition index, that attributed
+    rows to the wrong buckets — silent row loss at the next compaction (how
+    the dead-letter table once lost 7/8 of its rows). Files are now placed
+    by each row's bucket value, whatever the session's AQE settings.
+    Asserts per-bucket attribution directly: every bucket-pruned
     read returns exactly the keys that hash to it, and compaction preserves
     the full count."""
     import pyspark.sql.functions as F
