@@ -90,6 +90,12 @@ SPARK_DOMAINS = {
         "n": ("int", 1, 60),
         "n_files": ("int", 1, 4),
     },
+    "test_driver_compaction_matches_spark_compaction": {
+        "seed": ("int", 0, 10_000),
+        "n": ("int", 1, 60),
+        "n_epochs": ("int", 1, 4),
+        "layout": ["keys", "keys_split", "by_n"],
+    },
 }
 
 

@@ -48,7 +48,11 @@ Merges touch only buckets the source contains, and a ``versioned_upsert``
 merge appends per-bucket DELTA files instead of rewriting touched buckets
 (merge-on-read) — epoch cost is ∝ the change set, not the table size; reads
 LWW-merge base∪deltas (exact — the reduce is associative) and ``compact()``
-folds deltas back into base when a bucket accumulates too many. murmur3 is
+folds deltas back into base when a bucket accumulates too many. A
+compaction whose files total at most ``DRIVER_READ_MAX_BYTES`` folds each
+bucket on the driver (pyarrow read, the Arrow LWW kernel, a pyarrow write:
+no Spark job, no shuffle); larger ones, and tables with a z-order
+declaration, run as a Spark reduce and bucket write. murmur3 is
 the only bucket layout bucket-aware operations accept; a manifest with any
 other ``bucket_fn`` stays readable and migrates with :meth:`SnapshotTable.
 rebucket`.
@@ -125,6 +129,38 @@ def _write_tasks(spark: SparkSession, n_buckets: int) -> int:
     return max(d for d in range(1, min(n_buckets, cap) + 1) if n_buckets % d == 0)
 
 
+def _bucket_dir_col(columns: list[str]) -> str:
+    """Name of the partition column that labels bucket directories
+    (``b=N``): ``b``, or ``b_``, ``b__``, ... when the table has a column of
+    that name (Spark resolves names case-insensitively)."""
+    bcol = "b"
+    while bcol in {c.lower() for c in columns}:
+        bcol += "_"
+    return bcol
+
+
+def _check_buckets(
+    files: dict[str, list[str]], expected: "set[int]", exact: bool = True
+) -> None:
+    """The post-write bucket-set tripwire: a write whose bucket set differs
+    from the one its caller expects (stray buckets, or, when ``exact``,
+    missing ones) fails before anything is committed; the orphaned write
+    directory is vacuum's problem."""
+    got = {int(b) for b in files}
+    exp = {int(b) for b in expected}
+    stray = got - exp
+    missing = (exp - got) if exact else set()
+    if stray or missing:
+        raise RuntimeError(
+            "bucket write does not match its expected buckets "
+            f"(wrote buckets {sorted(got)}, expected "
+            f"{sorted(exp)}{'' if exact else ' (superset)'}; "
+            f"stray={sorted(stray)} missing={sorted(missing)}): "
+            "the rows written are not the rows the caller meant "
+            "to write; refusing to commit them"
+        )
+
+
 def _murmur3_buckets(m: dict) -> int:
     """``n_buckets`` of manifest ``m``, which must use the murmur3 layout
     that :func:`_bucket_expr` computes. Every bucket-aware operation calls
@@ -176,12 +212,26 @@ def version_at_backend(backend: CommitBackend, timestamp) -> int:
     return best
 
 
-#: a lookup or scan whose kept data files total at most this many bytes
-#: runs on the driver: pyarrow reads the files, the Arrow LWW kernel
-#: (:func:`~nifi_dicom_spark.operators.dedup.arrow_lww`) reduces them and
-#: the result is a LocalRelation, so Spark's fixed cost per job is never
-#: paid. Larger reads keep the Spark path: the driver cannot hold them.
+#: a lookup, scan or compaction whose data files total at most this many
+#: bytes runs on the driver: pyarrow reads the files and the Arrow LWW
+#: kernel (:func:`~nifi_dicom_spark.operators.dedup.arrow_lww`) reduces
+#: them; a read returns a LocalRelation and a compaction writes its files
+#: with pyarrow, so Spark's fixed cost per job is never paid. Larger ones
+#: keep the Spark path: the driver cannot hold them.
 DRIVER_READ_MAX_BYTES = 16 << 20
+
+#: ``spark.sql.parquet.compression.codec`` values -> the pyarrow codec
+#: that writes the same parquet compression; a compaction under any other
+#: codec keeps the Spark path
+_ARROW_CODECS = {
+    "none": "none",
+    "uncompressed": "none",
+    "snappy": "snappy",
+    "gzip": "gzip",
+    "zstd": "zstd",
+    "brotli": "brotli",
+    "lz4_raw": "lz4",
+}
 
 
 def _nullable(schema: T.StructType) -> T.StructType:
@@ -190,6 +240,40 @@ def _nullable(schema: T.StructType) -> T.StructType:
     return T.StructType(
         [T.StructField(f.name, f.dataType, True) for f in schema.fields]
     )
+
+
+def _arrow_holds(schema: T.StructType) -> bool:
+    """Whether Arrow can hold every type of ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    try:
+        to_arrow_schema(_nullable(schema))
+    except TypeError:
+        return False
+    return True
+
+
+def _distinct_count(col) -> int:
+    """Distinct values of an Arrow column, nulls counted as one; columns
+    whose type has no distinct count report the maximum, so they are
+    never dictionary-encoded."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    try:
+        return pc.count_distinct(col, mode="all").as_py()
+    except pa.ArrowNotImplementedError:
+        return len(col)
+
+
+def _require_version_cols(schema: T.StructType) -> None:
+    """LWW-merging base ∪ deltas needs the ``op_seq``/``offset`` version
+    columns; a table without them cannot merge on read or compact."""
+    if not {"op_seq", "offset"} <= set(schema.fieldNames()):
+        raise RuntimeError(
+            "delta files present but table lacks op_seq/offset version "
+            "columns — cannot LWW-merge on read"
+        )
 
 
 def _live_renames(m: dict, schema: T.StructType) -> dict[str, list[str]]:
@@ -463,12 +547,7 @@ class SnapshotTable:
         if delta and dedup:
             from nifi_dicom_spark.operators.dedup import lww_dedup
 
-            names = set(schema.fieldNames())
-            if not {"op_seq", "offset"} <= names:
-                raise RuntimeError(
-                    "delta files present but table lacks op_seq/offset version "
-                    "columns — cannot LWW-merge on read"
-                )
+            _require_version_cols(schema)
             df = lww_dedup(df, m["key_cols"]).select(*schema.fieldNames())
         return df
 
@@ -588,11 +667,9 @@ class SnapshotTable:
         runs BEFORE the projection so auxiliary sort keys (the z-order
         interleave) can order the file without being written to it.
 
-        ``expected_buckets`` (with ``expect_exact``) is the post-write
-        bucket-set tripwire: callers that know which buckets the rows must
-        fill pass that set, and a written set that differs (stray buckets,
-        or, when exact, missing ones) fails the write before anything is
-        committed; the orphaned write directory is vacuum's problem."""
+        ``expected_buckets`` (with ``expect_exact``): callers that know
+        which buckets the rows must fill pass that set, and
+        :func:`_check_buckets` fails a write whose bucket set differs."""
         import pyarrow.parquet as pq
 
         out_rel = f"c-{commit_tag}"
@@ -602,11 +679,7 @@ class SnapshotTable:
         # they already hold — re-deriving it here is a version LIST + GET
         # per use on an object-store backend
         kc = list(key_cols) if key_cols is not None else self.key_cols()
-        # the partition column names the bucket directory and must not
-        # shadow a data column (Spark resolves names case-insensitively)
-        bcol = "b"
-        while bcol in {c.lower() for c in df.columns}:
-            bcol += "_"
+        bcol = _bucket_dir_col(df.columns)
         wdf = (
             df.repartition(_write_tasks(df.sparkSession, n_buckets), kc[0])
             .withColumn(bcol, _bucket_expr(kc[0], n_buckets))
@@ -632,19 +705,7 @@ class SnapshotTable:
                         os.path.join(self.data_dir, rel)
                     )
         if expected_buckets is not None:
-            got = {int(b) for b in files}
-            exp = {int(b) for b in expected_buckets}
-            stray = got - exp
-            missing = (exp - got) if expect_exact else set()
-            if stray or missing:
-                raise RuntimeError(
-                    "bucket write does not match its expected buckets "
-                    f"(wrote buckets {sorted(got)}, expected "
-                    f"{sorted(exp)}{'' if expect_exact else ' (superset)'}; "
-                    f"stray={sorted(stray)} missing={sorted(missing)}): "
-                    "the rows written are not the rows the caller meant "
-                    "to write; refusing to commit them"
-                )
+            _check_buckets(files, expected_buckets, expect_exact)
         return files, footers
 
     # ------------------------------------------------------------ file stats
@@ -1506,11 +1567,8 @@ class SnapshotTable:
             rel for rl in m.get("delta_files", {}).values() for rel in rl
         }
         reduce = any(rel in delta_rels for rel in kept)
-        if reduce and not {"op_seq", "offset"} <= set(schema.fieldNames()):
-            raise RuntimeError(
-                "delta files present but table lacks op_seq/offset version "
-                "columns — cannot LWW-merge on read"
-            )
+        if reduce:
+            _require_version_cols(schema)
         if self._fits_driver(kept):
             import pyarrow as pa
             import pyarrow.compute as pc
@@ -2447,10 +2505,11 @@ class SnapshotTable:
 
         def build(base: dict, schema: T.StructType) -> dict:
             # carry over untouched buckets; replace (cow) or extend (mor
-            # delta) ONLY touched ones. The write may emit files for buckets
-            # outside the touched set (Spark always materializes shuffle
-            # partition 0, possibly empty) — registering those would corrupt
-            # an untouched bucket's manifest entry; discard them.
+            # delta) ONLY touched ones. A write that passes no expected
+            # bucket set (merge_into's rewrite) is not checked against
+            # ``touched``: a file it wrote for another bucket would replace
+            # that untouched bucket's manifest entry, so only touched
+            # buckets' files are registered.
             touched_set = set(touched)
             files = dict(base["files"])
             deltas = {b: list(v) for b, v in base.get("delta_files", {}).items()}
@@ -2711,14 +2770,23 @@ class SnapshotTable:
         self, buckets: list[int] | None = None, min_deltas: int = 1
     ) -> int | None:
         """Fold merge-on-read delta files back into base files for the given
-        buckets (default: every bucket with ≥ ``min_deltas`` deltas). One
-        LWW reduce + rewrite per compacted bucket; commits a new version with
-        the deltas cleared. Returns the new version, or None if nothing to
-        compact. At scale this is the background maintenance job that bounds
-        read amplification — the hot path (merge) never pays table-sized
-        rewrites. A declared :meth:`set_clustering` layout is applied to
-        the rewrite (the sort happens inside the write either way — only a
-        zorder declaration adds its one min/max normalization agg)."""
+        buckets (default: every bucket with ≥ ``min_deltas`` deltas): each
+        bucket's base ∪ deltas is LWW-reduced to one row per key and
+        rewritten as base files, and a new version commits with the deltas
+        cleared. Returns the new version, or None if nothing to compact.
+        This bounds read amplification — the hot path (merge) never pays
+        table-sized rewrites. A declared :meth:`set_clustering` layout is
+        applied to the rewrite.
+
+        Each call takes one of two routes. When the base and delta files
+        of the buckets to compact total at most
+        :data:`DRIVER_READ_MAX_BYTES`, the driver folds them
+        (:meth:`_fold_on_driver`): no Spark job and no shuffle. Larger
+        compactions, tables with a ``zorder_by`` declaration (the z-value
+        is a Spark expression with a min/max pass), schemas Arrow cannot
+        hold and compression codecs pyarrow cannot write take the Spark
+        path: ``read(buckets)`` (one LWW reduce) and
+        :meth:`_write_bucket_files`."""
         m = self.manifest()
         n_buckets = _murmur3_buckets(m)
         deltas = m.get("delta_files", {})
@@ -2730,27 +2798,123 @@ class SnapshotTable:
         )
         if not todo:
             return None
-        merged = self.read(buckets=todo)  # deduped base∪deltas
-        merged, sort_cols, max_rpf = self._clustering_write_args(m, merged)
+        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        _require_version_cols(schema)
         tag = uuid.uuid4().hex[:12]
-        # tombstones are stored rows, so a bucket holding ≥1 delta file
-        # cannot LWW-reduce to empty: the rewrite must repopulate exactly
-        # the compacted buckets (misplacement here is what turns a
-        # coalesced write into silent row loss)
-        new_files, footers = self._write_bucket_files(
-            merged,
-            tag,
-            n_buckets,
-            key_cols=m["key_cols"],
-            sort_cols=sort_cols,
-            max_records_per_file=max_rpf,
-            expected_buckets=set(todo),
+        decl = (m.get("props") or {}).get("clustering") or {}
+        codec = _ARROW_CODECS.get(
+            self.spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
+            .lower()
         )
+        rels = [
+            rel
+            for b in todo
+            for which in ("files", "delta_files")
+            for rel in m.get(which, {}).get(str(b), [])
+        ]
+        # tombstones are stored rows, so a bucket holding ≥1 delta file
+        # cannot LWW-reduce to empty: either route must repopulate exactly
+        # the compacted buckets
+        if (
+            not decl.get("zorder_by")
+            and codec is not None
+            and _arrow_holds(schema)
+            and self._fits_driver(rels)
+        ):
+            new_files, footers = self._fold_on_driver(
+                m, schema, todo, tag, codec
+            )
+            _check_buckets(new_files, set(todo))
+        else:
+            merged = self.read(buckets=todo)  # deduped base∪deltas
+            merged, sort_cols, max_rpf = self._clustering_write_args(m, merged)
+            new_files, footers = self._write_bucket_files(
+                merged,
+                tag,
+                n_buckets,
+                key_cols=m["key_cols"],
+                sort_cols=sort_cols,
+                max_records_per_file=max_rpf,
+                expected_buckets=set(todo),
+            )
         stats = self._commit_merge(
-            m, self.schema(), todo, new_files, None, "compact", 0, delta=False,
+            m, schema, todo, new_files, None, "compact", 0, delta=False,
             footers=footers,
         )
         return stats.version
+
+    def _fold_on_driver(
+        self, m: dict, schema: T.StructType, todo: list[int], tag: str, codec: str
+    ) -> tuple[dict[str, list[str]], dict]:
+        """The driver route of :meth:`compact`: for each bucket in ``todo``,
+        pyarrow reads its own base and delta files (so every row stays in
+        its bucket), :func:`~nifi_dicom_spark.operators.dedup.arrow_lww`
+        reduces them, and the winners are sorted by the declared ``sort_by``
+        or else the key columns (ascending, nulls first, as Spark's
+        ``sortWithinPartitions``) and written into ``c-<tag>/b=N/``, one
+        ``part-*.parquet`` file per ``max_records_per_file`` slice. Returns
+        what :meth:`_write_bucket_files` returns; the footers are the ones
+        the writer collected.
+
+        The writer matches what Spark writes to within a few percent of
+        bytes: the session's compression ``codec``, no Arrow schema blob,
+        and dictionary encoding only on columns whose distinct count is at
+        most half the bucket's rows (pyarrow's default dictionary-encodes
+        every column, which grows near-unique ones)."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from nifi_dicom_spark.operators.dedup import arrow_lww
+
+        decl = (m.get("props") or {}).get("clustering") or {}
+        sort_cols = list(decl.get("sort_by") or m["key_cols"])
+        max_rpf = int(decl.get("max_records_per_file") or 0)
+        bdir = _bucket_dir_col(schema.fieldNames())
+        files: dict[str, list[str]] = {}
+        footers: dict = {}
+        for b in todo:
+            tbl = arrow_lww(
+                self._arrow_files(
+                    m,
+                    schema,
+                    [
+                        *m.get("files", {}).get(str(b), []),
+                        *m.get("delta_files", {}).get(str(b), []),
+                    ],
+                ),
+                m["key_cols"],
+            )
+            if not tbl.num_rows:
+                continue  # the bucket-set tripwire reports it
+            tbl = tbl.take(
+                pc.sort_indices(
+                    tbl,
+                    sort_keys=[(c, "ascending") for c in sort_cols],
+                    null_placement="at_start",
+                )
+            )
+            dict_cols = [
+                name
+                for name in tbl.column_names
+                if _distinct_count(tbl[name]) * 2 <= tbl.num_rows
+            ]
+            bucket_dir = os.path.join(f"c-{tag}", f"{bdir}={b}")
+            os.makedirs(os.path.join(self.data_dir, bucket_dir))
+            step = max_rpf or tbl.num_rows
+            for j, lo in enumerate(range(0, tbl.num_rows, step)):
+                rel = os.path.join(bucket_dir, f"part-{j:05d}-{tag}.parquet")
+                collected: list = []
+                pq.write_table(
+                    tbl.slice(lo, step),
+                    os.path.join(self.data_dir, rel),
+                    compression=codec,
+                    use_dictionary=dict_cols,
+                    store_schema=False,
+                    metadata_collector=collected,
+                )
+                files.setdefault(str(b), []).append(rel)
+                footers[rel] = collected[0]
+        return files, footers
 
     def optimize(
         self,
@@ -2960,12 +3124,15 @@ class SnapshotTable:
                         continue
                     if not dry_run:
                         os.unlink(abspath)
-                        # a data file's bloom sidecar dies with it (data
-                        # files are uuid-named, never recreated at a path)
-                        try:
-                            os.unlink(abspath + ".bloom")
-                        except OSError:
-                            pass
+                        # a data file's bloom sidecar and Hadoop checksum
+                        # die with it (data files are uuid-named, never
+                        # recreated at a path)
+                        crc = os.path.join(root, f".{fn}.crc")
+                        for side in (abspath + ".bloom", crc):
+                            try:
+                                os.unlink(side)
+                            except OSError:
+                                pass
                     removed += 1
                 elif (
                     fn.endswith(".parquet.bloom")
@@ -2979,12 +3146,16 @@ class SnapshotTable:
                         pass
         if dry_run:
             return removed
-        # prune commit dirs that are empty and old enough that no live
-        # writer can still be about to populate them
+        # prune commit dirs that hold no data file or sidecar and are old
+        # enough that no live writer can still be about to populate them;
+        # what is left is writer litter (``_SUCCESS``, checksums, empty
+        # ``b=N/`` directories)
         for entry in os.listdir(self.data_dir):
             p = os.path.join(self.data_dir, entry)
             if os.path.isdir(p) and not any(
-                fns for _r, _d, fns in os.walk(p)
+                fn.endswith((".parquet", ".parquet.bloom"))
+                for _r, _d, fns in os.walk(p)
+                for fn in fns
             ):
                 try:
                     if now - os.path.getmtime(p) < min_file_age_s:

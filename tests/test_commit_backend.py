@@ -526,6 +526,71 @@ def test_vacuum_age_guard_spares_inflight_writer_files(
     assert not os.path.exists(inflight)
 
 
+def test_vacuum_removes_writer_litter_and_prunes_commit_dirs(
+    spark, tiny_log, tmp_path, monkeypatch
+):
+    """vacuum() leaves no directory under ``data/`` without a referenced
+    data file. Spark writes a ``.<name>.crc`` checksum next to every data
+    file and ``_SUCCESS`` (with its own checksum) in every commit
+    directory; the checksum dies with its data file, and a commit
+    directory whose data files are all gone is pruned with that litter and
+    its empty ``b=N/`` directories. Driver-written compaction directories,
+    which hold neither, are pruned the same way. The count returned is
+    data files only, and ``read()`` is unchanged."""
+    from nifi_dicom_spark.lake import snapshot_table
+
+    table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=2)
+    quarter = len(tiny_log) // 4
+    parts = [tiny_log.iloc[i * quarter: (i + 1) * quarter] for i in range(4)]
+
+    def commit_dirs():
+        return {
+            rel.split(os.sep)[0]
+            for rels in table.manifest()["files"].values()
+            for rel in rels
+        }
+
+    apply_changes(table, _spark_events(spark, parts[0]), epoch=0)
+    apply_changes(table, _spark_events(spark, parts[1]), epoch=1)
+    with monkeypatch.context() as mp:  # a Spark-written compaction
+        mp.setattr(snapshot_table, "DRIVER_READ_MAX_BYTES", 0)
+        table.compact()
+    (spark_dir,) = commit_dirs()
+    assert os.path.exists(os.path.join(table.data_dir, spark_dir, "_SUCCESS"))
+    # two driver-written compactions: the second unreferences the first
+    apply_changes(table, _spark_events(spark, parts[2]), epoch=2)
+    table.compact()
+    (driver_dir,) = commit_dirs()
+    assert not os.path.exists(os.path.join(table.data_dir, driver_dir, "_SUCCESS"))
+    apply_changes(table, _spark_events(spark, parts[3]), epoch=3)
+    table.compact()
+    m = table.manifest()
+    assert set(m["files"]) == {"0", "1"} and not m["delta_files"]
+    assert commit_dirs().isdisjoint({spark_dir, driver_dir})
+    referenced = {rel for rels in m["files"].values() for rel in rels}
+
+    def data_files():
+        return {
+            os.path.relpath(os.path.join(r, fn), table.data_dir)
+            for r, _d, fns in os.walk(table.data_dir)
+            for fn in fns
+            if fn.endswith(".parquet")
+        }
+
+    before = sorted(map(tuple, table.read().collect()))
+    stale = data_files() - referenced
+    assert table.vacuum(keep_versions=1, min_file_age_s=0) == len(stale)
+    assert data_files() == referenced
+    for r, _d, _fns in os.walk(table.data_dir):
+        if r == table.data_dir:
+            continue
+        rel_dir = os.path.relpath(r, table.data_dir) + os.sep
+        assert any(rel.startswith(rel_dir) for rel in referenced), (
+            f"{rel_dir} holds no referenced data file: {sorted(os.listdir(r))}"
+        )
+    assert sorted(map(tuple, table.read().collect())) == before
+
+
 # ------------------------------------------------------------ ledger strict
 
 

@@ -416,7 +416,7 @@ def test_rebucket_rejects_nothing_special_but_scan_respects_vacuum(
         table.scan("ts", lo=pd.Timestamp("2024-01-01"), version=0)
 
 
-def test_optimize_time_clusters_buckets(spark, tmp_path):
+def test_optimize_time_clusters_buckets(spark, tmp_path, read_path):
     table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
     for e in range(3):
         ev = spark.createDataFrame(_epoch_events(e), schema=CHANGE_EVENTS_SCHEMA)
@@ -929,7 +929,9 @@ def test_optimize_zorder_string_dimension(spark, tmp_path):
     assert st_u["skipped"] > 0
 
 
-def test_declared_clustering_applied_by_optimize_and_compact(spark, tmp_path):
+def test_declared_clustering_applied_by_optimize_and_compact(
+    spark, tmp_path, read_path
+):
     """set_clustering records the target layout; a bare optimize() applies
     it, and every compact() maintains it — folded base files stay
     time-clustered instead of decaying back to key order."""

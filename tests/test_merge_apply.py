@@ -214,11 +214,13 @@ def test_untouched_bucket_survives_incremental_merge(spark, tmp_path):
 
 
 def test_merge_on_read_epoch_cost_proportional_to_change_set(
-    spark, small_log, tmp_path
+    spark, small_log, tmp_path, read_path
 ):
     """The MoR hot path never rewrites base files: a merge on a large table
     registers only batch-sized delta files for the touched buckets (epoch
     cost ∝ change set, not table size), and reads stay correct."""
+    import os
+
     from nifi_dicom_spark.fixtures import replay_oracle
     from nifi_dicom_spark.fixtures.oracle import assert_final_state_equal
 
@@ -229,6 +231,11 @@ def test_merge_on_read_epoch_cost_proportional_to_change_set(
     m0 = table.manifest()
     assert m0["delta_files"] == {} and m0["files"], "base materialized"
     base_files = {b: list(v) for b, v in m0["files"].items()}
+    # the route taken: Spark's writer leaves a _SUCCESS marker, the
+    # driver's fold does not
+    (commit_dir,) = {rel.split(os.sep)[0] for v in base_files.values() for rel in v}
+    marker = os.path.join(table.data_dir, commit_dir, "_SUCCESS")
+    assert os.path.exists(marker) == (read_path == "spark")
 
     # tiny incremental batch → delta-only commit
     tiny = small_log.iloc[:7].copy()
@@ -256,7 +263,7 @@ def test_merge_on_read_epoch_cost_proportional_to_change_set(
     )
 
 
-def test_auto_compaction_bounds_delta_count(spark, tmp_path):
+def test_auto_compaction_bounds_delta_count(spark, tmp_path, read_path):
     """Past props[compact_threshold] deltas, merge triggers compaction on
     the hot buckets — read amplification stays bounded over many epochs."""
     from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
@@ -302,7 +309,7 @@ def test_auto_compaction_bounds_delta_count(spark, tmp_path):
     assert "applied_keys" not in m
 
 
-def test_history_lists_versions(spark, small_log, tmp_path):
+def test_history_lists_versions(spark, small_log, tmp_path, read_path):
     table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=8)
     apply_changes(table, _spark_events(spark, small_log), epoch=0)
     table.compact()
@@ -507,6 +514,98 @@ def test_crashed_commit_litter_recovery(spark, small_log, tmp_path):
     # loading the table sweeps the aged litter (backend repair at load)
     SnapshotTable.load(spark, table.path)
     assert not os.path.exists(litter)
+
+
+def test_driver_compaction_crash_before_publish(
+    spark, small_log, tmp_path, monkeypatch
+):
+    """Crash point: a driver compaction dies after its files are written
+    and before its manifest is published (``_commit_merge`` raises). The
+    version and ``read()`` are unchanged; an auto-compaction inside
+    ``merge`` turns the failure into its warning and the merge's own
+    commit stands; ``vacuum`` removes the orphaned files and their commit
+    directories."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+    from nifi_dicom_spark.operators.apply import KEY_COLUMNS, STORED_COLUMNS
+
+    by_name = {f.name: f for f in CHANGE_EVENTS_SCHEMA.fields}
+    table = SnapshotTable.create(
+        spark,
+        str(tmp_path / "t"),
+        T.StructType([by_name[c] for c in STORED_COLUMNS]),
+        key_cols=KEY_COLUMNS,
+        n_buckets=4,
+        props={"stats_cols": ["ts"], "compact_threshold": 3},
+    )
+    parts = np.array_split(np.arange(len(small_log)), 3)
+    for e in (0, 1):
+        apply_changes(table, _spark_events(spark, small_log.iloc[parts[e]]), epoch=e)
+    assert table.manifest()["delta_files"], "deltas to compact"
+
+    real_commit = SnapshotTable._commit_merge
+
+    def crash_compaction(self, *args, **kw):
+        if args[5] == "compact":  # (m, schema, touched, files, keys, policy)
+            raise RuntimeError("crashed before the compaction was published")
+        return real_commit(self, *args, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "_commit_merge", crash_compaction)
+
+    def unreferenced():
+        m = table.manifest()
+        refs = {
+            rel
+            for which in ("files", "delta_files")
+            for rels in m[which].values()
+            for rel in rels
+        }
+        return {
+            os.path.relpath(os.path.join(r, fn), table.data_dir)
+            for r, _d, fns in os.walk(table.data_dir)
+            for fn in fns
+            if fn.endswith(".parquet")
+        } - refs
+
+    v = table.current_version()
+    before = sorted(map(tuple, table.read().collect()))
+    with pytest.raises(RuntimeError, match="crashed before"):
+        table.compact()
+    assert table.current_version() == v
+    assert sorted(map(tuple, table.read().collect())) == before
+    orphans = unreferenced()
+    assert orphans, "the compaction wrote its files before it died"
+    assert not any(  # the driver route wrote them: no Spark _SUCCESS marker
+        os.path.exists(os.path.join(table.data_dir, rel.split(os.sep)[0], "_SUCCESS"))
+        for rel in orphans
+    )
+
+    # the third epoch pushes its buckets to the threshold: the merge
+    # commits, then its auto-compaction dies and becomes a warning
+    with pytest.warns(UserWarning, match="auto-compaction skipped"):
+        r = apply_changes(
+            table, _spark_events(spark, small_log.iloc[parts[2]]), epoch=2
+        )
+    assert r.merge.applied and table.current_version() == v + 1
+    assert max(table.applied_watermarks().values()) == 2
+    assert table.manifest()["delta_files"], "the deltas remain"
+    assert_final_state_equal(
+        read_final_state(table).toPandas(), replay_oracle(small_log)
+    )
+    orphans = unreferenced()
+    orphan_dirs = {rel.split(os.sep)[0] for rel in orphans}
+    assert len(orphan_dirs) == 2  # one per crashed compaction
+
+    assert table.vacuum(keep_versions=1, min_file_age_s=0) == len(orphans)
+    assert not unreferenced()
+    for d in orphan_dirs:
+        assert not os.path.exists(os.path.join(table.data_dir, d))
+    assert_final_state_equal(
+        read_final_state(table).toPandas(), replay_oracle(small_log)
+    )
 
 
 def test_apply_warns_on_v2_batch_missing_tool_column(spark, tmp_path):

@@ -364,6 +364,125 @@ def test_arrow_lww_kernel_matches_lww_dedup(spark, seed: int, n: int, n_files: i
     assert rows(got) == rows(r.asDict() for r in want)
 
 
+@seed(20261018)
+@settings(max_examples=12, deadline=None)
+@given(
+    seed=st.integers(0, 10_000),
+    n=st.integers(1, 60),
+    n_epochs=st.integers(1, 4),
+    layout=st.sampled_from(["keys", "keys_split", "by_n"]),
+)
+def test_driver_compaction_matches_spark_compaction(
+    spark, seed: int, n: int, n_epochs: int, layout: str
+):
+    """``compact()`` folded on the driver (Arrow LWW kernel, pyarrow
+    writer) and on Spark (``read`` + ``_write_bucket_files``, forced by a
+    byte cap of 0) leave the same table: identical ``read()`` rows,
+    identical bucket sets, identical per-file ``file_stats`` in every
+    bucket, and the same sequence of sort-column values through each
+    bucket's files. The table is built by ``merge`` from the random mixed-era logs
+    of :func:`_lww_files` (``op_seq`` ties, verbatim duplicate deliveries,
+    tombstones, null cells), one epoch per file: ``note`` is renamed to
+    ``text`` at the era boundary, where ``n`` widens from int32 to int64
+    and ``tool`` is added. ``layout`` is the declared clustering: none,
+    the key sorted and split into 3-row files, or a sort by ``n`` (ties
+    and nulls). Budget: about 60 s for the 12 examples on a 4-core host;
+    ``jobs/stress_properties.py`` runs more."""
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from nifi_dicom_spark.lake import snapshot_table
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+
+    tables, new_era = _lww_files(seed, n, n_epochs)
+    schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("turn_idx", T.IntegerType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("op_seq", T.LongType()),
+            T.StructField("offset", T.LongType()),
+            T.StructField("note", T.StringType()),
+            T.StructField("n", T.IntegerType()),
+        ]
+    )
+    with tempfile.TemporaryDirectory() as root:
+        table = SnapshotTable.create(
+            spark,
+            os.path.join(root, "a"),
+            schema,
+            key_cols=["conv_id", "turn_idx"],
+            n_buckets=2,  # so that buckets hold several conversations
+            props={"stats_cols": ["turn_idx", "op_seq", "offset", "n"]},
+        )
+        if layout == "keys_split":
+            table.set_clustering(
+                sort_by=["conv_id", "turn_idx"], max_records_per_file=3
+            )
+        elif layout == "by_n":
+            table.set_clustering(sort_by=["n"])
+        for epoch, t in enumerate(tables):
+            if epoch == new_era:
+                table.rename_column("note", "text")
+            if not t.num_rows:
+                continue
+            src = os.path.join(root, f"epoch{epoch}.parquet")
+            pq.write_table(t, src)
+            table.merge(
+                spark.read.parquet(src),
+                policy="versioned_upsert",
+                commit_keys=[(epoch, 0)],
+            )
+        if new_era == len(tables):
+            table.rename_column("note", "text")
+        shutil.copytree(table.path, os.path.join(root, "b"))
+        other = SnapshotTable.load(spark, os.path.join(root, "b"))
+
+        table.compact()  # the driver fold: every test table fits the cap
+        saved = snapshot_table.DRIVER_READ_MAX_BYTES
+        snapshot_table.DRIVER_READ_MAX_BYTES = 0
+        try:
+            other.compact()
+        finally:
+            snapshot_table.DRIVER_READ_MAX_BYTES = saved
+
+        def rows(t):
+            return sorted(
+                (tuple(r) for r in t.read().collect()),
+                key=lambda row: tuple(str(x) for x in row),
+            )
+
+        def stats_by_bucket(m):
+            return {
+                b: [m["file_stats"].get(rel) for rel in rels]
+                for b, rels in m["files"].items()
+            }
+
+        sort_cols = ["n"] if layout == "by_n" else ["conv_id", "turn_idx"]
+
+        def sorted_values(t, m):
+            return {
+                b: [
+                    tuple(r.values())
+                    for rel in rels
+                    for r in pq.read_table(
+                        os.path.join(t.data_dir, rel), columns=sort_cols
+                    ).to_pylist()
+                ]
+                for b, rels in m["files"].items()
+            }
+
+        got, want = table.manifest(), other.manifest()
+        assert rows(table) == rows(other)
+        assert not got["delta_files"] and not want["delta_files"]
+        assert set(got["files"]) == set(want["files"])
+        assert stats_by_bucket(got) == stats_by_bucket(want)
+        assert sorted_values(table, got) == sorted_values(other, want)
+
+
 @settings(max_examples=50, deadline=None)
 @given(
     seed=st.integers(0, 10_000),

@@ -321,7 +321,7 @@ def test_replication_pipeline_exactly_once(spark, tmp_path):
     assert raw == 0
 
 
-def test_snapshot_cdf_upserts_mode(spark, tmp_path):
+def test_snapshot_cdf_upserts_mode(spark, tmp_path, read_path):
     """mode=upserts streams each commit's appended delta files directly —
     cost ∝ the change set, no state read, no pre-images; commits whose
     change set is not recoverable from deltas raise instead of silently
