@@ -1214,249 +1214,6 @@ def _redact_regions_oracle() -> str:
     """
 
 
-def _layer1_signal(doc_id: int) -> "np.ndarray":
-    """Deterministic two-tone test signal per doc (1920 samples @32 kHz),
-    shared by the layer1_decode query and its oracle."""
-    import numpy as np
-
-    i = int(doc_id)
-    t = np.arange(1920)
-    f1 = 200.0 + (i % 37) * 80.0
-    f2 = 500.0 + (i % 23) * 130.0
-    return 0.45 * np.sin(2 * np.pi * f1 * t / 32000.0) + 0.25 * np.sin(
-        2 * np.pi * f2 * t / 32000.0
-    )
-
-
-def _stereo_signal(doc_id: int) -> "np.ndarray":
-    """Per-doc mono-or-stereo test signal: even doc_ids the mono two-tone,
-    odd doc_ids a stereo pair whose right channel mixes the doc's tone
-    with a neighbour's — partially correlated, so the per-frame M/S
-    decisions see realistic inputs. Shared by the layer3_decode
-    (mono/joint-stereo) query and its oracle."""
-    import numpy as np
-
-    i = int(doc_id)
-    left = _layer1_signal(i)
-    if i % 2 == 0:
-        return left
-    right = 0.6 * left + 0.4 * _layer1_signal(i + 11)
-    return np.stack([left, right], axis=1)
-
-
-def q_layer1_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-audio bitstream decode through the multimodal path:
-    a deterministic two-tone signal per doc is encoded as MPEG-1 Layer I
-    (from-scratch 32-band subband codec, ``functions/mpeg_audio.py`` —
-    ISO frame layout + scalefactors + mid-rise quantizer, designed
-    near-PR pseudo-QMF filterbank) inside an Arrow batch, then the
-    standard ``extract_features`` kernel entropy-decodes the subband
-    stream and synthesizes PCM — the RMS-energy features OF THE LOSSY
-    DECODE and the exact container size are value-checked against a
-    Python-replayed oracle. Reference analog: decompress-on-read of
-    encapsulated bulk data (``AttributeList.java:45,231``)."""
-    from nifi_dicom_spark.functions.multimodal import extract_features
-
-    @F.pandas_udf("binary")
-    def make_l1(ids: pd.Series) -> pd.Series:
-        from nifi_dicom_spark.functions.mpeg_audio import encode_layer1
-
-        return pd.Series(
-            [encode_layer1(_layer1_signal(int(i)), 32000, bits=8) for i in ids]
-        )
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        make_l1("doc_id").alias("payload"),
-        F.lit(None)
-        .cast(
-            "struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>"
-        )
-        .alias("meta"),
-    )
-    feats = extract_features(media, dim=4)
-    return feats.select(
-        "media_id",
-        F.round(F.element_at("feature", 1).cast("double"), 6).alias("band0"),
-        F.round(F.element_at("feature", 4).cast("double"), 6).alias("band3"),
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-    )
-
-
-def _layer1_decode_oracle() -> str:
-    """Replay the synthesize→encode→decode→feature pipeline in Python with
-    the same codec over the same doc_ids and inline the expected rows."""
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions.codecs import audio_energy_features
-    from nifi_dicom_spark.functions.mpeg_audio import decode_layer1, encode_layer1
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    rows = []
-    for i in ids:
-        payload = encode_layer1(_layer1_signal(int(i)), 32000, bits=8)
-        pcm, _sr = decode_layer1(payload)
-        feat = audio_energy_features(pcm, 4)
-        rows.append(f"({int(i)}, {float(feat[0])!r}, {float(feat[3])!r}, {len(payload)})")
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, round(band0, 6) AS band0, round(band3, 6) AS band3,
-               CAST(n_bytes AS BIGINT) AS n_bytes
-        FROM (VALUES {values}) AS t(media_id, band0, band3, n_bytes)
-    """
-
-
-def q_layer2_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer II bitstream decode through the multimodal path:
-    the same deterministic two-tone signal per doc is encoded as Layer II
-    (``functions/mpeg_audio.py encode_layer2`` — 1152-sample frames,
-    band-class allocation, scfsi-folded scalefactors, grouped 5-level +
-    ungrouped quantizers in one stream), then ``extract_features``
-    entropy-decodes the payload and synthesizes PCM; the RMS-energy
-    features OF THE LOSSY DECODE and the container size are value-checked
-    against a Python-replayed oracle. Reference analog: decompress-on-read
-    of encapsulated bulk data (``AttributeList.java:45,231``)."""
-    from nifi_dicom_spark.functions.multimodal import extract_features
-
-    @F.pandas_udf("binary")
-    def make_l2(ids: pd.Series) -> pd.Series:
-        from nifi_dicom_spark.functions.mpeg_audio import encode_layer2
-
-        return pd.Series(
-            [encode_layer2(_layer1_signal(int(i)), 32000, levels=15) for i in ids]
-        )
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        make_l2("doc_id").alias("payload"),
-        F.lit(None)
-        .cast(
-            "struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>"
-        )
-        .alias("meta"),
-    )
-    feats = extract_features(media, dim=4)
-    return feats.select(
-        "media_id",
-        F.round(F.element_at("feature", 1).cast("double"), 6).alias("band0"),
-        F.round(F.element_at("feature", 4).cast("double"), 6).alias("band3"),
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-    )
-
-
-def _layer2_decode_oracle() -> str:
-    """Replay the synthesize→encode→decode→feature pipeline in Python with
-    the same Layer II codec over the same doc_ids and inline the rows."""
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions.codecs import audio_energy_features
-    from nifi_dicom_spark.functions.mpeg_audio import decode_layer2, encode_layer2
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    rows = []
-    for i in ids:
-        payload = encode_layer2(_layer1_signal(int(i)), 32000, levels=15)
-        pcm, _sr = decode_layer2(payload)
-        feat = audio_energy_features(pcm, 4)
-        rows.append(f"({int(i)}, {float(feat[0])!r}, {float(feat[3])!r}, {len(payload)})")
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, round(band0, 6) AS band0, round(band3, 6) AS band3,
-               CAST(n_bytes AS BIGINT) AS n_bytes
-        FROM (VALUES {values}) AS t(media_id, band0, band3, n_bytes)
-    """
-
-
-def q_layer3_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer III spectral decode through the multimodal path:
-    the deterministic two-tone signal per doc is encoded as Layer III
-    (``functions/mpeg_audio.py encode_layer3`` — per-band MDCT/TDAC,
-    4/3-power requantization under global_gain, engine-canonical Huffman
-    pairs + linbits escapes + count1 quads, spec frame/side-info layout —
-    odd doc_ids STEREO with the per-frame joint/M-S decision, even mono),
-    then ``extract_features`` entropy-decodes the payload, runs the
-    IMDCT + synthesis filterbank, and the RMS-energy features OF THE
-    LOSSY DECODE plus the container size are value-checked against a
-    Python-replayed oracle. Reference analog: decompress-on-read of
-    encapsulated bulk data (``apps/DeidentifyAndRedact.java:271``)."""
-    from nifi_dicom_spark.functions.multimodal import extract_features
-
-    @F.pandas_udf("binary")
-    def make_l3(ids: pd.Series) -> pd.Series:
-        from nifi_dicom_spark.functions.mpeg_audio import encode_layer3
-
-        return pd.Series(
-            [
-                encode_layer3(_stereo_signal(int(i)), 32000, quality=1500)
-                for i in ids
-            ]
-        )
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        make_l3("doc_id").alias("payload"),
-        F.lit(None)
-        .cast(
-            "struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>"
-        )
-        .alias("meta"),
-    )
-    feats = extract_features(media, dim=4)
-    return feats.select(
-        "media_id",
-        F.round(F.element_at("feature", 1).cast("double"), 6).alias("band0"),
-        F.round(F.element_at("feature", 4).cast("double"), 6).alias("band3"),
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-    )
-
-
-def _layer3_decode_oracle() -> str:
-    """Replay the synthesize→encode→decode→feature pipeline in Python with
-    the same Layer III codec over the same doc_ids and inline the rows."""
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions.codecs import audio_energy_features
-    from nifi_dicom_spark.functions.mpeg_audio import decode_layer3, encode_layer3
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    rows = []
-    for i in ids:
-        payload = encode_layer3(_stereo_signal(int(i)), 32000, quality=1500)
-        pcm, _sr = decode_layer3(payload)
-        feat = audio_energy_features(pcm, 4)
-        rows.append(f"({int(i)}, {float(feat[0])!r}, {float(feat[3])!r}, {len(payload)})")
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, round(band0, 6) AS band0, round(band3, 6) AS band3,
-               CAST(n_bytes AS BIGINT) AS n_bytes
-        FROM (VALUES {values}) AS t(media_id, band0, band3, n_bytes)
-    """
-
-
 def _synth_mp4_payload(doc_id: int) -> bytes:
     """Deterministic multi-chunk MP4 per doc (variable sample sizes so the
     stsc/stco/stsz join is exercised) — shared by query and oracle."""
@@ -3144,7 +2901,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_distinct": q_rollup_distinct,
         "rollup_pct": q_rollup_pct,
         "replication_state": q_replication_state,
-        "layer3_decode": q_layer3_decode,
         "point_lookup": q_point_lookup,
         "dup_spans": q_dup_spans,
         "strip_spans": q_strip_spans,
@@ -3170,8 +2926,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "route_split": q_route_split,
         "hierarchy_query": q_hierarchy_query,
         "debezium_parse": q_debezium_parse,
-        "layer1_decode": q_layer1_decode,
-        "layer2_decode": q_layer2_decode,
         "interval_join": q_interval_join,
         "rebucket_read": q_rebucket_read,
         "change_feed": q_change_feed,
@@ -4044,9 +3798,6 @@ def _build_oracle_sql() -> dict[str, str]:
         "semantic_dedup": _semantic_dedup_oracle(),
         "person_match": _person_match_oracle(),
         "png_decode": _png_decode_oracle(),
-        "layer1_decode": _layer1_decode_oracle(),
-        "layer2_decode": _layer2_decode_oracle(),
-        "layer3_decode": _layer3_decode_oracle(),
         "jpeg_decode": _jpeg_decode_oracle(),
         "redact_regions": _redact_regions_oracle(),
         "mp4_frames": _mp4_frames_oracle(),

@@ -17,10 +17,9 @@ container formats are fully decodable with stdlib + numpy alone:
 Encoders exist for round-trip tests and for re-emitting redacted images
 (PNG encoder: filter 0 + zlib, color type 2). Baseline JPEG lives in its
 own module (:mod:`nifi_dicom_spark.functions.jpeg` — Huffman entropy
-coding, DCT, subsampling), MPEG-1 audio in
-:mod:`nifi_dicom_spark.functions.mpeg_audio`. Every other format takes the
-declared deterministic stub in :mod:`nifi_dicom_spark.functions.multimodal`
-— the Spark-side plumbing is identical either way.
+coding, DCT, subsampling). Every other format takes the declared
+deterministic stub in :mod:`nifi_dicom_spark.functions.multimodal` — the
+Spark-side plumbing is identical either way.
 
 Reference analog: pixelmed ships its own from-scratch pixel/waveform codecs
 for the same reason (no external decoder dependency for core formats).

@@ -1,13 +1,11 @@
 """Multimodal column plumbing: media as opaque binary columns.
 
-Decode is REAL for the image formats, PCM audio and MPEG-1 audio: WAV,
-BMP and PNG are parsed by the pure-stdlib+numpy codecs in
+Decode is REAL for the image formats and PCM audio: WAV, BMP and PNG
+are parsed by the pure-stdlib+numpy codecs in
 :mod:`nifi_dicom_spark.functions.codecs`, baseline JPEG by the
-from-scratch entropy/DCT codec in :mod:`nifi_dicom_spark.functions.jpeg`,
-MPEG-1 Layer I/II/III audio by the from-scratch subband codec in
-:mod:`nifi_dicom_spark.functions.mpeg_audio`; they yield genuine features
-(RMS energy windows, grayscale band means) and genuine decoded
-dimensions. MP4 is REAL at the container level (:mod:`..functions.mp4`
+from-scratch entropy/DCT codec in :mod:`nifi_dicom_spark.functions.jpeg`;
+they yield genuine features (RMS energy windows, grayscale band means) and
+genuine decoded dimensions. MP4 is REAL at the container level (:mod:`..functions.mp4`
 box/sample-table demux — see ``sample_frames``). Every other payload
 takes a deterministic, clearly-marked stub. The Spark-side plumbing is
 identical either way: schema (binary payload + typed metadata struct),
@@ -32,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nifi_dicom_spark.functions import codecs, jpeg, mp4, mpeg_audio
+from nifi_dicom_spark.functions import codecs, jpeg, mp4
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -72,7 +70,7 @@ FEATURE_SCHEMA = T.StructType(
 
 def _fake_decode_feature(payload: bytes, dim: int = 16) -> np.ndarray:
     """STUB for every payload without a real decoder (video, compressed
-    audio other than MPEG-1, unknown formats, undecodable variants).
+    audio, unknown formats, undecodable variants).
 
     Deterministic fake: sha256-seeded pseudo-feature so tests are stable.
     Replace the body with the real decode + model features in production;
@@ -86,27 +84,17 @@ def _fake_decode_feature(payload: bytes, dim: int = 16) -> np.ndarray:
 def _decode_feature(
     payload: bytes, dim: int = 16
 ) -> tuple[np.ndarray, int | None, int | None]:
-    """Real decode for WAV/MPEG-Layer-I/II/III/BMP/PNG/JPEG payloads
-    (pure-stdlib+numpy codecs); deterministic stub otherwise. Returns
-    (feature, width, height) — dims non-null only when a real image
-    decode ran. Magic bytes only gate the ATTEMPT — unsupported variants
-    (float WAV, third-party Layer III spectral data, compressed/odd-bpp
-    BMP, 16-bit/interlaced PNG, progressive JPEG, truncated files) fall
-    back to the stub rather than crashing the whole Spark job on one bad
-    row."""
+    """Real decode for WAV/BMP/PNG/JPEG payloads (pure-stdlib+numpy
+    codecs); deterministic stub otherwise. Returns (feature, width,
+    height) — dims non-null only when a real image decode ran. Magic
+    bytes only gate the ATTEMPT — unsupported variants (float WAV,
+    compressed/odd-bpp BMP, 16-bit/interlaced PNG, progressive JPEG,
+    truncated files) fall back to the stub rather than crashing the whole
+    Spark job on one bad row."""
 
     try:
         if codecs.is_wav(payload):
             samples, _sr = codecs.decode_wav(payload)
-            return codecs.audio_energy_features(samples, dim), None, None
-        if mpeg_audio.is_layer1(payload):
-            samples, _sr = mpeg_audio.decode_layer1(payload)
-            return codecs.audio_energy_features(samples, dim), None, None
-        if mpeg_audio.is_layer2(payload):
-            samples, _sr = mpeg_audio.decode_layer2(payload)
-            return codecs.audio_energy_features(samples, dim), None, None
-        if mpeg_audio.is_layer3(payload):
-            samples, _sr = mpeg_audio.decode_layer3(payload)
             return codecs.audio_energy_features(samples, dim), None, None
         if codecs.is_bmp(payload):
             img = codecs.decode_bmp(payload)

@@ -161,6 +161,11 @@ def _check_buckets(
         )
 
 
+def _manifest_schema(m: dict) -> T.StructType:
+    """The table schema recorded in manifest ``m``."""
+    return T.StructType.fromJson(json.loads(m["schema"]))
+
+
 def _murmur3_buckets(m: dict) -> int:
     """``n_buckets`` of manifest ``m``, which must use the murmur3 layout
     that :func:`_bucket_expr` computes. Every bucket-aware operation calls
@@ -448,7 +453,7 @@ class SnapshotTable:
     # ---------------------------------------------------------------- schema
 
     def schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self.manifest(version)["schema"]))
+        return _manifest_schema(self.manifest(version))
 
     def key_cols(self) -> list[str]:
         return list(self.manifest()["key_cols"])
@@ -537,8 +542,15 @@ class SnapshotTable:
                 f"version {version} was vacuumed (oldest retained: {min_ret}); "
                 "its data files no longer exist"
             )
-        m = self.manifest(version)
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        return self._read_manifest(self.manifest(version), buckets, dedup)
+
+    def _read_manifest(
+        self, m: dict, buckets: list[int] | None = None, dedup: bool = True
+    ) -> DataFrame:
+        """:meth:`read` of manifest ``m``. A write reads through the
+        manifest it commits against, so its reduce sees exactly the
+        version ``_commit_merge`` validates."""
+        schema = _manifest_schema(m)
         base = self._paths(m, buckets, "files")
         delta = self._paths(m, buckets, "delta_files")
         if not base and not delta:
@@ -635,7 +647,7 @@ class SnapshotTable:
         df: DataFrame,
         commit_tag: str,
         n_buckets: int,
-        key_cols: list[str] | None = None,
+        key_cols: list[str],
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
         expected_buckets: "set[int] | None" = None,
@@ -675,15 +687,11 @@ class SnapshotTable:
         out_rel = f"c-{commit_tag}"
         out_abs = os.path.join(self.data_dir, out_rel)
         data_cols = [c for c in df.columns if c != ZORDER_COL]
-        # callers on the hot per-epoch path pass key_cols from the manifest
-        # they already hold — re-deriving it here is a version LIST + GET
-        # per use on an object-store backend
-        kc = list(key_cols) if key_cols is not None else self.key_cols()
         bcol = _bucket_dir_col(df.columns)
         wdf = (
-            df.repartition(_write_tasks(df.sparkSession, n_buckets), kc[0])
-            .withColumn(bcol, _bucket_expr(kc[0], n_buckets))
-            .sortWithinPartitions(bcol, *(sort_cols or kc))
+            df.repartition(_write_tasks(df.sparkSession, n_buckets), key_cols[0])
+            .withColumn(bcol, _bucket_expr(key_cols[0], n_buckets))
+            .sortWithinPartitions(bcol, *(sort_cols or key_cols))
             .select(bcol, *data_cols)
         )
         w = wdf.write.mode("overwrite").partitionBy(bcol)
@@ -731,18 +739,16 @@ class SnapshotTable:
         self,
         df: DataFrame,
         props: dict | None,
+        key_cols: list[str],
         op_col: str | None = None,
-        key_cols: list[str] | None = None,
     ) -> None:
         """Raise :class:`CheckConstraintViolation` when ``df`` contains a
         row failing any table CHECK constraint. Zero-cost when the table
         has none; otherwise ONE action (a limit-5 probe fused with the
         constraint predicates) over the rows being written. Delete
         tombstones are exempt — they carry key + version columns only, so
-        payload constraints don't apply to them. ``key_cols``: pass from
-        the caller's manifest (avoids a live manifest re-read per write on
-        an object-store backend, and keys the report to the snapshot the
-        caller validated against)."""
+        payload constraints don't apply to them. ``key_cols`` come from
+        the caller's manifest and key the report."""
         cons = (props or {}).get("constraints") or {}
         if not cons:
             return
@@ -757,11 +763,7 @@ class SnapshotTable:
         any_viol = flags[0]
         for f in flags[1:]:
             any_viol = any_viol | f
-        keys = [
-            k
-            for k in (key_cols if key_cols is not None else self.key_cols())
-            if k in rows.columns
-        ]
+        keys = [k for k in key_cols if k in rows.columns]
         bad = (
             rows.select(*keys, *flags)
             .filter(F.coalesce(any_viol, F.lit(False)))
@@ -797,7 +799,7 @@ class SnapshotTable:
         F.expr(expr)  # parse check
         probe_props = {"constraints": {name: expr}}
         self._enforce_constraints(
-            self.read(), probe_props, op_col="op", key_cols=m["key_cols"]
+            self._read_manifest(m), probe_props, op_col="op", key_cols=m["key_cols"]
         )
         cons[name] = expr
         props = dict(m.get("props") or {})
@@ -840,7 +842,7 @@ class SnapshotTable:
         projection).
         """
         m = self.manifest()
-        schema = self.schema()
+        schema = _manifest_schema(m)
         if name not in schema.fieldNames():
             raise ValueError(f"no such column {name!r}")
         if name in m["key_cols"]:
@@ -900,7 +902,7 @@ class SnapshotTable:
         projection (``withColumnRenamed``) before merging.
         """
         m = self.manifest()
-        schema = self.schema()
+        schema = _manifest_schema(m)
         if old not in schema.fieldNames():
             raise ValueError(f"no such column {old!r}")
         if new in schema.fieldNames():
@@ -1221,7 +1223,7 @@ class SnapshotTable:
                 f"version {version} was vacuumed; cannot scan"
             )
         m = self.manifest(version)
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _manifest_schema(m)
         preds = self._encode_predicates(schema, predicates)
         full_rels, slim_rels = self._split_scan_files(m, preds)
         names = set(schema.fieldNames())
@@ -1348,7 +1350,7 @@ class SnapshotTable:
     ) -> dict:
         """Pruning-effectiveness probe for :meth:`scan_ranges`."""
         m = self.manifest(version)
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _manifest_schema(m)
         full, slim = self._split_scan_files(
             m, self._encode_predicates(schema, predicates)
         )
@@ -1401,7 +1403,7 @@ class SnapshotTable:
 
         m = self.manifest()
         key0 = m["key_cols"][0]
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _manifest_schema(m)
         ktype = next(f.dataType for f in schema.fields if f.name == key0)
         if not isinstance(ktype, self._BLOOM_KEY_TYPES):
             raise ValueError(
@@ -1492,7 +1494,7 @@ class SnapshotTable:
 
         n_buckets = _murmur3_buckets(m)
         key0 = m["key_cols"][0]
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _manifest_schema(m)
         ktype = next(f.dataType for f in schema.fields if f.name == key0)
         uniq = list(dict.fromkeys(values))
         vdf = self.spark.createDataFrame(
@@ -1560,7 +1562,7 @@ class SnapshotTable:
         if not values:
             raise ValueError("lookup needs at least one key value")
         m = self.manifest(version)
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _manifest_schema(m)
         key0 = m["key_cols"][0]
         _bks, kept, _pruned = self._lookup_plan(m, values)
         delta_rels = {
@@ -1634,8 +1636,8 @@ class SnapshotTable:
         if new_n_buckets < 1:
             raise ValueError("new_n_buckets must be >= 1")
         m = self.manifest()
-        schema = self.schema()
-        df = self.read()  # current logical state (deltas LWW-merged in)
+        schema = _manifest_schema(m)
+        df = self._read_manifest(m)  # current logical state (deltas LWW-merged in)
         df, sort_cols, max_rpf = self._clustering_write_args(m, df)
         # Exact misplacement tripwire. Computed from the RAW physical rows
         # (dedup=False) with only the key column selected: tombstones are
@@ -1645,7 +1647,7 @@ class SnapshotTable:
         # new_n_buckets values), NOT a second execution of the merge read.
         expected = {
             r[0]
-            for r in self.read(dedup=False)
+            for r in self._read_manifest(m, dedup=False)
             .select(
                 _bucket_expr(m["key_cols"][0], new_n_buckets).alias("b")
             )
@@ -1689,8 +1691,8 @@ class SnapshotTable:
         """Replace the full table contents (initial snapshot load)."""
         m = self.manifest()
         n_buckets = _murmur3_buckets(m)
-        schema = evolve_schema(self.schema(), df.schema)
-        self._guard_dropped_columns(self.schema(), schema, m)
+        schema = evolve_schema(_manifest_schema(m), df.schema)
+        self._guard_dropped_columns(_manifest_schema(m), schema, m)
         df = conform_to_schema(df, schema)
         self._enforce_constraints(
             df, m.get("props"), op_col="op", key_cols=m["key_cols"]
@@ -1852,8 +1854,8 @@ class SnapshotTable:
             src_payload_schema = T.StructType(
                 [f for f in source.schema.fields if f.name != op_col]
             )
-        schema = evolve_schema(self.schema(), src_payload_schema)
-        self._guard_dropped_columns(self.schema(), schema, m)
+        schema = evolve_schema(_manifest_schema(m), src_payload_schema)
+        self._guard_dropped_columns(_manifest_schema(m), schema, m)
 
         # constraints check the CONFORMED view of the batch (the rows as
         # they will be written): a mixed-vintage source missing a
@@ -1952,7 +1954,7 @@ class SnapshotTable:
                     r["_bucket"] for r in src.select("_bucket").distinct().collect()
                 )
             )
-            target = conform_to_schema(self.read(buckets=touched), schema)
+            target = conform_to_schema(self._read_manifest(m, touched), schema)
 
             if policy in ("upsert", "insert_if_absent"):
                 if policy == "upsert":
@@ -2050,6 +2052,38 @@ class SnapshotTable:
         validate-and-rebase as :meth:`merge`, and ``commit_keys`` give the
         same exactly-once replay gate.
         """
+        return self._merge_into(
+            self.manifest(),
+            source,
+            when_matched_update=when_matched_update,
+            update_condition=update_condition,
+            when_matched_delete=when_matched_delete,
+            delete_condition=delete_condition,
+            when_not_matched_insert=when_not_matched_insert,
+            insert_condition=insert_condition,
+            commit_keys=commit_keys,
+            on_replayed=on_replayed,
+            assert_unique_source=assert_unique_source,
+        )
+
+    def _merge_into(
+        self,
+        m: dict,
+        source: DataFrame,
+        *,
+        when_matched_update: dict[str, "Column | str"] | None = None,
+        update_condition: "Column | str | None" = None,
+        when_matched_delete: bool = False,
+        delete_condition: "Column | str | None" = None,
+        when_not_matched_insert: bool = True,
+        insert_condition: "Column | str | None" = None,
+        commit_keys: list[tuple[int, int]] | None = None,
+        on_replayed: str | None = None,
+        assert_unique_source: bool = False,
+    ) -> MergeStats:
+        """:meth:`merge_into` against manifest ``m``: the callers that
+        found the source in ``m`` (predicate DML) merge into that same
+        version."""
         if (
             when_matched_update is None
             and not when_matched_delete
@@ -2083,13 +2117,12 @@ class SnapshotTable:
                 return F.lit(default)
             return F.expr(c) if isinstance(c, str) else c
 
-        m = self.manifest()
         key_cols = m["key_cols"]
         for name in when_matched_update or {}:
             if name in key_cols:
                 raise ValueError(f"cannot assign key column {name!r}")
         n_buckets = _murmur3_buckets(m)
-        schema = self.schema()
+        schema = _manifest_schema(m)
 
         commit_keys, skipped = self._gate_commit_keys(m, commit_keys, on_replayed)
         if commit_keys is not None and not commit_keys:
@@ -2118,7 +2151,7 @@ class SnapshotTable:
         # the manual edit wins over replays of the event it superseded.
         names = set(schema.fieldNames())
         versioned = {"op", "op_seq", "offset"} <= names
-        t_all = self.read(buckets=touched)
+        t_all = self._read_manifest(m, touched)
         t_live = (
             t_all.filter(F.col("op") != F.lit("delete")) if versioned else t_all
         )
@@ -2278,14 +2311,14 @@ class SnapshotTable:
             footers=footers,
         )
 
-    def _where_source(self, predicate, live_only: bool = True) -> DataFrame:
+    def _where_source(self, m: dict, predicate, live_only: bool = True) -> DataFrame:
         """Matching-key discovery pass shared by :meth:`delete_where` /
         :meth:`update_where` / :meth:`forget` — the "find touched files"
         scan of Delta's DELETE/UPDATE implementation; the predicate reaches
         the parquet scan, so row-group statistics prune it. ``live_only``
         (versioned tables) leaves tombstones out."""
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        base = self.read()
+        base = self._read_manifest(m)
         if live_only and {"op", "op_seq", "offset"} <= set(base.columns):
             # versioned tables: DML predicates address the LIVE state —
             # tombstoned keys are already dead, selecting them would only
@@ -2293,7 +2326,7 @@ class SnapshotTable:
             base = base.filter(F.col("op") != F.lit("delete"))
         if pred is not None:
             base = base.filter(pred)
-        return base.select(*self.key_cols())
+        return base.select(*m["key_cols"])
 
     def delete_where(
         self,
@@ -2322,9 +2355,10 @@ class SnapshotTable:
         no join; this method is the sparse-delete path (cost ∝ matching
         buckets, not table size).
         """
-        src = self._where_source(predicate)
-        return self.merge_into(
-            src,
+        m = self.manifest()
+        return self._merge_into(
+            m,
+            self._where_source(m, predicate),
             when_matched_delete=True,
             when_not_matched_insert=False,
             commit_keys=commit_keys,
@@ -2348,9 +2382,10 @@ class SnapshotTable:
         """
         if not assignments:
             raise ValueError("update_where needs at least one assignment")
-        src = self._where_source(predicate)
-        return self.merge_into(
-            src,
+        m = self.manifest()
+        return self._merge_into(
+            m,
+            self._where_source(m, predicate),
             when_matched_update=assignments,
             when_not_matched_insert=False,
             commit_keys=commit_keys,
@@ -2406,10 +2441,10 @@ class SnapshotTable:
         m = self.manifest()
         key_cols = m["key_cols"]
         n_buckets = _murmur3_buckets(m)
-        schema = self.schema()
+        schema = _manifest_schema(m)
         versioned = {"op", "op_seq", "offset"} <= set(schema.fieldNames())
         # tombstones too: one a delete_where left still holds its payload
-        src = self._where_source(predicate, live_only=False)
+        src = self._where_source(m, predicate, live_only=False)
         n_match = src.count()  # the report needs the count; scan is pruned
         if n_match == 0:
             return {
@@ -2423,7 +2458,7 @@ class SnapshotTable:
             r["_b"] for r in src.select(bucket.alias("_b")).distinct().collect()
         )
         if versioned:
-            rows = self.read(buckets=touched).alias("r")
+            rows = self._read_manifest(m, touched).alias("r")
             hits = src.withColumn("_hit", F.lit(True)).alias("h")
             joined = rows.join(
                 hits,
@@ -2466,8 +2501,8 @@ class SnapshotTable:
                 m, schema, touched, new_files, None, "forget", 0, footers=footers
             )
         else:
-            stats = self.merge_into(
-                src, when_matched_delete=True, when_not_matched_insert=False
+            stats = self._merge_into(
+                m, src, when_matched_delete=True, when_not_matched_insert=False
             )
         removed = self.vacuum(keep_versions=1, min_file_age_s=min_file_age_s)
         return {
@@ -2634,9 +2669,7 @@ class SnapshotTable:
                 # (their evolution ∪ ours — our files read through it with
                 # missing columns as nulls)
                 m = cur
-                schema = evolve_schema(
-                    T.StructType.fromJson(json.loads(cur["schema"])), schema
-                )
+                schema = evolve_schema(_manifest_schema(cur), schema)
                 new = build(m, schema)
         raise CommitConflict(
             f"lost {max_commit_retries} consecutive commit races; giving up"
@@ -2664,7 +2697,7 @@ class SnapshotTable:
             props.pop("clustering", None)
         else:
             cols = list(sort_by or zorder_by)
-            schema = T.StructType.fromJson(json.loads(m["schema"]))
+            schema = _manifest_schema(m)
             missing = [c for c in cols if c not in schema.fieldNames()]
             if missing:
                 raise ValueError(f"clustering columns not in schema: {missing}")
@@ -2733,9 +2766,7 @@ class SnapshotTable:
             "key_cols": list(m["key_cols"]),
             "n_buckets": m["n_buckets"],
             "bucket_fn": m.get("bucket_fn"),
-            "schema": T.StructType.fromJson(
-                json.loads(m["schema"])
-            ).simpleString(),
+            "schema": _manifest_schema(m).simpleString(),
             "num_base_files": nf,
             "base_bytes": bf,
             "num_delta_files": nd,
@@ -2785,7 +2816,7 @@ class SnapshotTable:
         compactions, tables with a ``zorder_by`` declaration (the z-value
         is a Spark expression with a min/max pass), schemas Arrow cannot
         hold and compression codecs pyarrow cannot write take the Spark
-        path: ``read(buckets)`` (one LWW reduce) and
+        path: :meth:`_read_manifest` (one LWW reduce) and
         :meth:`_write_bucket_files`."""
         m = self.manifest()
         n_buckets = _murmur3_buckets(m)
@@ -2798,7 +2829,7 @@ class SnapshotTable:
         )
         if not todo:
             return None
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _manifest_schema(m)
         _require_version_cols(schema)
         tag = uuid.uuid4().hex[:12]
         decl = (m.get("props") or {}).get("clustering") or {}
@@ -2826,7 +2857,7 @@ class SnapshotTable:
             )
             _check_buckets(new_files, set(todo))
         else:
-            merged = self.read(buckets=todo)  # deduped base∪deltas
+            merged = self._read_manifest(m, todo)  # deduped base∪deltas
             merged, sort_cols, max_rpf = self._clustering_write_args(m, merged)
             new_files, footers = self._write_bucket_files(
                 merged,
@@ -2942,9 +2973,10 @@ class SnapshotTable:
         pass to normalize the dimensions. Run it as a background job on
         cold data; the hot merge path is untouched. Returns the committed
         version, or None for an empty table."""
+        m = self.manifest()
         if sort_by is None and zorder_by is None:
             # bare optimize(): apply the table's DECLARED layout
-            decl = self.clustering()
+            decl = (m.get("props") or {}).get("clustering")
             if not decl:
                 raise ValueError(
                     "optimize needs sort_by or zorder_by (or a layout "
@@ -2959,11 +2991,10 @@ class SnapshotTable:
         elif sort_by is not None and zorder_by is not None:
             raise ValueError("optimize takes sort_by or zorder_by, not both")
         cluster_cols = list(sort_by or zorder_by)
-        schema = self.schema()
+        schema = _manifest_schema(m)
         missing = [c for c in cluster_cols if c not in schema.fieldNames()]
         if missing:
             raise ValueError(f"optimize clustering columns not in schema: {missing}")
-        m = self.manifest()
         n_buckets = _murmur3_buckets(m)
         nonempty = {int(b) for b in m.get("files", {})} | {
             int(b) for b in m.get("delta_files", {})
@@ -2971,7 +3002,7 @@ class SnapshotTable:
         todo = sorted(nonempty if buckets is None else nonempty & set(buckets))
         if not todo:
             return None
-        merged = self.read(buckets=todo)  # deduped base∪deltas, tombstones kept
+        merged = self._read_manifest(m, todo)  # deduped base∪deltas, tombstones kept
         if zorder_by is not None:
             merged = zvalue_column(merged, list(zorder_by), zorder_bits)
             sort_cols = [ZORDER_COL]

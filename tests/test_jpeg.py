@@ -238,11 +238,16 @@ def test_progressive_and_garbage_raise():
 
 def test_multimodal_feature_path_decodes_jpeg(spark):
     """extract_features really decodes JPEG payloads: decoded width/height
-    populated, feature = grayscale band means of the decoded image."""
+    populated, feature = grayscale band means of the decoded image. A
+    payload no decoder recognises takes the deterministic stub with null
+    dimensions."""
     import pandas as pd
 
     from nifi_dicom_spark.functions.codecs import image_block_features
-    from nifi_dicom_spark.functions.multimodal import extract_features
+    from nifi_dicom_spark.functions.multimodal import (
+        _fake_decode_feature,
+        extract_features,
+    )
 
     rng = np.random.default_rng(3)
     imgs = {
@@ -253,13 +258,14 @@ def test_multimodal_feature_path_decodes_jpeg(spark):
             0, 255,
         ).astype(np.uint8),
     }
+    opaque = b"opaque payload in no supported media format"
     media = spark.createDataFrame(
         pd.DataFrame(
             {
-                "media_id": list(imgs),
-                "kind": ["image"] * len(imgs),
-                "payload": [encode_jpeg(v, 95) for v in imgs.values()],
-                "meta": [None] * len(imgs),
+                "media_id": [*imgs, 3],
+                "kind": ["image"] * len(imgs) + ["audio"],
+                "payload": [encode_jpeg(v, 95) for v in imgs.values()] + [opaque],
+                "meta": [None] * (len(imgs) + 1),
             }
         ),
         schema="media_id long, kind string, payload binary, "
@@ -272,6 +278,9 @@ def test_multimodal_feature_path_decodes_jpeg(spark):
         expected = image_block_features(decode_jpeg(encode_jpeg(img, 95)), 4)
         got = np.array(out[mid]["feature"], dtype=np.float32)
         assert np.allclose(got, expected, atol=1e-6)
+    stub = np.array(out[3]["feature"], dtype=np.float32)
+    assert np.array_equal(stub, _fake_decode_feature(opaque, 4))
+    assert out[3]["width"] is None and out[3]["height"] is None
 
 
 def test_decode_tolerates_fill_bytes():

@@ -442,41 +442,32 @@ def test_redact_regions_spark(spark):
 # truncated, or garbage payloads raise ValueError — never a raw IndexError /
 # KeyError / StopIteration / struct.error / zlib.error from the bit-level
 # parsers. (Engine UDF call sites tolerate any exception, but the library
-# surface promises one clean error class; a fuzz pass found decode_layer3
-# overflowing its 576-line granule on a corrupt 9-bit big_values field,
-# and decode_jpeg/decode_png leaking parser internals.)
+# surface promises one clean error class; a fuzz pass found decode_jpeg and
+# decode_png leaking parser internals.)
 
 
 def _codec_fixtures():
     import numpy as np
 
     from nifi_dicom_spark.functions import codecs, jpeg
-    from nifi_dicom_spark.functions import mpeg_audio as ma
 
-    x = (0.4 * np.sin(2 * np.pi * 440 * np.arange(4608) / 32000)).astype(
-        np.float64
-    )
     img = (np.arange(32 * 32 * 3, dtype=np.uint8).reshape(32, 32, 3) * 7 % 256).astype(
         np.uint8
     )
     return {
-        "layer1": (ma.encode_layer1(x, sample_rate=32000), ma.decode_layer1),
-        "layer2": (ma.encode_layer2(x, sample_rate=32000), ma.decode_layer2),
-        "layer3": (ma.encode_layer3(x, sample_rate=32000), ma.decode_layer3),
         "jpeg": (jpeg.encode_jpeg(img), jpeg.decode_jpeg),
         "png": (codecs.encode_png(img), codecs.decode_png),
     }
 
 
-@pytest.mark.parametrize("codec", ["layer1", "layer2", "layer3", "jpeg", "png"])
+@pytest.mark.parametrize("codec", ["jpeg", "png"])
 def test_decoder_rejects_malformed_input_cleanly(codec):
     import numpy as np
 
     enc, dec = _codec_fixtures()[codec]
     dec(enc)  # the pristine stream must still decode
 
-    # deterministic 3-byte corruptions (includes the layer3
-    # big_values-overflow reproducer class)
+    # deterministic 3-byte corruptions
     for seed in range(150):
         r = np.random.default_rng(seed)
         buf = bytearray(enc)
@@ -506,32 +497,11 @@ def test_decoder_rejects_malformed_input_cleanly(codec):
 
 
 def test_encoder_input_validation():
-    """Encoder entrypoints reject hostile shapes/values with clean
-    ValueErrors: NaN/inf PCM (Layer I/II previously quantized NaN into
-    garbage bits; Layer III raised numpy's cryptic cast error),
-    3-channel layouts into the mono/stereo Layer III codec, and
-    empty / 2-D images."""
+    """Image encoder entrypoints reject empty and 2-D images with clean
+    ValueErrors."""
     import numpy as np
 
     from nifi_dicom_spark.functions import codecs, jpeg
-    from nifi_dicom_spark.functions import mpeg_audio as ma
-
-    encoders = [
-        lambda p: ma.encode_layer1(p, 32000),
-        lambda p: ma.encode_layer2(p, 32000),
-        lambda p: ma.encode_layer3(p, 32000),
-    ]
-    for enc in encoders:
-        with pytest.raises(ValueError, match="finite"):
-            enc(np.full(2304, np.nan))
-        with pytest.raises(ValueError, match="finite"):
-            enc(np.full(2304, np.inf))
-    for enc in encoders[2:]:  # mono/stereo-scope: 3 channels rejected
-        with pytest.raises(ValueError, match="mono"):
-            enc(np.zeros((1152, 3)))
-    # (n, 1) column vectors are still accepted everywhere
-    for enc in encoders:
-        assert len(enc(np.zeros((1152, 1)))) > 0
 
     for bad in (np.zeros((0, 0, 3), np.uint8), np.zeros((8, 8), np.uint8)):
         with pytest.raises(ValueError, match=r"\(H, W, 3\)"):

@@ -309,6 +309,90 @@ def test_auto_compaction_bounds_delta_count(spark, tmp_path, read_path):
     assert "applied_keys" not in m
 
 
+def _hot_batch(spark, e: int, turns: int = 4):
+    """Versioned-table rows of one epoch: ``turns`` turns of one conv."""
+    from nifi_dicom_spark.operators.apply import STORED_COLUMNS
+
+    batch = pd.DataFrame(
+        {
+            "offset": [e * turns + t for t in range(turns)],
+            "partition_id": [0] * turns,
+            "op": ["insert"] * turns,
+            "op_seq": [e] * turns,
+            "conv_id": [f"conv-{t % 3}" for t in range(turns)],
+            "turn_idx": list(range(turns)),
+            "role": ["user"] * turns,
+            "text": [f"e{e}t{t}" for t in range(turns)],
+            "tool": [None] * turns,
+            "ts": pd.to_datetime(["2024-01-01"] * turns),
+            "schema_ver": [2] * turns,
+        }
+    )
+    return _spark_events(spark, batch).select(*STORED_COLUMNS)
+
+
+_WRITES = {
+    "merge": lambda t, spark: t.merge(
+        _hot_batch(spark, 5), op_col="op", policy="versioned_upsert",
+        commit_keys=[(5, 0)],
+    ),
+    "merge_into": lambda t, spark: t.merge_into(
+        _hot_batch(spark, 5).select("conv_id", "turn_idx", "text"),
+        when_matched_update={"text": "s.text"},
+    ),
+    "delete_where": lambda t, spark: t.delete_where("turn_idx = 0"),
+    "update_where": lambda t, spark: t.update_where(
+        {"text": "upper(t.text)"}, "turn_idx = 1"
+    ),
+    "forget": lambda t, spark: t.forget("turn_idx = 2"),
+    "compact": lambda t, spark: t.compact(),
+    "optimize": lambda t, spark: t.optimize(),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_WRITES))
+def test_write_reads_only_the_manifest_it_commits_against(
+    spark, tmp_path, monkeypatch, op
+):
+    """Every write loads the current manifest once and takes its schema,
+    key columns and data reads from it, so the reduce reads exactly the
+    version ``_commit_merge`` validates against. A second load could see
+    a newer version, and each costs a version LIST and a GET."""
+    from nifi_dicom_spark.lake import snapshot_table
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+
+    table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
+    for e in range(2):
+        table.merge(
+            _hot_batch(spark, e), op_col="op", policy="versioned_upsert",
+            commit_keys=[(e, 0)],
+        )
+    table.set_clustering(sort_by=["ts"])
+    # the Spark routes: compaction and reads go through read(), not pyarrow
+    monkeypatch.setattr(snapshot_table, "DRIVER_READ_MAX_BYTES", 0)
+
+    loads: list = []
+    at_commit: list[int] = []
+    real_manifest = SnapshotTable.manifest
+    real_commit = SnapshotTable._commit_merge
+
+    def counting_manifest(self, version=None):
+        loads.append(version)
+        return real_manifest(self, version)
+
+    def counting_commit(self, *args, **kwargs):
+        at_commit.append(len(loads))
+        return real_commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "manifest", counting_manifest)
+    monkeypatch.setattr(SnapshotTable, "_commit_merge", counting_commit)
+    _WRITES[op](table, spark)
+    assert at_commit and at_commit[0] == 1, (
+        f"{op}: {at_commit[0] if at_commit else 'no'} manifest loads "
+        "before its commit"
+    )
+
+
 def test_history_lists_versions(spark, small_log, tmp_path, read_path):
     table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=8)
     apply_changes(table, _spark_events(spark, small_log), epoch=0)

@@ -1,590 +1,33 @@
-"""MPEG-1 Layer I subband codec: filterbank reconstruction, quantizer
-properties, bit-format interop with the mp3 frame scanner, and the REAL
-compressed-audio decode path through the multimodal feature kernel."""
+"""MPEG-1 Layer I streams through the mp3 frame scanner: header chains,
+stream metadata and CBR frame geometry of a multi-frame Layer I payload
+(``test_media.py`` covers Layer III streams and single Layer I headers)."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
-from nifi_dicom_spark.functions import codecs, mp3, mpeg_audio as ma
+from nifi_dicom_spark.functions import mp3
 
 
-def _tone(n: int = 3840, sr: int = 32000) -> np.ndarray:
-    t = np.arange(n)
-    return 0.5 * np.sin(2 * np.pi * 440 * t / sr) + 0.3 * np.sin(
-        2 * np.pi * 1873 * t / sr
-    )
-
-
-# --- filterbank --------------------------------------------------------------
-
-
-def test_filterbank_near_perfect_reconstruction():
-    rng = np.random.default_rng(7)
-    x = rng.standard_normal(16384)
-    y = ma.synthesize(ma.analyze(x))
-    snr = ma.roundtrip_snr_db(x[: len(x) - ma._DELAY], y[ma._DELAY : len(x)])
-    assert snr > 50.0  # designed prototype measures ~56 dB
-
-
-def test_filterbank_critically_sampled_shape():
-    s = ma.analyze(np.zeros(320))
-    assert s.shape == (10, 32)
-    assert not s.any()
-
-
-def test_subband_isolation():
-    # a pure tone in band b's passband concentrates energy in that band
-    sr = 32000
-    t = np.arange(8192)
-    for b in (0, 3, 11):
-        f = (b + 0.5) * sr / 64  # band center
-        s = ma.analyze(np.sin(2 * np.pi * f * t / sr))
-        energy = (s[8:] ** 2).sum(axis=0)  # skip filter warm-up
-        assert energy.argmax() == b
-        assert energy[b] > 0.9 * energy.sum()
-
-
-# --- quantizer ---------------------------------------------------------------
-
-
-@pytest.mark.parametrize("nb", [2, 4, 8, 12, 15])
-def test_quantizer_roundtrip_and_forbidden_code(nb):
-    y = np.linspace(-1.0, 1.0, 4097)
-    codes = ma._quantize(y, nb)
-    assert codes.max() <= (1 << nb) - 2  # all-ones never emitted
-    back = ma._dequantize(codes, nb)
-    step = 2.0 ** (1 - nb) * (2**nb / (2**nb - 1.0))
-    assert np.abs(back - y).max() <= step  # within one quantizer step
-
-
-def test_scalefactor_table_is_iso_closed_form():
-    assert ma.SCALEFACTORS[0] == 2.0
-    assert ma.SCALEFACTORS[3] == pytest.approx(1.0)
-    ratios = ma.SCALEFACTORS[1:] / ma.SCALEFACTORS[:-1]
-    assert np.allclose(ratios, 2.0 ** (-1 / 3))
-    assert len(ma.SCALEFACTORS) == 63
-
-
-# --- codec round trip --------------------------------------------------------
-
-
-def test_roundtrip_snr_scales_with_bits():
-    sig = _tone()
-    snrs = {}
-    for bits in (4, 6, 8):
-        dec, sr = ma.decode_layer1(ma.encode_layer1(sig, 32000, bits=bits))
-        assert sr == 32000
-        assert len(dec) >= len(sig)
-        snrs[bits] = ma.roundtrip_snr_db(sig, dec[: len(sig)])
-    assert snrs[4] > 18.0
-    assert snrs[6] > 30.0
-    assert snrs[8] > 40.0
-    assert snrs[4] < snrs[6] < snrs[8]
-
-
-def test_roundtrip_fullband_noise_all_bands():
-    rng = np.random.default_rng(3)
-    noise = rng.uniform(-0.9, 0.9, 5000)
-    dec, _ = ma.decode_layer1(ma.encode_layer1(noise, 44100, bits=8, coded_bands=32))
-    assert ma.roundtrip_snr_db(noise, dec[: len(noise)]) > 40.0
-
-
-def test_roundtrip_stereo_downmix():
-    t = np.arange(3840)
-    st = np.stack([_tone(), 0.4 * np.sin(2 * np.pi * 997 * t / 32000)], axis=1)
-    enc = ma.encode_layer1(st, 32000, bits=6)
-    info = mp3.parse_mp3(enc)
-    assert (info["mode"], info["channels"]) == ("stereo", 2)
-    dec, _ = ma.decode_layer1(enc)
-    mix = st.mean(axis=1)
-    assert ma.roundtrip_snr_db(mix, dec[: len(mix)]) > 30.0
-
-
-def test_encode_deterministic():
-    sig = _tone(1000)
-    assert ma.encode_layer1(sig, 32000) == ma.encode_layer1(sig, 32000)
-
-
-# --- bit-format interop with the frame scanner -------------------------------
+def _layer1_stream(n_frames: int, bitrate_kbps: int, sample_rate: int = 32000) -> bytes:
+    # MPEG-1 Layer I mono, no CRC; an all-zero body allocates no bits to
+    # any band, which is a valid silent frame
+    br_idx = mp3._BR_INDEX[(1, 1)][bitrate_kbps]
+    sr_idx = mp3._SR_INDEX[3][sample_rate]
+    header = bytes([0xFF, 0xFF, (br_idx << 4) | (sr_idx << 2), 3 << 6])
+    frame_len = 12 * bitrate_kbps * 1000 // sample_rate * 4
+    return (header + b"\x00" * (frame_len - 4)) * n_frames
 
 
 def test_frames_parse_with_existing_scanner():
-    enc = ma.encode_layer1(_tone(), 32000, bits=8)
+    enc = _layer1_stream(11, bitrate_kbps=128)
     info = mp3.parse_mp3(enc)
     assert info["version"] == "1" and info["layer"] == 1
-    assert info["mode"] == "mono"
-    assert info["n_frames"] == (3840 + ma._DELAY + 383) // 384
+    assert info["mode"] == "mono" and info["channels"] == 1
+    assert info["n_frames"] == 11
+    assert info["duration_s"] == pytest.approx(11 * 384 / 32000)
     assert not info["is_vbr"]
     frames = mp3.frame_table(enc)
     assert len({f.size for f in frames}) == 1  # CBR: constant frame size
+    assert frames[0].size == 12 * 128000 // 32000 * 4
     assert sum(f.size for f in frames) == len(enc)
-
-
-def test_bitrate_selected_is_smallest_fitting():
-    enc = ma.encode_layer1(_tone(), 32000, bits=4, coded_bands=8)
-    lo = mp3.parse_mp3(enc)["bitrate_kbps"]
-    enc2 = ma.encode_layer1(_tone(), 32000, bits=12, coded_bands=32)
-    hi = mp3.parse_mp3(enc2)["bitrate_kbps"]
-    assert lo < hi
-
-
-# --- guards ------------------------------------------------------------------
-
-
-def test_rejects_bad_inputs():
-    with pytest.raises(ValueError):
-        ma.encode_layer1(_tone(), 12345)  # not an MPEG-1 rate
-    with pytest.raises(ValueError):
-        ma.encode_layer1(_tone(), 32000, bits=1)
-    with pytest.raises(ValueError):
-        # stereo @ 8 bits x 30 bands exceeds the largest Layer I frame
-        ma.encode_layer1(np.zeros((768, 2)), 32000, bits=8)
-    with pytest.raises(ValueError):
-        ma.decode_layer1(b"\x00" * 64)
-    with pytest.raises(ValueError):
-        ma.decode_layer1(mp3.write_mp3(3))  # Layer III: headers only
-
-
-def test_is_layer1_dispatch():
-    assert ma.is_layer1(ma.encode_layer1(_tone(400), 32000))
-    assert not ma.is_layer1(mp3.write_mp3(2))
-    assert not ma.is_layer1(b"RIFF....WAVE")
-    assert not ma.is_layer1(None)
-    assert not ma.is_layer1(b"")
-
-
-def test_truncated_payload_raises():
-    enc = ma.encode_layer1(_tone(400), 32000)
-    with pytest.raises(ValueError):
-        # cut inside the first frame: the scanner drops the incomplete
-        # frame (its header-declared size overruns the payload), leaving
-        # zero frames
-        ma.decode_layer1(enc[: mp3.frame_table(enc)[0].size // 2])
-
-
-def _header(bitrate_kbps: int = 32, mode_bits: int = 3) -> bytes:
-    # MPEG-1 Layer I @32 kHz: frame_len = 12*br/32*4 bytes
-    br_idx = mp3._BR_INDEX[(1, 1)][bitrate_kbps]
-    return bytes([0xFF, 0xFF, (br_idx << 4) | (2 << 2), mode_bits << 6])
-
-
-def test_bitreader_runs_dry_on_underfull_frame_body():
-    # a COMPLETE 48-byte frame whose allocations demand more sample bits
-    # than the body holds: alloc index 1 (2-bit samples) on all 32 bands
-    # needs 128+192+768 bits but the body has only 44*8=352
-    body = ma._pack_bits(
-        np.array([1] * 32 + [0] * 32, dtype=np.uint64),
-        np.array([4] * 32 + [6] * 32, dtype=np.int64),
-    )
-    frame = _header(32) + body + b"\x00" * (48 - 4 - len(body))
-    with pytest.raises(ValueError, match="truncated"):
-        ma.decode_layer1(frame)
-
-
-def test_single_frame_stream_decodes_to_full_frame_length():
-    # smallest decodable unit: one all-silent frame (third-party streams
-    # have no flush padding; must not return an empty array)
-    frame = _header(32) + b"\x00" * 44
-    dec, sr = ma.decode_layer1(frame)
-    assert sr == 32000
-    assert len(dec) == 384
-    assert not dec.any()
-
-
-def test_crc_protected_frames_skip_the_crc_word():
-    enc = ma.encode_layer1(_tone(), 32000, bits=4, coded_bands=8)
-    flen = mp3.frame_table(enc)[0].size
-    rebuilt = bytearray()
-    for fr in mp3.frame_table(enc):
-        f = bytearray(enc[fr.offset : fr.offset + fr.size])
-        f[1] &= 0xFE  # protection_bit 0 = CRC present
-        # insert a dummy CRC word, dropping 2 bytes of tail padding
-        rebuilt += bytes(f[:4]) + b"\xab\xcd" + bytes(f[4 : flen - 2])
-    dec_crc, _ = ma.decode_layer1(bytes(rebuilt))
-    dec_plain, _ = ma.decode_layer1(enc)
-    assert np.allclose(dec_crc, dec_plain)
-
-
-def test_joint_stereo_rejected_dual_channel_accepted():
-    t = np.arange(768)
-    st = np.stack(
-        [np.sin(2 * np.pi * 440 * t / 32000), np.sin(2 * np.pi * 880 * t / 32000)],
-        axis=1,
-    )
-    enc = bytearray(ma.encode_layer1(st, 32000, bits=4, coded_bands=8))
-    flen = mp3.frame_table(bytes(enc))[0].size
-    joint = bytearray(enc)
-    dual = bytearray(enc)
-    for off in range(0, len(enc), flen):
-        joint[off + 3] = (joint[off + 3] & 0x3F) | (1 << 6)  # joint_stereo
-        dual[off + 3] = (dual[off + 3] & 0x3F) | (2 << 6)  # dual_channel
-    with pytest.raises(ValueError, match="joint-stereo"):
-        ma.decode_layer1(bytes(joint))
-    dec_dual, _ = ma.decode_layer1(bytes(dual))
-    dec_stereo, _ = ma.decode_layer1(bytes(enc))
-    assert np.allclose(dec_dual, dec_stereo)  # Layer I parses them identically
-
-
-def test_forbidden_field_values_raise_valueerror():
-    enc = bytearray(ma.encode_layer1(_tone(400), 32000, bits=8))
-    bad_alloc = bytearray(enc)
-    bad_alloc[4] |= 0xF0  # first 4-bit allocation -> forbidden index 15
-    with pytest.raises(ValueError, match="allocation"):
-        ma.decode_layer1(bytes(bad_alloc))
-    bad_scf = bytearray(enc)
-    # scalefactors start right after the 32x4-bit allocations = body byte 16
-    bad_scf[4 + 16] |= 0xFC  # first 6-bit scalefactor -> forbidden index 63
-    with pytest.raises(ValueError, match="scalefactor"):
-        ma.decode_layer1(bytes(bad_scf))
-
-
-def test_is_layer1_is_anchored_at_offset_zero():
-    enc = ma.encode_layer1(_tone(400), 32000)
-    # dispatch must NOT resync-scan: a sync mid-payload is not a Layer I
-    # stream (that is how image bytes could be stolen from the image path)
-    assert not ma.is_layer1(b"\x00" * 100 + enc)
-    assert mp3.is_mp3(b"\x00" * 100 + enc)  # the probe still finds it
-    # ...but a leading ID3v2 tag is part of the format and is skipped
-    id3 = b"ID3\x04\x00\x00\x00\x00\x00\x00"
-    assert ma.is_layer1(id3 + enc)
-
-
-# --- multimodal feature path: REAL decode for Layer I ------------------------
-
-
-def test_multimodal_layer1_real_vs_layer3_stub(spark):
-    from nifi_dicom_spark.functions.multimodal import (
-        _fake_decode_feature,
-        extract_features,
-    )
-
-    sig = _tone(2000)
-    l1 = ma.encode_layer1(sig, 32000, bits=8)
-    l3 = mp3.write_mp3(4, seed=b"x")
-    df = spark.createDataFrame(
-        [(1, "audio", bytearray(l1), None), (2, "audio", bytearray(l3), None)],
-        "media_id long, kind string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>",
-    )
-    rows = {r["media_id"]: r for r in extract_features(df, dim=4).collect()}
-
-    dec, _ = ma.decode_layer1(l1)
-    expect_real = codecs.audio_energy_features(dec, 4)
-    assert np.allclose(rows[1]["feature"], expect_real, rtol=1e-5)
-
-    expect_stub = _fake_decode_feature(l3, 4)
-    assert np.allclose(rows[2]["feature"], expect_stub, rtol=1e-6)
-
-
-# --- Layer II -----------------------------------------------------------------
-
-
-def test_layer2_roundtrip_snr_scales_with_levels():
-    sig = _tone(12000)
-    prev = -np.inf
-    for levels, floor in ((9, 15.0), (15, 20.0), (255, 40.0)):
-        enc = ma.encode_layer2(sig, 32000, levels=levels)
-        dec, sr = ma.decode_layer2(enc)
-        assert sr == 32000
-        snr = ma.roundtrip_snr_db(sig, dec)
-        assert snr > floor, f"levels={levels}: {snr:.1f} dB"
-        assert snr > prev
-        prev = snr
-
-
-def test_layer2_grouped_quantizer_roundtrip():
-    # levels=5 forces the grouped 7-bit triplet path on EVERY coded band
-    sig = _tone(4608)
-    enc = ma.encode_layer2(sig, 32000, levels=5)
-    dec, _ = ma.decode_layer2(enc)
-    # coarse but correlated: the decode must track the signal, not noise
-    n = min(len(sig), len(dec))
-    corr = np.corrcoef(sig[:n], dec[:n])[0, 1]
-    assert corr > 0.9
-
-
-def test_layer2_default_allocation_mixes_grouped_and_ungrouped():
-    # levels=15: bands 0..22 get the 15-level (4-bit) quantizer, bands
-    # 23..26 only offer 3/5/65535 so they fall back to grouped 5-level —
-    # one stream exercises both code paths by construction
-    allocs = []
-    for sb in range(ma.SBLIMIT_L2):
-        _w, lv = ma._l2_class(sb)
-        cand = [l for l in lv if l <= 15]
-        allocs.append(cand[-1])
-    assert set(allocs) == {15, 5}
-
-
-def test_layer2_scfsi_all_modes_roundtrip():
-    # constant tone -> equal scalefactors (scfsi=2); ramp -> distinct
-    # (scfsi=0); half-and-half shapes hit 1 and 3. All must decode.
-    sr = 32000
-    n = 1152 * 2
-    t = np.arange(n) / sr
-    shapes = {
-        "const": 0.5 * np.sin(2 * np.pi * 440 * t),
-        "ramp": np.linspace(0.02, 0.9, n) * np.sin(2 * np.pi * 440 * t),
-        "step_up": np.where(t < t[n // 3], 0.05, 0.8) * np.sin(2 * np.pi * 440 * t),
-        "step_dn": np.where(t < t[2 * n // 3], 0.8, 0.05) * np.sin(2 * np.pi * 440 * t),
-    }
-    for name, sig in shapes.items():
-        enc = ma.encode_layer2(sig, sr, levels=255)
-        dec, _ = ma.decode_layer2(enc)
-        snr = ma.roundtrip_snr_db(sig, dec)
-        assert snr > 30.0, f"{name}: {snr:.1f} dB"
-
-
-def test_layer2_stereo_downmix_and_frame_geometry():
-    sig = _tone(4608, 48000)
-    st = np.stack([sig, 0.5 * sig], axis=1)
-    enc = ma.encode_layer2(st, 48000, levels=15)
-    frames = mp3.frame_table(enc)
-    h = mp3._parse_header(enc, 0)
-    assert h.layer == 2 and h.channels == 2 and h.samples == 1152
-    # frame chain covers the stream exactly
-    assert sum(f.size for f in frames) == len(enc)
-    dec, sr = ma.decode_layer2(enc)
-    assert sr == 48000
-    assert ma.roundtrip_snr_db(0.75 * sig, dec) > 18.0
-
-
-def test_layer2_encode_deterministic():
-    sig = _tone(4608)
-    assert ma.encode_layer2(sig, 32000) == ma.encode_layer2(sig, 32000)
-
-
-def test_layer2_dispatch_and_rejections():
-    sig = _tone(4608)
-    l2 = ma.encode_layer2(sig, 32000, levels=15)
-    l1 = ma.encode_layer1(sig, 32000, bits=8)
-    assert ma.is_layer2(l2) and not ma.is_layer1(l2)
-    assert ma.is_layer1(l1) and not ma.is_layer2(l1)
-    with pytest.raises(ValueError):
-        ma.decode_layer2(l1)
-    with pytest.raises(ValueError):
-        ma.decode_layer2(l2[:50])
-    with pytest.raises(ValueError):
-        ma.encode_layer2(sig, 12345)
-    with pytest.raises(ValueError):
-        ma.encode_layer2(sig, 32000, levels=2)
-    # mono at 32 kHz cannot fit a 16-bit-everywhere allocation: clear error
-    with pytest.raises(ValueError):
-        ma.encode_layer2(sig, 32000, levels=65535)
-
-
-def test_layer2_take_var_inverts_pack_bits():
-    rng = np.random.default_rng(7)
-    widths = rng.integers(2, 17, size=200)
-    values = np.array(
-        [int(rng.integers(0, 1 << w)) for w in widths], dtype=np.uint64
-    )
-    packed = ma._pack_bits(values, widths.astype(np.int64))
-    bits = np.unpackbits(np.frombuffer(packed, dtype=np.uint8))
-    got, pos = ma._take_var(bits, 0, widths.astype(np.int64))
-    assert pos == int(widths.sum())
-    assert (got == values).all()
-
-
-def test_multimodal_layer2_real_decode(spark):
-    from nifi_dicom_spark.functions.multimodal import extract_features
-
-    sig = _tone(4608)
-    l2 = ma.encode_layer2(sig, 32000, levels=15)
-    df = spark.createDataFrame(
-        [(1, "audio", bytearray(l2), None)],
-        "media_id long, kind string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>",
-    )
-    row = extract_features(df, dim=4).collect()[0]
-    dec, _ = ma.decode_layer2(l2)
-    expect = codecs.audio_energy_features(dec, 4)
-    assert np.allclose(row["feature"], expect, rtol=1e-5)
-
-
-def test_layer2_bitrate_mode_restrictions():
-    # ISO 11172-3: 32/48/56/80 kbps are single_channel-only; 224+ kbps are
-    # two-channel-only. The encoder must never emit a forbidden combo.
-    sig = _tone(2304)
-    st = np.stack([sig, 0.5 * sig], axis=1)
-    h = mp3._parse_header(ma.encode_layer2(st, 48000, levels=3, coded_bands=1), 0)
-    assert h.bitrate_kbps not in (32, 48, 56, 80)
-    h = mp3._parse_header(ma.encode_layer2(sig, 32000, levels=3, coded_bands=1), 0)
-    assert h.bitrate_kbps < 224
-
-
-# --- Layer III ----------------------------------------------------------------
-
-
-def test_layer3_roundtrip_snr_and_header():
-    sig = _tone(4608)
-    enc = ma.encode_layer3(sig, 32000, quality=1500)
-    h = mp3._parse_header(enc, 0)
-    assert h.layer == 3 and h.version == "1" and h.channels == 1
-    assert h.samples == 1152 and h.sample_rate == 32000
-    dec, sr = ma.decode_layer3(enc)
-    assert sr == 32000
-    assert ma.roundtrip_snr_db(sig, dec[: len(sig)]) > 40
-    # quality staircase: coarser global_gain floor = lower fidelity,
-    # fewer bytes
-    lo = ma.encode_layer3(sig, 32000, quality=50)
-    dlo, _ = ma.decode_layer3(lo)
-    assert len(lo) < len(enc)
-    assert 25 < ma.roundtrip_snr_db(sig, dlo[: len(sig)]) < ma.roundtrip_snr_db(
-        sig, dec[: len(sig)]
-    )
-
-
-def test_layer3_mdct_tdac_perfect_reconstruction():
-    """The 18-point MDCT / IMDCT pair with the sine window is exactly
-    invertible under 50%-overlap-add (Princen-Bradley TDAC), including the
-    zero-padded edge blocks."""
-    rng = np.random.default_rng(7)
-    rows = 18 * 6
-    s = rng.standard_normal((rows, 32))
-    prev = np.zeros((18, 32))
-    out = []
-    n_blocks = rows // 18 + 1
-    for g in range(n_blocks):
-        lo = 18 * (g - 1)
-        z = np.zeros((36, 32))
-        s_lo, s_hi = max(lo, 0), min(lo + 36, rows)
-        if s_hi > s_lo:
-            z[s_lo - lo : s_hi - lo] = s[s_lo:s_hi]
-        y = ma._l3_imdct(ma._l3_mdct(z))
-        if g > 0:
-            out.append(prev + y[:18])
-        prev = y[18:]
-    got = np.concatenate(out, axis=0)
-    assert np.abs(got - s).max() < 1e-10
-
-
-def test_layer3_huffman_tables_prefix_free_and_inverse():
-    pe, pd, qe, qd, pm, qm = ma._l3_tables()
-    for enc, dec in ((pe, pd), (qe, qd)):
-        codes = sorted((ln, code) for code, ln in enc.values())
-        # canonical codes are prefix-free: no code is a prefix of a longer one
-        for i, (l1, c1) in enumerate(codes):
-            for l2, c2 in codes[i + 1 :]:
-                assert not (l2 > l1 and (c2 >> (l2 - l1)) == c1), (l1, c1, l2, c2)
-        assert len(dec) == len(enc)
-        for sym, (code, ln) in enc.items():
-            assert dec[(ln, code)] == sym
-    # common symbols get short codes (the Zipf model orders lengths)
-    assert pe[(0, 0)][1] <= pe[(5, 5)][1] <= pe[(15, 15)][1]
-    assert qe[(0, 0, 0, 0)][1] <= qe[(1, 1, 1, 1)][1]
-
-
-def test_layer3_encode_deterministic_and_linbits_escape():
-    sig = _tone(2304)
-    assert ma.encode_layer3(sig, 44100) == ma.encode_layer3(sig, 44100)
-    # a near-full-scale click drives big spectral lines through the
-    # 13-bit linbits escape path; the roundtrip must still be sane
-    click = np.zeros(1152)
-    click[100:110] = 0.95
-    enc = ma.encode_layer3(click, 32000, quality=8206)
-    dec, _ = ma.decode_layer3(enc)
-    assert np.abs(dec[:1152] - click).max() < 0.2
-
-
-def test_layer3_rejections_and_dispatch():
-    sig = _tone(1152)
-    with pytest.raises(ValueError, match="mono or"):
-        ma.encode_layer3(np.stack([sig, sig, sig], 1), 32000)  # 3 channels
-    with pytest.raises(ValueError, match="quality"):
-        ma.encode_layer3(sig, 32000, quality=0)
-    with pytest.raises(ValueError, match="sample_rate"):
-        ma.encode_layer3(sig, 44000)
-    with pytest.raises(ValueError, match="Layer III"):
-        ma.decode_layer3(ma.encode_layer2(sig, 32000))
-    enc = ma.encode_layer3(sig, 32000)
-    assert ma.is_layer3(enc) and not ma.is_layer2(enc) and not ma.is_layer1(enc)
-    assert not ma.is_layer3(ma.encode_layer2(sig, 32000))
-    assert not ma.is_layer3(b"") and not ma.is_layer3(None)
-    # stereo THIRD-PARTY Layer III parses at the header level but its
-    # spectral data uses the spec's printed Huffman tables (not the
-    # engine-canonical ones) — the decode must be a clean ValueError,
-    # never a crash (the multimodal path catches it and keeps the stub)
-    st = mp3.write_mp3(3, seed=b"x")
-    assert ma.is_layer3(st)
-    with pytest.raises(ValueError):
-        ma.decode_layer3(st)
-
-
-def test_layer3_main_data_corruption_raises_or_degrades():
-    """Flipping bits in the Huffman region must never crash with anything
-    but ValueError/IndexError (the multimodal kernel catches those), and
-    header-only truncation still yields whole frames."""
-    sig = _tone(2304)
-    enc = bytearray(ma.encode_layer3(sig, 32000))
-    enc[30] ^= 0xFF  # inside granule 0 main data
-    try:
-        dec, _ = ma.decode_layer3(bytes(enc))
-        assert len(dec) % 576 == 0
-    except (ValueError, IndexError):
-        pass
-
-
-def test_layer3_stereo_roundtrip_and_ms_decision():
-    t = np.arange(4608) / 32000.0
-    left = 0.4 * np.sin(2 * np.pi * 440 * t) + 0.2 * np.sin(2 * np.pi * 2500 * t)
-    right = 0.35 * np.sin(2 * np.pi * 620 * t + 0.7) + 0.15 * np.sin(
-        2 * np.pi * 1800 * t
-    )
-    x = np.stack([left, right], axis=1)
-    enc = ma.encode_layer3(x, 32000)
-    assert enc == ma.encode_layer3(x, 32000)  # bit-deterministic
-    h = mp3._parse_header(enc, 0)
-    assert h.channels == 2 and h.mode == "stereo"  # independent -> L/R
-    dec, sr = ma.decode_layer3(enc)
-    assert sr == 32000 and dec.shape[1] == 2
-    assert ma.roundtrip_snr_db(left, dec[: len(left), 0]) > 35
-    assert ma.roundtrip_snr_db(right, dec[: len(right), 1]) > 35
-    # correlated channels flip the per-frame decision to joint/M-S and
-    # beat the dual-independent rate (silent side channel)
-    mono_enc = ma.encode_layer3(left, 32000)
-    dual = np.stack([left, left], axis=1)
-    enc_ms = ma.encode_layer3(dual, 32000)
-    assert mp3._parse_header(enc_ms, 0).mode == "joint_stereo"
-    assert (enc_ms[3] >> 4) & 0x3 == 0x2  # mode_extension: ms_stereo only
-    assert len(enc_ms) < 1.25 * len(mono_enc)
-    dms, _ = ma.decode_layer3(enc_ms)
-    for ch in range(2):
-        assert ma.roundtrip_snr_db(left, dms[: len(left), ch]) > 35
-    # anti-phase rides the side channel
-    enc_ap = ma.encode_layer3(np.stack([left, -left], axis=1), 32000)
-    assert mp3._parse_header(enc_ap, 0).mode == "joint_stereo"
-    dap, _ = ma.decode_layer3(enc_ap)
-    assert ma.roundtrip_snr_db(left, dap[: len(left), 0]) > 35
-    assert ma.roundtrip_snr_db(-left, dap[: len(left), 1]) > 35
-    # (n, 1) squeezes to mono, bit-identical
-    assert ma.encode_layer3(left[:, None], 32000) == mono_enc
-    # stereo silence stays silent
-    z, _ = ma.decode_layer3(ma.encode_layer3(np.zeros((1152, 2)), 32000))
-    assert z.shape[1] == 2 and float(np.abs(z).max()) == 0.0
-    # intensity-stereo mode_extension (bit 0) is out of scope
-    bad = bytearray(enc_ms)
-    for off in range(0, len(bad), mp3._parse_header(enc_ms, 0).frame_len):
-        bad[off + 3] = (bad[off + 3] & 0xCF) | (0x1 << 4)
-    with pytest.raises(ValueError, match="intensity"):
-        ma.decode_layer3(bytes(bad))
-    # channel-mode change mid-stream is rejected
-    with pytest.raises(ValueError, match="changed mid-stream"):
-        ma.decode_layer3(mono_enc + enc)
-
-
-def test_multimodal_layer3_real_decode(spark):
-    from nifi_dicom_spark.functions.multimodal import extract_features
-
-    sig = _tone(2304)
-    l3 = ma.encode_layer3(sig, 32000, quality=1500)
-    df = spark.createDataFrame(
-        [(1, "audio", bytearray(l3), None)],
-        "media_id long, kind string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>",
-    )
-    row = extract_features(df, dim=4).collect()[0]
-    dec, _ = ma.decode_layer3(l3)
-    expect = codecs.audio_energy_features(dec, 4)
-    assert np.allclose(row["feature"], expect, rtol=1e-5)

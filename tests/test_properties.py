@@ -18,7 +18,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from hypothesis import HealthCheck, example, given, seed, settings
+from hypothesis import HealthCheck, given, seed, settings
 from hypothesis import strategies as st
 
 from nifi_dicom_spark.fixtures.generator import GeneratorConfig, generate_change_events
@@ -625,236 +625,23 @@ def test_zvalue_matches_python_morton_reference(spark, seed, bits, n_cols):
     assert mismatch <= n // 50, f"{mismatch} z-value mismatches"
 
 
-@given(
-    seed=st.integers(0, 10_000),
-    levels=st.sampled_from([3, 5, 9]),
-)
-@settings(max_examples=40, deadline=None)
-def test_layer2_grouped_quantizer_error_bound(seed: int, levels: int):
-    """Mid-tread grouped quantizer: dequant(quant(y)) stays within half a
-    step (1/(levels-1)) of y for y in [-1, 1], and the grouped base-L
-    code split/join is an exact bijection."""
-    from nifi_dicom_spark.functions import mpeg_audio as ma
+def test_stress_job_domains_name_live_properties():
+    """jobs/stress_properties.py replays this module's properties by name
+    with its own copy of their parameter domains. A stale entry only fails
+    a soak run, after it has drawn its tasks, so check the table here."""
+    import importlib.util
+    import inspect
 
-    rng = np.random.default_rng(seed)
-    y = rng.uniform(-1, 1, 3 * 50)
-    q = ma._quantize_grouped(y, levels)
-    assert q.min() >= 0 and q.max() <= levels - 1
-    back = ma._dequantize_grouped(q, levels)
-    assert np.abs(back - y).max() <= 1.0 / (levels - 1) + 1e-12
-    # base-L triplet grouping is exact
-    tri = q.reshape(-1, 3)
-    code = tri[:, 0] + levels * tri[:, 1] + levels * levels * tri[:, 2]
-    assert (code < levels**3).all()
-    split = np.stack([code % levels, (code // levels) % levels, code // levels**2], 1)
-    assert (split == tri).all()
-
-
-@given(seed=st.integers(0, 10_000), n=st.integers(1, 300))
-@settings(max_examples=40, deadline=None)
-def test_pack_bits_take_var_roundtrip_property(seed: int, n: int):
-    """_take_var is the exact inverse of _pack_bits for any width mix in
-    the Layer II range (2..16 bits)."""
-    from nifi_dicom_spark.functions import mpeg_audio as ma
-
-    rng = np.random.default_rng(seed)
-    widths = rng.integers(2, 17, size=n)
-    values = np.array([int(rng.integers(0, 1 << w)) for w in widths], dtype=np.uint64)
-    bits = np.unpackbits(
-        np.frombuffer(ma._pack_bits(values, widths.astype(np.int64)), np.uint8)
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "jobs",
+        "stress_properties.py",
     )
-    got, pos = ma._take_var(bits, 0, widths.astype(np.int64))
-    assert pos == int(widths.sum()) and (got == values).all()
-
-
-@given(
-    seed=st.integers(0, 10_000),
-    levels=st.sampled_from([5, 9, 15, 63, 255]),
-    nch=st.sampled_from([1, 2]),
-    sr=st.sampled_from([32000, 44100, 48000]),
-)
-@settings(max_examples=15, deadline=None)
-@example(seed=8248, levels=5, nch=1, sr=44100)  # r4 regression: class-0 3-level fallback
-def test_layer2_roundtrip_property(seed: int, levels: int, nch: int, sr: int):
-    """Any bandlimited signal x encodes to a parseable legal-header stream
-    that decodes with bounded error. The envelope must be derived from the
-    EFFECTIVE allocation, not the requested ``levels``: band classes offer
-    different quantizer menus (class 0 = bands 0-2 has no 5-level entry,
-    so levels=5 encodes the signal band with the 3-level quantizer whose
-    half-step is 2/(3-1), not 2/(5-1)). Verified r5: the decode matches an
-    independent scalar reference of the per-band quantize/dequantize
-    pipeline bit-exactly (test_layer2_matches_scalar_reference), so any
-    residual error here is quantizer envelope + filterbank leakage, not a
-    bitstream defect."""
-    from nifi_dicom_spark.functions import mp3, mpeg_audio as ma
-
-    rng = np.random.default_rng(seed)
-    n = 1152 * int(rng.integers(1, 3))
-    t = np.arange(n) / sr
-    x = 0.6 * np.sin(2 * np.pi * rng.uniform(100, 2000) * t) * np.linspace(
-        rng.uniform(0.1, 1), 1, n
-    )
-    sig = np.stack([x, 0.5 * x], 1) if nch == 2 else x
-    try:
-        enc = ma.encode_layer2(sig, sr, levels=levels)
-    except ValueError as e:
-        # legal outcome: full-sblimit high-resolution allocations can
-        # exceed the largest LEGAL frame for the channel mode (mono caps
-        # at 192 kbps, stereo needs ~2x the bits of mono) — the encoder
-        # must say so, never emit an illegal header
-        assert "exceeds the largest Layer II frame" in str(e)
-        assert levels >= 63 and sr > 32000
-        return
-    h = mp3._parse_header(enc, 0)
-    assert h.layer == 2 and h.samples == 1152 and h.channels == nch
-    assert h.bitrate_kbps not in (32, 48, 56, 80) or nch == 1
-    assert h.bitrate_kbps < 224 or nch == 2
-    dec, out_sr = ma.decode_layer2(enc)
-    assert out_sr == sr
-    ref = sig.mean(axis=1) if nch == 2 else sig
-    m = min(len(ref), len(dec))
-    err = np.abs(dec[:m] - ref[:m]).max()
-    # envelope from the coarsest quantizer actually in the allocation:
-    # scalefactors overshoot the band peak by up to 2^(1/3), leakage across
-    # adjacent bands sums half-steps — 0.35 absorbs both (measured ceiling
-    # ~0.61 for the pinned example vs bound 1.16)
-    min_eff = min(
-        l for l in ma.effective_levels(levels) if l is not None
-    )
-    assert err < max(np.abs(ref).max(), 1e-6) * (
-        2.0 / min(min_eff - 1, 62) + 0.35
-    ), f"err {err} exceeds effective-{min_eff}-level envelope"
-
-
-@given(
-    seed=st.integers(0, 10_000),
-    quality=st.sampled_from([300, 800, 1500, 4000]),
-    sr=st.sampled_from([32000, 44100, 48000]),
-)
-@settings(max_examples=12, deadline=None)
-def test_layer3_roundtrip_snr_property(seed: int, quality: int, sr: int):
-    """Any bandlimited signal survives the full Layer III spectral chain
-    (MDCT -> 4/3-law quantization -> Huffman -> IMDCT/TDAC -> synthesis)
-    with SNR > 30 dB at quality >= 300, through a legal mono MPEG-1
-    Layer III header (empirical worst over the strategy space: ~45 dB —
-    the 15 dB margin absorbs filterbank leakage on unlucky tones)."""
-    from nifi_dicom_spark.functions import mp3, mpeg_audio as ma
-
-    rng = np.random.default_rng(seed)
-    n = 1152 * int(rng.integers(1, 3))
-    t = np.arange(n) / sr
-    x = 0.6 * np.sin(2 * np.pi * rng.uniform(100, 3000) * t) * np.linspace(
-        rng.uniform(0.1, 1), 1, n
-    )
-    enc = ma.encode_layer3(x, sr, quality=quality)
-    h = mp3._parse_header(enc, 0)
-    assert h.layer == 3 and h.version == "1" and h.channels == 1
-    assert h.samples == 1152 and h.sample_rate == sr
-    dec, out_sr = ma.decode_layer3(enc)
-    assert out_sr == sr and len(dec) % 576 == 0
-    assert ma.roundtrip_snr_db(x, dec[:n]) > 30
-
-
-@given(
-    seed=st.integers(0, 10_000),
-    quality=st.sampled_from([300, 1500]),
-    sr=st.sampled_from([32000, 44100, 48000]),
-    correlation=st.sampled_from(["independent", "identical", "antiphase", "mixed"]),
-)
-@settings(max_examples=16, deadline=None)
-def test_layer3_stereo_roundtrip_snr_property(
-    seed: int, quality: int, sr: int, correlation: str
-):
-    """Stereo Layer III: whatever channel correlation the signal has, the
-    per-frame joint-stereo (M/S) decision must stay transparent — both
-    channels reconstruct above the same SNR envelope as mono, whichever
-    mode each frame was coded in (the decoder un-rotates masked frames
-    with the spec's (m±s)/sqrt(2) reconstruction)."""
-    from nifi_dicom_spark.functions import mp3, mpeg_audio as ma
-
-    rng = np.random.default_rng(seed)
-    n = 1152 * int(rng.integers(1, 3))
-    t = np.arange(n) / sr
-
-    def tone():
-        return 0.5 * np.sin(2 * np.pi * rng.uniform(100, 3000) * t) * np.linspace(
-            rng.uniform(0.1, 1), 1, n
-        )
-
-    left = tone()
-    if correlation == "identical":
-        right = left.copy()
-    elif correlation == "antiphase":
-        right = -left
-    elif correlation == "mixed":
-        right = 0.7 * left + 0.3 * tone()
-    else:
-        right = tone()
-    x = np.stack([left, right], axis=1)
-    enc = ma.encode_layer3(x, sr, quality=quality)
-    assert enc == ma.encode_layer3(x, sr, quality=quality)
-    h = mp3._parse_header(enc, 0)
-    assert h.layer == 3 and h.channels == 2 and h.sample_rate == sr
-    dec, out_sr = ma.decode_layer3(enc)
-    assert out_sr == sr and dec.shape[1] == 2 and dec.shape[0] % 576 == 0
-    assert ma.roundtrip_snr_db(left, dec[:n, 0]) > 28
-    assert ma.roundtrip_snr_db(right, dec[:n, 1]) > 28
-
-
-@given(
-    seed=st.integers(0, 10_000),
-    levels=st.sampled_from([5, 9, 15, 63]),
-    sr=st.sampled_from([32000, 44100, 48000]),
-)
-@settings(max_examples=10, deadline=None)
-@example(seed=8248, levels=5, sr=44100)
-def test_layer2_matches_scalar_reference(seed: int, levels: int, sr: int):
-    """Zero-tolerance bitstream oracle: decode(encode(x)) must equal an
-    independent SCALAR reference of the documented pipeline — per-(band,
-    part) peak -> smallest scalefactor >= peak -> effective-class quantize/
-    dequantize -> synthesis — to 1e-12. Catches any allocation, scfsi,
-    scalefactor-order, field-order, or grouping defect that an inf-norm
-    envelope (test above) cannot see."""
-    from nifi_dicom_spark.functions import mpeg_audio as ma2
-
-    rng = np.random.default_rng(seed)
-    n = 1152 * int(rng.integers(1, 3))
-    t = np.arange(n) / sr
-    x = 0.6 * np.sin(2 * np.pi * rng.uniform(100, 2000) * t) * np.linspace(
-        rng.uniform(0.1, 1), 1, n
-    )
-    try:
-        enc = ma2.encode_layer2(x, sr, levels=levels)
-    except ValueError:
-        return  # legal frame-budget rejection, covered by the test above
-    dec, _ = ma2.decode_layer2(enc)
-
-    eff = ma2.effective_levels(levels)
-    x2 = np.concatenate([x, np.zeros(ma2._DELAY)])
-    x2 = np.concatenate([x2, np.zeros((-len(x2)) % 1152)])
-    sub = ma2.analyze(x2).reshape(-1, 36, ma2.N_BANDS)
-    deq = np.zeros_like(sub)
-    scf_tab = ma2.SCALEFACTORS
-    for fi in range(sub.shape[0]):
-        for sb, L in enumerate(eff):
-            if L is None:
-                continue
-            for part in range(3):
-                seg = sub[fi, part * 12 : (part + 1) * 12, sb]
-                peak = max(np.abs(seg).max(), 1e-12)
-                ix = int(
-                    np.clip(
-                        np.searchsorted(-scf_tab, -peak, side="right") - 1, 0, 62
-                    )
-                )
-                scf = scf_tab[ix]
-                if L in ma2._GROUP_BITS:
-                    q = ma2._quantize_grouped(seg / scf, L)
-                    back = ma2._dequantize_grouped(q, L)
-                else:
-                    nb = int(L + 1).bit_length() - 1
-                    back = ma2._dequantize(ma2._quantize(seg / scf, nb), nb)
-                deq[fi, part * 12 : (part + 1) * 12, sb] = back * scf
-    ref = ma2.synthesize(deq.reshape(-1, ma2.N_BANDS))[ma2._DELAY : ma2._DELAY + n]
-    m = min(len(dec), len(ref))
-    assert np.abs(dec[:m] - ref[:m]).max() < 1e-12
+    spec = importlib.util.spec_from_file_location("stress_properties", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    for name, domain in {**job.DOMAINS, **job.SPARK_DOMAINS}.items():
+        fn = globals().get(name)
+        assert inspect.isfunction(fn), f"{name} is not a property in this module"
+        inner = getattr(getattr(fn, "hypothesis", None), "inner_test", fn)
+        assert set(domain) <= set(inspect.signature(inner).parameters), name
