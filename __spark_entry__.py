@@ -1214,88 +1214,6 @@ def _redact_regions_oracle() -> str:
     """
 
 
-def _synth_mp4_payload(doc_id: int) -> bytes:
-    """Deterministic multi-chunk MP4 per doc (variable sample sizes so the
-    stsc/stco/stsz join is exercised) — shared by query and oracle."""
-    import hashlib as _hl
-
-    from nifi_dicom_spark.functions import mp4
-
-    i = int(doc_id)
-    samples = [
-        _hl.md5(f"f{i}:{s}".encode()).digest() * (s % 4 + 1)
-        for s in range(i % 7 + 3)
-    ]
-    return mp4.mux_mp4(
-        samples,
-        width=160 + i % 16,
-        height=120 + i % 9,
-        timescale=600,
-        sample_duration=25,
-        samples_per_chunk=3,
-    )
-
-
-def q_mp4_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame sampling: ISO BMFF containers are demuxed by the
-    from-scratch box parser — the stsc×stco×stsz×stts sample-table join
-    yields byte-exact access units; every 2nd frame is emitted with its
-    true size, decode timestamp and the sha256 of the actual frame bytes.
-    The oracle replays mux→demux in Python."""
-    from nifi_dicom_spark.functions.multimodal import sample_frames
-
-    @F.pandas_udf("binary")
-    def make_mp4(ids: pd.Series) -> pd.Series:
-        return pd.Series([_synth_mp4_payload(int(i)) for i in ids])
-
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("video").alias("kind"),
-        make_mp4("doc_id").alias("payload"),
-        F.lit(None)
-        .cast(
-            "struct<width:int,height:int,sample_rate:int,n_frames:int,mime:string>"
-        )
-        .alias("meta"),
-    )
-    return sample_frames(media, every_n=2).select(
-        "media_id", "frame_idx", "frame_sha", "frame_bytes", "pts_ms"
-    )
-
-
-def _mp4_frames_oracle() -> str:
-    """Replay mux→sample_table→hash in Python over the same doc_ids."""
-    import hashlib as _hl
-
-    import pyarrow.parquet as pq
-
-    from nifi_dicom_spark.functions import mp4
-
-    ids = (
-        pq.read_table(f"{_oracle_sf_dir()}/documents.parquet", columns=["doc_id"])
-        .column("doc_id")
-        .to_pylist()
-    )
-    rows = []
-    for i in ids:
-        payload = _synth_mp4_payload(int(i))
-        for s in mp4.sample_table(payload)[::2]:
-            sha = _hl.sha256(mp4.extract_sample(payload, s)).hexdigest()
-            pts_ms = s.pts * 1000 // 600
-            rows.append(f"({int(i)}, {s.index}, '{sha}', {s.size}, {pts_ms})")
-    values = ",\n".join(rows)
-    return f"""
-        SELECT media_id, CAST(frame_idx AS INT) AS frame_idx, frame_sha,
-               CAST(frame_bytes AS INT) AS frame_bytes,
-               CAST(pts_ms AS BIGINT) AS pts_ms
-        FROM (VALUES {values})
-        AS t(media_id, frame_idx, frame_sha, frame_bytes, pts_ms)
-    """
-
-
 def q_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget shard packing: documents packed into 512-token shards
     in doc_id order via the distributed prefix sum (range repartition +
@@ -2962,7 +2880,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_features": q_multimodal_features,
         "png_decode": q_png_decode,
         "jpeg_decode": q_jpeg_decode,
-        "mp4_frames": q_mp4_frames,
         "shard_pack": q_shard_pack,
         "containment": q_containment,
         "stratified_sample": q_stratified_sample,
@@ -3800,7 +3717,6 @@ def _build_oracle_sql() -> dict[str, str]:
         "png_decode": _png_decode_oracle(),
         "jpeg_decode": _jpeg_decode_oracle(),
         "redact_regions": _redact_regions_oracle(),
-        "mp4_frames": _mp4_frames_oracle(),
         "shard_pack": """
             WITH t AS (
               SELECT doc_id,

@@ -32,24 +32,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 
-# Parameter-domain table: mirrors each test's @given strategies exactly.
+# Parameter-domain table: mirrors each test's @given strategies exactly
+# (tests/test_properties.py::test_stress_job_domains_name_live_properties).
 # (test name, {kwarg: domain}) where domain is a list (sampled_from) or an
 # inclusive ("int", lo, hi) integer range, matching st.integers(lo, hi).
 DOMAINS = {
-    "test_wav_roundtrip_property": {
-        "seed": ("int", 0, 10_000),
-        "n": ("int", 1, 5000),
-        "rate": [8000, 16000, 44100],
-    },
     "test_bmp_roundtrip_property": {
         "seed": ("int", 0, 10_000),
-        "h": ("int", 1, 64),
-        "w": ("int", 1, 64),
+        "h": ("int", 1, 40),
+        "w": ("int", 1, 40),
     },
     "test_png_roundtrip_property": {
         "seed": ("int", 0, 10_000),
-        "h": ("int", 1, 64),
-        "w": ("int", 1, 64),
+        "h": ("int", 1, 32),
+        "w": ("int", 1, 32),
     },
 }
 
@@ -113,8 +109,7 @@ def main() -> int:
                 out.append((name, {k: _draw(rng, d) for k, d in dom.items()}))
         return out
 
-    # Interleave tests so slow families don't serialize at the pool tail;
-    # w/h ranges checked against the test file at import time below.
+    # Interleave tests so slow families don't serialize at the pool tail.
     tasks = draw_tasks(DOMAINS)
     order = rng.permutation(len(tasks))
     tasks = [tasks[i] for i in order]

@@ -1,10 +1,8 @@
 """Pure-numpy media codecs for the multimodal pipeline.
 
-No imaging/audio library ships in this environment, but three ubiquitous
-container formats are fully decodable with stdlib + numpy alone:
+No imaging library ships in this environment, but two ubiquitous image
+formats are fully decodable with stdlib + numpy alone:
 
-* **WAV** (RIFF/WAVE, PCM 8/16-bit) — parse the chunk list, return mono
-  float32 samples in [-1, 1] plus the sample rate;
 * **BMP** (BITMAPINFOHEADER, 24-bit uncompressed) — return an (H, W, 3)
   uint8 RGB array (bottom-up row order and 4-byte row padding handled);
 * **PNG** (8-bit depth, color types gray/palette/RGB/gray+alpha/RGBA,
@@ -21,7 +19,7 @@ coding, DCT, subsampling). Every other format takes the declared
 deterministic stub in :mod:`nifi_dicom_spark.functions.multimodal` — the
 Spark-side plumbing is identical either way.
 
-Reference analog: pixelmed ships its own from-scratch pixel/waveform codecs
+Reference analog: pixelmed ships its own from-scratch pixel codecs
 for the same reason (no external decoder dependency for core formats).
 """
 
@@ -33,73 +31,8 @@ import zlib
 import numpy as np
 
 
-def is_wav(payload: bytes | None) -> bool:
-    return (
-        payload is not None
-        and len(payload) >= 12
-        and payload[:4] == b"RIFF"
-        and payload[8:12] == b"WAVE"
-    )
-
-
 def is_bmp(payload: bytes | None) -> bool:
     return payload is not None and len(payload) >= 54 and payload[:2] == b"BM"
-
-
-def parse_wav_header(payload: bytes) -> tuple[tuple, int, int]:
-    """One RIFF chunk walk shared by decode and probe: returns the fmt
-    tuple ``(audio_format, channels, sample_rate, byte_rate, block_align,
-    bits)``, the data chunk's byte offset, and its length. Raises on
-    missing fmt/data chunks. Chunks are word-aligned (odd sizes pad)."""
-    if not is_wav(payload):
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, n = 12, len(payload)
-    fmt = None
-    data_off = data_len = -1
-    while pos + 8 <= n:
-        cid = payload[pos : pos + 4]
-        size = struct.unpack_from("<I", payload, pos + 4)[0]
-        if cid == b"fmt ":
-            fmt = struct.unpack_from("<HHIIHH", payload, pos + 8)
-        elif cid == b"data":
-            data_off, data_len = pos + 8, size
-        pos += 8 + size + (size & 1)
-    if fmt is None or data_off < 0:
-        raise ValueError("missing fmt/data chunk")
-    return fmt, data_off, data_len
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """RIFF/WAVE PCM → (mono float32 samples in [-1, 1], sample_rate)."""
-    fmt, data_off, data_len = parse_wav_header(payload)
-    data = payload[data_off : data_off + data_len]
-    audio_format, n_channels, sample_rate, _byte_rate, _align, bits = fmt
-    if audio_format != 1 or bits not in (8, 16):
-        raise ValueError(f"unsupported WAV (format={audio_format}, bits={bits})")
-    if bits == 16:
-        samples = np.frombuffer(data, dtype="<i2").astype(np.float32) / 32768.0
-    else:  # 8-bit PCM is unsigned
-        samples = (np.frombuffer(data, dtype=np.uint8).astype(np.float32) - 128.0) / 128.0
-    if n_channels > 1:
-        usable = (len(samples) // n_channels) * n_channels
-        samples = samples[:usable].reshape(-1, n_channels).mean(axis=1)
-    return samples, sample_rate
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
-    """Mono float32 [-1, 1] → 16-bit PCM RIFF/WAVE."""
-    pcm = np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0)
-    # round-to-nearest at the decoder's 1/32768 scale (truncation would bias
-    # toward zero and double the quantization error)
-    pcm = np.clip(np.round(pcm * 32768.0), -32768, 32767).astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    chunks = b"".join(
-        [
-            b"fmt ", struct.pack("<I", len(fmt)), fmt,
-            b"data", struct.pack("<I", len(pcm)), pcm,
-        ]
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
 def decode_bmp(payload: bytes) -> np.ndarray:
@@ -285,14 +218,3 @@ def image_block_features(img: np.ndarray, dim: int) -> np.ndarray:
     gray = img.astype(np.float32).mean(axis=2) / 255.0
     bands = np.array_split(gray, dim, axis=0)
     return np.array([b.mean() if b.size else 0.0 for b in bands], dtype=np.float32)
-
-
-def audio_energy_features(samples: np.ndarray, dim: int) -> np.ndarray:
-    """Real audio feature: RMS energy over ``dim`` equal time windows."""
-    if samples.size == 0:
-        return np.zeros(dim, dtype=np.float32)
-    windows = np.array_split(samples.astype(np.float64), dim)
-    return np.array(
-        [np.sqrt((w**2).mean()) if w.size else 0.0 for w in windows],
-        dtype=np.float32,
-    )

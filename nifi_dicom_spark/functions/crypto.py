@@ -74,7 +74,6 @@ class CryptoEqualityLeakWarning(UserWarning):
 MAGIC_V3 = b"NDS3"  # identity-derived IV (no plaintext-equality disclosure)
 MAGIC_V2 = b"NDS2"  # plaintext-derived IV, authenticated
 MAGIC_V1 = b"NDS1"  # legacy: plaintext-derived IV, UNauthenticated
-MAGIC = MAGIC_V3
 _TAGGED_MAGICS = (MAGIC_V3, MAGIC_V2)
 _ITERATIONS = 10_000  # reference default ballpark; PBKDF2 cost knob
 

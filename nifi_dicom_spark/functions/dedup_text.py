@@ -178,7 +178,7 @@ def lsh_bands(
     ``element_at`` past the end yields NULLs and every such band collapses
     into one global bucket (silent recall loss); the signature length is not
     statically known here, so the divisibility guard lives in
-    :func:`minhash_lsh_candidates`' candidate builder."""
+    :func:`_candidates_from_shingles`."""
     if bands < 1 or rows_per_band < 1:
         raise ValueError(
             f"bands and rows_per_band must be >= 1 "
@@ -334,31 +334,6 @@ def _candidates_from_shingles(
         return pairs.localCheckpoint(eager=True)
     finally:
         banded.unpersist()
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    max_bucket_size: int = 64,
-    method: str = "xxhash64",
-) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) via banded MinHash-LSH.
-
-    Plan shape at scale: explode bands → shuffle on (band, bucket) →
-    self-join within buckets. No all-pairs comparison anywhere.
-
-    ``max_bucket_size`` guards the quadratic corner: a degenerate bucket
-    (boilerplate text, empty docs) of size B yields B²/2 candidates, so one
-    hot bucket can dominate the job. Buckets above the cap are dropped —
-    standard LSH practice; raise the cap (or add bands) to trade cost for
-    recall. At 10^8 docs this cap is what keeps the stage bounded.
-    """
-    sh_df = _shingle_frame(df, text_col, id_col, shingle_n)
-    return _candidates_from_shingles(sh_df, k, bands, max_bucket_size, method)
 
 
 def near_dup_pairs(

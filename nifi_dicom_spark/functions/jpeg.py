@@ -14,13 +14,13 @@ Scope — baseline sequential DCT, the format ~all camera/web JPEGs use:
   standard quantization tables scaled by quality, Annex-K standard Huffman
   tables — deterministic output bytes for replay.
 
-Like the WAV/BMP/PNG codecs, validation is property-based from components
+Like the BMP/PNG codecs, validation is property-based from components
 up (zigzag involution, DCT⁻¹∘DCT ≈ id, Huffman decode∘encode = id) plus
 whole-codec round-trips with quality-dependent error bounds — no external
 decoder ships in this environment to cross-check against.
 
 JPEG is lossy: round-trips are *approximate* (quantization), unlike the
-exact WAV/BMP/PNG round-trips; tests bound the error instead.
+exact BMP/PNG round-trips; tests bound the error instead.
 """
 
 from __future__ import annotations

@@ -38,16 +38,6 @@ from pyspark.sql import types as T
 
 from nifi_dicom_spark.functions import codecs, jpeg
 
-#: boxes column element type: pixel rectangles, origin top-left
-BOX_TYPE = T.StructType(
-    [
-        T.StructField("x", T.IntegerType(), False),
-        T.StructField("y", T.IntegerType(), False),
-        T.StructField("w", T.IntegerType(), False),
-        T.StructField("h", T.IntegerType(), False),
-    ]
-)
-
 REDACTED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

@@ -100,22 +100,6 @@ def _projection_vectors(dim: int, n_planes: int, seed: int) -> list[list[float]]
     return out
 
 
-def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection bucket id: one bit per hyperplane."""
-    bits = []
-    for i, p in enumerate(planes):
-        lit = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(
-            F.shiftleft(
-                (dot(vec.cast("array<double>"), lit) > 0).cast("bigint"), i
-            )
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def lsh_bucket_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -143,8 +127,8 @@ def lsh_bucket_topk(
     corpus = corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
 
     # vectorized SRP: one Arrow batch → one matmul per table, instead of
-    # n_tables × n_planes interpreted HOF dot products per row. Sign
-    # semantics identical to srp_bucket (dot > 0); summation-order FP noise
+    # n_tables × n_planes interpreted HOF dot products per row. A bit is
+    # set when the projection is positive (dot > 0); summation-order FP noise
     # (~1e-16) cannot flip a sign except for |dot| at that scale —
     # measure-zero for real embeddings
     P = np.asarray(tables, dtype=np.float64)  # (n_tables, n_planes, dim)

@@ -111,11 +111,6 @@ def _lang_score_of(lowered: Column, lang: str) -> Column:
     return F.size(F.filter(lowered, lambda x: x.isin(markers)))
 
 
-def lang_score(col: str | Column, lang: str) -> Column:
-    """Marker-token hit count for one language."""
-    return _lang_score_of(F.transform(tokens(col), F.lower), lang)
-
-
 def _lang_guess_of(lowered: Column) -> Column:
     """argmax over marker-token hit counts of an already-lowered token
     array, alphabetical tie-break; 'und' when all scores are 0."""

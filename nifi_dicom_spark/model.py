@@ -87,27 +87,3 @@ ARROW_WIRE_FIELDS = {
     "ts": pa.timestamp("us"),
     "schema_ver": pa.int32(),
 }
-
-
-def validate_event_schema(schema: T.StructType) -> list[str]:
-    """Analysis-time schema validation (SURVEY §2.3 P7; reference precedent:
-    dynamic-property validation ``ExtractDICOMTags.java:92-120``).
-
-    Returns a list of problems (empty = valid). Extra columns are allowed
-    (forward compatibility); missing required columns or type conflicts are
-    errors.
-    """
-    problems: list[str] = []
-    by_name = {f.name: f for f in schema.fields}
-    for f in CHANGE_EVENTS_SCHEMA.fields:
-        got = by_name.get(f.name)
-        if got is None:
-            if f.name == "tool":  # late-added column may be absent (schema_ver=1)
-                continue
-            problems.append(f"missing required column {f.name}")
-        elif got.dataType != f.dataType:
-            problems.append(
-                f"column {f.name}: expected {f.dataType.simpleString()},"
-                f" got {got.dataType.simpleString()}"
-            )
-    return problems

@@ -1,11 +1,11 @@
-"""Dead-code tripwire for the engine layers.
+"""Dead-code tripwire for the package.
 
-Every public top-level function and class in ``nifi_dicom_spark/{lake,
-operators,sources,streaming}`` must be referenced as an identifier — a
-``Name``, an ``Attribute`` or an import alias — somewhere other than its
-own ``def``, in any tracked ``.py`` file (the package, the entrypoints,
-``perfbench/``, ``jobs/`` and the tests). Strings and docstrings do not
-count, so a helper that only a docstring mentions is flagged.
+Every public top-level function and class in ``nifi_dicom_spark/`` must be
+referenced as an identifier — a ``Name``, an ``Attribute`` or an import
+alias — somewhere other than its own ``def``, in any tracked ``.py`` file
+(the package, the entrypoints, ``perfbench/``, ``jobs/`` and the tests).
+Strings and docstrings do not count, so a helper that only a docstring
+mentions is flagged.
 
 The same modules never set or unset a session conf (``spark.conf.set``, or
 ``conf.set`` on a bound ``conf``): a write that needs a conf toggled to be
@@ -21,9 +21,7 @@ import subprocess
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
-ENGINE_DIRS = tuple(
-    f"nifi_dicom_spark/{d}/" for d in ("lake", "operators", "sources", "streaming")
-)
+PACKAGE = "nifi_dicom_spark/"
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -62,7 +60,7 @@ def _unreferenced() -> list[str]:
         tree = ast.parse((REPO / rel).read_text(), filename=rel)
         for top in tree.body:
             owner = top.name if isinstance(top, DEFS) else None
-            if owner and rel.startswith(ENGINE_DIRS) and not owner.startswith("_"):
+            if owner and rel.startswith(PACKAGE) and not owner.startswith("_"):
                 defs.append((rel, owner))
             for ident in _identifiers(top):
                 refs.setdefault(ident, set()).add((rel, owner))
@@ -80,7 +78,7 @@ def test_every_public_engine_definition_is_referenced():
 def _conf_mutations() -> list[str]:
     out = []
     for rel in _tracked_py_files():
-        if not rel.startswith(ENGINE_DIRS):
+        if not rel.startswith(PACKAGE):
             continue
         tree = ast.parse((REPO / rel).read_text(), filename=rel)
         for n in ast.walk(tree):

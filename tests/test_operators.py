@@ -409,11 +409,7 @@ def test_minhash_signature_column(spark):
 
 
 def test_multimodal_feature_extraction(spark):
-    from nifi_dicom_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        sample_frames,
-    )
+    from nifi_dicom_spark.functions.multimodal import MEDIA_SCHEMA, extract_features
 
     rows = [
         (1, "image", b"fake-image-bytes", (64, 48, None, None, "image/fake")),
@@ -433,26 +429,12 @@ def test_multimodal_feature_extraction(spark):
         r["media_id"]: r["feature"] for r in feats
     }
 
-    frames = sample_frames(media, every_n=10).collect()
-    assert {r["frame_idx"] for r in frames} == {0, 10, 20}
-
 
 def test_codecs_wav_bmp_roundtrip():
-    """Pure-numpy WAV/BMP codecs: encode∘decode is identity (up to PCM
-    quantization)."""
+    """Pure-numpy BMP codec: encode∘decode is identity."""
     import numpy as np
 
     from nifi_dicom_spark.functions import codecs
-
-    t = np.arange(8000) / 8000.0
-    sig = (0.5 * np.sin(2 * np.pi * 440 * t)).astype(np.float32)
-    wav = codecs.encode_wav(sig, 8000)
-    assert codecs.is_wav(wav) and not codecs.is_bmp(wav)
-    back, sr = codecs.decode_wav(wav)
-    assert sr == 8000 and len(back) == len(sig)
-    assert float(np.abs(back - sig).max()) < 1e-3  # 16-bit quantization
-    feats = codecs.audio_energy_features(back, 4)
-    assert feats.shape == (4,) and all(abs(f - 0.5 / 2**0.5) < 0.01 for f in feats)
 
     img = np.zeros((20, 30, 3), dtype=np.uint8)
     img[:10] = [255, 0, 0]  # top half red, bottom half black
@@ -464,15 +446,26 @@ def test_codecs_wav_bmp_roundtrip():
 
 
 def test_multimodal_real_decode_features(spark):
-    """WAV/BMP payloads flow through the SAME mapInPandas plumbing but get
-    REAL decoded features; unknown formats keep the deterministic stub."""
+    """BMP payloads flow through the SAME mapInPandas plumbing but get REAL
+    decoded features; audio (a PCM WAV here) and unknown formats keep the
+    deterministic stub."""
+    import struct
+
     import numpy as np
 
     from nifi_dicom_spark.functions import codecs
-    from nifi_dicom_spark.functions.multimodal import MEDIA_SCHEMA, extract_features
+    from nifi_dicom_spark.functions.multimodal import (
+        MEDIA_SCHEMA,
+        _fake_decode_feature,
+        extract_features,
+    )
 
     t = np.arange(4000) / 8000.0
-    wav = codecs.encode_wav((0.8 * np.sin(2 * np.pi * 220 * t)).astype(np.float32), 8000)
+    pcm = np.round(0.8 * 32767 * np.sin(2 * np.pi * 220 * t)).astype("<i2").tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    chunks += b"data" + struct.pack("<I", len(pcm)) + pcm
+    wav = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
     img = np.full((16, 16, 3), 200, dtype=np.uint8)
     img[:8] = 0  # top half black → first feature bands ≈ 0
     bmp = codecs.encode_bmp(img)
@@ -482,33 +475,42 @@ def test_multimodal_real_decode_features(spark):
         (3, "image", b"not-an-image", (1, 1, None, None, "application/x-fake")),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r["media_id"]: r["feature"] for r in extract_features(media, dim=4).collect()}
-    assert abs(feats[1][0] - 0.8 / 2**0.5) < 0.01  # real RMS of the sine
+    out = {r["media_id"]: r for r in extract_features(media, dim=4).collect()}
+    feats = {i: r["feature"] for i, r in out.items()}
+    assert feats[1] == _fake_decode_feature(wav, 4).tolist()  # stub path
+    assert out[1]["width"] is None and out[1]["height"] is None
     assert feats[2][0] < 0.01 and feats[2][-1] > 0.7  # real band means
     assert len(feats[3]) == 4  # stub path still produces the schema
 
 
 def test_unsupported_codec_variants_fall_back_to_stub(spark):
-    """A float-format WAV (or any unsupported container variant) must not
+    """An interlaced PNG (or any unsupported container variant) must not
     crash the job — it takes the stub path like other undecodable formats."""
     import struct
+    import zlib
 
-    import numpy as np
+    from nifi_dicom_spark.functions.codecs import _png_chunk, is_png
+    from nifi_dicom_spark.functions.multimodal import (
+        MEDIA_SCHEMA,
+        _fake_decode_feature,
+        extract_features,
+    )
 
-    from nifi_dicom_spark.functions.multimodal import MEDIA_SCHEMA, extract_features
-
-    # RIFF/WAVE with audio_format=3 (IEEE float) — magic passes, decode can't
-    fmt = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
+    # 8-bit gray, interlace method 1 (Adam7) — magic passes, decode can't
+    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 1)
     payload = (
-        b"RIFF" + struct.pack("<I", 36) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 8) + np.zeros(2, "<f4").tobytes()
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(bytes(8)))
+        + _png_chunk(b"IEND", b"")
     )
+    assert is_png(payload)
     media = spark.createDataFrame(
-        [(1, "audio", payload, (None, None, 8000, None, "audio/wav"))], MEDIA_SCHEMA
+        [(1, "image", payload, (2, 2, None, None, "image/png"))], MEDIA_SCHEMA
     )
-    out = extract_features(media, dim=4).collect()
-    assert len(out) == 1 and len(out[0]["feature"]) == 4
+    (out,) = extract_features(media, dim=4).collect()
+    assert out["feature"] == _fake_decode_feature(payload, 4).tolist()
+    assert out["width"] is None and out["height"] is None
 
 
 def test_md5_minhash_rejects_oversized_k(spark):
