@@ -1214,33 +1214,6 @@ def _redact_regions_oracle() -> str:
     """
 
 
-def q_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget shard packing: documents packed into 512-token shards
-    in doc_id order via the distributed prefix sum (range repartition +
-    per-partition window + O(partitions) offset join) — never a global
-    single-partition window."""
-    from nifi_dicom_spark.functions.corpus import pack_shards
-    from nifi_dicom_spark.functions.text import token_count
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", token_count("text").alias("n_tokens")
-    )
-    return pack_shards(docs, "doc_id", "n_tokens", target_weight=512)
-
-
-def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-containment candidates: document pairs sharing ≥2
-    winnowing fingerprints (posting-list join with a 64-doc
-    hot-fingerprint cap), scored shared/min(|fp|) — catches one-doc-inside-
-    another cases that symmetric Jaccard misses."""
-    from nifi_dicom_spark.functions.corpus import containment_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    return containment_pairs(
-        docs, "text", "doc_id", k=3, w=4, min_shared=2, max_postings=64
-    )
-
-
 def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM quality score (CCNet-style perplexity bucketing, one
     order above unigram_logprob): mean log p(w_i|w_{i-1}) under the
@@ -1251,30 +1224,6 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return bigram_logprob(docs, add_k=0.5)
-
-
-def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL BPE token accounting: learn 64 merges from the corpus's own
-    pre-token frequency dictionary (distributed count, vocab-capped driver
-    collect — the IVF-centroid pattern), then encode every document with
-    the broadcast ranks in an Arrow-batched pandas UDF. Deterministic end
-    to end (lexicographic merge tiebreaks, no randomness). ROWS-ONLY
-    driver check: the merge loop is iterative and not SQL-expressible —
-    the trainer/encoder are pinned instead against independent
-    recount-every-merge and string-replace references in tests/test_bpe.py."""
-    from nifi_dicom_spark.functions.bpe import bpe_encode, train_bpe
-    from nifi_dicom_spark.functions.text import word_tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    # 64 merges on the synthetic ~40-word vocab leaves subword structure
-    # visible (200+ would rebuild every word into a single token)
-    merges = train_bpe(docs, "text", n_merges=64, max_words=20_000)
-    out = bpe_encode(docs, "text", merges)
-    return out.select(
-        F.col("doc_id").alias("id"),
-        F.size("bpe_tokens").cast("long").alias("n_bpe_tokens"),
-        F.size(word_tokens(F.col("text"))).cast("long").alias("n_pretokens"),
-    )
 
 
 def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1309,34 +1258,6 @@ def q_strip_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return strip_duplicate_spans(docs, "text", "doc_id", k=8, min_docs=2)
 
 
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language sampling: keep a doc iff its md5-uniform
-    < the language's rate — a pure codegen filter (no shuffle, no Python)
-    whose kept-set is bit-identical across runs and engines."""
-    from nifi_dicom_spark.functions.corpus import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    out = stratified_sample(
-        docs,
-        "doc_id",
-        "lang",
-        rates={"en": 0.5, "de": 0.25, "fr": 0.1},
-        default_rate=0.05,
-        salt="r3",
-    )
-    return out.select("doc_id", "lang", F.col("_u").alias("u"))
-
-
-def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-window construction: overlapping token chunks per document
-    (max 24 tokens, 8-token overlap) — a zero-shuffle projection+explode of
-    built-in sequence/slice/concat_ws (no Python, full codegen)."""
-    from nifi_dicom_spark.functions.corpus import chunk_documents
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return chunk_documents(docs, max_tokens=24, overlap=8)
-
-
 def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perplexity-proxy quality score: per-doc mean log-prob under the
     corpus's own unigram distribution — one token-hash exchange feeding
@@ -1346,60 +1267,6 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return unigram_logprob(docs)
-
-
-_MIXTURE_WEIGHTS = {"src0": 3.0, "src1": 1.0, "src2": 0.5}
-_MIXTURE_BUDGET = 6_000
-
-
-def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-mixture plan: per-source availability vs target weights and
-    the sampling rate (>1 = upsample) that hits a token budget — one tiny
-    map-side-combined aggregate over the corpus."""
-    from nifi_dicom_spark.functions.corpus import mixture_plan
-
-    docs = _t(spark, sf_dir, "documents").select("source", "text")
-    return mixture_plan(
-        docs, weights=_MIXTURE_WEIGHTS, token_budget=_MIXTURE_BUDGET
-    )
-
-
-def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply mixture rates deterministically in BOTH directions: md5-uniform
-    downsampling below rate 1, floor+fractional-uniform upsampling above it
-    (each copy distinguishable via _copy) — zero shuffle, kept multiset is
-    a pure function of doc ids."""
-    from nifi_dicom_spark.functions.corpus import mixture_sample
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    out = mixture_sample(
-        docs,
-        rates={"src0": 2.787456, "src1": 0.86580, "src2": 0.473703},
-        salt="r4",
-    )
-    return out.select("doc_id", "source", "_copy", F.col("_u").alias("u"))
-
-
-def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact BM25 retrieval over the corpus for a 3-term query: the term
-    set filters each token ARRAY before any explode, so the wide exchange
-    is proportional to query hits, not corpus tokens; df/idf and the
-    corpus constants are broadcast back."""
-    from nifi_dicom_spark.functions.search import bm25_search
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return bm25_search(docs, ["merge", "spark", "vector"])
-
-
-def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global shuffle order: position = row_number over
-    md5(id:salt) via the two-phase distributed prefix count (range
-    partition → per-partition window → O(partitions) offset fold) — never
-    a single-partition global window."""
-    from nifi_dicom_spark.functions.corpus import corpus_shuffle
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return corpus_shuffle(docs, salt="r4")
 
 
 def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2733,25 +2600,6 @@ def bench_incremental_dedup_split(spark: SparkSession, sf_dir: str) -> dict:
     return {"setup_sec": round(t1 - t0, 3), "probe_sec": round(t2 - t1, 3)}
 
 
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: train docs (doc_id % 10 != 0) that
-    SimHash-near-dup a heldout doc (doc_id % 10 == 0). The heldout banded
-    chunks broadcast — the 10^10-doc train side never shuffles."""
-    from nifi_dicom_spark.functions.corpus import decontaminate
-
-    docs = _t(spark, sf_dir, "documents")
-    n = spark.sparkContext.defaultParallelism
-    docs = docs.repartition(n)
-    train = docs.filter(F.col("doc_id") % 10 != 0)
-    heldout = docs.filter(F.col("doc_id") % 10 == 0)
-    return decontaminate(train, heldout, "text", "doc_id").select(
-        F.col("id").alias("doc_id"),
-        "matched_heldout_id",
-        F.col("min_hamming").cast("int").alias("min_hamming"),
-        "n_matches",
-    )
-
-
 # ---------------------------------------------------------------------------
 # OLAP sanity (flagship plan-shape check)
 # ---------------------------------------------------------------------------
@@ -2787,9 +2635,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Order matters: only the first 50 entries are oracle-checked, so the
-    # least recently verified entries lead. bpe_tokens is ROWS-ONLY
-    # (iterative merge learning has no SQL oracle; tests/test_bpe.py pins
-    # it).
+    # least recently verified entries lead.
     return {
         # --- last verified r3 (rotated past r4's 50-cap) — first now -----
         "cfind_query": q_cfind_query,
@@ -2823,7 +2669,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_spans": q_dup_spans,
         "strip_spans": q_strip_spans,
         "bigram_logprob": q_bigram_logprob,
-        "bpe_tokens": q_bpe_tokens,
         "clone_read": q_clone_read,
         "join_mv_state": q_join_mv_state,
         # --- newer still (r5 final session): predicate DML + the two
@@ -2864,13 +2709,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pii_redact": q_pii_redact,
         "repetition_stats": q_repetition_stats,
         "quality_filter": q_quality_filter,
-        "decontaminate": q_decontaminate,
-        "chunk_docs": q_chunk_docs,
         "unigram_logprob": q_unigram_logprob,
-        "mixture_plan": q_mixture_plan,
-        "mixture_sample": q_mixture_sample,
-        "bm25_search": q_bm25_search,
-        "corpus_shuffle": q_corpus_shuffle,
         "top_ngrams": q_top_ngrams,
         "simhash": q_simhash,
         "knn_cosine": q_knn_cosine,
@@ -2880,9 +2719,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_features": q_multimodal_features,
         "png_decode": q_png_decode,
         "jpeg_decode": q_jpeg_decode,
-        "shard_pack": q_shard_pack,
-        "containment": q_containment,
-        "stratified_sample": q_stratified_sample,
     }
 
 
@@ -3290,43 +3126,6 @@ _REPETITION_ORACLE = """
 """
 
 
-def _decontaminate_oracle(
-    max_hamming: int = 3, n_bits: int = 60, n_bands: int = 4, cap: int = 256
-) -> str:
-    """Cross-set (train vs heldout) variant of the simhash pairing oracle:
-    same signatures, same pigeonhole chunks, heldout-side bucket cap,
-    per-train-doc aggregation."""
-    bounds = [b * n_bits // n_bands for b in range(n_bands + 1)]
-    chunks = "\nUNION ALL\n".join(
-        f"SELECT doc_id, simhash, {b} AS band,"
-        f" (simhash >> {bounds[b]}) & {(1 << (bounds[b + 1] - bounds[b])) - 1} AS chunk"
-        " FROM sigs"
-        for b in range(n_bands)
-    )
-    return f"""
-        WITH {_simhash_sig_cte(n_bits)}, banded AS MATERIALIZED ({chunks}),
-        tr AS (SELECT * FROM banded WHERE doc_id % 10 <> 0),
-        ho AS MATERIALIZED (SELECT * FROM banded WHERE doc_id % 10 = 0),
-        hot AS (
-          SELECT band, chunk FROM ho GROUP BY band, chunk
-          HAVING count(*) > {cap}
-        ),
-        ho2 AS (
-          SELECT ho.* FROM ho ANTI JOIN hot USING (band, chunk)
-        ),
-        pairs AS (
-          SELECT DISTINCT t.doc_id, h.doc_id AS heldout_id,
-                 CAST(bit_count(xor(t.simhash, h.simhash)) AS INT) AS hamming
-          FROM tr t JOIN ho2 h ON t.band = h.band AND t.chunk = h.chunk
-          WHERE bit_count(xor(t.simhash, h.simhash)) <= {max_hamming}
-        )
-        SELECT doc_id, min(heldout_id) AS matched_heldout_id,
-               min(hamming) AS min_hamming,
-               count(*) AS n_matches
-        FROM pairs GROUP BY doc_id
-    """
-
-
 def _incremental_dedup_oracle(
     max_hamming: int = 3, n_bits: int = 60, n_bands: int = 4, cap: int = 256
 ) -> str:
@@ -3706,7 +3505,6 @@ def _build_oracle_sql() -> dict[str, str]:
         "quality_filter": _quality_filter_oracle(),
         "repetition_stats": _REPETITION_ORACLE,
         "near_dup_clusters": _near_dup_clusters_oracle(),
-        "decontaminate": _decontaminate_oracle(),
         "incremental_dedup": _incremental_dedup_oracle(),
         "simhash": _simhash_oracle(),
         "simhash_near_dup": _simhash_near_dup_oracle(),
@@ -3717,69 +3515,6 @@ def _build_oracle_sql() -> dict[str, str]:
         "png_decode": _png_decode_oracle(),
         "jpeg_decode": _jpeg_decode_oracle(),
         "redact_regions": _redact_regions_oracle(),
-        "shard_pack": """
-            WITH t AS (
-              SELECT doc_id,
-                     len(list_filter(string_split_regex(text, '\\s+'),
-                         x -> x <> '')) AS n_tokens
-              FROM documents
-            ), c AS (
-              SELECT doc_id, n_tokens,
-                     SUM(n_tokens) OVER (ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-              FROM t
-            )
-            SELECT doc_id AS id, CAST(n_tokens AS BIGINT) AS weight,
-                   CAST(cum AS BIGINT) AS cum_weight,
-                   CAST((cum - n_tokens) // 512 AS BIGINT) AS shard_id
-            FROM c
-        """,
-        "containment": """
-            WITH t AS (
-              SELECT doc_id,
-                     list_transform(list_filter(string_split_regex(text, '\\s+'),
-                                    x -> x <> ''), x -> lower(x)) AS toks
-              FROM documents
-            ), g AS (
-              SELECT doc_id,
-                     CASE WHEN len(toks) >= 3 THEN
-                       list_transform(generate_series(1, len(toks) - 2),
-                         i -> substr(md5(array_to_string(toks[i:i+2], ' ')), 1, 8))
-                     ELSE CAST([] AS VARCHAR[]) END AS grams
-              FROM t
-            ), m AS (
-              SELECT doc_id,
-                     CASE WHEN len(grams) >= 4 THEN
-                       list_transform(generate_series(1, len(grams) - 3),
-                         j -> list_min(grams[j:j+3]))
-                     WHEN len(grams) >= 1 THEN [list_min(grams)]
-                     ELSE CAST([] AS VARCHAR[]) END AS mins
-              FROM g
-            ), fp AS (
-              SELECT doc_id, list_distinct(mins) AS fps FROM m
-            ), sizes AS (
-              SELECT doc_id, len(fps) AS n_fp FROM fp
-            ), post AS (
-              SELECT doc_id, unnest(fps) AS f FROM fp
-            ), elig AS (
-              SELECT f FROM post GROUP BY f
-              HAVING count(*) BETWEEN 2 AND 64
-            ), gated AS (
-              SELECT p.doc_id, p.f FROM post p JOIN elig e USING (f)
-            ), pairs AS (
-              SELECT l.doc_id AS id_a, r.doc_id AS id_b,
-                     count(*) AS shared_fp
-              FROM gated l JOIN gated r
-                ON l.f = r.f AND l.doc_id < r.doc_id
-              GROUP BY 1, 2
-              HAVING count(*) >= 2
-            )
-            SELECT p.id_a, p.id_b, CAST(p.shared_fp AS BIGINT) AS shared_fp,
-                   round(p.shared_fp / least(a.n_fp, b.n_fp), 6) AS containment
-            FROM pairs p
-            JOIN sizes a ON p.id_a = a.doc_id
-            JOIN sizes b ON p.id_b = b.doc_id
-        """,
         "bigram_logprob": r"""
             WITH toks AS (
               SELECT doc_id,
@@ -3869,38 +3604,6 @@ def _build_oracle_sql() -> dict[str, str]:
             SELECT d.doc_id, coalesce(a.cleaned, '') AS cleaned_text
             FROM documents d LEFT JOIN agg a USING (doc_id)
         """,
-        "stratified_sample": """
-            WITH s AS (
-              SELECT doc_id, lang,
-                     ('0x' || substr(md5(doc_id::VARCHAR || 'r3'), 1, 8))::BIGINT
-                       / 4294967296.0 AS u,
-                     CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.25
-                               WHEN 'fr' THEN 0.1 ELSE 0.05 END AS rate
-              FROM documents
-            )
-            SELECT doc_id, lang, u FROM s WHERE u < rate
-        """,
-        "chunk_docs": """
-            WITH t AS (
-              SELECT doc_id AS id,
-                     list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-              FROM documents
-            ), c AS (
-              SELECT id, toks,
-                     CASE WHEN len(toks) <= 0 THEN 0
-                          WHEN len(toks) <= 24 THEN 1
-                          ELSE CAST(ceil((len(toks) - 24) / 16.0) AS INT) + 1
-                     END AS n_chunks
-              FROM t
-            ), e AS (
-              SELECT id, toks, unnest(range(0, n_chunks)) AS i FROM c
-            )
-            SELECT id, CAST(i AS INT) AS chunk_idx,
-                   CAST(i * 16 AS INT) AS start_token,
-                   CAST(len(toks[i*16+1 : i*16+24]) AS INT) AS n_chunk_tokens,
-                   array_to_string(toks[i*16+1 : i*16+24], ' ') AS chunk_text
-            FROM e
-        """,
         "unigram_logprob": """
             WITH tok AS (
               SELECT doc_id AS id,
@@ -3915,81 +3618,6 @@ def _build_oracle_sql() -> dict[str, str]:
                      AS bits_per_token
             FROM tok JOIN freq USING (token)
             GROUP BY id
-        """,
-        "mixture_plan": """
-            WITH avail AS (
-              SELECT source, count(*) AS n_docs,
-                     CAST(sum(len(list_filter(string_split_regex(text, '\\s+'),
-                                              x -> x <> ''))) AS BIGINT)
-                       AS available_tokens
-              FROM documents GROUP BY source
-            ), w AS (
-              SELECT *, CASE source WHEN 'src0' THEN 3.0/4.5
-                                    WHEN 'src1' THEN 1.0/4.5
-                                    WHEN 'src2' THEN 0.5/4.5
-                                    ELSE 0.0 END AS wt
-              FROM avail
-            )
-            SELECT source, n_docs, available_tokens,
-                   round(wt, 6) AS weight,
-                   CAST(round(wt * 6000) AS BIGINT) AS target_tokens,
-                   round(wt * 6000 / available_tokens, 6) AS sample_rate
-            FROM w
-        """,
-        "mixture_sample": """
-            WITH s AS (
-              SELECT doc_id, source,
-                     ('0x' || substr(md5(doc_id::VARCHAR || 'r4'), 1, 8))::BIGINT
-                       / 4294967296.0 AS u,
-                     CASE source WHEN 'src0' THEN 2.787456
-                                 WHEN 'src1' THEN 0.86580
-                                 WHEN 'src2' THEN 0.473703
-                                 ELSE 0.0 END AS rate
-              FROM documents
-            ), c AS (
-              SELECT doc_id, source, u,
-                     CAST(floor(rate) +
-                          CASE WHEN u < rate - floor(rate) THEN 1 ELSE 0 END
-                          AS INT) AS n_copies
-              FROM s
-            )
-            SELECT doc_id, source, CAST(i AS INT) AS _copy, u
-            FROM (SELECT doc_id, source, u, unnest(range(1, n_copies + 1)) AS i
-                  FROM c)
-        """,
-        "bm25_search": r"""
-            WITH base AS (
-              SELECT doc_id AS id,
-                     list_filter(string_split_regex(lower(text), '\s+'),
-                                 x -> x <> '') AS toks
-              FROM documents
-            ), d AS (
-              SELECT id, len(toks) AS dl,
-                     list_filter(toks,
-                                 t -> list_contains(['merge','spark','vector'], t)
-                                ) AS hits
-              FROM base
-            ), stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
-            tf AS (
-              SELECT id, dl, term, count(*) AS tf
-              FROM (SELECT id, dl, unnest(hits) AS term FROM d)
-              GROUP BY id, dl, term
-            ), dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-            SELECT id, count(*) AS n_terms_hit,
-                   round(sum( ln(1 + (n_docs - df + 0.5)/(df + 0.5))
-                              * (tf * 2.2)
-                              / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)) ),
-                         4) AS score
-            FROM tf JOIN dft USING (term) CROSS JOIN stats
-            GROUP BY id
-        """,
-        "corpus_shuffle": """
-            SELECT doc_id AS id,
-                   md5(CAST(doc_id AS VARCHAR) || ':r4') AS shuffle_key,
-                   row_number() OVER (
-                     ORDER BY md5(CAST(doc_id AS VARCHAR) || ':r4'), doc_id
-                   ) AS position
-            FROM documents
         """,
         "top_ngrams": r"""
             WITH t AS (

@@ -527,12 +527,11 @@ def simhash_band_chunks(
     (b+1)*n_bits/n_bands)).
 
     THE single definition of the band layout. The near-dup self-join
-    (:func:`simhash_near_dup`), benchmark decontamination
-    (``corpus.decontaminate``) and the incremental signature store
-    (``operators.incremental_dedup``) all bucket by these chunks; if any of
-    them computed the slices differently, a store written by one operator
-    would be probed with incompatible chunks by another and silently miss
-    matches — so they all call this."""
+    (:func:`simhash_near_dup`) and the incremental signature store
+    (``operators.incremental_dedup``) both bucket by these chunks; if
+    either computed the slices differently, a store written by one operator
+    would be probed with incompatible chunks by the other and silently miss
+    matches — so both call this."""
     c = _c_col(col)
     bounds = [b * n_bits // n_bands for b in range(n_bands + 1)]
     return F.array(

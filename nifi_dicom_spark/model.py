@@ -23,17 +23,6 @@ from pyspark.sql import types as T
 
 # --- target table ----------------------------------------------------------
 
-TRANSCRIPTS_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-    ]
-)
-
 #: columns that carry payload (everything except the identity key)
 PAYLOAD_COLUMNS = ["role", "text", "tool", "ts"]
 KEY_COLUMNS = ["conv_id", "turn_idx"]
@@ -65,8 +54,6 @@ CHANGE_EVENTS_SCHEMA = T.StructType(
     + [T.StructField("tool", T.StringType(), True)]
     + CHANGE_EVENTS_SCHEMA_V1.fields[8:]
 )
-
-EVENT_META_COLUMNS = ["offset", "partition_id", "op", "op_seq", "schema_ver"]
 
 #: Arrow types of the change-event WIRE format — the single source of truth
 #: for every single-file parquet writer of event logs (fixture generator,

@@ -1,313 +1,9 @@
-"""Corpus-building operators: shard packing (distributed prefix sum),
-containment pairs (winnowing posting join), stratified sampling
-(deterministic md5 filter)."""
+"""Text-statistics and duplicated-span operators: unigram and bigram
+log-probabilities and top n-grams (``functions/text.py``), exact
+duplicated-span detection and stripping (``functions/dedup_text.py``),
+checked against pure-Python replays and hand-built documents."""
 
 from __future__ import annotations
-
-import hashlib
-
-from pyspark.sql import functions as F
-
-from nifi_dicom_spark.functions.corpus import (
-    containment_pairs,
-    pack_shards,
-    sample_uniform,
-    stratified_sample,
-)
-
-
-def test_pack_shards_matches_serial_replay(spark):
-    """The two-phase distributed prefix sum equals the serial cumsum, with
-    boundary-straddling docs assigned to the shard where they start."""
-    rows = [(i, (i * 37) % 90 + 10) for i in range(200)]  # weights 10..99
-    df = spark.createDataFrame(rows, "doc_id long, n_tokens int")
-    out = {
-        r["id"]: r
-        for r in pack_shards(
-            df, "doc_id", "n_tokens", target_weight=500, n_partitions=8
-        ).collect()
-    }
-    assert len(out) == 200
-    cum = 0
-    for i, wt in rows:
-        start = cum
-        cum += wt
-        assert out[i]["weight"] == wt
-        assert out[i]["cum_weight"] == cum, i
-        assert out[i]["shard_id"] == start // 500, i
-    # shards are contiguous in id order and at most one doc overflows each
-    by_shard: dict[int, list[int]] = {}
-    for i, _ in rows:
-        by_shard.setdefault(out[i]["shard_id"], []).append(i)
-    ids_sorted = sorted(out)
-    flat = [i for s in sorted(by_shard) for i in sorted(by_shard[s])]
-    assert flat == ids_sorted
-
-
-def test_pack_shards_sparse_nonuniform_ids(spark):
-    """Range repartitioning must not assume dense ids."""
-    rows = [(10**9 + i * i, 100) for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id long, n_tokens int")
-    out = pack_shards(df, "doc_id", "n_tokens", 250, n_partitions=8).collect()
-    got = {r["id"]: r["shard_id"] for r in out}
-    for rank, (i, _) in enumerate(sorted(rows)):
-        assert got[i] == (rank * 100) // 250
-
-
-def test_containment_pairs_embedded_doc(spark):
-    base = " ".join(f"tok{i}" for i in range(40))
-    embedded = " ".join(f"tok{i}" for i in range(10, 30))  # substring of base
-    unrelated = " ".join(f"zzz{i}" for i in range(30))
-    df = spark.createDataFrame(
-        [(1, base), (2, embedded), (3, unrelated)], "doc_id long, text string"
-    )
-    got = {
-        (r["id_a"], r["id_b"]): r
-        for r in containment_pairs(df, "text", "doc_id", min_shared=2).collect()
-    }
-    assert (1, 2) in got
-    # winnowing guarantee: the 20-word shared run yields shared fingerprints;
-    # the smaller doc is (nearly) contained
-    assert got[(1, 2)]["containment"] >= 0.5
-    assert not any(3 in pair for pair in got)
-
-
-def test_containment_hot_fingerprint_cap(spark):
-    """A fingerprint shared by more docs than max_postings generates no
-    pairs (quadratic-corner guard)."""
-    boiler = "same same same boilerplate words here"
-    df = spark.createDataFrame(
-        [(i, boiler) for i in range(10)], "doc_id long, text string"
-    )
-    assert (
-        containment_pairs(df, "text", "doc_id", min_shared=1, max_postings=5)
-        .count()
-        == 0
-    )
-    # raise the cap → all 45 pairs appear with containment 1.0
-    out = containment_pairs(
-        df, "text", "doc_id", min_shared=1, max_postings=16
-    ).collect()
-    assert len(out) == 45
-    assert all(r["containment"] == 1.0 for r in out)
-
-
-def test_sample_uniform_replays_md5(spark):
-    df = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
-    got = {
-        r["doc_id"]: r["u"]
-        for r in df.select(
-            "doc_id", sample_uniform("doc_id", salt="s").alias("u")
-        ).collect()
-    }
-    for i in range(20):
-        expect = int(hashlib.md5(f"{i}s".encode()).hexdigest()[:8], 16) / 2**32
-        assert abs(got[i] - expect) < 1e-12
-
-
-def test_stratified_sample_deterministic_and_rate(spark):
-    rows = [(i, "en" if i % 2 else "de") for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    kept1 = stratified_sample(
-        df, "doc_id", "lang", {"en": 0.5, "de": 0.1}, salt="t"
-    )
-    ids1 = sorted(r["doc_id"] for r in kept1.collect())
-    ids2 = sorted(
-        r["doc_id"]
-        for r in stratified_sample(
-            df, "doc_id", "lang", {"en": 0.5, "de": 0.1}, salt="t"
-        ).collect()
-    )
-    assert ids1 == ids2  # bit-identical across runs
-    en = sum(1 for i in ids1 if i % 2)
-    de = sum(1 for i in ids1 if not i % 2)
-    assert abs(en / 1000 - 0.5) < 0.06
-    assert abs(de / 1000 - 0.1) < 0.04
-    # python replay agrees row-for-row
-    expect = [
-        i
-        for i, lang in rows
-        if int(hashlib.md5(f"{i}t".encode()).hexdigest()[:8], 16) / 2**32
-        < (0.5 if lang == "en" else 0.1)
-    ]
-    assert ids1 == sorted(expect)
-    # unknown group uses default_rate (0.0 → dropped entirely)
-    other = spark.createDataFrame([(1, "xx")], "doc_id long, lang string")
-    assert stratified_sample(other, "doc_id", "lang", {"en": 1.0}).count() == 0
-
-
-def test_pack_shards_plan_has_no_global_window(spark):
-    """The scale contract: no single-partition Exchange (global window)
-    anywhere in the plan — partitioning comes from range repartition."""
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("doc_id"), F.lit(10).alias("n_tokens")
-    )
-    out = pack_shards(df, "doc_id", "n_tokens", 100, n_partitions=8)
-    # localCheckpoint already materialized it; re-derive the logical plan
-    # from a fresh call without the checkpoint for plan inspection
-    from nifi_dicom_spark.functions import corpus as C
-
-    base = (
-        df.select(F.col("doc_id").alias("id"), F.col("n_tokens").cast("long").alias("weight"))
-        .repartitionByRange(8, "id")
-        .sortWithinPartitions("id")
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    plan = base._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-    assert out.count() == 1000
-
-
-# --- decontamination ---------------------------------------------------------
-
-
-def test_decontaminate_planted_and_plan(spark):
-    from nifi_dicom_spark.functions.corpus import decontaminate
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
-    heldout = spark.createDataFrame(
-        [(100, base), (101, "totally different benchmark prompt here")],
-        ["doc_id", "text"],
-    )
-    train = spark.createDataFrame(
-        [
-            (1, base),  # exact copy of heldout 100 → hamming 0
-            # same token SET, different order/multiplicity — simhash is a
-            # bag-of-distinct-tokens measure, so this is hamming 0 too
-            (2, "kappa iota theta eta zeta epsilon delta gamma beta alpha alpha"),
-            (3, "unrelated text about spark shuffles and parquet readers"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = decontaminate(train, heldout, "text", "doc_id")
-    rows = {r["id"]: r for r in out.collect()}
-    assert 1 in rows and rows[1]["matched_heldout_id"] == 100
-    assert rows[1]["min_hamming"] == 0 and rows[1]["n_matches"] == 1
-    assert 2 in rows, "near-copy should collide on a chunk and verify"
-    assert 3 not in rows
-    # plan shape: heldout chunks broadcast — the train side must not be
-    # exchanged for the candidate join
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_decontaminate_rejects_bad_pigeonhole(spark):
-    import pytest as _pytest
-
-    from nifi_dicom_spark.functions.corpus import decontaminate
-
-    df = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
-    with _pytest.raises(ValueError, match="pigeonhole"):
-        decontaminate(df, df, "text", "doc_id", max_hamming=4, n_bands=4)
-
-
-def test_chunk_documents_boundaries(spark):
-    """Chunk arithmetic against a hand-computed serial replay: stride =
-    max−overlap, last chunk is the short remainder, n≤max yields one
-    chunk, empty docs yield none — and the operator stays a zero-shuffle
-    projection (no Exchange in the plan)."""
-    import re
-
-    from nifi_dicom_spark.functions.corpus import chunk_documents
-
-    docs = spark.createDataFrame(
-        [
-            (1, " ".join(f"t{i}" for i in range(10))),  # 10 toks → 1 chunk
-            (2, " ".join(f"u{i}" for i in range(25))),  # 25 → chunks at 0,6,12,18
-            (3, ""),  # empty → none
-            (4, "one two"),  # short → 1 chunk
-        ],
-        "doc_id long, text string",
-    )
-    out = chunk_documents(docs, max_tokens=10, overlap=4)
-    rows = {(r["id"], r["chunk_idx"]): r for r in out.collect()}
-    # serial replay
-    def expect(n, mx=10, ov=4):
-        stride = mx - ov
-        if n <= 0:
-            return []
-        if n <= mx:
-            return [(0, n)]
-        import math
-        k = math.ceil((n - mx) / stride) + 1
-        return [(i * stride, min(mx, n - i * stride)) for i in range(k)]
-
-    for did, n in ((1, 10), (2, 25), (3, 0), (4, 2)):
-        exp = expect(n)
-        got = sorted(k for k in rows if k[0] == did)
-        assert len(got) == len(exp), (did, got, exp)
-        for idx, (start, length) in enumerate(exp):
-            r = rows[(did, idx)]
-            assert r["start_token"] == start and r["n_chunk_tokens"] == length
-    # overlap really carries tokens: chunk1 of doc 2 starts at token 6
-    assert rows[(2, 1)]["chunk_text"].split()[0] == "u6"
-    assert rows[(2, 0)]["chunk_text"].split()[-1] == "u9"  # 4-token overlap
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert not re.search(r"Exchange (hash|range|Single)", plan)
-    import pytest
-
-    with pytest.raises(ValueError):
-        chunk_documents(docs, max_tokens=10, overlap=10)
-
-
-def test_mixture_plan_and_sample(spark):
-    """Plan arithmetic (weights normalized, rate = target/available) and
-    BOTH sampling directions: rate>1 repeats docs floor(r)(+1 on the
-    fractional uniform) times, rate<1 keeps the md5-uniform subset; kept
-    multiset is a pure function of ids (re-run identical), expected token
-    mass tracks the target, and the sample plan has no Exchange."""
-    import re
-
-    from nifi_dicom_spark.functions.corpus import (
-        mixture_plan,
-        mixture_sample,
-        sample_uniform,
-    )
-
-    n = 400
-    docs = spark.createDataFrame(
-        [(i, "a" if i % 2 == 0 else "b", "w x y z") for i in range(n)],
-        "doc_id long, source string, text string",
-    )
-    plan = {
-        r["source"]: r
-        for r in mixture_plan(
-            docs, weights={"a": 3.0, "b": 1.0}, token_budget=2000
-        ).collect()
-    }
-    assert plan["a"]["available_tokens"] == 800 and plan["a"]["n_docs"] == 200
-    assert plan["a"]["weight"] == 0.75 and plan["a"]["target_tokens"] == 1500
-    assert plan["a"]["sample_rate"] == round(1500 / 800, 6)  # 1.875 upsample
-    assert plan["b"]["sample_rate"] == round(500 / 800, 6)  # 0.625 downsample
-
-    rates = {"a": 1.875, "b": 0.625}
-    out = mixture_sample(docs, rates, salt="s")
-    rows = out.collect()
-    # determinism: bit-identical multiset on re-run
-    again = mixture_sample(docs, rates, salt="s").collect()
-    key = lambda r: (r["doc_id"], r["_copy"])
-    assert sorted(map(key, rows)) == sorted(map(key, again))
-    # direction semantics per doc: copies = floor(r) (+1 iff u < frac(r))
-    u = {
-        r["doc_id"]: r["u"]
-        for r in docs.select(
-            "doc_id", sample_uniform("doc_id", "s").alias("u")
-        ).collect()
-    }
-    import collections
-
-    copies = collections.Counter(r["doc_id"] for r in rows)
-    for i in range(n):
-        r = rates["a" if i % 2 == 0 else "b"]
-        exp = int(r) + (1 if u[i] < r - int(r) else 0)
-        assert copies.get(i, 0) == exp, (i, r, u[i])
-    # _copy is 1..n_copies (epochs distinguishable)
-    per = collections.defaultdict(list)
-    for r in rows:
-        per[r["doc_id"]].append(r["_copy"])
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per.values())
-    plan_str = out._jdf.queryExecution().executedPlan().toString()
-    assert not re.search(r"Exchange (hash|range|Single)", plan_str)
 
 
 def test_unigram_logprob_matches_serial(spark):
@@ -336,103 +32,6 @@ def test_unigram_logprob_matches_serial(spark):
         ) < 2e-4
 
 
-def test_corpus_shuffle_is_dense_permutation(spark):
-    """Positions are exactly 1..N, ordered by the md5 key; stable across
-    partition counts (the offset fold is partitioning-invariant)."""
-    from nifi_dicom_spark.functions.corpus import corpus_shuffle
-
-    ids = [(f"doc{i}",) for i in range(97)]
-    df = spark.createDataFrame(ids, "doc_id string")
-    out = corpus_shuffle(df, salt="s1", n_partitions=7).collect()
-    assert sorted(r["position"] for r in out) == list(range(1, 98))
-    by_key = sorted(out, key=lambda r: (r["shuffle_key"], r["id"]))
-    assert [r["position"] for r in by_key] == list(range(1, 98))
-    # serial replay: md5 recomputed in Python gives the same order
-    expect = {
-        doc: hashlib.md5(f"{doc}:s1".encode()).hexdigest() for (doc,) in ids
-    }
-    for r in out:
-        assert r["shuffle_key"] == expect[r["id"]]
-    # different partitioning, identical result
-    out2 = corpus_shuffle(df, salt="s1", n_partitions=3).collect()
-    assert {(r["id"], r["position"]) for r in out2} == {
-        (r["id"], r["position"]) for r in out
-    }
-    # different salt, different order (overwhelmingly)
-    out3 = corpus_shuffle(df, salt="s2", n_partitions=7).collect()
-    assert {(r["id"], r["position"]) for r in out3} != {
-        (r["id"], r["position"]) for r in out
-    }
-
-
-def test_corpus_shuffle_plan_has_no_global_window(spark):
-    """The scale contract: no single-partition Exchange — the window stage
-    rides the range repartition, same shape pack_shards asserts."""
-    from nifi_dicom_spark.functions.corpus import corpus_shuffle
-
-    df = spark.range(0, 1000).select(F.col("id").cast("string").alias("doc_id"))
-    # localCheckpoint inside corpus_shuffle hides its plan; re-derive the
-    # pre-checkpoint stage exactly as the function builds it
-    key = F.md5(F.concat(F.col("doc_id"), F.lit(":")))
-    base = (
-        df.select(F.col("doc_id").alias("id"), key.alias("shuffle_key"))
-        .repartitionByRange(8, "shuffle_key", "id")
-        .sortWithinPartitions("shuffle_key", "id")
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    plan = base._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-    assert corpus_shuffle(df, n_partitions=8).count() == 1000
-
-
-def test_bm25_matches_serial_replay(spark):
-    """Exact BM25 vs a pure-Python implementation on a hand-built corpus,
-    including docs with zero hits (they shape avgdl but emit no row)."""
-    import math
-
-    from nifi_dicom_spark.functions.search import bm25_search
-
-    texts = {
-        1: "spark merge spark window",
-        2: "merge only once here padded padded padded",
-        3: "no relevant words at all",
-        4: "",
-        5: "SPARK Spark spark",
-    }
-    terms = ["spark", "merge"]
-    docs = spark.createDataFrame(
-        [(k, v) for k, v in texts.items()], "doc_id long, text string"
-    )
-    out = {r["id"]: r for r in bm25_search(docs, terms).collect()}
-    toks = {k: v.lower().split() for k, v in texts.items()}
-    n_docs = len(texts)
-    avgdl = sum(len(t) for t in toks.values()) / n_docs
-    dfreq = {
-        t: sum(1 for tk in toks.values() if t in tk) for t in terms
-    }
-    k1, b = 1.2, 0.75
-    assert set(out) == {1, 2, 5}  # 3 and 4 have no hits
-    for did in out:
-        exp, hits = 0.0, 0
-        for t in terms:
-            tf = toks[did].count(t)
-            if tf == 0:
-                continue
-            hits += 1
-            idf = math.log(1 + (n_docs - dfreq[t] + 0.5) / (dfreq[t] + 0.5))
-            dl = len(toks[did])
-            exp += idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
-        assert out[did]["n_terms_hit"] == hits
-        assert abs(out[did]["score"] - round(exp, 4)) < 1e-9, did
-    # empty term set is an error, case folding on the query side too
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        bm25_search(docs, [])
-    out_uc = {r["id"]: r["score"] for r in bm25_search(docs, ["SPARK", "Merge"]).collect()}
-    assert out_uc == {k: v["score"] for k, v in out.items()}
-
-
 def test_top_ngrams_counts_and_ties(spark):
     """Bigram counts vs serial replay; short docs contribute nothing; the
     (cnt desc, ngram asc) order is total and the limit stable."""
@@ -453,84 +52,6 @@ def test_top_ngrams_counts_and_ties(spark):
     # n=1 degenerates to token counts
     uni = {r["ngram"]: r["cnt"] for r in top_ngrams(docs, n=1, k=10).collect()}
     assert uni == {"a": 2, "b": 3, "c": 2, "x": 1}
-
-
-def test_corpus_job_pipeline_end_to_end(spark, tmp_path):
-    """The composite spark-submit pipeline (jobs/corpus_job.run_pipeline):
-    stage counts monotone, heldout docs actually removed, shard packing
-    respects the token budget, and the whole run is deterministic —
-    re-running into a fresh dir yields identical shard assignments."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from jobs.corpus_job import run_pipeline
-
-    src = "/root/testdata/sf0.001/documents.parquet"
-    # heldout = a slice of the corpus itself → guaranteed contamination hits
-    heldout_dir = str(tmp_path / "heldout")
-    spark.read.parquet(src).filter("doc_id < 5").select(
-        "doc_id", "text"
-    ).write.parquet(heldout_dir)
-
-    out1 = str(tmp_path / "shards1")
-    m = run_pipeline(
-        spark,
-        input_path=src,
-        output_path=out1,
-        heldout_path=heldout_dir,
-        weights={"src0": 2.0, "src1": 1.0, "src2": 0.5},
-        token_budget=5_000,
-        shard_tokens=2_000,
-        min_tokens=5,
-        salt="t1",
-    )
-    assert (
-        m["input_docs"]
-        >= m["after_exact_dedup"]
-        >= m["after_near_dup"]
-        >= m["after_quality_filter"]
-        >= m["after_decontaminate"]
-        > 0
-    )
-    got = spark.read.parquet(out1)
-    rows = got.collect()
-    assert m["output_docs"] == len(rows) == m["sampled_docs"]
-    # planted heldout docs must be gone (exact copies → simhash hamming 0)
-    assert not [r for r in rows if r["doc_id"] < 5]
-    # positions are dense 1..N and shard ids contiguous in position order
-    assert sorted(r["position"] for r in rows) == list(range(1, len(rows) + 1))
-    by_pos = sorted(rows, key=lambda r: r["position"])
-    shard_seq = [r["shard_id"] for r in by_pos]
-    assert shard_seq == sorted(shard_seq)
-    # packing invariant: each shard's tokens < budget + one straddling doc
-    from collections import defaultdict
-
-    tok = defaultdict(int)
-    for r in rows:
-        tok[r["shard_id"]] += r["n_tokens"]
-    max_doc = max(r["n_tokens"] for r in rows)
-    assert all(t < 2_000 + max_doc for t in tok.values())
-    # upsampled sources carry _copy > 1 for some docs (rate 2.0 on src0)
-    assert any(r["_copy"] > 1 for r in rows)
-
-    # determinism: identical shard assignment on a re-run
-    out2 = str(tmp_path / "shards2")
-    m2 = run_pipeline(
-        spark,
-        input_path=src,
-        output_path=out2,
-        heldout_path=heldout_dir,
-        weights={"src0": 2.0, "src1": 1.0, "src2": 0.5},
-        token_budget=5_000,
-        shard_tokens=2_000,
-        min_tokens=5,
-        salt="t1",
-    )
-    assert m2 == {**m, "output_path": out2}
-    key = ["shard_id", "position", "doc_id", "_copy"]
-    a = {tuple(r) for r in spark.read.parquet(out1).select(key).collect()}
-    b = {tuple(r) for r in spark.read.parquet(out2).select(key).collect()}
-    assert a == b
 
 
 # --- exact duplicated-span detection ------------------------------------------

@@ -1,11 +1,12 @@
 """Dead-code tripwire for the package.
 
-Every public top-level function and class in ``nifi_dicom_spark/`` must be
-referenced as an identifier — a ``Name``, an ``Attribute`` or an import
-alias — somewhere other than its own ``def``, in any tracked ``.py`` file
-(the package, the entrypoints, ``perfbench/``, ``jobs/`` and the tests).
-Strings and docstrings do not count, so a helper that only a docstring
-mentions is flagged.
+Every public top-level function, class and module constant (a name
+assigned at module level) in ``nifi_dicom_spark/`` must be referenced as an
+identifier — a ``Name``, an ``Attribute`` or an import alias — somewhere
+other than the statement that defines it, in any tracked ``.py`` file (the
+package, the entrypoints, ``perfbench/``, ``jobs/`` and the tests). Strings
+and docstrings do not count, so a helper that only a docstring mentions is
+flagged.
 
 The same modules never set or unset a session conf (``spark.conf.set``, or
 ``conf.set`` on a bound ``conf``): a write that needs a conf toggled to be
@@ -53,21 +54,36 @@ def _identifiers(node: ast.AST):
             yield n.name.rsplit(".", 1)[-1]
 
 
+def _defined_names(top: ast.stmt) -> frozenset[str]:
+    if isinstance(top, DEFS):
+        return frozenset({top.name})
+    if isinstance(top, (ast.Assign, ast.AnnAssign)):
+        targets = top.targets if isinstance(top, ast.Assign) else [top.target]
+        return frozenset(
+            n.id
+            for t in targets
+            for n in ast.walk(t)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+        )
+    return frozenset()
+
+
 def _unreferenced() -> list[str]:
     defs: list[tuple[str, str]] = []  # (file, name)
-    refs: dict[str, set[tuple[str, str | None]]] = {}  # name -> {(file, owner)}
+    # name -> {(file, names the referencing top-level statement defines)}
+    refs: dict[str, set[tuple[str, frozenset[str]]]] = {}
     for rel in _tracked_py_files():
         tree = ast.parse((REPO / rel).read_text(), filename=rel)
         for top in tree.body:
-            owner = top.name if isinstance(top, DEFS) else None
-            if owner and rel.startswith(PACKAGE) and not owner.startswith("_"):
-                defs.append((rel, owner))
+            owners = _defined_names(top)
+            if rel.startswith(PACKAGE):
+                defs += [(rel, o) for o in owners if not o.startswith("_")]
             for ident in _identifiers(top):
-                refs.setdefault(ident, set()).add((rel, owner))
+                refs.setdefault(ident, set()).add((rel, owners))
     return sorted(
         f"{rel}::{name}"
         for rel, name in defs
-        if not any((f, o) != (rel, name) for f, o in refs.get(name, ()))
+        if not any(f != rel or name not in o for f, o in refs.get(name, ()))
     )
 
 

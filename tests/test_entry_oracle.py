@@ -58,7 +58,10 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
 
 
 ORACLED = sorted(entry_mod.oracle_sql().keys())
-ROWS_ONLY = sorted(set(entry_mod.queries()) - set(ORACLED))
+
+
+def test_every_query_has_an_oracle():
+    assert set(entry_mod.queries()) == set(ORACLED)
 
 
 @pytest.mark.parametrize("name", ORACLED)
@@ -70,14 +73,6 @@ def test_query_matches_oracle(spark, duck, name):
     assert sorted(spark_df.columns) == sorted(duck_df.columns), f"{name}: columns"
     a, b = _norm(spark_df), _norm(duck_df)
     pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=False, rtol=0, atol=1e-9)
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(spark, name):
-    q = entry_mod.queries()[name]
-    df = q(spark, SF_DIR)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
 
 
 def test_entry_smoke(spark):

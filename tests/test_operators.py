@@ -571,28 +571,6 @@ def test_deadletter_reason_null_op_and_duplicate_offsets(spark, tmp_path):
     assert rows[2]["retry_count"] == 1  # one batch = one increment, not two
 
 
-def test_mixture_plan_surfaces_absent_weighted_source(spark):
-    """A weighted source with NO corpus rows (e.g. a typo) must appear in
-    the plan as an explicit zero-availability row with a NULL (unsatisfiable)
-    sample_rate — not silently vanish and shrink the mixture."""
-    from nifi_dicom_spark.functions.corpus import mixture_plan
-
-    docs = spark.createDataFrame(
-        [(1, "wiki", "w x y z")], "doc_id long, source string, text string"
-    )
-    plan = {
-        r["source"]: r
-        for r in mixture_plan(
-            docs, weights={"wiki": 0.5, "bookz": 0.5}, token_budget=100
-        ).collect()
-    }
-    assert plan["bookz"]["n_docs"] == 0
-    assert plan["bookz"]["available_tokens"] == 0
-    assert plan["bookz"]["target_tokens"] == 50
-    assert plan["bookz"]["sample_rate"] is None  # unsatisfiable, flagged
-    assert plan["wiki"]["sample_rate"] == round(50 / 4, 6)
-
-
 def test_deadletter_retry_counters(spark, tmp_path):
     """T7: re-quarantined events increment retry_count exactly once per
     epoch (idempotent under epoch replay); poison set respects max_retries."""

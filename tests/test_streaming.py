@@ -385,10 +385,13 @@ def test_gap_timeout_conversation_completeness(spark, tmp_path):
 
     schema = pa.schema([("conv_id", pa.string()), ("ts", pa.timestamp("us"))])
     for i, pdf in enumerate((early, late, keeper, straggler, flusher, final)):
+        path = ev_dir / f"part-{i:03d}.parquet"
         pq.write_table(
-            pa.Table.from_pandas(pdf, schema=schema, preserve_index=False),
-            ev_dir / f"part-{i:03d}.parquet",
+            pa.Table.from_pandas(pdf, schema=schema, preserve_index=False), path
         )
+        # the file source takes files in mtime order, and files written in
+        # the same millisecond tie in listing order: give each its own second
+        os.utime(path, (1_700_000_000 + i,) * 2)
 
     src = (
         spark.readStream.schema("conv_id string, ts timestamp")
