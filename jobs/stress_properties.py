@@ -62,6 +62,11 @@ SPARK_DOMAINS = {
         "n_epochs": ("int", 1, 4),
         "layout": ["keys", "keys_split", "by_n"],
     },
+    "test_driver_apply_matches_spark_apply": {
+        "seed": ("int", 0, 10_000),
+        "n": ("int", 1, 200),
+        "n_epochs": ("int", 1, 3),
+    },
 }
 
 

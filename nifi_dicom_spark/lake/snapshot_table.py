@@ -48,11 +48,15 @@ Merges touch only buckets the source contains, and a ``versioned_upsert``
 merge appends per-bucket DELTA files instead of rewriting touched buckets
 (merge-on-read) — epoch cost is ∝ the change set, not the table size; reads
 LWW-merge base∪deltas (exact — the reduce is associative) and ``compact()``
-folds deltas back into base when a bucket accumulates too many. A
-compaction whose files total at most ``DRIVER_READ_MAX_BYTES`` folds each
-bucket on the driver (pyarrow read, the Arrow LWW kernel, a pyarrow write:
-no Spark job, no shuffle); larger ones, and tables with a z-order
-declaration, run as a Spark reduce and bucket write. murmur3 is
+folds deltas back into base when a bucket accumulates too many. Small
+work runs on the driver under one byte cap, ``DRIVER_READ_MAX_BYTES``:
+lookups and scans, a compaction, which folds each bucket with a pyarrow
+read, the Arrow LWW kernel and a pyarrow write, and a versioned merge of
+an Arrow batch (``apply_changes`` hands small batches over as one), which
+reduces it with the same kernel and writes its deltas with the same
+writer. None of them runs a shuffle; larger ones, and compactions of
+tables with a z-order declaration, run as a Spark reduce and bucket
+write. murmur3 is
 the only bucket layout bucket-aware operations accept; a manifest with any
 other ``bucket_fn`` stays readable and migrates with :meth:`SnapshotTable.
 rebucket`.
@@ -67,7 +71,7 @@ import time
 import uuid
 import warnings
 from dataclasses import dataclass
-from typing import Any
+from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,6 +84,9 @@ from nifi_dicom_spark.lake.commit import (  # noqa: F401  (CommitConflict re-exp
 )
 from nifi_dicom_spark.lake.zorder import ZORDER_COL, zvalue_column
 from nifi_dicom_spark.operators.reconcile import conform_to_schema, evolve_schema
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 class VersionVacuumedError(RuntimeError):
@@ -221,13 +228,16 @@ def version_at_backend(backend: CommitBackend, timestamp) -> int:
 #: bytes runs on the driver: pyarrow reads the files and the Arrow LWW
 #: kernel (:func:`~nifi_dicom_spark.operators.dedup.arrow_lww`) reduces
 #: them; a read returns a LocalRelation and a compaction writes its files
-#: with pyarrow, so Spark's fixed cost per job is never paid. Larger ones
-#: keep the Spark path: the driver cannot hold them.
+#: with pyarrow, so Spark's fixed cost per job is never paid. A merge
+#: batch whose optimized plan Spark sizes at most this many bytes
+#: (:func:`_fits_driver_plan`) is collected once as Arrow by
+#: ``apply_changes`` and merged the same way. Larger ones keep the Spark
+#: path: the driver cannot hold them.
 DRIVER_READ_MAX_BYTES = 16 << 20
 
 #: ``spark.sql.parquet.compression.codec`` values -> the pyarrow codec
-#: that writes the same parquet compression; a compaction under any other
-#: codec keeps the Spark path
+#: that writes the same parquet compression; a compaction or merge under
+#: any other codec keeps the Spark path
 _ARROW_CODECS = {
     "none": "none",
     "uncompressed": "none",
@@ -237,6 +247,27 @@ _ARROW_CODECS = {
     "brotli": "brotli",
     "lz4_raw": "lz4",
 }
+
+
+def _fits_driver_plan(df: DataFrame) -> bool:
+    """Whether Spark sizes ``df``'s optimized plan at most
+    :data:`DRIVER_READ_MAX_BYTES`. The estimate runs no job: a file scan
+    reports its files' bytes (a streaming micro-batch too, whose
+    ``inputFiles()`` is empty), a LocalRelation its rows, and a plan Spark
+    cannot size ``spark.sql.defaultSizeInBytes``, which is above the cap."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(size) <= DRIVER_READ_MAX_BYTES
+
+
+def _driver_codec(spark: SparkSession, schema: T.StructType) -> str | None:
+    """The pyarrow codec of a driver-side write into a table of ``schema``:
+    the one that writes the session's parquet compression. None when the
+    write must run on Spark: pyarrow cannot write that compression, or
+    Arrow cannot hold a type of ``schema``."""
+    codec = _ARROW_CODECS.get(
+        spark.conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
+    )
+    return codec if codec is not None and _arrow_holds(schema) else None
 
 
 def _nullable(schema: T.StructType) -> T.StructType:
@@ -1471,43 +1502,51 @@ class SnapshotTable:
             written += 1
         return written
 
+    def _bucket_ids(self, m: dict, keys: "pa.Array") -> list[int]:
+        """The bucket of each value of the Arrow array ``keys`` (distinct
+        values of manifest ``m``'s bucket key), in order. The ids come from
+        the table's own :func:`_bucket_expr`, so they match the Spark write
+        side for every key type, but no Spark job runs: the values travel
+        as an Arrow table, which Spark turns into a LocalRelation, and the
+        optimizer folds the projection over it on the driver (a
+        LocalTableScan of the bucket ids)."""
+        import pyarrow as pa
+
+        key0 = m["key_cols"][0]
+        ktype = next(
+            f.dataType for f in _manifest_schema(m).fields if f.name == key0
+        )
+        vdf = self.spark.createDataFrame(
+            pa.table({key0: keys}), T.StructType([T.StructField(key0, ktype)])
+        )
+        return [
+            r[0]
+            for r in vdf.select(
+                _bucket_expr(key0, _murmur3_buckets(m))
+            ).collect()  # driver-local: one row per distinct value
+        ]
+
     def _lookup_plan(
         self, m: dict, values: list
     ) -> tuple[list[int], list[str], list[str]]:
         """(buckets, kept_rels, bloom_pruned_rels) for a point lookup of
         ``values`` on the bucket key. Two stages: the bucket of each value
-        (a key lives in exactly ONE bucket), then sidecar exclusion within
-        those buckets. Skipping a bloom-excluded file is LWW-safe:
-        exclusion proves the file holds NO version of any requested key, so
-        no winner or superseding tombstone can hide in it.
-
-        Bucket ids come from the table's own :func:`_bucket_expr`, so they
-        match the write side for every key type, but planning launches no
-        Spark job: the de-duplicated values travel as an Arrow table, which
-        Spark turns into a LocalRelation, and the optimizer folds the
-        projection over it on the driver (a LocalTableScan of the bucket
-        ids)."""
+        (a key lives in exactly ONE bucket; :meth:`_bucket_ids`, no Spark
+        job), then sidecar exclusion within those buckets. Skipping a
+        bloom-excluded file is LWW-safe: exclusion proves the file holds NO
+        version of any requested key, so no winner or superseding tombstone
+        can hide in it."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
         from nifi_dicom_spark.lake import bloom as _bloom
 
-        n_buckets = _murmur3_buckets(m)
         key0 = m["key_cols"][0]
         schema = _manifest_schema(m)
         ktype = next(f.dataType for f in schema.fields if f.name == key0)
         uniq = list(dict.fromkeys(values))
-        vdf = self.spark.createDataFrame(
-            pa.table({key0: pa.array(uniq, type=to_arrow_type(ktype))}),
-            T.StructType([T.StructField(key0, ktype)]),
-        )
         bks = sorted(
-            {
-                r["b"]
-                for r in vdf.select(
-                    _bucket_expr(key0, n_buckets).alias("b")
-                ).collect()  # driver-local: one row per distinct value
-            }
+            set(self._bucket_ids(m, pa.array(uniq, type=to_arrow_type(ktype))))
         )
         probes = [str(v) for v in values]
         kept: list[str] = []
@@ -1771,13 +1810,15 @@ class SnapshotTable:
 
     def merge(
         self,
-        source: DataFrame,
+        source: "DataFrame | pa.Table",
         op_col: str | None = "op",
         policy: str = "upsert",
         commit_keys: list[tuple[int, int]] | None = None,
         assert_unique_source: bool = False,
         touched_buckets: list[int] | None = None,
         on_replayed: str | None = None,
+        *,
+        manifest: dict | None = None,
     ) -> MergeStats:
         """MERGE INTO this table USING ``source`` ON the key columns.
 
@@ -1826,11 +1867,30 @@ class SnapshotTable:
         a silent skip is silent data loss. ``"warn"`` logs each regression;
         ``"error"`` raises :class:`LedgerRegression` (strict mode for
         backfill jobs that must never race a live stream).
+
+        A ``versioned_upsert`` source may also be a pyarrow Table (a batch
+        ``apply_changes`` collected on the driver). It merges with no Spark
+        job and no shuffle: the Arrow LWW kernel reduces it, the bucket of
+        each distinct key comes from :meth:`_bucket_ids`, and
+        :meth:`_write_arrow_buckets` writes the deltas. The replay gate,
+        schema evolution, CHECK constraints (over a LocalRelation of the
+        batch), the bucket-set tripwire, the commit and auto-compaction are
+        the ones a DataFrame source goes through.
+
+        ``manifest`` is the manifest to plan and commit against when the
+        caller has already loaded it (``apply_changes`` takes its column
+        bridge and bucket ids from it), so a write reads one manifest;
+        default: the current one.
         """
-        m = self.manifest()
+        m = self.manifest() if manifest is None else manifest
         key_cols = m["key_cols"]
         n_buckets = _murmur3_buckets(m)
         mor = policy == "versioned_upsert"
+        arrow = None if isinstance(source, DataFrame) else source
+        if arrow is not None and not mor:
+            raise ValueError(
+                "an Arrow merge source needs policy='versioned_upsert'"
+            )
 
         # ---- idempotency gate (exactly-once replay) -----------------------
         commit_keys, skipped = self._gate_commit_keys(m, commit_keys, on_replayed)
@@ -1838,6 +1898,15 @@ class SnapshotTable:
             return MergeStats(
                 m["version"], 0, skipped, applied=False, mode="mor" if mor else "cow"
             )
+
+        if arrow is not None:
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            src_schema = from_arrow_schema(arrow.schema)
+            if assert_unique_source or (m.get("props") or {}).get("constraints"):
+                source = self.spark.createDataFrame(arrow, src_schema)
+        else:
+            src_schema = source.schema
 
         if assert_unique_source:
             dupes = (
@@ -1849,7 +1918,7 @@ class SnapshotTable:
         # ---- schema evolution --------------------------------------------
         if mor:
             # op/op_seq/offset become stored columns of the table
-            src_payload_schema = source.schema
+            src_payload_schema = src_schema
         else:
             src_payload_schema = T.StructType(
                 [f for f in source.schema.fields if f.name != op_col]
@@ -1871,47 +1940,56 @@ class SnapshotTable:
                 conform_to_schema(chk, schema), m.get("props"),
                 key_cols=key_cols,
             )
-        bucket = _bucket_expr(key_cols[0], n_buckets)
-        src = source.withColumn("_bucket", bucket)
-
         if mor:
-            # bucket discovery: callers that already aggregate over the batch
-            # (lineage metrics) pass the touched set in — zero extra jobs;
-            # otherwise one column-pruned scan of the raw source (conv_id
-            # only — Catalyst prunes the rest), no materialization
-            touched = (
-                sorted(touched_buckets)
-                if touched_buckets is not None
-                else sorted(
-                    r["_bucket"]
-                    for r in source.select(bucket.alias("_bucket")).distinct().collect()
+            if arrow is not None:
+                new_files, footers, touched = self._merge_on_driver(
+                    m, schema, arrow, touched_buckets
                 )
-            )
-            from nifi_dicom_spark.operators.dedup import lww_dedup
+            else:
+                from nifi_dicom_spark.operators.dedup import lww_dedup
 
-            # merge-on-read: dedup ONLY the batch and append per-bucket
-            # delta files — the table's base is never read or rewritten, so
-            # epoch cost ∝ change set. Cross-batch LWW happens at read
-            # (associative reduce over base∪deltas) and at compaction.
-            # ONE exchange total: cluster by the key column exactly as the
-            # write does, let the groupBy reuse the clustering
-            # (HashPartitioning(conv_id) satisfies
-            # ClusteredDistribution(conv_id, turn_idx)), and the write's own
-            # repartition is then redundant — no second payload shuffle
-            clustered = conform_to_schema(src, schema).repartition(
-                _write_tasks(src.sparkSession, n_buckets), key_cols[0]
-            )
-            merged = lww_dedup(clustered, key_cols).select(*schema.fieldNames())
-            new_files, footers = self._write_bucket_files(
-                merged,
-                uuid.uuid4().hex[:12],
-                n_buckets,
-                key_cols=key_cols,
-                # rows = the conformed batch: every touched bucket keeps ≥1
-                # row through the dedup, so the written bucket set must
-                # equal the touched set exactly
-                expected_buckets=set(touched),
-            )
+                bucket = _bucket_expr(key_cols[0], n_buckets)
+                # bucket discovery: callers that already aggregate over the
+                # batch (lineage metrics) pass the touched set in — zero
+                # extra jobs; otherwise one column-pruned scan of the raw
+                # source (conv_id only — Catalyst prunes the rest), no
+                # materialization
+                touched = (
+                    sorted(touched_buckets)
+                    if touched_buckets is not None
+                    else sorted(
+                        r["_bucket"]
+                        for r in source.select(bucket.alias("_bucket"))
+                        .distinct()
+                        .collect()
+                    )
+                )
+                # merge-on-read: dedup ONLY the batch and append per-bucket
+                # delta files — the table's base is never read or
+                # rewritten, so epoch cost ∝ change set. Cross-batch LWW
+                # happens at read (associative reduce over base∪deltas) and
+                # at compaction. ONE exchange total: cluster by the key
+                # column exactly as the write does, let the groupBy reuse
+                # the clustering (HashPartitioning(conv_id) satisfies
+                # ClusteredDistribution(conv_id, turn_idx)), and the write's
+                # own repartition is then redundant — no second payload
+                # shuffle
+                clustered = conform_to_schema(source, schema).repartition(
+                    _write_tasks(source.sparkSession, n_buckets), key_cols[0]
+                )
+                merged = lww_dedup(clustered, key_cols).select(
+                    *schema.fieldNames()
+                )
+                new_files, footers = self._write_bucket_files(
+                    merged,
+                    uuid.uuid4().hex[:12],
+                    n_buckets,
+                    key_cols=key_cols,
+                    # rows = the conformed batch: every touched bucket keeps
+                    # ≥1 row through the dedup, so the written bucket set
+                    # must equal the touched set exactly
+                    expected_buckets=set(touched),
+                )
             stats = self._commit_merge(
                 m, schema, touched, new_files, commit_keys, policy, skipped,
                 delta=True, footers=footers,
@@ -1944,6 +2022,7 @@ class SnapshotTable:
                         )
             return stats
 
+        src = source.withColumn("_bucket", _bucket_expr(key_cols[0], n_buckets))
         # cache: we reuse source for bucket discovery + anti-join + projection
         src.persist()
         try:
@@ -1993,6 +2072,50 @@ class SnapshotTable:
             m, schema, touched, new_files, commit_keys, policy, skipped,
             footers=footers,
         )
+
+    def _merge_on_driver(
+        self,
+        m: dict,
+        schema: T.StructType,
+        batch: "pa.Table",
+        touched_buckets: list[int] | None,
+    ) -> tuple[dict[str, list[str]], dict, list[int]]:
+        """The driver route of a versioned merge of the Arrow table
+        ``batch``: conform it to the evolved ``schema``, reduce it with
+        :func:`~nifi_dicom_spark.operators.dedup.arrow_lww`, place each
+        winner by its key's :meth:`_bucket_ids` and write one delta file
+        per bucket, in key order, with :meth:`_write_arrow_buckets`.
+        Returns (bucket -> [relpath], footers, touched buckets)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from nifi_dicom_spark.operators.dedup import arrow_conform, arrow_lww
+
+        codec = _driver_codec(self.spark, schema)
+        if codec is None:
+            raise ValueError(
+                "pyarrow cannot write this table's schema or the session's "
+                "parquet codec; merge the batch as a DataFrame"
+            )
+        key_cols = m["key_cols"]
+        winners = arrow_lww(
+            arrow_conform([batch], to_arrow_schema(_nullable(schema))), key_cols
+        )
+        keys = pc.unique(winners[key_cols[0]])
+        ids = pa.array(self._bucket_ids(m, keys), pa.int32())
+        row_ids = ids.take(pc.index_in(winners[key_cols[0]], value_set=keys))
+        placed = sorted(set(ids.to_pylist()))
+        new_files, footers = self._write_arrow_buckets(
+            ((b, winners.filter(pc.equal(row_ids, b))) for b in placed),
+            schema,
+            uuid.uuid4().hex[:12],
+            codec,
+            sort_cols=key_cols,
+        )
+        touched = placed if touched_buckets is None else sorted(touched_buckets)
+        _check_buckets(new_files, set(touched))
+        return new_files, footers, touched
 
     def merge_into(
         self,
@@ -2833,10 +2956,7 @@ class SnapshotTable:
         _require_version_cols(schema)
         tag = uuid.uuid4().hex[:12]
         decl = (m.get("props") or {}).get("clustering") or {}
-        codec = _ARROW_CODECS.get(
-            self.spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
-            .lower()
-        )
+        codec = _driver_codec(self.spark, schema)
         rels = [
             rel
             for b in todo
@@ -2849,7 +2969,6 @@ class SnapshotTable:
         if (
             not decl.get("zorder_by")
             and codec is not None
-            and _arrow_holds(schema)
             and self._fits_driver(rels)
         ):
             new_files, footers = self._fold_on_driver(
@@ -2880,43 +2999,71 @@ class SnapshotTable:
         """The driver route of :meth:`compact`: for each bucket in ``todo``,
         pyarrow reads its own base and delta files (so every row stays in
         its bucket), :func:`~nifi_dicom_spark.operators.dedup.arrow_lww`
-        reduces them, and the winners are sorted by the declared ``sort_by``
-        or else the key columns (ascending, nulls first, as Spark's
-        ``sortWithinPartitions``) and written into ``c-<tag>/b=N/``, one
-        ``part-*.parquet`` file per ``max_records_per_file`` slice. Returns
-        what :meth:`_write_bucket_files` returns; the footers are the ones
-        the writer collected.
-
-        The writer matches what Spark writes to within a few percent of
-        bytes: the session's compression ``codec``, no Arrow schema blob,
-        and dictionary encoding only on columns whose distinct count is at
-        most half the bucket's rows (pyarrow's default dictionary-encodes
-        every column, which grows near-unique ones)."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
+        reduces them, and :meth:`_write_arrow_buckets` writes the winners
+        in the declared ``sort_by`` order (else the key order) into
+        ``c-<tag>/b=N/``, one file per ``max_records_per_file`` slice."""
         from nifi_dicom_spark.operators.dedup import arrow_lww
 
         decl = (m.get("props") or {}).get("clustering") or {}
-        sort_cols = list(decl.get("sort_by") or m["key_cols"])
-        max_rpf = int(decl.get("max_records_per_file") or 0)
+        folded = (
+            (
+                b,
+                arrow_lww(
+                    self._arrow_files(
+                        m,
+                        schema,
+                        [
+                            *m.get("files", {}).get(str(b), []),
+                            *m.get("delta_files", {}).get(str(b), []),
+                        ],
+                    ),
+                    m["key_cols"],
+                ),
+            )
+            for b in todo
+        )
+        return self._write_arrow_buckets(
+            folded,
+            schema,
+            tag,
+            codec,
+            sort_cols=list(decl.get("sort_by") or m["key_cols"]),
+            max_records_per_file=int(decl.get("max_records_per_file") or 0),
+        )
+
+    def _write_arrow_buckets(
+        self,
+        buckets,
+        schema: T.StructType,
+        tag: str,
+        codec: str,
+        sort_cols: list[str],
+        max_records_per_file: int = 0,
+    ) -> tuple[dict[str, list[str]], dict]:
+        """The driver's bucket writer, shared by the driver routes of
+        :meth:`compact` and :meth:`merge`: each ``(bucket, Arrow table)`` of
+        ``buckets`` is sorted by ``sort_cols`` (ascending, nulls first, as
+        Spark's ``sortWithinPartitions``) and written with pyarrow into
+        ``c-<tag>/b=N/``, one ``part-*.parquet`` file per
+        ``max_records_per_file`` slice (0: one file). An empty table writes
+        nothing; the caller's bucket-set tripwire reports it. Returns what
+        :meth:`_write_bucket_files` returns; the footers are the ones the
+        writer collected.
+
+        The files match what Spark writes to within a few percent of bytes:
+        the session's compression ``codec``, no Arrow schema blob, and
+        dictionary encoding only on columns whose distinct count is at most
+        half the bucket's rows (pyarrow's default dictionary-encodes every
+        column, which grows near-unique ones)."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
         bdir = _bucket_dir_col(schema.fieldNames())
         files: dict[str, list[str]] = {}
         footers: dict = {}
-        for b in todo:
-            tbl = arrow_lww(
-                self._arrow_files(
-                    m,
-                    schema,
-                    [
-                        *m.get("files", {}).get(str(b), []),
-                        *m.get("delta_files", {}).get(str(b), []),
-                    ],
-                ),
-                m["key_cols"],
-            )
+        for b, tbl in buckets:
             if not tbl.num_rows:
-                continue  # the bucket-set tripwire reports it
+                continue
             tbl = tbl.take(
                 pc.sort_indices(
                     tbl,
@@ -2931,7 +3078,7 @@ class SnapshotTable:
             ]
             bucket_dir = os.path.join(f"c-{tag}", f"{bdir}={b}")
             os.makedirs(os.path.join(self.data_dir, bucket_dir))
-            step = max_rpf or tbl.num_rows
+            step = max_records_per_file or tbl.num_rows
             for j, lo in enumerate(range(0, tbl.num_rows, step)):
                 rel = os.path.join(bucket_dir, f"part-{j:05d}-{tag}.parquet")
                 collected: list = []

@@ -4,9 +4,14 @@ batch replay), composing SURVEY §2's operators:
     route (P2/P8) → schema reconcile (§4 evolution) → LWW dedup (A1/W2)
     → MERGE upsert (K3-K6) → lineage metrics (T6/K7)
 
-The whole pre-merge pipeline is one declarative DataFrame expression —
-Catalyst fuses route+reconcile into the scan and the dedup is a single
-shuffle with map-side combine (see tests/test_plans.py for plan assertions).
+A batch takes one of two routes, both ending in ``SnapshotTable.merge``.
+A small one (Spark sizes its plan at most ``DRIVER_READ_MAX_BYTES``) is
+collected once as Arrow, one scan job with no shuffle; routing, the
+lineage metrics and the LWW reduce then run in pyarrow on the driver and
+the merge writes its deltas with pyarrow. A larger one stays one
+declarative DataFrame expression: Catalyst fuses route+reconcile into the
+scan and the dedup is a single shuffle with map-side combine (see
+tests/test_plans.py for plan assertions).
 """
 
 from __future__ import annotations
@@ -18,11 +23,19 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nifi_dicom_spark.lake.snapshot_table import MergeStats, SnapshotTable
+from nifi_dicom_spark.lake.snapshot_table import (
+    MergeStats,
+    SnapshotTable,
+    _bucket_expr,
+    _driver_codec,
+    _fits_driver_plan,
+    _manifest_schema,
+    _murmur3_buckets,
+)
 from nifi_dicom_spark.model import CHANGE_EVENTS_SCHEMA, KEY_COLUMNS, PAYLOAD_COLUMNS
 from nifi_dicom_spark.operators.dedup import lww_dedup
 from nifi_dicom_spark.operators.reconcile import conform_to_schema
-from nifi_dicom_spark.operators.routing import route_events
+from nifi_dicom_spark.operators.routing import arrow_validity, route_events
 
 
 @dataclass
@@ -79,6 +92,40 @@ def partition_metrics(events: DataFrame, bucket_expr=None) -> DataFrame:
     return events.groupBy(pid).agg(*aggs)
 
 
+def _arrow_metrics(batch, ok) -> list[dict]:
+    """:func:`partition_metrics` of an Arrow batch, whose validity mask is
+    ``ok``: the same rows, from one Arrow group-by."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def count_if(mask):
+        return pc.cast(pc.fill_null(mask, False), pa.int64())
+
+    flags = {
+        f"n_{op}": count_if(pc.and_(ok, pc.equal(batch["op"], op)))
+        for op in ("insert", "update", "delete")
+    }
+    flags["n_quarantined"] = count_if(pc.invert(ok))
+    pid = pc.coalesce(batch["partition_id"], pa.scalar(-1, pa.int32()))
+    grouped = (
+        pa.table({"partition_id": pid, **flags, "offset": batch["offset"]})
+        .group_by("partition_id", use_threads=False)
+        .aggregate(
+            [(c, "sum") for c in flags]
+            + [("offset", "max"), ("offset", "count", pc.CountOptions("all"))]
+        )
+    )
+    return [
+        {
+            "partition_id": r["partition_id"],
+            **{c: r[f"{c}_sum"] for c in flags},
+            "high_watermark_offset": r["offset_max"],
+            "n_events": r["offset_count"],
+        }
+        for r in grouped.to_pylist()
+    ]
+
+
 def apply_changes(
     table: SnapshotTable,
     events: DataFrame,
@@ -89,9 +136,21 @@ def apply_changes(
     """Apply one batch of change events to the transcripts table with
     idempotent commit keys (epoch, partition_id).
 
-    The fused lineage-metrics + bucket-discovery pass and the merge each
-    decode the batch: measured on the scaling harness (BENCH/MATRIX.md),
-    decoding the columnar source twice beat persisting it by ~35%.
+    The table's manifest is read once; the column bridge, the bucket ids
+    and the merge's commit all come from it. Then the batch takes one of
+    two routes:
+
+    * **driver**, when Spark sizes the batch's plan at most
+      ``DRIVER_READ_MAX_BYTES`` and the batch has no ``quarantine_dir``
+      or ``dead_letter``: one ``toArrow`` scan, the validity predicate and
+      the lineage metrics in pyarrow, and an Arrow source for ``merge``.
+      No shuffle, one Spark job;
+    * **Spark**, otherwise: one fused lineage-metrics + bucket-discovery
+      pass, then the merge decodes the batch again. Measured on the
+      scaling harness (BENCH/MATRIX.md), decoding the columnar source
+      twice beat persisting it by ~35%.
+
+    Both give the same metrics, commit keys, table rows and files.
     """
     if "tool" not in events.columns and "schema_ver" in events.columns:
         # a batch WITHOUT the tool column but WITH rows claiming
@@ -111,74 +170,85 @@ def apply_changes(
                 "'tool' will be nulled for the whole batch",
                 stacklevel=2,
             )
+    if dead_letter is not None and epoch is None:
+        # the retry ledger is keyed by epoch — a batch caller asking for
+        # DLQ bookkeeping without one would silently get nothing
+        raise ValueError(
+            "dead_letter requires an epoch (the retry ledger's "
+            "idempotency key); pass epoch=<n> or drop dead_letter"
+        )
     events = conform_to_schema(events, CHANGE_EVENTS_SCHEMA)
-    bucket = table.bucket_expr(KEY_COLUMNS[0])
-    metrics_rows = [
-        r.asDict() for r in partition_metrics(events, bucket_expr=bucket).collect()
-    ]
-    touched = sorted({int(b) for r in metrics_rows for b in r.pop("_buckets")})
+    m = table.manifest()
 
-    commit_keys = None
-    if epoch is not None:
-        commit_keys = [(epoch, int(r["partition_id"])) for r in metrics_rows]
-        for r in metrics_rows:
-            r["checkpoint_epoch"] = epoch
-
-    valid, bad = route_events(events)
-    if dead_letter is not None:
-        if epoch is None:
-            # the retry ledger is keyed by epoch — a batch caller asking
-            # for DLQ bookkeeping without one would silently get nothing
-            raise ValueError(
-                "dead_letter requires an epoch (the retry ledger's "
-                "idempotency key); pass epoch=<n> or drop dead_letter"
-            )
-        # T7: penalize-then-retry bookkeeping (idempotent per epoch)
-        from nifi_dicom_spark.operators.deadletter import record_quarantine
-
-        record_quarantine(dead_letter, bad, epoch)
-
-    if quarantine_dir is not None:
-        if epoch is not None:
-            # epoch-keyed dir + overwrite ⇒ replaying the epoch rewrites
-            # the same quarantine rows (exactly-once for the reject
-            # channel, same idempotency key as the merge ledger)
-            bad.write.mode("overwrite").parquet(
-                os.path.join(quarantine_dir, f"epoch={int(epoch)}")
-            )
-        else:
-            bad.write.mode("append").parquet(quarantine_dir)
-
-    # no pre-dedup: versioned_upsert's own LWW reduce dedups in-batch and
-    # cross-batch in ONE shuffle (pre-deduping here would add a second
-    # full shuffle for no correctness gain)
-    #
     # schema-evolution bridge between the FIXED wire frame and the
     # table's evolved schema: a DROPPED table column is projected away
     # (merging it would trip the resurrection guard) and a RENAMED one
     # is aliased to its current name (the wire name is historical) —
     # the wire schema stays the superset, the TABLE decides what it
     # stores and what it calls it
-    props = table.manifest().get("props") or {}
+    props = m.get("props") or {}
     dropped = props.get("dropped_columns") or {}
     to_current = {
         old: new
         for new, olds in (props.get("renamed_columns") or {}).items()
         for old in olds
     }
-    source = valid.select(
-        *[
-            F.col(c).alias(to_current[c]) if c in to_current else F.col(c)
-            for c in STORED_COLUMNS
-            if c not in dropped
+    wire = [c for c in STORED_COLUMNS if c not in dropped]
+    stored = [to_current.get(c, c) for c in wire]
+
+    if (
+        quarantine_dir is None
+        and dead_letter is None
+        and _driver_codec(table.spark, _manifest_schema(m)) is not None
+        and _fits_driver_plan(events)
+    ):
+        batch = events.toArrow()
+        ok = arrow_validity(batch)
+        metrics_rows = _arrow_metrics(batch, ok)
+        source = batch.filter(ok).select(wire).rename_columns(stored)
+        touched = None  # the merge places the winners itself
+    else:
+        bucket = _bucket_expr(KEY_COLUMNS[0], _murmur3_buckets(m))
+        metrics_rows = [
+            r.asDict()
+            for r in partition_metrics(events, bucket_expr=bucket).collect()
         ]
-    )
+        touched = sorted({int(b) for r in metrics_rows for b in r.pop("_buckets")})
+        valid, bad = route_events(events)
+        if dead_letter is not None:
+            # T7: penalize-then-retry bookkeeping (idempotent per epoch)
+            from nifi_dicom_spark.operators.deadletter import record_quarantine
+
+            record_quarantine(dead_letter, bad, epoch)
+        if quarantine_dir is not None:
+            if epoch is not None:
+                # epoch-keyed dir + overwrite ⇒ replaying the epoch
+                # rewrites the same quarantine rows (exactly-once for the
+                # reject channel, same idempotency key as the merge ledger)
+                bad.write.mode("overwrite").parquet(
+                    os.path.join(quarantine_dir, f"epoch={int(epoch)}")
+                )
+            else:
+                bad.write.mode("append").parquet(quarantine_dir)
+        # no pre-dedup: versioned_upsert's own LWW reduce dedups in-batch
+        # and cross-batch in ONE shuffle (pre-deduping here would add a
+        # second full shuffle for no correctness gain)
+        source = valid.select(
+            *[F.col(w).alias(c) for w, c in zip(wire, stored)]
+        )
+
+    commit_keys = None
+    if epoch is not None:
+        commit_keys = [(epoch, int(r["partition_id"])) for r in metrics_rows]
+        for r in metrics_rows:
+            r["checkpoint_epoch"] = epoch
     stats = table.merge(
         source,
         op_col="op",
         policy="versioned_upsert",
         commit_keys=commit_keys,
         touched_buckets=touched,
+        manifest=m,
     )
     return ApplyResult(merge=stats, metrics=metrics_rows)
 

@@ -33,12 +33,13 @@ def spark():
 
 @pytest.fixture(params=["driver", "spark"])
 def read_path(request, monkeypatch):
-    """Run a lookup, scan or compaction test on both paths; the same byte
-    cap governs all three. ``driver``: the test tables' files fit under
-    ``DRIVER_READ_MAX_BYTES``, so pyarrow reads them with no Spark job and
-    ``compact()`` folds each bucket on the driver. ``spark``: the byte cap
-    is forced to 0, so every read and compaction takes the Spark path that
-    larger ones use."""
+    """Run a lookup, scan, compaction or merge test on both paths; the
+    same byte cap governs all four. ``driver``: the test tables' files fit
+    under ``DRIVER_READ_MAX_BYTES``, so pyarrow reads them with no Spark
+    job, ``compact()`` folds each bucket on the driver and
+    ``apply_changes`` collects each batch as Arrow and merges it on the
+    driver. ``spark``: the byte cap is forced to 0, so every read,
+    compaction and merge takes the Spark path that larger ones use."""
     if request.param == "spark":
         from nifi_dicom_spark.lake import snapshot_table
 

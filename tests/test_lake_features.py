@@ -342,6 +342,73 @@ def test_scan_pruning_correct_under_non_utc_session(spark, tmp_path, read_path):
         spark.conf.set(tz_key, prev)
 
 
+def test_driver_apply_matches_spark_apply_under_non_utc_session(
+    spark, tmp_path, monkeypatch
+):
+    """Both apply routes store the same instants under a non-UTC session:
+    Spark reads the wire's zone-less timestamps in the session time zone
+    before the driver route's Arrow hand-off, so the two tables give the
+    same ``read()``, the same scans and the same ``ts`` file stats. The
+    wire here is the JSON change log (ISO-8601 wall times, no zone), which
+    Spark reads in the session zone; a driver route that parsed the wire
+    with pyarrow would take those wall times as UTC and store every row 9
+    hours late."""
+    import os
+
+    from nifi_dicom_spark.lake import snapshot_table
+    from nifi_dicom_spark.sources.changelog import read_change_log
+
+    dirs = []
+    for e in range(3):
+        d = tmp_path / f"ev{e}"
+        d.mkdir()
+        pdf = _epoch_events(e)
+        pdf["ts"] = pdf["ts"].dt.strftime("%Y-%m-%dT%H:%M:%S")
+        pdf.to_json(d / "events.json", orient="records", lines=True)
+        dirs.append(str(d))
+    tz_key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "Asia/Tokyo")
+    try:
+        tables = {}
+        for route, cap in (
+            ("driver", snapshot_table.DRIVER_READ_MAX_BYTES),
+            ("spark", 0),
+        ):
+            monkeypatch.setattr(snapshot_table, "DRIVER_READ_MAX_BYTES", cap)
+            t = create_transcripts_table(spark, str(tmp_path / route), n_buckets=4)
+            for e, d in enumerate(dirs):
+                apply_changes(t, read_change_log(spark, d, fmt="json"), epoch=e)
+            tables[route] = t
+        monkeypatch.undo()
+        drv, ref = tables["driver"], tables["spark"]
+        assert not any(
+            os.path.exists(os.path.join(drv.data_dir, c, "_SUCCESS"))
+            for c in os.listdir(drv.data_dir)
+        ), "the driver route wrote the deltas"
+        assert _sorted_rows(drv.read()) == _sorted_rows(ref.read())
+        lo, hi = "2024-01-02 00:00:00", "2024-01-02 23:59:59"
+        got = drv.scan("ts", lo=lo, hi=hi)
+        assert got.count() > 0
+        assert _sorted_rows(got) == _sorted_rows(ref.scan("ts", lo=lo, hi=hi))
+
+        def ts_stats(t):
+            m = t.manifest()
+            return {
+                b: [m["file_stats"][rel]["ts"] for rel in rels]
+                for b, rels in m["delta_files"].items()
+            }
+
+        assert ts_stats(drv) == ts_stats(ref)
+        # the first event's wall time, 2024-01-01 00:00 in Tokyo, is
+        # 2023-12-31 15:00 UTC (stats are UTC instants)
+        assert min(v[0] for vs in ts_stats(drv).values() for v in vs) == (
+            "2023-12-31T15:00:00.000000"
+        )
+    finally:
+        spark.conf.set(tz_key, prev)
+
+
 def test_encrypt_null_identity_falls_back_to_v2(spark):
     """A NULL row identity must not collapse to a shared constant IV (CBC
     prefix oracle) — it falls back to the per-row v2 plaintext-derived IV."""

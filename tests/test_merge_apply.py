@@ -27,6 +27,39 @@ def _spark_events(spark, pdf: pd.DataFrame):
     return spark.createDataFrame(pdf, schema=CHANGE_EVENTS_SCHEMA)
 
 
+def _spark_wrote(table) -> set[bool]:
+    """For each commit directory of ``table``: whether Spark's writer wrote
+    it (it leaves a ``_SUCCESS`` marker; the driver's pyarrow writer does
+    not)."""
+    import os
+
+    return {
+        os.path.exists(os.path.join(table.data_dir, d, "_SUCCESS"))
+        for d in os.listdir(table.data_dir)
+        if d.startswith("c-")
+    }
+
+
+def _unreferenced(table) -> set[str]:
+    """Data files under ``table``'s data directory that the current
+    manifest does not reference."""
+    import os
+
+    m = table.manifest()
+    refs = {
+        rel
+        for which in ("files", "delta_files")
+        for rels in m[which].values()
+        for rel in rels
+    }
+    return {
+        os.path.relpath(os.path.join(r, fn), table.data_dir)
+        for r, _d, fns in os.walk(table.data_dir)
+        for fn in fns
+        if fn.endswith(".parquet")
+    } - refs
+
+
 @pytest.fixture(scope="module")
 def small_log():
     cfg = GeneratorConfig(
@@ -102,13 +135,14 @@ def test_multi_batch_replay_with_late_events(spark, small_log, tmp_path):
     assert_final_state_equal(actual, replay_oracle(small_log))
 
 
-def test_reapply_epoch_is_noop(spark, small_log, tmp_path):
+def test_reapply_epoch_is_noop(spark, small_log, tmp_path, read_path):
     """Exactly-once: re-merging an already-committed epoch is detected and
     skipped (reference analog: idempotent uid_map MERGE,
-    ``DeidentificationController.java:108-123``)."""
+    ``DeidentificationController.java:108-123``), on both apply routes."""
     table = create_transcripts_table(spark, str(tmp_path / "transcripts"))
     ev = _spark_events(spark, small_log)
     r1 = apply_changes(table, ev, epoch=0)
+    assert _spark_wrote(table) == {read_path == "spark"}
     v1 = table.current_version()
     r2 = apply_changes(table, ev, epoch=0)  # crash-replay of the same epoch
     assert r1.merge.applied and not r2.merge.applied
@@ -313,6 +347,11 @@ def _hot_batch(spark, e: int, turns: int = 4):
     """Versioned-table rows of one epoch: ``turns`` turns of one conv."""
     from nifi_dicom_spark.operators.apply import STORED_COLUMNS
 
+    return _hot_events(spark, e, turns).select(*STORED_COLUMNS)
+
+
+def _hot_events(spark, e: int, turns: int = 4):
+    """The change events of :func:`_hot_batch`, in the wire schema."""
     batch = pd.DataFrame(
         {
             "offset": [e * turns + t for t in range(turns)],
@@ -328,7 +367,7 @@ def _hot_batch(spark, e: int, turns: int = 4):
             "schema_ver": [2] * turns,
         }
     )
-    return _spark_events(spark, batch).select(*STORED_COLUMNS)
+    return _spark_events(spark, batch)
 
 
 _WRITES = {
@@ -347,6 +386,12 @@ _WRITES = {
     "forget": lambda t, spark: t.forget("turn_idx = 2"),
     "compact": lambda t, spark: t.compact(),
     "optimize": lambda t, spark: t.optimize(),
+    "apply_changes_driver": lambda t, spark: apply_changes(
+        t, _hot_events(spark, 5), epoch=5
+    ),
+    "apply_changes_spark": lambda t, spark: apply_changes(
+        t, _hot_events(spark, 5), epoch=5
+    ),
 }
 
 
@@ -368,8 +413,10 @@ def test_write_reads_only_the_manifest_it_commits_against(
             commit_keys=[(e, 0)],
         )
     table.set_clustering(sort_by=["ts"])
-    # the Spark routes: compaction and reads go through read(), not pyarrow
-    monkeypatch.setattr(snapshot_table, "DRIVER_READ_MAX_BYTES", 0)
+    # the Spark routes: compaction and reads go through read(), not
+    # pyarrow, and apply_changes merges a DataFrame
+    if op != "apply_changes_driver":
+        monkeypatch.setattr(snapshot_table, "DRIVER_READ_MAX_BYTES", 0)
 
     loads: list = []
     at_commit: list[int] = []
@@ -497,8 +544,9 @@ def test_table_changes_changelog_view(spark, tmp_path):
     assert got[("d", "insert")]["new_text"] == "fresh"
 
 
-def test_ledger_watermark_semantics(spark, tmp_path):
-    """Replayed (≤ watermark) epochs skip; advancing epochs apply."""
+def test_ledger_watermark_semantics(spark, tmp_path, read_path):
+    """Replayed (≤ watermark) epochs skip; advancing epochs apply, on both
+    apply routes."""
     table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
 
     def ev(e):
@@ -513,6 +561,7 @@ def test_ledger_watermark_semantics(spark, tmp_path):
 
     for e in (0, 1, 2):
         apply_changes(table, _spark_events(spark, ev(e)), epoch=e)
+    assert _spark_wrote(table) == {read_path == "spark"}
     assert read_final_state(table).count() == 3
     # replay an OLD epoch (crash/restart rewind) → no-op
     s = apply_changes(table, _spark_events(spark, ev(1)), epoch=1)
@@ -639,28 +688,13 @@ def test_driver_compaction_crash_before_publish(
 
     monkeypatch.setattr(SnapshotTable, "_commit_merge", crash_compaction)
 
-    def unreferenced():
-        m = table.manifest()
-        refs = {
-            rel
-            for which in ("files", "delta_files")
-            for rels in m[which].values()
-            for rel in rels
-        }
-        return {
-            os.path.relpath(os.path.join(r, fn), table.data_dir)
-            for r, _d, fns in os.walk(table.data_dir)
-            for fn in fns
-            if fn.endswith(".parquet")
-        } - refs
-
     v = table.current_version()
     before = sorted(map(tuple, table.read().collect()))
     with pytest.raises(RuntimeError, match="crashed before"):
         table.compact()
     assert table.current_version() == v
     assert sorted(map(tuple, table.read().collect())) == before
-    orphans = unreferenced()
+    orphans = _unreferenced(table)
     assert orphans, "the compaction wrote its files before it died"
     assert not any(  # the driver route wrote them: no Spark _SUCCESS marker
         os.path.exists(os.path.join(table.data_dir, rel.split(os.sep)[0], "_SUCCESS"))
@@ -679,14 +713,62 @@ def test_driver_compaction_crash_before_publish(
     assert_final_state_equal(
         read_final_state(table).toPandas(), replay_oracle(small_log)
     )
-    orphans = unreferenced()
+    orphans = _unreferenced(table)
     orphan_dirs = {rel.split(os.sep)[0] for rel in orphans}
     assert len(orphan_dirs) == 2  # one per crashed compaction
 
     assert table.vacuum(keep_versions=1, min_file_age_s=0) == len(orphans)
-    assert not unreferenced()
+    assert not _unreferenced(table)
     for d in orphan_dirs:
         assert not os.path.exists(os.path.join(table.data_dir, d))
+    assert_final_state_equal(
+        read_final_state(table).toPandas(), replay_oracle(small_log)
+    )
+
+
+def test_driver_merge_crash_before_publish(
+    spark, small_log, tmp_path, monkeypatch
+):
+    """Crash point: a batch applied on the driver route dies after its
+    delta files are written and before its manifest is published
+    (``_commit_merge`` raises). The version, ``read()`` and the ledger are
+    unchanged; ``vacuum`` removes the orphaned files and their commit
+    directory; re-applying the epoch then commits it."""
+    import os
+
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+
+    table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
+    parts = np.array_split(np.arange(len(small_log)), 2)
+    apply_changes(table, _spark_events(spark, small_log.iloc[parts[0]]), epoch=0)
+
+    def crash(self, *args, **kw):
+        raise RuntimeError("crashed before the merge was published")
+
+    v = table.current_version()
+    hw = table.applied_watermarks()
+    before = sorted(map(tuple, table.read().collect()))
+    second = _spark_events(spark, small_log.iloc[parts[1]])
+    with monkeypatch.context() as mp:
+        mp.setattr(SnapshotTable, "_commit_merge", crash)
+        with pytest.raises(RuntimeError, match="crashed before"):
+            apply_changes(table, second, epoch=1)
+    assert table.current_version() == v
+    assert table.applied_watermarks() == hw
+    assert sorted(map(tuple, table.read().collect())) == before
+    orphans = _unreferenced(table)
+    assert orphans, "the merge wrote its delta files before it died"
+    orphan_dirs = {rel.split(os.sep)[0] for rel in orphans}
+    assert len(orphan_dirs) == 1
+    assert _spark_wrote(table) == {False}  # the driver route wrote them
+
+    assert table.vacuum(keep_versions=1, min_file_age_s=0) == len(orphans)
+    assert not _unreferenced(table)
+    assert not os.path.exists(os.path.join(table.data_dir, *orphan_dirs))
+    assert sorted(map(tuple, table.read().collect())) == before
+
+    r = apply_changes(table, second, epoch=1)
+    assert r.merge.applied and table.current_version() == v + 1
     assert_final_state_equal(
         read_final_state(table).toPandas(), replay_oracle(small_log)
     )

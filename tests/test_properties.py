@@ -465,6 +465,143 @@ def test_driver_compaction_matches_spark_compaction(
         assert sorted_values(table, got) == sorted_values(other, want)
 
 
+def _apply_epochs(seed: int, n: int, n_epochs: int) -> list:
+    """A random change log as ``n_epochs`` Arrow tables in the wire schema,
+    one per epoch, in delivery order. :func:`_log` gives ``op_seq`` ties,
+    late events, tombstones, malformed rows (null ``conv_id``, negative
+    ``turn_idx``, an unknown ``op``) and the ``tool`` column from a third
+    of the way in; this adds verbatim duplicate deliveries at later
+    positions, null ``turn_idx`` and null ``partition_id`` rows. An epoch
+    whose rows all predate ``tool`` is written without that column."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from nifi_dicom_spark.model import ARROW_WIRE_FIELDS
+
+    log = _log(seed, n, malformed=0.1)
+    rng = np.random.default_rng(seed)
+    src = rng.integers(0, len(log), size=len(log) // 8)
+    order = np.concatenate(
+        [np.arange(len(log), dtype=float), src + rng.uniform(0, len(log) - src)]
+    )
+    log = pd.concat([log, log.iloc[src]]).iloc[np.argsort(order, kind="stable")]
+    log = log.reset_index(drop=True).astype(
+        {"turn_idx": object, "partition_id": object}
+    )
+    for col in ("turn_idx", "partition_id"):
+        log.loc[rng.random(len(log)) < 0.05, col] = None
+    schema = pa.schema(list(ARROW_WIRE_FIELDS.items()))
+    epochs = []
+    for idx in np.array_split(np.arange(len(log)), n_epochs):
+        t = pa.Table.from_pandas(log.iloc[idx], schema=schema, preserve_index=False)
+        if t.num_rows and pc.all(pc.equal(t["schema_ver"], 1)).as_py():
+            t = t.drop_columns(["tool"])
+        epochs.append(t)
+    return epochs
+
+
+@seed(20261019)
+@settings(max_examples=8, deadline=None)
+@given(
+    seed=st.integers(0, 10_000),
+    n=st.integers(1, 200),
+    n_epochs=st.integers(1, 3),
+)
+def test_driver_apply_matches_spark_apply(spark, seed: int, n: int, n_epochs: int):
+    """``apply_changes`` on the driver route (one ``toArrow``, the validity
+    predicate and metrics in pyarrow, the Arrow LWW kernel and the shared
+    bucket writer) and on the Spark route (forced by a byte cap of 0)
+    leave the same table and report the same lineage: identical
+    ``ApplyResult.metrics`` per epoch (sorted by ``partition_id``, every
+    count a Python int), ``read()`` rows, bucket sets, per-file
+    ``file_stats`` in every bucket, ledger watermarks and schema. The
+    epochs come from :func:`_apply_epochs` and are read back from parquet
+    with ``read_change_log``, as a replay reads them. Budget: about 40 s
+    for the 8 examples on a 4-core host; ``jobs/stress_properties.py``
+    runs more."""
+    import os
+    import tempfile
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from nifi_dicom_spark.lake import snapshot_table
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+    from nifi_dicom_spark.model import CHANGE_EVENTS_SCHEMA, KEY_COLUMNS
+    from nifi_dicom_spark.operators.apply import STORED_COLUMNS, apply_changes
+    from nifi_dicom_spark.sources.changelog import read_change_log
+
+    by_name = {f.name: f for f in CHANGE_EVENTS_SCHEMA.fields}
+    epochs = _apply_epochs(seed, n, n_epochs)
+    with tempfile.TemporaryDirectory() as root:
+        dirs = []
+        for e, t in enumerate(epochs):
+            d = os.path.join(root, f"epoch{e}")
+            os.makedirs(d)
+            pq.write_table(t, os.path.join(d, "events.parquet"))
+            dirs.append(d)
+        out = {}
+        for route, cap in (
+            ("driver", snapshot_table.DRIVER_READ_MAX_BYTES),
+            ("spark", 0),
+        ):
+            table = SnapshotTable.create(
+                spark,
+                os.path.join(root, route),
+                T.StructType([by_name[c] for c in STORED_COLUMNS]),
+                key_cols=KEY_COLUMNS,
+                n_buckets=4,
+                props={
+                    "stats_cols": ["turn_idx", "op_seq", "offset", "text", "ts"]
+                },
+            )
+            saved = snapshot_table.DRIVER_READ_MAX_BYTES
+            snapshot_table.DRIVER_READ_MAX_BYTES = cap
+            try:
+                metrics = [
+                    sorted(
+                        apply_changes(
+                            table, read_change_log(spark, d), epoch=e
+                        ).metrics,
+                        key=lambda r: r["partition_id"],
+                    )
+                    for e, d in enumerate(dirs)
+                ]
+            finally:
+                snapshot_table.DRIVER_READ_MAX_BYTES = saved
+            m = table.manifest()
+            out[route] = {
+                "metrics": metrics,
+                "rows": sorted(
+                    (tuple(r) for r in table.read().collect()),
+                    key=lambda row: tuple(str(x) for x in row),
+                ),
+                "buckets": sorted(m["delta_files"]),
+                "file_stats": {
+                    b: [m["file_stats"].get(rel) for rel in rels]
+                    for b, rels in m["delta_files"].items()
+                },
+                "hw": table.applied_watermarks(),
+                "schema": m["schema"],
+                "spark_wrote": {
+                    os.path.exists(os.path.join(table.data_dir, c, "_SUCCESS"))
+                    for c in os.listdir(table.data_dir)
+                    if c.startswith("c-")
+                },
+            }
+    got, want = out["driver"], out["spark"]
+    assert got["spark_wrote"] <= {False} and want["spark_wrote"] <= {True}
+    assert all(
+        type(v) is int
+        for rows in got["metrics"]
+        for r in rows
+        for v in r.values()
+        if v is not None
+    )
+    for key in ("metrics", "rows", "buckets", "file_stats", "hw", "schema"):
+        assert got[key] == want[key], key
+
+
 @settings(
     max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow]
 )

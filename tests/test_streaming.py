@@ -34,12 +34,12 @@ def _pipeline(spark, tmp_path, event_log, n_files=6, **kw):
     ev_dir = str(tmp_path / "events")
     write_event_files(event_log, ev_dir, n_files=n_files)
     table = create_transcripts_table(spark, str(tmp_path / "transcripts"))
+    kw.setdefault("quarantine_dir", str(tmp_path / "quarantine"))
     return CDCPipeline(
         spark=spark,
         events_dir=ev_dir,
         table=table,
         checkpoint_dir=str(tmp_path / "checkpoint"),
-        quarantine_dir=str(tmp_path / "quarantine"),
         metrics_dir=str(tmp_path / "metrics"),
         **kw,
     )
@@ -62,10 +62,13 @@ def test_stream_replay_matches_oracle(spark, event_log, tmp_path):
     assert bad.count() == int(mt["n_quarantined"].sum()) > 0
 
 
-def test_crash_between_merge_and_checkpoint(spark, event_log, tmp_path):
+def test_crash_between_merge_and_checkpoint(spark, event_log, tmp_path, read_path):
     """Kill the stream AFTER the table merge of epoch 2 commits but BEFORE
     Spark checkpoints that epoch. On restart Spark replays epoch 2; the
-    commit ledger must make the replay a no-op (no double-apply)."""
+    commit ledger must make the replay a no-op (no double-apply). On the
+    ``driver`` path the pipeline has no quarantine directory, so each
+    micro-batch is collected as Arrow and merged on the driver."""
+    import os
 
     class Boom(RuntimeError):
         pass
@@ -79,7 +82,8 @@ def test_crash_between_merge_and_checkpoint(spark, event_log, tmp_path):
         if epoch_id == 2:
             raise Boom("simulated crash after merge, before checkpoint")
 
-    p = _pipeline(spark, tmp_path, event_log, on_batch=bomb)
+    qdir = str(tmp_path / "quarantine") if read_path == "spark" else None
+    p = _pipeline(spark, tmp_path, event_log, on_batch=bomb, quarantine_dir=qdir)
     with pytest.raises(Exception):
         p.run_available()
 
@@ -95,6 +99,14 @@ def test_crash_between_merge_and_checkpoint(spark, event_log, tmp_path):
         metrics_dir=p.metrics_dir,
     )
     p2.run_available()
+    # the route taken: Spark's writer leaves a _SUCCESS marker in each
+    # commit directory, the driver's pyarrow writer does not
+    data = p.table.data_dir
+    assert {
+        os.path.exists(os.path.join(data, d, "_SUCCESS"))
+        for d in os.listdir(data)
+        if d.startswith("c-")
+    } == {read_path == "spark"}
 
     # epoch 2 was replayed but skipped by the ledger: version did not grow
     # for the replay itself (only for the remaining epochs)

@@ -389,6 +389,60 @@ def test_snapshot_cdf_upserts_mode(spark, tmp_path, read_path):
         )
 
 
+def test_upserts_feed_same_over_driver_and_spark_deltas(
+    spark, tmp_path, monkeypatch
+):
+    """The ``snapshot_cdf`` feed in ``upserts`` mode reads each commit's
+    delta files as they are on disk; it returns the same rows over deltas
+    the driver apply route wrote with pyarrow as over deltas Spark wrote
+    (checked at the reader level, one version per batch, every column)."""
+    import os
+
+    from nifi_dicom_spark.lake import snapshot_table
+    from nifi_dicom_spark.sources.table_stream import _CDFStreamReader
+
+    spark.dataSource.register(SnapshotCDFDataSource)
+    batches = [
+        _ev(spark, conv="A", seq=10, text="a1", tool="calc"),
+        _ev(spark, conv="B", seq=20, text="b1"),
+        _ev(spark, conv="A", seq=30, text="a2", op="update"),
+        _ev(spark, op="delete", conv="B", seq=40, text=None),
+    ]
+    feeds = {}
+    for route, cap in (
+        ("driver", snapshot_table.DRIVER_READ_MAX_BYTES),
+        ("spark", 0),
+    ):
+        monkeypatch.setattr(snapshot_table, "DRIVER_READ_MAX_BYTES", cap)
+        table = create_transcripts_table(spark, str(tmp_path / route), n_buckets=4)
+        for e, b in enumerate(batches):
+            apply_changes(table, b, epoch=e)
+        assert {
+            os.path.exists(os.path.join(table.data_dir, c, "_SUCCESS"))
+            for c in os.listdir(table.data_dir)
+        } == {route == "spark"}
+        schema = (
+            spark.readStream.format("snapshot_cdf")
+            .option("path", table.path)
+            .option("mode", "upserts")
+            .load()
+            .schema
+        )
+        rdr = _CDFStreamReader(
+            {"path": table.path, "mode": "upserts", "maxversionsperbatch": "1"},
+            schema,
+        )
+        rows = []
+        end = {"version": table.current_version()}
+        for p in rdr.partitions({"version": 0}, end):
+            for batch in rdr.read(p):
+                for d in batch.to_pylist():
+                    rows.append(tuple(sorted((k, str(v)) for k, v in d.items())))
+        feeds[route] = sorted(rows)
+    assert len(feeds["driver"]) == len(batches)
+    assert feeds["driver"] == feeds["spark"]
+
+
 def test_stream_option_validation(spark, tmp_path):
     import pytest
 
