@@ -5,13 +5,46 @@ are the ones that matter at 100 TB too: AQE (runtime re-plan + skew-join
 splitting), shuffle partitions sized to parallelism, Arrow for every
 pandas-UDF boundary, UTC session time zone so results compare bit-exactly
 against external oracles (DuckDB).
+
+Spark's Python processes (the streaming-source runner each ``snapshot_cdf``
+drain starts, the ``pyspark.daemon`` workers and the planner workers) import
+the pyspark the driver runs, from site-packages with its bytecode caches, not
+``$SPARK_HOME/python/lib/pyspark.zip``, which Spark puts first on their
+``PYTHONPATH`` and which recompiles pyspark in every fresh process. They run
+the interpreter Spark would have run, through the ``spark_python.sh``
+launcher (:func:`_python_without_spark_zips`).
 """
 
 from __future__ import annotations
 
 import os
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+#: the interpreter Spark starts its Python processes with: strips Spark's
+#: zips from ``PYTHONPATH`` and execs ``$NIFI_DICOM_SPARK_PYTHON``
+_LAUNCHER = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "spark_python.sh"
+)
+
+
+def _python_without_spark_zips() -> None:
+    """Point ``PYSPARK_PYTHON`` at :data:`_LAUNCHER` before the first JVM
+    starts, and hand the launcher the interpreter Spark would have run
+    (``$PYSPARK_PYTHON``, else ``python3``, as ``SparkContext`` reads it)
+    through the environment the JVM and its Python processes inherit.
+
+    A no-op when the driver's own pyspark comes from a zip (its processes
+    keep Spark's path) and when a JVM is already up without the launcher:
+    that JVM's environment lacks the interpreter to exec."""
+    if os.environ.get("PYSPARK_PYTHON") == _LAUNCHER:
+        return
+    if ".zip" + os.sep in pyspark.__file__ or SparkContext._gateway is not None:
+        return
+    os.environ["NIFI_DICOM_SPARK_PYTHON"] = os.environ.get("PYSPARK_PYTHON", "python3")
+    os.environ["PYSPARK_PYTHON"] = _LAUNCHER
 
 
 def get_spark(
@@ -64,6 +97,7 @@ def get_spark(
         builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    _python_without_spark_zips()
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

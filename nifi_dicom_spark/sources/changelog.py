@@ -8,6 +8,11 @@ schema makes the parquet reader fill missing columns with nulls per file,
 which is the correct schema-evolution read (reference precedent: columns
 added by ``ALTER TABLE`` are null for pre-existing rows,
 ``DatabaseInformationModel.java:672-698``).
+
+Zone-less wire timestamps are UTC instants whatever the session time zone
+(the engine policy in ``session.py``): Spark reads pandas-written parquet
+(``isAdjustedToUTC=false``) that way, and the JSON readers parse zone-less
+ISO strings in UTC to match. Zone-qualified strings keep their own zone.
 """
 
 from __future__ import annotations
@@ -30,7 +35,7 @@ def read_change_log(
     if fmt == "parquet":
         return reader.parquet(path)
     if fmt == "json":
-        return reader.json(path)
+        return reader.option("timeZone", "UTC").json(path)
     raise ValueError(f"unsupported change-log format {fmt!r}")
 
 
@@ -50,5 +55,5 @@ def stream_change_log(
     if fmt == "parquet":
         return reader.parquet(path)
     if fmt == "json":
-        return reader.json(path)
+        return reader.option("timeZone", "UTC").json(path)
     raise ValueError(f"unsupported change-log format {fmt!r}")

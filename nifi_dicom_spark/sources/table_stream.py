@@ -38,6 +38,14 @@ checkpoint; manifests are immutable, so re-planning a batch after a crash
 yields byte-identical partitions. Reading past ``vacuum()`` raises rather
 than silently skipping.
 
+``availableNow`` drains: PySpark runs a Python source's ``availableNow``
+trigger as a single batch. A drain that starts over an uncommitted batch (a
+consumer that failed after the offset log was written and before the commit
+log) delivers only that replayed batch; the next drain delivers the
+versions committed since. Each committed version arrives exactly once
+across the drains, but a consumer that must catch up drains until a drain
+returns nothing new.
+
 Registration (per session)::
 
     from nifi_dicom_spark.sources.table_stream import SnapshotCDFDataSource

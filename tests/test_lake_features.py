@@ -346,13 +346,11 @@ def test_driver_apply_matches_spark_apply_under_non_utc_session(
     spark, tmp_path, monkeypatch
 ):
     """Both apply routes store the same instants under a non-UTC session:
-    Spark reads the wire's zone-less timestamps in the session time zone
-    before the driver route's Arrow hand-off, so the two tables give the
-    same ``read()``, the same scans and the same ``ts`` file stats. The
-    wire here is the JSON change log (ISO-8601 wall times, no zone), which
-    Spark reads in the session zone; a driver route that parsed the wire
-    with pyarrow would take those wall times as UTC and store every row 9
-    hours late."""
+    Spark reads the wire before the driver route's Arrow hand-off, so the
+    two tables give the same ``read()``, the same scans and the same
+    ``ts`` file stats. The wire here is the JSON change log (ISO-8601 wall
+    times, no zone), which the change-log readers parse as UTC instants
+    whatever the session zone, as Spark reads zone-less parquet."""
     import os
 
     from nifi_dicom_spark.lake import snapshot_table
@@ -400,10 +398,10 @@ def test_driver_apply_matches_spark_apply_under_non_utc_session(
             }
 
         assert ts_stats(drv) == ts_stats(ref)
-        # the first event's wall time, 2024-01-01 00:00 in Tokyo, is
-        # 2023-12-31 15:00 UTC (stats are UTC instants)
+        # the first event's zone-less 2024-01-01 00:00 is that UTC instant,
+        # not 2023-12-31 15:00 (Tokyo wall time; stats are UTC instants)
         assert min(v[0] for vs in ts_stats(drv).values() for v in vs) == (
-            "2023-12-31T15:00:00.000000"
+            "2024-01-01T00:00:00.000000"
         )
     finally:
         spark.conf.set(tz_key, prev)

@@ -58,6 +58,61 @@ def test_json_change_log_replays_identically(spark, tmp_path):
         read_change_log(spark, str(jdir), fmt="csv")
 
 
+def test_parquet_and_json_change_logs_store_the_same_instants(spark, tmp_path):
+    """Zone-less wire timestamps are UTC instants whatever the session time
+    zone: Spark reads pandas-written parquet (``isAdjustedToUTC=false``) as
+    UTC, and the JSON readers parse zone-less ISO strings as UTC too. So
+    under ``Asia/Tokyo`` a parquet replay and a JSON replay of one log, and
+    a streaming JSON read of it, store the instants the log holds."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from nifi_dicom_spark.operators.apply import (
+        apply_changes,
+        create_transcripts_table,
+    )
+    from nifi_dicom_spark.sources import stream_change_log
+
+    log = generate_change_events(GeneratorConfig(seed=19, n_events=300))
+    write_event_files(log, str(tmp_path / "parquet"), n_files=1)
+    os.makedirs(tmp_path / "json")
+    log.to_json(
+        tmp_path / "json" / "events.json", orient="records", lines=True,
+        date_format="iso",
+    )
+    # naive = UTC, in µs
+    want = sorted(log["ts"].astype("datetime64[us]").astype("int64"))
+
+    def instants(df):
+        return sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+
+    def stored(fmt):
+        t = create_transcripts_table(spark, str(tmp_path / f"t-{fmt}"), n_buckets=2)
+        apply_changes(t, read_change_log(spark, str(tmp_path / fmt), fmt=fmt), epoch=0)
+        return instants(t.read())
+
+    tz_key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "Asia/Tokyo")
+    try:
+        for fmt in ("parquet", "json"):
+            assert instants(read_change_log(spark, str(tmp_path / fmt), fmt=fmt)) == want
+        streamed = []
+        q = (
+            stream_change_log(spark, str(tmp_path / "json"), fmt="json")
+            .writeStream.foreachBatch(lambda df, _: streamed.extend(instants(df)))
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert sorted(streamed) == want
+        assert stored("json") == stored("parquet")
+    finally:
+        spark.conf.set(tz_key, prev)
+
+
 def test_schema_evolution_rules():
     """evolve/conform: widenings allowed, narrowings rejected, adds appended."""
     import pytest

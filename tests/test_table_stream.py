@@ -90,6 +90,67 @@ def test_feed_runner_imports_stay_light():
     assert res.returncode == 0, res.stderr
 
 
+def test_spark_python_processes_import_the_drivers_pyspark(spark, tmp_path):
+    """Spark's Python processes import the pyspark the driver runs, from
+    site-packages with its bytecode caches, not ``pyspark.zip`` (which
+    recompiles pyspark in every fresh process: each feed drain starts a
+    streaming-source runner), on the driver's interpreter version. A
+    ``SimpleDataSourceStreamReader``'s ``read`` runs in the runner; a
+    Python UDF runs in a ``pyspark.daemon`` worker."""
+    import sys
+
+    import pyspark
+    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+    def interpreter():  # local, so the processes get it by value
+        import sys
+
+        import pyspark
+
+        return pyspark.__file__, pyspark.__version__, *sys.version_info[:2]
+
+    class Probe(SimpleDataSourceStreamReader):
+        def initialOffset(self):
+            return {"n": 0}
+
+        def read(self, start):
+            if start["n"]:
+                return iter([]), start
+            return iter([interpreter()]), {"n": 1}
+
+        def readBetweenOffsets(self, start, end):
+            return iter([interpreter()] if end["n"] > start["n"] else [])
+
+    class ProbeSource(DataSource):
+        @classmethod
+        def name(cls):
+            return "interpreter_probe"
+
+        def schema(self):
+            return "file string, version string, major int, minor int"
+
+        def simpleStreamReader(self, schema):
+            return Probe()
+
+    spark.dataSource.register(ProbeSource)
+    seen = []
+    q = (
+        spark.readStream.format("interpreter_probe").load()
+        .writeStream.foreachBatch(lambda df, _: seen.extend(map(tuple, df.collect())))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    worker = spark.range(1).select(
+        F.udf(lambda _: list(interpreter()), "array<string>")("id")
+    ).first()[0]
+    want = (pyspark.__file__, spark.version, *sys.version_info[:2])
+    assert ".zip" not in pyspark.__file__ and pyspark.__version__ == spark.version
+    assert seen == [want], "streaming-source runner"
+    assert worker == [str(v) for v in want], "Python worker"
+
+
 def test_snapshot_cdf_stream_tail_and_restart(spark, tmp_path):
     spark.dataSource.register(SnapshotCDFDataSource)
     table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
@@ -1978,3 +2039,62 @@ def test_cdf_live_schema_drift_still_fails(spark, tmp_path):
         rdr.partitions(
             {"version": v0}, {"version": table.current_version()}
         )
+
+
+def test_drain_restart_after_failed_batch_delivers_each_version_once(
+    spark, tmp_path
+):
+    """A drain whose ``foreachBatch`` raises runs after the offset log is
+    written and before the commit log, so it leaves an uncommitted batch
+    in the checkpoint. Repeated ``availableNow`` drains from that
+    checkpoint deliver every committed version exactly once. PySpark runs
+    a Python source's ``availableNow`` as a single batch, so the first
+    drain after the failure delivers only the replayed batch and the next
+    one the versions committed since (``table_stream``'s docstring)."""
+    import pytest
+
+    spark.dataSource.register(SnapshotCDFDataSource)
+    table = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
+    ckpt = str(tmp_path / "ck")
+    fail = [False]
+
+    def drain() -> list:
+        got = []
+
+        def deliver(df, _batch_id):
+            rows = [(r["_commit_version"], r["conv_id"]) for r in df.collect()]
+            if fail[0]:
+                fail[0] = False
+                raise RuntimeError("the drain dies before its commit log")
+            got.extend(rows)
+
+        q = (
+            spark.readStream.format("snapshot_cdf")
+            .option("path", table.path)
+            .option("mode", "upserts")
+            .option("startingVersion", 0)
+            .load()
+            .writeStream.foreachBatch(deliver)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return got
+
+    def write(conv: str, epoch: int) -> int:
+        apply_changes(table, _ev(spark, conv=conv, seq=epoch), epoch=epoch)
+        return table.current_version()
+
+    v1 = write("A", 1)
+    assert drain() == [(v1, "A")]
+    v2 = write("B", 2)
+    fail[0] = True
+    with pytest.raises(Exception, match="dies before its commit log"):
+        drain()
+    # the failed batch 1 has its offset log and no commit log
+    assert os.path.exists(os.path.join(ckpt, "offsets", "1"))
+    assert not os.path.exists(os.path.join(ckpt, "commits", "1"))
+    v3 = write("C", 3)
+    delivered = [drain(), drain(), drain()]
+    assert delivered == [[(v2, "B")], [(v3, "C")], []]
