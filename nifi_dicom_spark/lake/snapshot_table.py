@@ -20,8 +20,10 @@ insert-if-absent at ``DatabaseInformationModel.java:805-892``):
 2. **MERGE semantics.** ``merge()`` implements
    ``WHEN MATCHED [AND op='delete'] THEN DELETE / UPDATE, WHEN NOT MATCHED
    THEN INSERT`` over only the *touched* key-buckets: the versioned (LWW)
-   policy appends per-bucket delta files (merge-on-read), the others
-   rewrite those buckets (copy-on-write).
+   policy appends per-bucket delta files (merge-on-read), the others are
+   clause sets of ``merge_into``, which rewrites those buckets
+   (copy-on-write). Every data write produces its files, checks their
+   bucket set and commits through one function, ``_write_and_commit``.
 3. **Idempotent commits.** Application-level commit keys
    ``(checkpoint_epoch, partition_id)`` are compacted into per-partition
    high-watermark epochs recorded in the manifest atomically with the data —
@@ -71,7 +73,7 @@ import time
 import uuid
 import warnings
 from dataclasses import dataclass
-from typing import TYPE_CHECKING, Any
+from typing import TYPE_CHECKING, Any, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -681,8 +683,6 @@ class SnapshotTable:
         key_cols: list[str],
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
-        expected_buckets: "set[int] | None" = None,
-        expect_exact: bool = True,
     ) -> tuple[dict[str, list[str]], dict]:
         """Write df as one sorted parquet file per non-empty bucket under a
         fresh commit directory, ``c-<tag>/b=N/part-*.parquet``; return
@@ -708,11 +708,7 @@ class SnapshotTable:
         sorted stream into several files (parquet writer option), giving
         the manifest stats file-level granularity inside a bucket. The sort
         runs BEFORE the projection so auxiliary sort keys (the z-order
-        interleave) can order the file without being written to it.
-
-        ``expected_buckets`` (with ``expect_exact``): callers that know
-        which buckets the rows must fill pass that set, and
-        :func:`_check_buckets` fails a write whose bucket set differs."""
+        interleave) can order the file without being written to it."""
         import pyarrow.parquet as pq
 
         out_rel = f"c-{commit_tag}"
@@ -743,8 +739,6 @@ class SnapshotTable:
                     footers[rel] = pq.read_metadata(
                         os.path.join(self.data_dir, rel)
                     )
-        if expected_buckets is not None:
-            _check_buckets(files, expected_buckets, expect_exact)
         return files, footers
 
     # ------------------------------------------------------------ file stats
@@ -1675,16 +1669,13 @@ class SnapshotTable:
         if new_n_buckets < 1:
             raise ValueError("new_n_buckets must be >= 1")
         m = self.manifest()
-        schema = _manifest_schema(m)
-        df = self._read_manifest(m)  # current logical state (deltas LWW-merged in)
-        df, sort_cols, max_rpf = self._clustering_write_args(m, df)
         # Exact misplacement tripwire. Computed from the RAW physical rows
         # (dedup=False) with only the key column selected: tombstones are
         # stored rows, so every key survives the LWW reduce as >= 1 row and
         # the raw bucket set equals the deduped one — this pass is a
         # column-pruned parquet scan + partial-agg distinct (bounded by
         # new_n_buckets values), NOT a second execution of the merge read.
-        expected = {
+        expected = sorted(
             r[0]
             for r in self._read_manifest(m, dedup=False)
             .select(
@@ -1692,42 +1683,21 @@ class SnapshotTable:
             )
             .distinct()
             .collect()
-        }
-        tag = uuid.uuid4().hex[:12]
-        new_files, footers = self._write_bucket_files(
-            df,
-            tag,
-            new_n_buckets,
-            key_cols=m["key_cols"],
-            sort_cols=sort_cols,
-            max_records_per_file=max_rpf,
-            expected_buckets=expected,
         )
-        new = {
-            "version": m["version"] + 1,
-            "parent": m["version"],
-            "schema": schema.json(),
-            "key_cols": m["key_cols"],
-            "n_buckets": int(new_n_buckets),
-            "bucket_fn": "murmur3",
-            "files": new_files,
-            "delta_files": {},
-            "applied_hw": self._hw(m),
-            "props": m["props"],
-            "file_stats": self._footer_stats(
-                new_files, (m.get("props") or {}).get("stats_cols", []), footers
-            ),
-            "summary": {
-                "operation": "rebucket",
-                "from_n_buckets": m["n_buckets"],
-                "to_n_buckets": int(new_n_buckets),
-            },
-        }
-        self._try_commit(new)
-        return new["version"]
+        return self._write_and_commit(
+            m,
+            _manifest_schema(m),
+            self._read_manifest(m),  # current logical state (deltas merged in)
+            expected,
+            "rebucket",
+            n_buckets=new_n_buckets,
+        ).version
 
     def overwrite(self, df: DataFrame) -> int:
-        """Replace the full table contents (initial snapshot load)."""
+        """Replace the full table contents (initial snapshot load). It
+        commits like a copy-on-write merge that touches every bucket, so a
+        lost commit race rebases only over a winner that changed no bucket
+        and no table property."""
         m = self.manifest()
         n_buckets = _murmur3_buckets(m)
         schema = evolve_schema(_manifest_schema(m), df.schema)
@@ -1736,34 +1706,14 @@ class SnapshotTable:
         self._enforce_constraints(
             df, m.get("props"), op_col="op", key_cols=m["key_cols"]
         )
-        tag = uuid.uuid4().hex[:12]
-        df, sort_cols, max_rpf = self._clustering_write_args(m, df)
-        files, footers = self._write_bucket_files(
+        return self._write_and_commit(
+            m,
+            schema,
             df,
-            tag,
-            n_buckets,
-            key_cols=m["key_cols"],
-            sort_cols=sort_cols,
-            max_records_per_file=max_rpf,
-        )
-        new = {
-            "version": m["version"] + 1,
-            "parent": m["version"],
-            "schema": schema.json(),
-            "key_cols": m["key_cols"],
-            "n_buckets": n_buckets,
-            "bucket_fn": m["bucket_fn"],
-            "files": files,
-            "delta_files": {},
-            "applied_hw": self._hw(m),
-            "props": m["props"],
-            "file_stats": self._footer_stats(
-                files, (m.get("props") or {}).get("stats_cols", []), footers
-            ),
-            "summary": {"operation": "overwrite"},
-        }
-        self._try_commit(new)
-        return new["version"]
+            list(range(n_buckets)),
+            "overwrite",
+            exact=False,
+        ).version
 
     # ----------------------------------------------------------------- merge
 
@@ -1808,6 +1758,21 @@ class SnapshotTable:
                 warnings.warn(msg, stacklevel=3)
         return fresh, skipped
 
+    @staticmethod
+    def _source_buckets(
+        m: dict, source: DataFrame, given: list[int] | None = None
+    ) -> list[int]:
+        """The buckets of ``m`` that ``source``'s keys fall in: ``given``
+        when the caller already knows them (zero jobs; callers that
+        aggregate over the batch pass it in), else one column-pruned
+        distinct over the key column, with no materialization."""
+        if given is not None:
+            return sorted(given)
+        bucket = _bucket_expr(m["key_cols"][0], _murmur3_buckets(m))
+        return sorted(
+            r["_b"] for r in source.select(bucket.alias("_b")).distinct().collect()
+        )
+
     def merge(
         self,
         source: "DataFrame | pa.Table",
@@ -1824,7 +1789,10 @@ class SnapshotTable:
 
         Policies:
         * ``upsert`` (LWW apply): matched + op='delete' → DELETE; otherwise
-          UPDATE; not-matched + op≠'delete' → INSERT. (SURVEY K5/K6/A1.)
+          UPDATE (the source row replaces the target row; non-key columns
+          the source lacks become NULL); not-matched + op≠'delete' →
+          INSERT. A source row whose op is NULL is neither inserted nor an
+          update: a matched target row is deleted. (SURVEY K5/K6/A1.)
         * ``versioned_upsert``: cross-batch LWW. The table stores the winning
           event's ``op_seq``/``offset``/``op``; merge takes, per key, the max
           of (target row, source rows) by ``(op_seq, offset)`` — correct even
@@ -1839,12 +1807,22 @@ class SnapshotTable:
           per-bucket delta files, so epoch cost ∝ change set; reads
           LWW-merge base∪deltas, and :meth:`compact` (auto-triggered past
           ``props["compact_threshold"]`` deltas/bucket, default 8) folds
-          them back. The other policies rewrite the touched buckets
-          (copy-on-write).
+          them back.
         * ``insert_if_absent`` (first-writer-wins): WHEN NOT MATCHED THEN
           INSERT only — existing rows never updated; the reference's
           ``insertObject`` contract (``DatabaseInformationModel.java:787-794``)
           and uid_map MERGE (``DeidentificationController.java:110-117``).
+
+        ``upsert`` and ``insert_if_absent`` are copy-on-write: they are
+        clause sets of :meth:`merge_into`'s merge. It gates replays first,
+        then evolves the table schema from the source (``op_col`` is not
+        stored) and rewrites the touched buckets in the declared
+        clustering layout. On a versioned table they follow
+        ``merge_into``'s tombstone semantics: a tombstoned key is NOT
+        MATCHED, a delete writes a tombstone and an update bumps
+        ``op_seq``. CHECK constraints see the rows they insert or update,
+        not every source row, and an empty source commits only to record
+        fresh ``commit_keys``.
 
         ``source`` must contain ≤1 row per key (run lww_dedup first) — the
         same uniqueness Iceberg MERGE demands; ``assert_unique_source``
@@ -1872,10 +1850,10 @@ class SnapshotTable:
         ``apply_changes`` collected on the driver). It merges with no Spark
         job and no shuffle: the Arrow LWW kernel reduces it, the bucket of
         each distinct key comes from :meth:`_bucket_ids`, and
-        :meth:`_write_arrow_buckets` writes the deltas. The replay gate,
-        schema evolution, CHECK constraints (over a LocalRelation of the
-        batch), the bucket-set tripwire, the commit and auto-compaction are
-        the ones a DataFrame source goes through.
+        :meth:`_write_and_commit` writes the deltas with the Arrow writer.
+        The replay gate, schema evolution, CHECK constraints (over a
+        LocalRelation of the batch), the bucket-set tripwire, the commit
+        and auto-compaction are the ones a DataFrame source goes through.
 
         ``manifest`` is the manifest to plan and commit against when the
         caller has already loaded it (``apply_changes`` takes its column
@@ -1885,19 +1863,32 @@ class SnapshotTable:
         m = self.manifest() if manifest is None else manifest
         key_cols = m["key_cols"]
         n_buckets = _murmur3_buckets(m)
-        mor = policy == "versioned_upsert"
-        arrow = None if isinstance(source, DataFrame) else source
-        if arrow is not None and not mor:
-            raise ValueError(
-                "an Arrow merge source needs policy='versioned_upsert'"
+        if policy in ("upsert", "insert_if_absent"):
+            if not isinstance(source, DataFrame):
+                raise ValueError(
+                    "an Arrow merge source needs policy='versioned_upsert'"
+                )
+            return self._merge_into(
+                m,
+                source,
+                **self._policy_clauses(m, policy, op_col, source),
+                commit_keys=commit_keys,
+                on_replayed=on_replayed,
+                assert_unique_source=assert_unique_source,
+                evolve_from=T.StructType(
+                    [f for f in source.schema.fields if f.name != op_col]
+                ),
+                touched_buckets=touched_buckets,
+                policy=policy,
             )
+        if policy != "versioned_upsert":
+            raise ValueError(f"unknown merge policy {policy!r}")
+        arrow = None if isinstance(source, DataFrame) else source
 
         # ---- idempotency gate (exactly-once replay) -----------------------
         commit_keys, skipped = self._gate_commit_keys(m, commit_keys, on_replayed)
         if commit_keys is not None and not commit_keys:
-            return MergeStats(
-                m["version"], 0, skipped, applied=False, mode="mor" if mor else "cow"
-            )
+            return MergeStats(m["version"], 0, skipped, applied=False, mode="mor")
 
         if arrow is not None:
             from pyspark.sql.pandas.types import from_arrow_schema
@@ -1915,23 +1906,15 @@ class SnapshotTable:
             if dupes:
                 raise ValueError(f"merge source has {dupes} duplicate keys")
 
-        # ---- schema evolution --------------------------------------------
-        if mor:
-            # op/op_seq/offset become stored columns of the table
-            src_payload_schema = src_schema
-        else:
-            src_payload_schema = T.StructType(
-                [f for f in source.schema.fields if f.name != op_col]
-            )
-        schema = evolve_schema(_manifest_schema(m), src_payload_schema)
+        # ---- schema evolution: op/op_seq/offset are stored columns --------
+        schema = evolve_schema(_manifest_schema(m), src_schema)
         self._guard_dropped_columns(_manifest_schema(m), schema, m)
 
         # constraints check the CONFORMED view of the batch (the rows as
         # they will be written): a mixed-vintage source missing a
         # constrained column gets typed nulls, which pass CHECK — the same
         # schema-evolution contract the write itself applies. Tombstones
-        # are exempted BEFORE conforming (the upsert policy drops op_col
-        # from the stored schema).
+        # are exempted BEFORE conforming.
         if (m.get("props") or {}).get("constraints"):
             chk = source
             if op_col and op_col in source.columns:
@@ -1940,138 +1923,90 @@ class SnapshotTable:
                 conform_to_schema(chk, schema), m.get("props"),
                 key_cols=key_cols,
             )
-        if mor:
-            if arrow is not None:
-                new_files, footers, touched = self._merge_on_driver(
-                    m, schema, arrow, touched_buckets
-                )
-            else:
-                from nifi_dicom_spark.operators.dedup import lww_dedup
+        if arrow is not None:
+            rows, touched = self._merge_on_driver(m, schema, arrow, touched_buckets)
+        else:
+            from nifi_dicom_spark.operators.dedup import lww_dedup
 
-                bucket = _bucket_expr(key_cols[0], n_buckets)
-                # bucket discovery: callers that already aggregate over the
-                # batch (lineage metrics) pass the touched set in — zero
-                # extra jobs; otherwise one column-pruned scan of the raw
-                # source (conv_id only — Catalyst prunes the rest), no
-                # materialization
-                touched = (
-                    sorted(touched_buckets)
-                    if touched_buckets is not None
-                    else sorted(
-                        r["_bucket"]
-                        for r in source.select(bucket.alias("_bucket"))
-                        .distinct()
-                        .collect()
-                    )
-                )
-                # merge-on-read: dedup ONLY the batch and append per-bucket
-                # delta files — the table's base is never read or
-                # rewritten, so epoch cost ∝ change set. Cross-batch LWW
-                # happens at read (associative reduce over base∪deltas) and
-                # at compaction. ONE exchange total: cluster by the key
-                # column exactly as the write does, let the groupBy reuse
-                # the clustering (HashPartitioning(conv_id) satisfies
-                # ClusteredDistribution(conv_id, turn_idx)), and the write's
-                # own repartition is then redundant — no second payload
-                # shuffle
-                clustered = conform_to_schema(source, schema).repartition(
-                    _write_tasks(source.sparkSession, n_buckets), key_cols[0]
-                )
-                merged = lww_dedup(clustered, key_cols).select(
-                    *schema.fieldNames()
-                )
-                new_files, footers = self._write_bucket_files(
-                    merged,
-                    uuid.uuid4().hex[:12],
-                    n_buckets,
-                    key_cols=key_cols,
-                    # rows = the conformed batch: every touched bucket keeps
-                    # ≥1 row through the dedup, so the written bucket set
-                    # must equal the touched set exactly
-                    expected_buckets=set(touched),
-                )
-            stats = self._commit_merge(
-                m, schema, touched, new_files, commit_keys, policy, skipped,
-                delta=True, footers=footers,
+            touched = self._source_buckets(m, source, touched_buckets)
+            # merge-on-read: dedup ONLY the batch and append per-bucket
+            # delta files — the table's base is never read or
+            # rewritten, so epoch cost ∝ change set. Cross-batch LWW
+            # happens at read (associative reduce over base∪deltas) and
+            # at compaction. ONE exchange total: cluster by the key
+            # column exactly as the write does, let the groupBy reuse
+            # the clustering (HashPartitioning(conv_id) satisfies
+            # ClusteredDistribution(conv_id, turn_idx)), and the write's
+            # own repartition is then redundant — no second payload
+            # shuffle
+            clustered = conform_to_schema(source, schema).repartition(
+                _write_tasks(source.sparkSession, n_buckets), key_cols[0]
             )
-            thresh = int((m.get("props") or {}).get("compact_threshold", 8))
-            if thresh > 0:
-                over = [
-                    int(b)
-                    for b, rels in self.manifest().get("delta_files", {}).items()
-                    if len(rels) >= thresh
-                ]
-                if over:
-                    # best-effort maintenance: the MERGE above already
-                    # committed — a concurrent writer racing the compaction
-                    # must not surface as a merge failure (the caller would
-                    # re-merge a committed epoch / crash a streaming query
-                    # over data that is safely in the table). The next
-                    # over-threshold merge or an explicit compact() retries.
-                    try:
-                        self.compact(buckets=over)
-                    except Exception as ex:  # noqa: BLE001
-                        # same contract for ANY compaction failure — a
-                        # broken clustering declaration or a failed
-                        # normalization job must not surface as a merge
-                        # failure either
-                        warnings.warn(
-                            f"auto-compaction skipped (deltas remain "
-                            f"readable): {type(ex).__name__}: {ex}",
-                            stacklevel=2,
-                        )
-            return stats
-
-        src = source.withColumn("_bucket", _bucket_expr(key_cols[0], n_buckets))
-        # cache: we reuse source for bucket discovery + anti-join + projection
-        src.persist()
-        try:
-            touched = (
-                sorted(touched_buckets)
-                if touched_buckets is not None
-                else sorted(
-                    r["_bucket"] for r in src.select("_bucket").distinct().collect()
-                )
-            )
-            target = conform_to_schema(self._read_manifest(m, touched), schema)
-
-            if policy in ("upsert", "insert_if_absent"):
-                if policy == "upsert":
-                    # WHEN MATCHED → replaced: only unmatched target rows
-                    # survive (NOT MATCHED BY SOURCE arm)
-                    survivors = target.join(
-                        src.select(*key_cols), on=key_cols, how="left_anti"
-                    )
-                    incoming = src
-                else:  # insert_if_absent (first-writer-wins): existing rows
-                    # are NEVER updated — every target row survives
-                    survivors = target
-                    incoming = src.join(
-                        target.select(*key_cols), on=key_cols, how="left_anti"
-                    )
-                if op_col is not None and op_col in incoming.columns:
-                    incoming = incoming.filter(F.col(op_col) != F.lit("delete"))
-                incoming = conform_to_schema(incoming, schema)
-                merged = survivors.unionByName(incoming).select(
-                    *schema.fieldNames()
-                )
-            else:
-                raise ValueError(f"unknown merge policy {policy!r}")
-
-            tag = uuid.uuid4().hex[:12]
-            # cow upsert can legitimately empty a touched bucket (delete-only
-            # batch against an absent key), so only stray buckets are fatal
-            new_files, footers = self._write_bucket_files(
-                merged, tag, n_buckets, key_cols=key_cols,
-                expected_buckets=set(touched), expect_exact=False,
-            )
-        finally:
-            src.unpersist()
-
-        return self._commit_merge(
-            m, schema, touched, new_files, commit_keys, policy, skipped,
-            footers=footers,
+            rows = lww_dedup(clustered, key_cols).select(*schema.fieldNames())
+        # the rows are the reduced batch: every touched bucket keeps ≥1 row
+        # through the dedup, so the written bucket set must equal the
+        # touched set exactly; deltas are written in key order
+        stats = self._write_and_commit(
+            m, schema, rows, touched, policy, layout={}, delta=True,
+            commit_keys=commit_keys, skipped=skipped,
         )
+        thresh = int((m.get("props") or {}).get("compact_threshold", 8))
+        if thresh > 0:
+            over = [
+                int(b)
+                for b, rels in self.manifest().get("delta_files", {}).items()
+                if len(rels) >= thresh
+            ]
+            if over:
+                # best-effort maintenance: the MERGE above already
+                # committed — a concurrent writer racing the compaction
+                # must not surface as a merge failure (the caller would
+                # re-merge a committed epoch / crash a streaming query
+                # over data that is safely in the table). The next
+                # over-threshold merge or an explicit compact() retries.
+                try:
+                    self.compact(buckets=over)
+                except Exception as ex:  # noqa: BLE001
+                    # same contract for ANY compaction failure — a
+                    # broken clustering declaration or a failed
+                    # normalization job must not surface as a merge
+                    # failure either
+                    warnings.warn(
+                        f"auto-compaction skipped (deltas remain "
+                        f"readable): {type(ex).__name__}: {ex}",
+                        stacklevel=2,
+                    )
+        return stats
+
+    @staticmethod
+    def _policy_clauses(
+        m: dict, policy: str, op_col: str | None, source: DataFrame
+    ) -> dict:
+        """The :meth:`_merge_into` clauses of a copy-on-write ``merge``
+        policy against manifest ``m``. ``upsert``: a matched source row
+        whose op is 'delete' or NULL deletes the target row; any other
+        matched row replaces it, every non-key column taken from the
+        source (NULL where the source lacks it); an unmatched row is
+        inserted unless its op is 'delete' or NULL. ``insert_if_absent``:
+        the insert clause alone. On a versioned table the update leaves
+        ``op``/``op_seq``/``offset`` out, so :meth:`_merge_into` writes a
+        delete as a tombstone and bumps ``op_seq``."""
+        has_op = op_col is not None and op_col in source.columns
+        live = F.col(f"s.{op_col}") != F.lit("delete") if has_op else None
+        clauses: dict = {"insert_condition": live}
+        if policy == "upsert":
+            src = set(source.columns) - {op_col}
+            names = (set(_manifest_schema(m).fieldNames()) | src) - set(
+                m["key_cols"]
+            )
+            if {"op", "op_seq", "offset"} <= names:
+                names -= {"op", "op_seq", "offset"}
+            clauses["when_matched_update"] = {
+                c: F.col(f"s.{c}") if c in src else F.lit(None) for c in names
+            }
+            if has_op:
+                clauses["delete_condition"] = ~F.coalesce(live, F.lit(False))
+        return clauses
 
     def _merge_on_driver(
         self,
@@ -2079,21 +2014,20 @@ class SnapshotTable:
         schema: T.StructType,
         batch: "pa.Table",
         touched_buckets: list[int] | None,
-    ) -> tuple[dict[str, list[str]], dict, list[int]]:
+    ) -> tuple[Iterator, list[int]]:
         """The driver route of a versioned merge of the Arrow table
         ``batch``: conform it to the evolved ``schema``, reduce it with
-        :func:`~nifi_dicom_spark.operators.dedup.arrow_lww`, place each
-        winner by its key's :meth:`_bucket_ids` and write one delta file
-        per bucket, in key order, with :meth:`_write_arrow_buckets`.
-        Returns (bucket -> [relpath], footers, touched buckets)."""
+        :func:`~nifi_dicom_spark.operators.dedup.arrow_lww` and place each
+        winner by its key's :meth:`_bucket_ids`. Returns the
+        ``(bucket, winners)`` pairs :meth:`_write_arrow_buckets` writes and
+        the touched buckets."""
         import pyarrow as pa
         import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
         from nifi_dicom_spark.operators.dedup import arrow_conform, arrow_lww
 
-        codec = _driver_codec(self.spark, schema)
-        if codec is None:
+        if _driver_codec(self.spark, schema) is None:
             raise ValueError(
                 "pyarrow cannot write this table's schema or the session's "
                 "parquet codec; merge the batch as a DataFrame"
@@ -2106,16 +2040,8 @@ class SnapshotTable:
         ids = pa.array(self._bucket_ids(m, keys), pa.int32())
         row_ids = ids.take(pc.index_in(winners[key_cols[0]], value_set=keys))
         placed = sorted(set(ids.to_pylist()))
-        new_files, footers = self._write_arrow_buckets(
-            ((b, winners.filter(pc.equal(row_ids, b))) for b in placed),
-            schema,
-            uuid.uuid4().hex[:12],
-            codec,
-            sort_cols=key_cols,
-        )
-        touched = placed if touched_buckets is None else sorted(touched_buckets)
-        _check_buckets(new_files, set(touched))
-        return new_files, footers, touched
+        rows = ((b, winners.filter(pc.equal(row_ids, b))) for b in placed)
+        return rows, placed if touched_buckets is None else sorted(touched_buckets)
 
     def merge_into(
         self,
@@ -2203,10 +2129,21 @@ class SnapshotTable:
         commit_keys: list[tuple[int, int]] | None = None,
         on_replayed: str | None = None,
         assert_unique_source: bool = False,
+        evolve_from: T.StructType | None = None,
+        touched_buckets: list[int] | None = None,
+        policy: str = "merge_into",
     ) -> MergeStats:
         """:meth:`merge_into` against manifest ``m``: the callers that
         found the source in ``m`` (predicate DML) merge into that same
-        version."""
+        version. :meth:`merge`'s copy-on-write policies also pass
+        ``evolve_from`` (their source's payload schema, which evolves the
+        table schema once the replay gate has let the write through),
+        ``touched_buckets`` when they know the source's buckets, and the
+        ``policy`` their commit records.
+
+        A source with no rows commits only to record fresh
+        ``commit_keys``: an empty version whose ledger advances, as an
+        empty versioned merge does."""
         if (
             when_matched_update is None
             and not when_matched_delete
@@ -2244,26 +2181,27 @@ class SnapshotTable:
         for name in when_matched_update or {}:
             if name in key_cols:
                 raise ValueError(f"cannot assign key column {name!r}")
-        n_buckets = _murmur3_buckets(m)
+        _murmur3_buckets(m)  # refuse another layout before any read
         schema = _manifest_schema(m)
 
         commit_keys, skipped = self._gate_commit_keys(m, commit_keys, on_replayed)
-        if commit_keys is not None and not commit_keys:
-            return MergeStats(m["version"], 0, skipped, applied=False, mode="cow")
-
-        if assert_unique_source:
-            dupes = (
-                source.groupBy(*key_cols).count().filter(F.col("count") > 1).count()
-            )
-            if dupes:
-                raise ValueError(f"merge source has {dupes} duplicate keys")
-
-        bucket = _bucket_expr(key_cols[0], n_buckets)
-        touched = sorted(
-            r["_b"]
-            for r in source.select(bucket.alias("_b")).distinct().collect()
-        )
-        if not touched:
+        touched: list[int] = []
+        if commit_keys is None or commit_keys:  # not a replay
+            if evolve_from is not None:
+                schema = evolve_schema(schema, evolve_from)
+                self._guard_dropped_columns(_manifest_schema(m), schema, m)
+            if assert_unique_source:
+                dupes = (
+                    source.groupBy(*key_cols)
+                    .count()
+                    .filter(F.col("count") > 1)
+                    .count()
+                )
+                if dupes:
+                    raise ValueError(f"merge source has {dupes} duplicate keys")
+            touched = self._source_buckets(m, source, touched_buckets)
+        if not touched and not commit_keys:
+            # a replay, or an empty source with no commit keys to record
             return MergeStats(m["version"], 0, skipped, applied=False, mode="cow")
 
         # versioned (LWW) tables: MERGE operates on the LOGICAL state —
@@ -2275,6 +2213,28 @@ class SnapshotTable:
         names = set(schema.fieldNames())
         versioned = {"op", "op_seq", "offset"} <= names
         t_all = self._read_manifest(m, touched)
+        if evolve_from is not None:
+            t_all = conform_to_schema(t_all, schema)
+        if not versioned and when_matched_update is None and not do_delete:
+            # insert-only clauses (insert_if_absent) keep every target row
+            # as it is: the target passes through, and the source meets
+            # only the target's keys in an anti join the planner can
+            # broadcast — no full outer join, no shuffle of target rows
+            new = conform_to_schema(
+                source.alias("s")
+                .filter(_cond(insert_condition, True))
+                .join(
+                    t_all.select(*key_cols).alias("t"),
+                    [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in key_cols],
+                    "left_anti",
+                ),
+                schema,
+            )
+            self._enforce_constraints(new, m.get("props"), key_cols=key_cols)
+            return self._write_and_commit(
+                m, schema, t_all.unionByName(new), touched, policy, exact=False,
+                commit_keys=commit_keys, skipped=skipped,
+            )
         t_live = (
             t_all.filter(F.col("op") != F.lit("delete")) if versioned else t_all
         )
@@ -2415,24 +2375,14 @@ class SnapshotTable:
                 m.get("props"),
                 key_cols=key_cols,
             )
-            # a CoW bucket rewrite must not decay the declared layout
-            merged, sort_cols, max_rpf = self._clustering_write_args(m, merged)
-            tag = uuid.uuid4().hex[:12]
-            new_files, footers = self._write_bucket_files(
-                merged,
-                tag,
-                n_buckets,
-                key_cols=key_cols,
-                sort_cols=sort_cols,
-                max_records_per_file=max_rpf,
+            # a delete can empty a touched bucket: only stray buckets fail
+            return self._write_and_commit(
+                m, schema, merged, touched, policy, exact=False,
+                commit_keys=commit_keys, skipped=skipped,
             )
         finally:
             if has_constraints:
                 kept.unpersist()
-        return self._commit_merge(
-            m, schema, touched, new_files, commit_keys, "merge_into", skipped,
-            footers=footers,
-        )
 
     def _where_source(self, m: dict, predicate, live_only: bool = True) -> DataFrame:
         """Matching-key discovery pass shared by :meth:`delete_where` /
@@ -2535,7 +2485,11 @@ class SnapshotTable:
            tombstone an earlier delete left with its payload — becomes a
            tombstone that keeps only the key, ``op='delete'``, ``op_seq``
            (bumped by 1 for a live row, so late CDC replays stay dead) and
-           ``offset``; every other column is nulled. Un-versioned tables
+           ``offset``; every other column is nulled. This is not a
+           :meth:`merge_into` clause set: ``_merge_into`` keeps an existing
+           tombstone as it is, payload included, and counts it as NOT
+           MATCHED, so ``forget`` keeps its own scrub projection and hands
+           it to :meth:`_write_and_commit`. Un-versioned tables
            physically drop the rows in the rewrite. The copy-on-write
            commit also CLEARS the touched buckets' merge-on-read delta
            entries (no separate compact needed) — every file still
@@ -2563,7 +2517,7 @@ class SnapshotTable:
         """
         m = self.manifest()
         key_cols = m["key_cols"]
-        n_buckets = _murmur3_buckets(m)
+        _murmur3_buckets(m)  # refuse another layout before any read
         schema = _manifest_schema(m)
         versioned = {"op", "op_seq", "offset"} <= set(schema.fieldNames())
         # tombstones too: one a delete_where left still holds its payload
@@ -2576,10 +2530,7 @@ class SnapshotTable:
                 "delete_version": None,
                 "files_vacuumed": 0,
             }
-        bucket = _bucket_expr(key_cols[0], n_buckets)
-        touched = sorted(
-            r["_b"] for r in src.select(bucket.alias("_b")).distinct().collect()
-        )
+        touched = self._source_buckets(m, src)
         if versioned:
             rows = self._read_manifest(m, touched).alias("r")
             hits = src.withColumn("_hit", F.lit(True)).alias("h")
@@ -2609,23 +2560,12 @@ class SnapshotTable:
                     for f in schema.fields
                 ]
             )
-            scrubbed, sort_cols, max_rpf = self._clustering_write_args(m, scrubbed)
-            new_files, footers = self._write_bucket_files(
-                scrubbed,
-                uuid.uuid4().hex[:12],
-                n_buckets,
-                key_cols=key_cols,
-                sort_cols=sort_cols,
-                max_records_per_file=max_rpf,
-                # every touched bucket keeps its matching rows as tombstones
-                expected_buckets=set(touched),
-            )
-            stats = self._commit_merge(
-                m, schema, touched, new_files, None, "forget", 0, footers=footers
-            )
+            # every touched bucket keeps its matching rows as tombstones
+            stats = self._write_and_commit(m, schema, scrubbed, touched, "forget")
         else:
             stats = self._merge_into(
-                m, src, when_matched_delete=True, when_not_matched_insert=False
+                m, src, when_matched_delete=True, when_not_matched_insert=False,
+                touched_buckets=touched,
             )
         removed = self.vacuum(keep_versions=1, min_file_age_s=min_file_age_s)
         return {
@@ -2634,6 +2574,71 @@ class SnapshotTable:
             "delete_version": stats.version,
             "files_vacuumed": removed,
         }
+
+    def _write_and_commit(
+        self,
+        m: dict,
+        schema: T.StructType,
+        rows: "DataFrame | Iterable[tuple[int, pa.Table]]",
+        touched: list[int],
+        policy: str,
+        *,
+        layout: dict | None = None,
+        exact: bool = True,
+        delta: bool = False,
+        commit_keys: list | None = None,
+        skipped: int = 0,
+        n_buckets: int | None = None,
+    ) -> MergeStats:
+        """Write ``rows`` as the data files of buckets ``touched`` and
+        commit them against manifest ``m`` — every data write ends here
+        (merge's two routes, merge_into and the DML built on it, forget,
+        compact's two routes, optimize, overwrite and rebucket), in three
+        named steps:
+
+        1. **produce** the files under a fresh ``c-<tag>/`` directory: the
+           Spark writer (:meth:`_write_bucket_files`) for a DataFrame, in
+           the clustering ``layout`` (default: the table's declared one;
+           ``{}`` is key order), or the Arrow writer
+           (:meth:`_write_arrow_buckets`) for ``(bucket, pa.Table)`` pairs,
+           in the layout's ``sort_by`` order (else key order; it cannot
+           apply a ``zorder_by`` layout);
+        2. **check** the bucket set (:func:`_check_buckets`): files of a
+           bucket outside ``touched`` always fail the write, and when
+           ``exact`` so does a touched bucket left empty;
+        3. **commit** (:meth:`_commit_merge`): build, validate and rebase.
+
+        ``n_buckets`` writes a new bucket layout, replacing every bucket
+        of ``m`` (rebucket). ``policy`` names the write in the commit
+        summary."""
+        n = _murmur3_buckets(m) if n_buckets is None else n_buckets
+        if layout is None:
+            layout = (m.get("props") or {}).get("clustering") or {}
+        tag = uuid.uuid4().hex[:12]
+        # 1. produce the files
+        if isinstance(rows, DataFrame):
+            rows, sort_cols, max_rpf = self._clustering_write_args(layout, rows)
+            files, footers = self._write_bucket_files(
+                rows, tag, n, m["key_cols"], sort_cols, max_rpf
+            )
+        else:
+            if layout.get("zorder_by"):
+                raise ValueError("the Arrow writer cannot apply a z-order layout")
+            files, footers = self._write_arrow_buckets(
+                rows,
+                schema,
+                tag,
+                _driver_codec(self.spark, schema),
+                sort_cols=list(layout.get("sort_by") or m["key_cols"]),
+                max_records_per_file=int(layout.get("max_records_per_file") or 0),
+            )
+        # 2. check the bucket set
+        _check_buckets(files, set(touched), exact)
+        # 3. commit
+        return self._commit_merge(
+            m, schema, touched, files, commit_keys, policy, skipped, delta,
+            footers=footers, n_buckets=n_buckets,
+        )
 
     def _commit_merge(
         self,
@@ -2648,6 +2653,7 @@ class SnapshotTable:
         max_commit_retries: int = 3,
         *,
         footers: dict,
+        n_buckets: int | None = None,
     ) -> MergeStats:
         """Build and publish the post-merge manifest, with **optimistic
         validate-and-rebase** on commit races (the Iceberg retry semantics):
@@ -2659,29 +2665,40 @@ class SnapshotTable:
         merged) and the commit retried — concurrent writers over DISJOINT
         buckets all succeed, serialized into consecutive versions. A winner
         that touched our buckets (same keys) or advanced our commit keys
-        raises :class:`ConcurrentWriteConflict`: re-read and re-merge."""
+        raises :class:`ConcurrentWriteConflict`: re-read and re-merge.
+        ``n_buckets`` commits a new bucket layout (rebucket): the new files
+        replace every bucket of ``m``'s layout. The summary records a
+        merge's ``policy``, or the ``overwrite``/``rebucket`` operation."""
+        replaced = touched if n_buckets is None else range(int(m["n_buckets"]))
+        if policy == "overwrite":
+            summary = {"operation": "overwrite"}
+        elif policy == "rebucket":
+            summary = {
+                "operation": "rebucket",
+                "from_n_buckets": m["n_buckets"],
+                "to_n_buckets": n_buckets,
+            }
+        else:
+            summary = {
+                "operation": "merge",
+                "policy": policy,
+                "mode": "mor" if delta else "cow",
+                "touched_buckets": len(touched),
+            }
 
         def build(base: dict, schema: T.StructType) -> dict:
             # carry over untouched buckets; replace (cow) or extend (mor
-            # delta) ONLY touched ones. A write that passes no expected
-            # bucket set (merge_into's rewrite) is not checked against
-            # ``touched``: a file it wrote for another bucket would replace
-            # that untouched bucket's manifest entry, so only touched
-            # buckets' files are registered.
-            touched_set = set(touched)
+            # delta) ONLY touched ones
             files = dict(base["files"])
             deltas = {b: list(v) for b, v in base.get("delta_files", {}).items()}
-            kept = {
-                b: rels for b, rels in new_files.items() if int(b) in touched_set
-            }
             if delta:
-                for b, rels in kept.items():
+                for b, rels in new_files.items():
                     deltas.setdefault(b, []).extend(rels)
             else:
-                for b in touched:
+                for b in replaced:
                     files.pop(str(b), None)
                     deltas.pop(str(b), None)
-                files.update(kept)
+                files.update(new_files)
 
             hw = self._hw(base)
             if commit_keys:
@@ -2691,7 +2708,7 @@ class SnapshotTable:
                         hw[k] = int(e)
 
             # file stats: keep entries for still-referenced files, add
-            # footers of the newly-kept files (read by the write)
+            # footers of the new files (read by the write)
             referenced = {
                 rel for d in (files, deltas) for rels in d.values() for rel in rels
             }
@@ -2702,7 +2719,9 @@ class SnapshotTable:
             }
             file_stats.update(
                 self._footer_stats(
-                    kept, (base.get("props") or {}).get("stats_cols", []), footers
+                    new_files,
+                    (base.get("props") or {}).get("stats_cols", []),
+                    footers,
                 )
             )
             return {
@@ -2710,19 +2729,14 @@ class SnapshotTable:
                 "parent": base["version"],
                 "schema": schema.json(),
                 "key_cols": base["key_cols"],
-                "n_buckets": base["n_buckets"],
-                "bucket_fn": base["bucket_fn"],
+                "n_buckets": base["n_buckets"] if n_buckets is None else n_buckets,
+                "bucket_fn": "murmur3",
                 "files": files,
                 "delta_files": deltas,
                 "applied_hw": hw,
                 "props": base["props"],
                 "file_stats": file_stats,
-                "summary": {
-                    "operation": "merge",
-                    "policy": policy,
-                    "mode": "mor" if delta else "cow",
-                    "touched_buckets": len(touched),
-                },
+                "summary": summary,
             }
 
         def bucket_sig(mf: dict, b: int):
@@ -2756,7 +2770,7 @@ class SnapshotTable:
                 # (our reduce read m's view of them — a concurrent change
                 # there means our output is stale)
                 dirty = [
-                    b for b in touched if bucket_sig(cur, b) != bucket_sig(m, b)
+                    b for b in replaced if bucket_sig(cur, b) != bucket_sig(m, b)
                 ]
                 if dirty:
                     raise ConcurrentWriteConflict(
@@ -2901,24 +2915,24 @@ class SnapshotTable:
             "min_retained_version": self.min_retained_version(),
         }
 
+    @staticmethod
     def _clustering_write_args(
-        self, m: dict, df: DataFrame
-    ) -> tuple[DataFrame, list[str] | None, int | None]:
-        """Apply the declared layout to a base-file rewrite: every path
-        that rewrites base files (compact, merge_into's CoW, overwrite)
-        routes through this so the declaration survives ALL rewrites, not
-        just explicit optimize(). Returns (df', sort_cols,
-        max_records_per_file); a z-order declaration appends the interleave
-        column (one min/max agg), plain declarations are free."""
-        decl = (m.get("props") or {}).get("clustering") or {}
+        decl: dict, df: DataFrame
+    ) -> tuple[DataFrame, list[str], int | None]:
+        """The Spark writer's arguments for the clustering declaration
+        ``decl`` (the ``props["clustering"]`` format): :meth:`_write_and_commit`
+        applies the table's declared layout to every base-file rewrite, so
+        the declaration survives ALL rewrites, not just explicit
+        optimize(). Returns (df', sort_cols, max_records_per_file); a
+        z-order declaration appends the interleave column (one min/max
+        agg), plain declarations are free."""
+        max_rpf = decl.get("max_records_per_file")
         if decl.get("zorder_by"):
             df = zvalue_column(
                 df, list(decl["zorder_by"]), decl.get("zorder_bits")
             )
-            return df, [ZORDER_COL], decl.get("max_records_per_file")
-        if decl.get("sort_by"):
-            return df, list(decl["sort_by"]), decl.get("max_records_per_file")
-        return df, None, None
+            return df, [ZORDER_COL], max_rpf
+        return df, list(decl.get("sort_by") or []), max_rpf
 
     def compact(
         self, buckets: list[int] | None = None, min_deltas: int = 1
@@ -2934,15 +2948,17 @@ class SnapshotTable:
 
         Each call takes one of two routes. When the base and delta files
         of the buckets to compact total at most
-        :data:`DRIVER_READ_MAX_BYTES`, the driver folds them
-        (:meth:`_fold_on_driver`): no Spark job and no shuffle. Larger
+        :data:`DRIVER_READ_MAX_BYTES`, the driver folds them: for each
+        bucket, pyarrow reads its own files (so every row stays in its
+        bucket) and :func:`~nifi_dicom_spark.operators.dedup.arrow_lww`
+        reduces them, with no Spark job and no shuffle. Larger
         compactions, tables with a ``zorder_by`` declaration (the z-value
         is a Spark expression with a min/max pass), schemas Arrow cannot
         hold and compression codecs pyarrow cannot write take the Spark
-        path: :meth:`_read_manifest` (one LWW reduce) and
-        :meth:`_write_bucket_files`."""
+        path: :meth:`_read_manifest` (one LWW reduce). Either route's rows
+        go to :meth:`_write_and_commit`."""
         m = self.manifest()
-        n_buckets = _murmur3_buckets(m)
+        _murmur3_buckets(m)  # refuse another layout before any read
         deltas = m.get("delta_files", {})
         todo = sorted(
             int(b)
@@ -2954,82 +2970,32 @@ class SnapshotTable:
             return None
         schema = _manifest_schema(m)
         _require_version_cols(schema)
-        tag = uuid.uuid4().hex[:12]
         decl = (m.get("props") or {}).get("clustering") or {}
-        codec = _driver_codec(self.spark, schema)
-        rels = [
-            rel
+        per_bucket = {
+            b: [
+                rel
+                for which in ("files", "delta_files")
+                for rel in m.get(which, {}).get(str(b), [])
+            ]
             for b in todo
-            for which in ("files", "delta_files")
-            for rel in m.get(which, {}).get(str(b), [])
-        ]
+        }
         # tombstones are stored rows, so a bucket holding ≥1 delta file
         # cannot LWW-reduce to empty: either route must repopulate exactly
         # the compacted buckets
         if (
             not decl.get("zorder_by")
-            and codec is not None
-            and self._fits_driver(rels)
+            and _driver_codec(self.spark, schema) is not None
+            and self._fits_driver([r for rels in per_bucket.values() for r in rels])
         ):
-            new_files, footers = self._fold_on_driver(
-                m, schema, todo, tag, codec
+            from nifi_dicom_spark.operators.dedup import arrow_lww
+
+            folded = (
+                (b, arrow_lww(self._arrow_files(m, schema, rels), m["key_cols"]))
+                for b, rels in per_bucket.items()
             )
-            _check_buckets(new_files, set(todo))
         else:
-            merged = self._read_manifest(m, todo)  # deduped base∪deltas
-            merged, sort_cols, max_rpf = self._clustering_write_args(m, merged)
-            new_files, footers = self._write_bucket_files(
-                merged,
-                tag,
-                n_buckets,
-                key_cols=m["key_cols"],
-                sort_cols=sort_cols,
-                max_records_per_file=max_rpf,
-                expected_buckets=set(todo),
-            )
-        stats = self._commit_merge(
-            m, schema, todo, new_files, None, "compact", 0, delta=False,
-            footers=footers,
-        )
-        return stats.version
-
-    def _fold_on_driver(
-        self, m: dict, schema: T.StructType, todo: list[int], tag: str, codec: str
-    ) -> tuple[dict[str, list[str]], dict]:
-        """The driver route of :meth:`compact`: for each bucket in ``todo``,
-        pyarrow reads its own base and delta files (so every row stays in
-        its bucket), :func:`~nifi_dicom_spark.operators.dedup.arrow_lww`
-        reduces them, and :meth:`_write_arrow_buckets` writes the winners
-        in the declared ``sort_by`` order (else the key order) into
-        ``c-<tag>/b=N/``, one file per ``max_records_per_file`` slice."""
-        from nifi_dicom_spark.operators.dedup import arrow_lww
-
-        decl = (m.get("props") or {}).get("clustering") or {}
-        folded = (
-            (
-                b,
-                arrow_lww(
-                    self._arrow_files(
-                        m,
-                        schema,
-                        [
-                            *m.get("files", {}).get(str(b), []),
-                            *m.get("delta_files", {}).get(str(b), []),
-                        ],
-                    ),
-                    m["key_cols"],
-                ),
-            )
-            for b in todo
-        )
-        return self._write_arrow_buckets(
-            folded,
-            schema,
-            tag,
-            codec,
-            sort_cols=list(decl.get("sort_by") or m["key_cols"]),
-            max_records_per_file=int(decl.get("max_records_per_file") or 0),
-        )
+            folded = self._read_manifest(m, todo)  # deduped base∪deltas
+        return self._write_and_commit(m, schema, folded, todo, "compact").version
 
     def _write_arrow_buckets(
         self,
@@ -3040,8 +3006,9 @@ class SnapshotTable:
         sort_cols: list[str],
         max_records_per_file: int = 0,
     ) -> tuple[dict[str, list[str]], dict]:
-        """The driver's bucket writer, shared by the driver routes of
-        :meth:`compact` and :meth:`merge`: each ``(bucket, Arrow table)`` of
+        """The driver's bucket writer, the one :meth:`_write_and_commit`
+        runs for the driver routes of :meth:`compact` and :meth:`merge`:
+        each ``(bucket, Arrow table)`` of
         ``buckets`` is sorted by ``sort_cols`` (ascending, nulls first, as
         Spark's ``sortWithinPartitions``) and written with pyarrow into
         ``c-<tag>/b=N/``, one ``part-*.parquet`` file per
@@ -3142,34 +3109,26 @@ class SnapshotTable:
         missing = [c for c in cluster_cols if c not in schema.fieldNames()]
         if missing:
             raise ValueError(f"optimize clustering columns not in schema: {missing}")
-        n_buckets = _murmur3_buckets(m)
+        _murmur3_buckets(m)  # refuse another layout before any read
         nonempty = {int(b) for b in m.get("files", {})} | {
             int(b) for b in m.get("delta_files", {})
         }
         todo = sorted(nonempty if buckets is None else nonempty & set(buckets))
         if not todo:
             return None
-        merged = self._read_manifest(m, todo)  # deduped base∪deltas, tombstones kept
-        if zorder_by is not None:
-            merged = zvalue_column(merged, list(zorder_by), zorder_bits)
-            sort_cols = [ZORDER_COL]
-        else:
-            sort_cols = list(sort_by)
-        tag = uuid.uuid4().hex[:12]
-        new_files, footers = self._write_bucket_files(
-            merged,
-            tag,
-            n_buckets,
-            key_cols=m["key_cols"],
-            sort_cols=sort_cols,
-            expected_buckets=set(todo),
-            max_records_per_file=max_records_per_file,
+        layout = (
+            {"zorder_by": zorder_by, "zorder_bits": zorder_bits}
+            if zorder_by is not None
+            else {"sort_by": sort_by}
         )
-        stats = self._commit_merge(
-            m, schema, todo, new_files, None, "optimize", 0, delta=False,
-            footers=footers,
-        )
-        return stats.version
+        return self._write_and_commit(
+            m,
+            schema,
+            self._read_manifest(m, todo),  # deduped base∪deltas, tombstones kept
+            todo,
+            "optimize",
+            layout={**layout, "max_records_per_file": max_records_per_file},
+        ).version
 
     def history(self) -> list[dict]:
         """Version history oldest→newest: one row per manifest with the

@@ -280,6 +280,48 @@ def test_legacy_bucket_layout_is_refused_until_rebucket(spark, tmp_path):
     assert _sorted_rows(table.lookup(keys)) == _sorted_rows(exp)
 
 
+def test_rebucket_to_the_same_bucket_count_replaces_every_bucket(
+    spark, tmp_path
+):
+    """Migrating another layout to murmur3 with the same bucket count
+    replaces every old bucket, including the ones the new layout leaves
+    empty: no old file stays referenced and no row is duplicated."""
+    from pyspark.sql import types as T
+
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("v", T.LongType(), True),
+        ]
+    )
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "t"), schema, key_cols=["k"], n_buckets=4
+    )
+    table.overwrite(spark.createDataFrame([("a", 1), ("b", 2)], schema))
+    m = table.manifest()
+    before = _sorted_rows(table.read())
+    # the same files under other bucket ids: two keys fill at most two of
+    # four buckets, so a shift lands some file outside the new layout's set
+    legacy = {
+        **m,
+        "version": m["version"] + 1,
+        "parent": m["version"],
+        "bucket_fn": "xxhash64",
+        "files": {str((int(b) + 1) % 4): rels for b, rels in m["files"].items()},
+        "summary": {"operation": "legacy-layout"},
+    }
+    legacy.pop("committed_at")
+    table._try_commit(legacy)
+
+    table.rebucket(4)
+    assert _sorted_rows(table.read()) == before
+    old = {rel for rels in m["files"].values() for rel in rels}
+    now = {rel for rels in table.manifest()["files"].values() for rel in rels}
+    assert not old & now
+
+
 def test_rebucket_keeps_declared_clustering_and_validates(spark, tmp_path):
     """A rebucket is a base rewrite like compact/optimize/merge_into CoW —
     the declared layout must survive it (files stay time-clustered and
@@ -1052,6 +1094,67 @@ def test_declared_clustering_applied_by_optimize_and_compact(
         table.optimize()
     with pytest.raises(ValueError, match="not in schema"):
         table.set_clustering(zorder_by=["nope", "ts"])
+
+
+@pytest.mark.parametrize("policy", ["upsert", "insert_if_absent"])
+def test_declared_clustering_survives_copy_on_write_merges(
+    spark, tmp_path, policy
+):
+    """``merge``'s copy-on-write policies rewrite the touched bucket in the
+    declared layout (sort_by ts, 4 rows per file), as compact, optimize
+    and merge_into do: the bucket keeps one file per 4 rows, and the
+    files' ts ranges stay disjoint and in order. Keys run against ts, so a
+    rewrite in key order would show."""
+    import math
+    from datetime import datetime, timedelta
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from nifi_dicom_spark.lake.snapshot_table import SnapshotTable
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("v", T.LongType(), True),
+            T.StructField("ts", T.TimestampType(), True),
+        ]
+    )
+    t0 = datetime(2024, 1, 1)
+
+    def rows(pairs):
+        return spark.createDataFrame(
+            [(f"k{i:02d}", i, t0 + timedelta(seconds=s)) for i, s in pairs],
+            schema,
+        )
+
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "t"), schema, key_cols=["k"], n_buckets=2
+    )
+    table.overwrite(rows((i, 100 - i) for i in range(40)))
+    table.set_clustering(sort_by=["ts"], max_records_per_file=4)
+    table.optimize()
+    before = table.manifest()["files"]
+
+    # upsert moves k05 to ts 50; insert_if_absent leaves it and adds k40
+    table.merge(rows([(5, 50), (40, 0)]), op_col=None, policy=policy)
+
+    m = table.manifest()
+    counts = {
+        str(r["b"]): r["count"]
+        for r in table.read()
+        .groupBy(table.bucket_expr().alias("b"))
+        .count()
+        .collect()
+    }
+    assert any(m["files"][b] != before.get(b) for b in m["files"])
+    for b, rels in m["files"].items():
+        assert len(rels) == math.ceil(counts[b] / 4), (b, rels)
+        ranges = [m["file_stats"][rel]["ts"] for rel in rels]
+        assert all(ranges[i][1] < ranges[i + 1][0] for i in range(len(ranges) - 1))
+    moved = 95 if policy == "insert_if_absent" else 50
+    got = table.read().filter(F.col("k") == "k05").first()["ts"]
+    assert got == t0 + timedelta(seconds=moved)
 
 
 def test_set_clustering_validates_zorder_arity(spark, tmp_path):

@@ -375,6 +375,12 @@ _WRITES = {
         _hot_batch(spark, 5), op_col="op", policy="versioned_upsert",
         commit_keys=[(5, 0)],
     ),
+    "merge_upsert": lambda t, spark: t.merge(
+        _hot_batch(spark, 5), op_col="op", policy="upsert"
+    ),
+    "merge_insert_if_absent": lambda t, spark: t.merge(
+        _hot_batch(spark, 5), op_col="op", policy="insert_if_absent"
+    ),
     "merge_into": lambda t, spark: t.merge_into(
         _hot_batch(spark, 5).select("conv_id", "turn_idx", "text"),
         when_matched_update={"text": "s.text"},
@@ -386,6 +392,8 @@ _WRITES = {
     "forget": lambda t, spark: t.forget("turn_idx = 2"),
     "compact": lambda t, spark: t.compact(),
     "optimize": lambda t, spark: t.optimize(),
+    "overwrite": lambda t, spark: t.overwrite(_hot_batch(spark, 5)),
+    "rebucket": lambda t, spark: t.rebucket(2),
     "apply_changes_driver": lambda t, spark: apply_changes(
         t, _hot_events(spark, 5), epoch=5
     ),

@@ -118,6 +118,139 @@ def test_commit_key_replay_is_noop(spark, tmp_path):
     assert {r.k: r.v for r in tab.read().collect()}["a"] == 100
 
 
+_SRC = "k string, v int, note string, op string"
+
+# (policy, source rows, source DDL, commit keys, final rows, versions added)
+_POLICY_CASES = {
+    "upsert_delete_present": (
+        "upsert", [("a", None, None, "delete")], _SRC, None,
+        [("b", 2, "y"), ("c", 3, "z")], 1,
+    ),
+    "upsert_delete_absent": (
+        "upsert", [("q", 9, "n", "delete")], _SRC, None,
+        [("a", 1, "x"), ("b", 2, "y"), ("c", 3, "z")], 1,
+    ),
+    # a NULL op is neither an insert nor an update: the matched row goes
+    "upsert_null_op": (
+        "upsert", [("a", 5, "n", None), ("y", 6, "m", None)], _SRC, None,
+        [("b", 2, "y"), ("c", 3, "z")], 1,
+    ),
+    # a non-key column the source lacks becomes NULL on matched rows too
+    "upsert_source_lacks_column": (
+        "upsert", [("a", 10, "update"), ("d", 4, "insert")],
+        "k string, v int, op string", None,
+        [("a", 10, None), ("b", 2, "y"), ("c", 3, "z"), ("d", 4, None)], 1,
+    ),
+    "upsert_source_adds_column": (
+        "upsert", [("b", 20, "q", "E", "update")],
+        "k string, v int, note string, extra string, op string", None,
+        [("a", 1, "x", None), ("b", 20, "q", "E"), ("c", 3, "z", None)], 1,
+    ),
+    "insert_if_absent_keeps_existing": (
+        "insert_if_absent",
+        [("a", 99, "no", "insert"), ("e", 5, "new", "insert"),
+         ("f", 6, "gone", "delete")],
+        _SRC, None,
+        [("a", 1, "x"), ("b", 2, "y"), ("c", 3, "z"), ("e", 5, "new")], 1,
+    ),
+    # an empty source with commit keys commits an empty version that
+    # records them
+    "upsert_empty_with_keys": (
+        "upsert", [], _SRC, [(3, 0)],
+        [("a", 1, "x"), ("b", 2, "y"), ("c", 3, "z")], 1,
+    ),
+    "insert_if_absent_empty_with_keys": (
+        "insert_if_absent", [], _SRC, [(3, 0)],
+        [("a", 1, "x"), ("b", 2, "y"), ("c", 3, "z")], 1,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_POLICY_CASES))
+def test_merge_policy_semantics(spark, tmp_path, case):
+    """``merge``'s copy-on-write policies on an unversioned table: what
+    ``upsert`` and ``insert_if_absent`` do with deletes, NULL ops, narrow
+    and wide sources and an empty keyed source, and what each commit
+    records."""
+    policy, rows, ddl, keys, want, n_versions = _POLICY_CASES[case]
+    tab = _table(spark, tmp_path)
+    v0 = tab.current_version()
+    stats = tab.merge(
+        spark.createDataFrame(rows, ddl), op_col="op", policy=policy,
+        commit_keys=keys,
+    )
+    assert stats.applied and stats.mode == "cow"
+    assert tab.current_version() == v0 + n_versions
+    cols = ["k", "v", "note"]
+    cols += [c for c in tab.read().columns if c not in cols]
+    got = sorted(tuple(r[c] for c in cols) for r in tab.read().collect())
+    assert got == sorted(want)
+    h = tab.history()[-1]
+    assert (h["operation"], h["policy"], h["mode"]) == ("merge", policy, "cow")
+    if keys:
+        assert tab.applied_watermarks() == {0: 3}
+
+
+def test_upsert_on_a_versioned_table_writes_tombstones(spark, tmp_path):
+    """On a versioned table ``merge(policy="upsert")`` follows
+    ``merge_into``'s tombstone semantics: a matched delete keeps the row as
+    a tombstone one ``op_seq`` above it, a matched update bumps ``op_seq``,
+    and an unmatched row is inserted with its own version."""
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("v", T.IntegerType(), True),
+            T.StructField("op", T.StringType(), True),
+            T.StructField("op_seq", T.LongType(), True),
+            T.StructField("offset", T.LongType(), True),
+        ]
+    )
+    tab = SnapshotTable.create(
+        spark, str(tmp_path / "v"), schema, key_cols=["k"], n_buckets=4
+    )
+    tab.overwrite(
+        spark.createDataFrame(
+            [("a", 1, "insert", 5, 0), ("b", 2, "insert", 6, 1),
+             ("c", 3, "insert", 7, 2)],
+            schema,
+        )
+    )
+    tab.merge(
+        spark.createDataFrame(
+            [("a", None, "delete"), ("b", 20, "update"), ("d", 4, "insert")],
+            "k string, v int, op string",
+        ),
+        op_col="op",
+        policy="upsert",
+    )
+    got = sorted(
+        (r.k, r.v, r.op, r.op_seq, r.offset) for r in tab.read().collect()
+    )
+    assert got == [
+        ("a", 1, "delete", 6, 0),
+        ("b", 20, "update", 7, 1),
+        ("c", 3, "insert", 7, 2),
+        ("d", 4, "insert", 0, 0),
+    ]
+
+
+def test_replayed_upsert_is_a_noop_even_if_its_source_readds_a_dropped_column(
+    spark, tmp_path
+):
+    """The replay gate runs before schema evolution: a replayed epoch is a
+    no-op even when its source still carries a column dropped since."""
+    tab = _table(spark, tmp_path)
+    src = spark.createDataFrame([("a", 100, "u", "update")], _SRC)
+    assert tab.merge(src, op_col="op", commit_keys=[(1, 0)]).applied
+    tab.drop_column("note")
+    v = tab.current_version()
+    replay = tab.merge(src, op_col="op", commit_keys=[(1, 0)])
+    assert not replay.applied and replay.skipped_commit_keys == 1
+    assert tab.current_version() == v
+    with pytest.raises(ValueError, match="previously dropped"):
+        tab.merge(src, op_col="op", commit_keys=[(2, 0)])
+
+
 def test_merge_into_versioned_lww_semantics(spark, tmp_path):
     """On versioned tables MERGE operates on the LOGICAL state: tombstoned
     keys are NOT MATCHED (re-insert supersedes the tombstone), WHEN MATCHED
